@@ -48,8 +48,8 @@ object PipelineQueries {
   // (the DedupQueries/SimilarityQueries discipline).
   def queries: Seq[Q] = Seq(
     // The REAL stage-1 pipeline under the oracle gate: write the rooms CSV
-    // fixture, run RoomReader's single-scan pivot plan (globbed read +
-    // input_file_name recovery + pivot + dropna + sort + UTC ts
+    // fixture, run RoomReader's single-scan pivot plan (driver-globbed read
+    // with room/sensor as partition values + pivot + dropna + sort + UTC ts
     // derivation), and hash-check every produced cell against the
     // formula-reconstructed oracle.
     Q("p02_rooms_etl",

@@ -36,6 +36,109 @@ class PipelineSpec extends SparkSpec {
     dir
   }
 
+  /** A defect-free `<dir>/<room>/<sensor>.csv` tree: 3 aligned minutes per file. */
+  private def cleanRooms(rooms: Seq[String]): String = {
+    val dir = Files.createTempDirectory("graft_rooms_clean").toString
+    for (room <- rooms; sensor <- OfficeSchema.sensors) {
+      val f = new File(dir, room)
+      f.mkdirs()
+      val w = new PrintWriter(new File(f, s"$sensor.csv"))
+      w.println("ts_min_bignt,reading")
+      for (i <- 0 until 3) w.println(s"${1700000000L + i * 60},${1.0 + i}")
+      w.close()
+    }
+    dir
+  }
+
+  test("room names are the decoded directory names; only <root>/*/*.csv is read") {
+    val dir = cleanRooms(Seq("r 1", "r%2", "r#3"))
+    // not read: a CSV at the root, one a directory too deep, hidden files
+    val stray = "ts_min_bignt,reading\n1700000000,1.0\n".getBytes
+    new File(dir, "r 1/sub").mkdirs()
+    for (f <- Seq("x.csv", "r 1/sub/co2.csv", "r 1/.co2.csv", "r 1/_co2.csv"))
+      Files.write(new File(dir, f).toPath, stray)
+
+    val rooms = Seq("r 1", "r#3", "r%2")
+    def roomsOf(df: org.apache.spark.sql.DataFrame) =
+      df.select("room").distinct().collect().map(_.getString(0)).sorted.toSeq
+    val raw = RoomReader.rawScan(spark, dir)
+    assert(raw.columns.toSeq === Seq("ts_min_bignt", "reading", "sensor", "room"))
+    assert(raw.count() === 3 * 5 * 3)
+    assert(roomsOf(raw) === rooms)
+    for (out <- Seq(RoomReader.pivotPlan(spark, dir), RoomReader.joinPlan(spark, dir))) {
+      assert(out.count() === 3 * 3)
+      assert(roomsOf(out) === rooms)
+    }
+  }
+
+  test("an empty or missing rooms tree fails loudly with PATH_NOT_FOUND") {
+    val empty = Files.createTempDirectory("graft_rooms_empty").toString
+    new File(empty, "r1").mkdirs() // a room directory holding no CSV
+    for (root <- Seq(empty, s"$empty/missing")) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        RoomReader.pivotPlan(spark, root))
+      assert(e.getCondition === "PATH_NOT_FOUND")
+    }
+  }
+
+  test("the rooms scan runs no listing job, no path regex, and prunes by sensor") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.catalyst.expressions.{InputFileName, RegExpExtract}
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    // 35 files: above the 32-path threshold where Spark lists in a job
+    val dir = cleanRooms((1 to 7).map(r => s"room$r"))
+    val sc = spark.sparkContext
+    val group = s"rooms-scan-${System.nanoTime}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties != null && j.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.add(String.valueOf(j.properties.getProperty("spark.job.description")))
+    }
+    // Events arrive in order: once the marker job is seen, so is every
+    // earlier job of the group.
+    def jobsDuring[T](body: => T): (T, Seq[String]) = {
+      jobs.clear()
+      val result = body
+      sc.setJobDescription("marker")
+      sc.parallelize(Seq(1), 1).count()
+      sc.setJobDescription(null)
+      val deadline = System.currentTimeMillis() + 30000
+      while (!jobs.contains("marker") && System.currentTimeMillis() < deadline)
+        Thread.sleep(10)
+      assert(jobs.contains("marker"))
+      (result, jobs.toArray(Array.empty[String]).toSeq.filterNot(_ == "marker"))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "rooms scan spec")
+    try {
+      val (pivot, built) = jobsDuring(RoomReader.pivotPlan(spark, dir))
+      assert(built === Nil)
+      val (rows, ran) = jobsDuring(pivot.count())
+      assert(rows === 7 * 3)
+      assert(!ran.exists(_.startsWith("Listing leaf files")), ran)
+
+      val exprs = pivot.queryExecution.optimizedPlan.flatMap(_.expressions)
+      assert(!exprs.exists(_.exists {
+        case _: RegExpExtract | _: InputFileName => true
+        case _ => false
+      }))
+
+      val join = RoomReader.joinPlan(spark, dir)
+      val scanned = join.queryExecution.sparkPlan.collect {
+        case s: FileSourceScanExec =>
+          s.selectedPartitions.toPartitionArray.map(_.toPath.getName).toSeq
+      }
+      assert(scanned.size === 5)
+      assert(scanned.forall(fs => fs.size === 7 && fs.distinct.size === 1))
+      assert(scanned.map(_.head).sorted === OfficeSchema.sensors.map(_ + ".csv"))
+      assert(join.count() === 7 * 3)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("pivotPlan: misaligned row lost, null row dropped, dup collapsed") {
     val out = RoomReader.pivotPlan(spark, roomsDir)
     assert(out.columns.toSeq === OfficeSchema.office.fieldNames.toSeq)
