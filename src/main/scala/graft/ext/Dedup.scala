@@ -80,7 +80,7 @@ object Dedup {
   /** doc_id + mh0..mh7 MinHash signature (≥2 tokens required for bigrams).
     *
     * The signature is computed by the native codegen'd
-    * [[graft.functions.MinHashSigExpr]] — one compiled pass per document
+    * `graft_minhash_sig` kernel — one compiled pass per document
     * (token hash → shingle → 8 permuted minima) instead of nested interpreted
     * HOFs; `graft_minhash_sig` returns null below 2 tokens, replacing the
     * `size(split(text,' ')) >= 2` predicate with the same row set.

@@ -277,7 +277,7 @@ object Multimodal {
     * deterministic stand-in for a per-media embedding. Real codecs slot in
     * at [[MediaDecoder.decode]] below without touching the query shape.
     *
-    * One native codegen'd pass per row ([[graft.functions.QuarterMeansExpr]])
+    * One native codegen'd pass per row (`graft_quarter_means`)
     * — the previous interpreted `aggregate(sequence(...), ascii(substr))`
     * folds re-scanned the string per character (O(n²)/row; measured 5.8×
     * the oracle at sf0.1, now at parity).

@@ -93,8 +93,8 @@ object Similarity {
       .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
 
   /** Exact brute-force cosine top-k against the query row. The cosine is the
-    * native codegen'd [[graft.functions.CosFExpr]] (same sequential fold as
-    * the SQL form, one compiled call per row); broadcast query row +
+    * native codegen'd `graft_cos` kernel (same sequential fold as the SQL
+    * form, one compiled call per row); broadcast query row +
     * `TakeOrderedAndProject` means no shuffle of the fact side.
     */
   def knnBrute(emb: DataFrame, kTop: Int = 10): DataFrame = {
@@ -2355,9 +2355,10 @@ object Similarity {
         col("evid").isNotNull.as("in_filtered_exact_topk"))
 
   /** The x28 inline-filtered serving arm under an ARBITRARY predicate —
-    * the FilteredSweep tool's entry for the selectivity crossover
-    * measurement (BASELINE.md records the curve; the declared x28 keeps
-    * the fixed label contract so its oracle stays expressible).
+    * the entry point of the selectivity crossover measurement (BASELINE.md,
+    * round 14, "Filtered-ANN selectivity crossover", records the curve; the
+    * declared x28 keeps the fixed label contract so its oracle stays
+    * expressible).
     */
   private[graft] def ivfPqFilteredRerankPred(emb: DataFrame,
       pred: org.apache.spark.sql.Column, nprobe: Int = 2,

@@ -753,7 +753,7 @@ object TextOps {
     */
   val edgeMax = graft.functions.TextHash.edgeMax
 
-  /** One native codegen'd pass per row ([[graft.functions.EdgeNgramsExpr]]):
+  /** One native codegen'd pass per row (`graft_edge_ngrams`):
     * the previous stock-HOF form materialized the gram array three times
     * per row (size / distinct-size / sorted-join) — 1.9× the oracle at
     * sf0.1, now at parity.
@@ -784,7 +784,7 @@ object TextOps {
     * gates documents on (Rae et al. 2021 §A1.1: fraction of duplicate
     * lines/n-grams): duplicate-token fraction, most-frequent-token fraction,
     * most-frequent-bigram fraction. Counting is the native one-pass
-    * codegen'd [[graft.functions.RepStatsExpr]] (exact string counts, no
+    * codegen'd `graft_rep_stats` kernel (exact string counts, no
     * hashing) — per-row, shuffle-free, embarrassingly parallel at 100 TB,
     * where the oracle's unnest + group-by form would shuffle one row per
     * TOKEN of the corpus.

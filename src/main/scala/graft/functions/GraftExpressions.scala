@@ -1,651 +1,180 @@
 package graft.functions
 
+import java.lang.reflect.{InvocationTargetException, Method}
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult.{
+  TypeCheckFailure, TypeCheckSuccess}
+import org.apache.spark.sql.catalyst.expressions.codegen.{
+  CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{
+  Expression, ExpressionInfo, Literal, UnaryExpression}
 import org.apache.spark.sql.types._
 
 /** Native Catalyst expressions for the engine's text-hash / vector kernels.
   *
-  * Each is a thin codegen'd wrapper over the static kernels in
-  * [[TextHash]]/[[VecOps]]: `doGenCode` emits a single static call, so the
-  * expression participates in whole-stage codegen (one compiled call per row)
-  * instead of falling back to Catalyst's interpreted higher-order functions.
-  * Values are bit-identical to the SQL folds they replace (see TextHash doc),
-  * which is what keeps the DuckDB oracle hash-compare valid.
+  * Every scalar graft_* function is one [[KernelExpr]] driven by a
+  * [[Kernel]] row of [[GraftFunctions.kernels]]. The row names a static
+  * kernel on [[TextHash]]/[[VecOps]]/[[KmvBuffer]]; `doGenCode` emits that
+  * single static call, so the expression participates in whole-stage
+  * codegen (one compiled call per row) instead of falling back to
+  * Catalyst's interpreted higher-order functions. Values are bit-identical
+  * to the SQL folds they replace (see TextHash doc), which is what keeps
+  * the DuckDB oracle hash-compare valid.
+  *
+  * Adding a kernel: write the static method, pin it bit-identical to the
+  * form it replaces with a TextHashSpec property test, and add one row to
+  * [[GraftFunctions.kernels]] (KernelContractSpec then asks for its
+  * contract row). No expression class is needed.
   *
   * Registered per-session by [[GraftFunctions.register]]; use via
   * `expr("graft_minhash_sig(text)")` or `call_function`.
   */
-case class PolyHashExpr(child: Expression)
-    extends UnaryExpression {
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a string argument, got ${child.dataType.simpleString}")
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_poly_hash"
-  protected override def nullSafeEval(input: Any): Any =
-    TextHash.polyHash(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.polyHash($c)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
 
-case class TokenHashesExpr(child: Expression)
-    extends UnaryExpression {
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a string argument, got ${child.dataType.simpleString}")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_token_hashes"
-  protected override def nullSafeEval(input: Any): Any =
-    TextHash.tokenHashes(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.tokenHashes($c)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Null when the text has < 5 tokens (no 5-grams); see
-  * [[TextHash.gram5Distinct]].
+/** One registry row: the SQL surface of a static kernel.
+  *
+  * @param name       SQL name, also the expression's prettyName
+  * @param call       `Owner.method` in package graft.functions
+  * @param args       one entry per method parameter
+  * @param dataType   result type
+  * @param nullable   the kernel can return null on non-null input; otherwise
+  *                   the result is null exactly when an input is
+  * @param doubleCall the double-element variant of a vector kernel (`call`
+  *                   is the float one), chosen from the input element type;
+  *                   every `In` of such a row is a vector of that one type
+  * @param check      validation of the plan-time literal values, in order
   */
-case class Gram5DistinctExpr(child: Expression)
-    extends UnaryExpression {
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a string argument, got ${child.dataType.simpleString}")
-  override def nullable: Boolean = true
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_gram5_distinct"
-  protected override def nullSafeEval(input: Any): Any =
-    TextHash.gram5Distinct(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.TextHash.gram5Distinct($c);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+case class Kernel(name: String, call: String, args: Seq[Kernel.Arg],
+    dataType: DataType, nullable: Boolean = false, doubleCall: String = "",
+    check: Seq[Long] => Unit = _ => ())
+
+object Kernel {
+  /** One parameter of the static method. */
+  sealed trait Arg
+
+  /** A per-row input column. `sql` spells the accepted type in analysis
+    * errors; `extra` is a further analysis-time check on the argument
+    * (a message, or None when it holds).
+    */
+  case class In(sql: String, accepts: DataType => Boolean,
+      extra: Expression => Option[String] = _ => None) extends Arg
+
+  /** A plan-time literal (geometry, not per-row data), taken through
+    * `intLit`, or `longLit` when `long`. `default` makes it an optional
+    * trailing SQL argument.
+    */
+  case class Lit(name: String, long: Boolean = false,
+      default: Option[Int] = None) extends Arg
+
+  /** A constant the SQL surface does not expose. */
+  case class Const(value: Int) extends Arg
 }
 
-/** Positional word-n-gram chain hashes (TextHash.gramChain — array index =
-  * 0-based token offset, the geometry d21's span verify consumes). `n` is a
-  * plan-time constant (span threshold, not per-row data; intLit-validated
-  * at registration). Null when the text has < n tokens.
+/** The one scalar kernel expression: `children` line up with
+  * `kernel.args`, plan-time literals included as [[Literal]]s, so codegen
+  * inlines them as constants exactly like the per-row arguments.
+  *
+  * It prints as `graft_<name>(args…)` and its `sql` (hence an unaliased
+  * column's name) lists the per-row inputs only. The static method is
+  * resolved lazily and never serialized: the row carries names, not a
+  * `java.lang.reflect.Method`, so the expression crosses an executor
+  * boundary as plain data.
   */
-case class GramChainExpr(child: Expression, n: Int)
-    extends UnaryExpression {
-  require(n >= 1, s"graft_gram_chain n=$n out of range")
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a string argument, got ${child.dataType.simpleString}")
-  override def nullable: Boolean = true
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_gram_chain"
-  protected override def nullSafeEval(input: Any): Any =
-    TextHash.gramChain(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.TextHash.gramChain($c, $n);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
+case class KernelExpr(kernel: Kernel, children: Seq[Expression]) extends Expression {
+  import Kernel.In
 
-/** Winnowing anchor selection (TextHash.winnow): the distinct
-  * window-minimum (pos, gram) pairs over the word-n-gram chain — d23's
-  * w×-cheaper blocking key with the span ≥ n+w−1 completeness theorem.
-  * `n`/`w` are plan-time constants (intLit-validated). Null when the text
-  * has < n + w − 1 tokens.
-  */
-case class WinnowExpr(child: Expression, n: Int, w: Int)
-    extends UnaryExpression {
-  require(n >= 1 && w >= 1, s"graft_winnow n=$n w=$w out of range")
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a string argument, got ${child.dataType.simpleString}")
-  override def nullable: Boolean = true
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("p", IntegerType, nullable = false),
-    StructField("g", LongType, nullable = false))), containsNull = false)
-  override def prettyName: String = "graft_winnow"
-  protected override def nullSafeEval(input: Any): Any =
-    TextHash.winnow(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n, w)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.TextHash.winnow($c, $n, $w);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
+  override def prettyName: String = kernel.name
+  override def dataType: DataType = kernel.dataType
+  override def nullable: Boolean = kernel.nullable || children.exists(_.nullable)
+  override def foldable: Boolean = children.forall(_.foldable)
+  override protected def stringArgs: Iterator[Any] = children.iterator
+  override def sql: String = s"$prettyName(${inputs.map(_._2.sql).mkString(", ")})"
 
-/** Distinct-hit count of a gram array against a SORTED broadcast snapshot
-  * array (TextHash.sortedHits — s33's hot path; values bit-equal to
-  * `size(array_intersect(gs, snap))` under the sorted-distinct snapshot
-  * contract).
-  */
-case class SortedHitsExpr(gs: Expression, snap: Expression)
-    extends BinaryExpression {
-  override def left: Expression = gs
-  override def right: Expression = snap
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    // session-registered and reachable from ad-hoc SQL: wrong types must
-    // fail analysis with a named message, not a runtime ClassCastException
-    // from inside the kernel (round-14 advice — the same contract the
-    // string kernels above enforce)
-    def isLongArr(t: DataType): Boolean = t match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    }
-    if (isLongArr(gs.dataType) && isLongArr(snap.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects (array<bigint>, array<bigint>), got " +
-        s"(${gs.dataType.simpleString}, ${snap.dataType.simpleString})")
-  }
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_sorted_hits"
-  protected override def nullSafeEval(a: Any, b: Any): Any =
-    TextHash.sortedHits(
-      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.TextHash.sortedHits($a, $b)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(gs = newLeft, snap = newRight)
-}
+  private def inputs: Seq[(In, Expression)] =
+    kernel.args.zip(children).collect { case (in: In, c) => (in, c) }
 
-/** Distinct-hit count of a gram array against a broadcast BLOOM word array
-  * (TextHash.bloomHits — d27/s35's hot path; `k` probes, plan-time
-  * constant). The approximate counterpart of [[SortedHitsExpr]]: no false
-  * negatives, measured false positives (d28).
-  */
-case class BloomHitsExpr(gs: Expression, bloom: Expression, k: Int)
-    extends BinaryExpression {
-  require(k >= 1 && k <= 16, s"graft_bloom_hits k=$k out of range [1, 16]")
-  override def left: Expression = gs
-  override def right: Expression = bloom
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def isLongArr(t: DataType): Boolean = t match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    }
-    if (isLongArr(gs.dataType) && isLongArr(bloom.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects (array<bigint>, array<bigint>), got " +
-        s"(${gs.dataType.simpleString}, ${bloom.dataType.simpleString})")
-  }
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_bloom_hits"
-  protected override def nullSafeEval(a: Any, b: Any): Any =
-    TextHash.bloomHits(
-      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.TextHash.bloomHits($a, $b, $k)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(gs = newLeft, bloom = newRight)
-}
-
-/** Null when the text has < 2 tokens (no bigram shingles). */
-case class MinHashSigExpr(child: Expression)
-    extends UnaryExpression {
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a string argument, got ${child.dataType.simpleString}")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_minhash_sig"
-  protected override def nullSafeEval(input: Any): Any =
-    TextHash.minHashSig(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.TextHash.minHashSig($c);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Null when the text has < 4 codepoints (no full quarters). */
-case class QuarterMeansExpr(child: Expression)
-    extends UnaryExpression {
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a string argument, got ${child.dataType.simpleString}")
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_quarter_means"
-  protected override def nullSafeEval(input: Any): Any =
-    TextHash.quarterMeans(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.TextHash.quarterMeans($c);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class EdgeNgramsExpr(child: Expression)
-    extends UnaryExpression {
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a string argument, got ${child.dataType.simpleString}")
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_grams", IntegerType, nullable = false),
-    StructField("n_uniq_grams", IntegerType, nullable = false),
-    StructField("first5_grams", StringType, nullable = false)))
-  override def prettyName: String = "graft_edge_ngrams"
-  protected override def nullSafeEval(input: Any): Any =
-    TextHash.edgeNgramStats(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.edgeNgramStats($c)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** One-pass repetition statistics (see [[TextHash.repStats]]). */
-case class RepStatsExpr(child: Expression)
-    extends UnaryExpression {
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a string argument, got ${child.dataType.simpleString}")
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_tokens", IntegerType, nullable = false),
-    StructField("n_uniq_tokens", IntegerType, nullable = false),
-    StructField("top_tok_n", IntegerType, nullable = false),
-    StructField("top_bigram_n", IntegerType, nullable = false)))
-  override def prettyName: String = "graft_rep_stats"
-  protected override def nullSafeEval(input: Any): Any =
-    TextHash.repStats(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.repStats($c)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class SimHashExpr(child: Expression)
-    extends UnaryExpression {
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a string argument, got ${child.dataType.simpleString}")
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_simhash"
-  protected override def nullSafeEval(input: Any): Any =
-    TextHash.simHash(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.simHash($c)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Shared input validation + float/double kernel dispatch for the vector
-  * expressions. `AbstractDataType` is private to Spark, so ExpectsInputTypes
-  * is unavailable — checkInputDataTypes gives the same clean analysis-time
-  * error (instead of a runtime ClassCastException) for wrong inputs.
-  */
-trait VecExpr { self: Expression =>
-  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-
-  protected def vecChildren: Seq[Expression]
-
-  protected def elemType: DataType =
-    vecChildren.head.dataType.asInstanceOf[ArrayType].elementType
-
-  /** True for float elements; false for double. */
-  protected def isFloatVec: Boolean = elemType == FloatType
-
+  /** Session-registered and reachable from ad-hoc SQL: wrong types must
+    * fail analysis with a named message, not a runtime ClassCastException
+    * from inside the kernel. (`AbstractDataType` is private to Spark, so
+    * ExpectsInputTypes is unavailable.)
+    */
   override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = vecChildren.forall(_.dataType match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-      case _ => false
-    }) && vecChildren.map(_.dataType.asInstanceOf[ArrayType].elementType)
+    val ins = inputs
+    def oneElementType = ins.map(_._2.dataType.asInstanceOf[ArrayType].elementType)
       .distinct.size == 1
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<float> or array<double> arguments of one " +
-        s"element type, got ${vecChildren.map(_.dataType.simpleString).mkString(", ")}")
+    if (!ins.forall { case (in, c) => in.accepts(c.dataType) } ||
+        (kernel.doubleCall.nonEmpty && !oneElementType))
+      TypeCheckFailure(s"$prettyName expects (${ins.map(_._1.sql).mkString(", ")}), " +
+        s"got (${ins.map(_._2.dataType.simpleString).mkString(", ")})")
+    else ins.flatMap { case (in, c) => in.extra(c) }.headOption
+      .fold[TypeCheckResult](TypeCheckSuccess)(m => TypeCheckFailure(s"$prettyName $m"))
   }
-}
 
-case class DotFExpr(left: Expression, right: Expression)
-    extends BinaryExpression with VecExpr {
-  override protected def vecChildren: Seq[Expression] = Seq(left, right)
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true // null on length mismatch
-  override def prettyName: String = "graft_dot"
-  protected override def nullSafeEval(a: Any, b: Any): Any = {
-    val (x, y) = (a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-    if (isFloatVec) VecOps.dotF(x, y) else VecOps.dotD(x, y)
+  /** `Owner.method` for this input: the double variant on double vectors. */
+  private def target: String = children.head.dataType match {
+    case ArrayType(DoubleType, _) if kernel.doubleCall.nonEmpty => kernel.doubleCall
+    case _ => kernel.call
   }
+
+  @transient private lazy val method: Method = {
+    val Array(owner, name) = target.split('.')
+    Class.forName(s"graft.functions.$owner")
+      .getMethod(name, children.map(c => CodeGenerator.javaClass(c.dataType)): _*)
+  }
+
+  /** Null-intolerant like the codegen path: the first null input short-
+    * circuits, so later inputs are not evaluated.
+    */
+  override def eval(input: InternalRow): Any = {
+    val args = new Array[AnyRef](children.length)
+    val it = children.iterator
+    var i = 0
+    while (it.hasNext) {
+      val v = it.next().eval(input)
+      if (v == null) return null
+      args(i) = v.asInstanceOf[AnyRef]
+      i += 1
+    }
+    try method.invoke(null, args: _*)
+    catch { case e: InvocationTargetException => throw e.getCause }
+  }
+
+  /** One static call. A boxed or reference result is null-checked into
+    * `isNull`; the local holding it is a fresh name, so any number of
+    * kernel calls share one generated method.
+    */
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fn = if (isFloatVec) "dotF" else "dotD"
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val r = ctx.freshName("dotRes")
-      s"""java.lang.Double $r = graft.functions.VecOps.$fn($a, $b);
-         if ($r == null) { ${ev.isNull} = true; }
-         else { ${ev.value} = $r.doubleValue(); }"""
-    })
+    val gens = children.map(_.genCode(ctx))
+    val call = s"graft.functions.$target(${gens.map(_.value).mkString(", ")})"
+    val ret = method.getReturnType
+    val unbox = if (CodeGenerator.isPrimitiveType(dataType) && !ret.isPrimitive)
+      s".${CodeGenerator.javaType(dataType)}Value()" else ""
+    val result = if (ret.isPrimitive || !nullable) s"${ev.value} = $call$unbox;" else {
+      val r = ctx.freshName("kernelRes")
+      s"""${CodeGenerator.typeName(ret)} $r = $call;
+         |if ($r == null) { ${ev.isNull} = true; }
+         |else { ${ev.value} = $r$unbox; }""".stripMargin
+    }
+    val decl = s"${CodeGenerator.javaType(dataType)} ${ev.value} = " +
+      s"${CodeGenerator.defaultValue(dataType)};"
+    if (!nullable) ev.copy(isNull = FalseLiteral,
+      code = code"${gens.map(_.code.toString).mkString("\n")}\n$decl\n$result")
+    else {
+      // each input's code runs only once the inputs before it are non-null
+      val body = children.zip(gens).foldRight(s"${ev.isNull} = false;\n$result") {
+        case ((c, g), inner) =>
+          s"${g.code}\n${ctx.nullSafeExec(c.nullable, g.isNull)(inner)}"
+      }
+      ev.copy(code = code"boolean ${ev.isNull} = true;\n$decl\n$body")
+    }
   }
+
   override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-case class CosFExpr(left: Expression, right: Expression)
-    extends BinaryExpression with VecExpr {
-  override protected def vecChildren: Seq[Expression] = Seq(left, right)
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true // null on length mismatch / zero norm
-  override def prettyName: String = "graft_cos"
-  protected override def nullSafeEval(a: Any, b: Any): Any = {
-    val (x, y) = (a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-    if (isFloatVec) VecOps.cosF(x, y) else VecOps.cosD(x, y)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fn = if (isFloatVec) "cosF" else "cosD"
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val r = ctx.freshName("cosRes")
-      s"""java.lang.Double $r = graft.functions.VecOps.$fn($a, $b);
-         if ($r == null) { ${ev.isNull} = true; }
-         else { ${ev.value} = $r.doubleValue(); }"""
-    })
-  }
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Squared-L2 distance (VecOps.d2F/d2D): the x11 k-means assignment kernel —
-  * one compiled call per (row, centroid) instead of two interpreted
-  * `aggregate(zip_with(...))` folds. Same sequential fold as the SQL form,
-  * so results stay bit-identical to the DuckDB oracle twin.
-  */
-case class D2Expr(left: Expression, right: Expression)
-    extends BinaryExpression with VecExpr {
-  override protected def vecChildren: Seq[Expression] = Seq(left, right)
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true // null on length mismatch
-  override def prettyName: String = "graft_l2"
-  protected override def nullSafeEval(a: Any, b: Any): Any = {
-    val (x, y) = (a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-    if (isFloatVec) VecOps.d2F(x, y) else VecOps.d2D(x, y)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fn = if (isFloatVec) "d2F" else "d2D"
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val r = ctx.freshName("d2Res")
-      s"""java.lang.Double $r = graft.functions.VecOps.$fn($a, $b);
-         if ($r == null) { ${ev.isNull} = true; }
-         else { ${ev.value} = $r.doubleValue(); }"""
-    })
-  }
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** One IVF-PQ asymmetric-distance term — encode `r`'s subspace window
-  * against the codebook and score `rqe`'s window against the chosen
-  * codeword in ONE compiled kernel (VecOps.adcTermD has the full value
-  * contract and the bit-identity argument vs the slice+array_min HOF form
-  * this replaces). `off`/`len` are plan-time constants like
-  * [[LshBucketExpr]]'s bits: the subspace layout is index geometry, not
-  * per-row data.
-  */
-case class AdcTermExpr(r: Expression, rqe: Expression, cents: Expression,
-    off: Int, len: Int) extends TernaryExpression {
-  require(off >= 0 && len >= 1,
-    s"graft_adc_term off=$off len=$len out of range")
-  override def first: Expression = r
-  override def second: Expression = rqe
-  override def third: Expression = cents
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_adc_term"
-  protected override def nullSafeEval(a: Any, b: Any, c: Any): Any =
-    VecOps.adcTermD(
-      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      c.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      off, len)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b, c) => {
-      val res = ctx.freshName("adcRes")
-      s"""java.lang.Double $res =
-           graft.functions.VecOps.adcTermD($a, $b, $c, $off, $len);
-         if ($res == null) { ${ev.isNull} = true; }
-         else { ${ev.value} = $res.doubleValue(); }"""
-    })
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): Expression =
-    copy(r = newFirst, rqe = newSecond, cents = newThird)
-}
-
-/** The k-means assignment argmin as a compiled kernel returning
-  * struct<dd double, c int> — the Lloyd hot path (VecOps.bestCellD has
-  * the value contract; [[graft.ext.Similarity.bestCellExpr]] is the one
-  * shared SQL spelling).
-  */
-case class BestCellExpr(e: Expression, cents: Expression)
-    extends BinaryExpression {
-  override def left: Expression = e
-  override def right: Expression = cents
-  override def dataType: DataType = StructType(Seq(
-    StructField("dd", DoubleType, nullable = false),
-    StructField("c", IntegerType, nullable = false)))
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_best_cell"
-  protected override def nullSafeEval(a: Any, b: Any): Any =
-    VecOps.bestCellD(
-      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val res = ctx.freshName("bestCell")
-      s"""org.apache.spark.sql.catalyst.InternalRow $res =
-           graft.functions.VecOps.bestCellD($a, $b);
-         if ($res == null) { ${ev.isNull} = true; }
-         else { ${ev.value} = $res; }"""
-    })
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(e = newLeft, cents = newRight)
-}
-
-/** Encode-only subspace argmin (x18's flat-PQ code_s) — cluster id of the
-  * (dd, cluster)-argmin codeword for the `[off, off+len)` window.
-  */
-case class CodeExpr(e: Expression, cents: Expression, off: Int, len: Int)
-    extends BinaryExpression {
-  require(off >= 0 && len >= 1, s"graft_code off=$off len=$len out of range")
-  override def left: Expression = e
-  override def right: Expression = cents
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_code"
-  protected override def nullSafeEval(a: Any, b: Any): Any =
-    VecOps.codeD(
-      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      off, len)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val res = ctx.freshName("codeRes")
-      s"""java.lang.Integer $res =
-           graft.functions.VecOps.codeD($a, $b, $off, $len);
-         if ($res == null) { ${ev.isNull} = true; }
-         else { ${ev.value} = $res.intValue(); }"""
-    })
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(e = newLeft, cents = newRight)
-}
-
-/** `bits` is a plan-time constant (like the generator literals below), not
-  * a child expression: plane count shapes the physical candidate volume,
-  * and a per-row-varying width has no meaning for a blocking key. Higher
-  * bits refine lower (VecOps.lshBucket doc), which is what lets callers
-  * raise it with corpus size.
-  */
-case class LshBucketExpr(child: Expression, bits: Int = 8)
-    extends UnaryExpression with VecExpr {
-  // 0 planes = every vector in one cell (quadratic blocking); > 30 planes
-  // overflow the Int bucket (1 << 32 wraps to bit 0 and silently breaks
-  // the higher-bits-refine-lower law).
-  require(bits >= 1 && bits <= 30,
-    s"graft_lsh_bucket bits=$bits out of range [1, 30]")
-  override protected def vecChildren: Seq[Expression] = Seq(child)
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "graft_lsh_bucket"
-  protected override def nullSafeEval(v: Any): Any = {
-    val x = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    if (isFloatVec) VecOps.lshBucket(x, bits) else VecOps.lshBucketD(x, bits)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fn = if (isFloatVec) "lshBucket" else "lshBucketD"
-    defineCodeGen(ctx, ev, c => s"graft.functions.VecOps.$fn($c, $bits)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** INT8 symmetric scalar quantization codes (VecOps.q127F/D): the x09/x10
-  * quantized-retrieval hot path as ONE compiled pass per vector instead of
-  * interpreted `transform`/`array_max` lambdas (measured ~6× on the sf1
-  * embeddings corpus). Null for all-zero vectors.
-  */
-case class Q127Expr(child: Expression)
-    extends UnaryExpression with VecExpr {
-  override protected def vecChildren: Seq[Expression] = Seq(child)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true // null on all-zero vector
-  override def prettyName: String = "graft_q127"
-  protected override def nullSafeEval(v: Any): Any = {
-    val x = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    if (isFloatVec) VecOps.q127F(x) else VecOps.q127D(x)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fn = if (isFloatVec) "q127F" else "q127D"
-    nullSafeCodeGen(ctx, ev, c => {
-      val r = ctx.freshName("qRes")
-      s"""org.apache.spark.sql.catalyst.util.ArrayData $r =
-           graft.functions.VecOps.$fn($c);
-         if ($r == null) { ${ev.isNull} = true; }
-         else { ${ev.value} = $r; }"""
-    })
-  }
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Exact int64 dot product of two BIGINT code arrays (VecOps.dotI); null on
-  * length mismatch — the x09/x10 integer scoring kernel.
-  */
-case class DotIExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    })
-    if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects two array<bigint> arguments, got " +
-        s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
-  }
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true // null on length mismatch
-  override def prettyName: String = "graft_doti"
-  protected override def nullSafeEval(a: Any, b: Any): Any =
-    VecOps.dotI(a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val r = ctx.freshName("dotIRes")
-      s"""java.lang.Long $r = graft.functions.VecOps.dotI($a, $b);
-         if ($r == null) { ${ev.isNull} = true; }
-         else { ${ev.value} = $r.longValue(); }"""
-    })
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** KMV set-union estimate over two serialized sketch columns (see
-  * [[KmvBuffer.unionEstimate]]) — sketch algebra without the raw data.
-  */
-case class KmvUnionEstExpr(left: Expression, right: Expression, k: Int)
-    extends BinaryExpression {
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (left.dataType == BinaryType && right.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects two binary sketch arguments, got " +
-        s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_kmv_union_est"
-  protected override def nullSafeEval(a: Any, b: Any): Any =
-    KmvBuffer.unionEstimate(a.asInstanceOf[Array[Byte]],
-      b.asInstanceOf[Array[Byte]], k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.KmvBuffer.unionEstimate($a, $b, $k)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
+      newChildren: IndexedSeq[Expression]): Expression = copy(children = newChildren)
 }
 
 /** Custom Catalyst GENERATOR (the table-function rung next to the scalar
@@ -740,711 +269,254 @@ case class CharGramsExpr(child: Expression, n: Int)
     copy(child = newChild)
 }
 
-/** Aligned w-token passages of a string — see [[TextHash.passages]]. */
-case class PassagesExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (left.dataType != StringType || right.dataType != IntegerType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects (string, int), got " +
-          s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-    // The documented transform/sequence/slice equivalence divides by w, so
-    // w < 1 has no defined meaning; reject a foldable non-positive width at
-    // analysis time rather than silently returning one whole-text passage.
-    else if (right.foldable && {
-        val v = right.eval(); v != null && v.asInstanceOf[Int] < 1 })
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName passage width must be >= 1")
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_passages"
-  protected override def nullSafeEval(s: Any, w: Any): Any =
-    TextHash.passages(
-      s.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      w.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (s, w) => s"graft.functions.TextHash.passages($s, $w)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** t09's blocklist scrub + per-term counts in one byte scan
-  * (TextHash.blockScrub): struct(n_<term>..., n_hits, scrub). Field names
-  * derive from TextHash.blockTerms so the kernel and the query column list
-  * can't drift.
-  */
-case class BlockScrubExpr(child: Expression)
-    extends UnaryExpression {
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a string argument, got ${child.dataType.simpleString}")
-  override def dataType: DataType = StructType(
-    TextHash.blockTerms.map(t => StructField(
-      "n_" + t.toLowerCase.replaceAll("[^a-z0-9]+", "_"),
-      IntegerType, nullable = false)) ++ Seq(
-      StructField("n_hits", IntegerType, nullable = false),
-      StructField("scrub", StringType, nullable = false)))
-  override def prettyName: String = "graft_block_scrub"
-  protected override def nullSafeEval(input: Any): Any =
-    TextHash.blockScrub(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.blockScrub($c)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** t02's quality counters in one byte scan (TextHash.qualityStats):
-  * struct(n_space, n_punct, n_stop).
-  */
-case class QualityStatsExpr(child: Expression)
-    extends UnaryExpression {
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a string argument, got ${child.dataType.simpleString}")
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_space", IntegerType, nullable = false),
-    StructField("n_punct", IntegerType, nullable = false),
-    StructField("n_stop", IntegerType, nullable = false)))
-  override def prettyName: String = "graft_quality_stats"
-  protected override def nullSafeEval(input: Any): Any =
-    TextHash.qualityStats(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.qualityStats($c)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** t03's token stats (TextHash.bpeishStats) — one byte scan replicating
-  * regexp_extract_all('[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 ]') counts + the
-  * whitespace-split size: struct(n_bpeish, n_uniq_bpeish, n_ws_tokens).
-  */
-case class BpeishStatsExpr(child: Expression)
-    extends UnaryExpression {
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a string argument, got ${child.dataType.simpleString}")
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_bpeish", IntegerType, nullable = false),
-    StructField("n_uniq_bpeish", IntegerType, nullable = false),
-    StructField("n_ws_tokens", IntegerType, nullable = false)))
-  override def prettyName: String = "graft_bpeish_stats"
-  protected override def nullSafeEval(input: Any): Any =
-    TextHash.bpeishStats(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.bpeishStats($c)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** t14's passage scrub against a broadcast SORTED lexicon
-  * (TextHash.scrubPassages): struct(clean_text, n_removed). `w` is a
-  * plan-time constant (intLit-validated at registration).
-  */
-case class ScrubPassagesExpr(text: Expression, w: Int, bp: Expression)
-    extends BinaryExpression {
-  require(w >= 1, s"graft_scrub_passages w=$w must be >= 1")
-  override def left: Expression = text
-  override def right: Expression = bp
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (text.dataType == StringType &&
-        (bp.dataType match {
-          case ArrayType(StringType, _) => true
-          case _ => false
-        }))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects (string, array<string>), got " +
-        s"(${text.dataType.simpleString}, ${bp.dataType.simpleString})")
-  override def dataType: DataType = StructType(Seq(
-    StructField("clean_text", StringType, nullable = false),
-    StructField("n_removed", LongType, nullable = false)))
-  override def prettyName: String = "graft_scrub_passages"
-  protected override def nullSafeEval(s: Any, b: Any): Any =
-    TextHash.scrubPassages(
-      s.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], w,
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (s, b) => s"graft.functions.TextHash.scrubPassages($s, $w, $b)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(text = newLeft, bp = newRight)
-}
-
-/** t15's per-doc df score against the broadcast model — parallel SORTED
-  * arrays ts (tokens, UTF8_BINARY order) / ds (document frequencies)
-  * (TextHash.tokDf): struct(n_toks, sum_df) over the row's DISTINCT
-  * tokens; model misses contribute nothing (the inner-join contract).
-  */
-case class TokDfExpr(text: Expression, ts: Expression, ds: Expression)
-    extends TernaryExpression {
-  override def first: Expression = text
-  override def second: Expression = ts
-  override def third: Expression = ds
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val ok = text.dataType == StringType &&
-      (ts.dataType match {
-        case ArrayType(StringType, _) => true
-        case _ => false
-      }) &&
-      (ds.dataType match {
-        case ArrayType(LongType, _) => true
-        case _ => false
-      })
-    if (ok)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects (string, array<string>, array<bigint>), got " +
-        s"(${text.dataType.simpleString}, ${ts.dataType.simpleString}, " +
-        s"${ds.dataType.simpleString})")
-  }
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_toks", LongType, nullable = false),
-    StructField("sum_df", LongType, nullable = false)))
-  override def prettyName: String = "graft_tok_df"
-  protected override def nullSafeEval(s: Any, a: Any, b: Any): Any =
-    TextHash.tokDf(
-      s.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (s, a, b) => s"graft.functions.TextHash.tokDf($s, $a, $b)")
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): Expression =
-    copy(text = newFirst, ts = newSecond, ds = newThird)
-}
-
-/** t17's OOV counters against the broadcast SORTED top-K vocabulary
-  * (TextHash.oovStats): struct(n_tokens, n_oov) over every token
-  * occurrence of the row.
-  */
-case class OovStatsExpr(text: Expression, vocab: Expression)
-    extends BinaryExpression {
-  override def left: Expression = text
-  override def right: Expression = vocab
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (text.dataType == StringType &&
-        (vocab.dataType match {
-          case ArrayType(StringType, _) => true
-          case _ => false
-        }))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects (string, array<string>), got " +
-        s"(${text.dataType.simpleString}, ${vocab.dataType.simpleString})")
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_tokens", LongType, nullable = false),
-    StructField("n_oov", LongType, nullable = false)))
-  override def prettyName: String = "graft_oov_stats"
-  protected override def nullSafeEval(s: Any, v: Any): Any =
-    TextHash.oovStats(
-      s.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (s, v) => s"graft.functions.TextHash.oovStats($s, $v)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(text = newLeft, vocab = newRight)
-}
-
-/** t01's per-language marker scores (TextHash.langScores) — one byte scan
-  * producing struct(s_en, s_de, s_fr, s_es); field names derive from
-  * TextHash.langMarkers so kernel and query column list can't drift.
-  */
-case class LangScoresExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a string argument, got ${child.dataType.simpleString}")
-  override def dataType: DataType = StructType(
-    TextHash.langMarkers.map { case (lang, _) =>
-      StructField(s"s_$lang", LongType, nullable = false)
-    })
-  override def prettyName: String = "graft_lang_scores"
-  protected override def nullSafeEval(input: Any): Any =
-    TextHash.langScores(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.langScores($c)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** One BPE merge round over a token array (TextHash.bpeMerge) — the
-  * applyMerge hot path: (array<string>, string, string) → array<string>.
-  * a/b usually come from the broadcast 1-row winner, so they are columns,
-  * not literals.
-  */
-case class BpeMergeExpr(toks: Expression, a: Expression, b: Expression)
-    extends TernaryExpression {
-  override def first: Expression = toks
-  override def second: Expression = a
-  override def third: Expression = b
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val ok = (toks.dataType match {
-      case ArrayType(StringType, _) => true
-      case _ => false
-    }) && a.dataType == StringType && b.dataType == StringType
-    if (ok)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects (array<string>, string, string), got " +
-        s"(${toks.dataType.simpleString}, ${a.dataType.simpleString}, " +
-        s"${b.dataType.simpleString})")
-  }
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_bpe_merge"
-  protected override def nullSafeEval(t: Any, av: Any, bv: Any): Any =
-    TextHash.bpeMerge(
-      t.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      av.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      bv.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (t, av, bv) => s"graft.functions.TextHash.bpeMerge($t, $av, $bv)")
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): Expression =
-    copy(toks = newFirst, a = newSecond, b = newThird)
-}
-
-/** Distinct single-space-split tokens, first-occurrence order
-  * (TextHash.distinctTokens) — bit-identical to
-  * array_distinct(split(text, ' ')) in one fused pass. string →
-  * array<string>.
-  */
-case class DistinctTokensExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a string argument, got ${child.dataType.simpleString}")
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_distinct_tokens"
-  protected override def nullSafeEval(input: Any): Any =
-    TextHash.distinctTokens(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.distinctTokens($c)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Distinct aligned w-token passages, first-occurrence order
-  * (TextHash.passagesDistinct) — bit-identical to
-  * array_distinct(graft_passages(text, w)) in one fused pass. `w` is a
-  * plan-time constant (intLit-validated at registration).
-  */
-case class PassagesDistinctExpr(child: Expression, w: Int)
-    extends UnaryExpression {
-  require(w >= 1, s"graft_passages_distinct w=$w must be >= 1")
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a string argument, got ${child.dataType.simpleString}")
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_passages_distinct"
-  protected override def nullSafeEval(input: Any): Any =
-    TextHash.passagesDistinct(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], w)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.TextHash.passagesDistinct($c, $w)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** t07/d12's normalization tail (TextHash.normText) over an ALREADY
-  * lowercased input: delete [.,!?;:], collapse space runs, trim edges —
-  * one byte pass replacing two regexp_replace passes. string → string.
-  */
-case class NormTextExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a string argument, got ${child.dataType.simpleString}")
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_norm_text"
-  protected override def nullSafeEval(input: Any): Any =
-    TextHash.normText(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.normText($c)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Perceptual media signature (TextHash.dHash) — m09's difference hash
-  * over stride-sampled payload bytes; `bits` is a plan-time constant
-  * (intLit-validated). Null when the payload is shorter than bits+1 bytes.
-  */
-case class DHashExpr(child: Expression, bits: Int)
-    extends UnaryExpression {
-  require(bits >= 1 && bits <= 62, s"graft_dhash bits=$bits out of range")
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a string argument, got ${child.dataType.simpleString}")
-  override def nullable: Boolean = true
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_dhash"
-  protected override def nullSafeEval(input: Any): Any =
-    TextHash.dHash(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], bits)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      java.lang.Long dh = graft.functions.TextHash.dHash($c, $bits);
-      if (dh == null) { ${ev.isNull} = true; } else { ${ev.value} = dh.longValue(); }
-    """)
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Alignment-tolerant media signature (TextHash.byteMinhash) — d29/m10's
-  * 4×15-bit packed byte-k-gram min-hash; `k` is a plan-time constant
-  * (intLit-validated). Null when the payload has fewer than k bytes.
-  */
-case class ByteMinhashExpr(child: Expression, k: Int)
-    extends UnaryExpression {
-  require(k >= 1 && k <= 64, s"graft_byte_minhash k=$k out of range")
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a string argument, got ${child.dataType.simpleString}")
-  override def nullable: Boolean = true
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_byte_minhash"
-  protected override def nullSafeEval(input: Any): Any =
-    TextHash.byteMinhash(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      java.lang.Long bm = graft.functions.TextHash.byteMinhash($c, $k);
-      if (bm == null) { ${ev.isNull} = true; } else { ${ev.value} = bm.longValue(); }
-    """)
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** d29's untruncated min-hash signature (TextHash.byteMinhashArr) —
-  * `n` raw byte-k-gram min-hashes as array<bigint>: [0..3] = the m10
-  * blocks BEFORE 15-bit truncation (block-key width becomes a join-time
-  * knob), [4..n) = the verify-sketch mixes. `k`/`n` are plan-time
-  * constants (intLit-validated). Null when the payload is shorter than k.
-  */
-case class ByteMinhashArrExpr(child: Expression, k: Int, n: Int)
-    extends UnaryExpression {
-  require(k >= 1 && k <= 64, s"graft_byte_minhash_arr k=$k out of range")
-  require(n >= 1 && n <= 20, s"graft_byte_minhash_arr n=$n out of range")
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a string argument, got ${child.dataType.simpleString}")
-  override def nullable: Boolean = true
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_byte_minhash_arr"
-  protected override def nullSafeEval(input: Any): Any =
-    TextHash.byteMinhashArr(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], k, n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      org.apache.spark.sql.catalyst.util.ArrayData ba =
-        graft.functions.TextHash.byteMinhashArr($c, $k, $n);
-      if (ba == null) { ${ev.isNull} = true; } else { ${ev.value} = ba; }
-    """)
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** t21's n-gram profile hit counter (TextHash.gramHits): count of n-byte
-  * windows of the text equal to any member of the (literal) profile
-  * array. (string, array<string>) → int.
-  */
-case class GramHitsExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (left.dataType == StringType &&
-        right.dataType.isInstanceOf[ArrayType] &&
-        right.dataType.asInstanceOf[ArrayType].elementType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects (string, array<string>), got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "graft_gram_hits"
-  protected override def nullSafeEval(s: Any, grams: Any): Any =
-    TextHash.gramHits(
-      s.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      grams.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (s, g) =>
-      s"graft.functions.TextHash.gramHits($s, $g)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Gram → big-endian packed long (TextHash.packGram) — the merged
-  * language-id artifact's plan-time pre-pack (round 20). string → bigint.
-  */
-case class PackGramExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a string argument, got ${child.dataType.simpleString}")
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_pack_gram"
-  protected override def nullSafeEval(input: Any): Any =
-    TextHash.packGram(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.packGram($c)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** t21's merged all-languages profile scorer (TextHash.gramHitsAll):
-  * (text string, profs array<struct<w int, packed array<bigint>,
-  * li array<int>>>, nlangs intlit) → array<int> of per-language hit
-  * counts. One rolling byte scan per DISTINCT gram width — flat in
-  * language count; see the kernel's scaladoc for the scale law.
-  */
-case class GramHitsAllExpr(left: Expression, right: Expression, nlangs: Int)
-    extends BinaryExpression {
-  require(nlangs >= 1 && nlangs <= 4096,
-    s"graft_gram_hits_all nlangs=$nlangs out of range [1, 4096]")
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val profOk = right.dataType match {
-      case ArrayType(st: StructType, _) => st.length == 3 &&
-        st(0).dataType == IntegerType &&
-        st(1).dataType.isInstanceOf[ArrayType] &&
-        st(1).dataType.asInstanceOf[ArrayType].elementType == LongType &&
-        st(2).dataType.isInstanceOf[ArrayType] &&
-        st(2).dataType.asInstanceOf[ArrayType].elementType == IntegerType
-      case _ => false
-    }
-    if (left.dataType == StringType && profOk)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects (string, array<struct<int, array<bigint>, " +
-        s"array<int>>>), got (${left.dataType.simpleString}, " +
-        s"${right.dataType.simpleString})")
-  }
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "graft_gram_hits_all"
-  protected override def nullSafeEval(s: Any, profs: Any): Any =
-    TextHash.gramHitsAll(
-      s.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      profs.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      nlangs)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (s, g) =>
-      s"graft.functions.TextHash.gramHitsAll($s, $g, $nlangs)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Char-n-gram model buckets (TextHash.gramBuckets) — t18's model-build
-  * feed: one compiled pass per row, no per-position UTF8String. Null when
-  * the text has < n codepoints.
-  */
-case class GramBucketsExpr(child: Expression, n: Int, m: Long)
-    extends UnaryExpression {
-  require(n >= 1 && n <= 64, s"graft_gram_buckets n=$n out of range [1, 64]")
-  require(m >= 1, s"graft_gram_buckets m=$m must be positive")
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a string argument, got ${child.dataType.simpleString}")
-  override def nullable: Boolean = true
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_gram_buckets"
-  protected override def nullSafeEval(input: Any): Any =
-    TextHash.gramBuckets(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n, m)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.TextHash.gramBuckets($c, $n, ${m}L);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Whole-document trigram-LM scoring (TextHash.lmFamiliarity) — t18's
-  * probe: per char-n-gram bucket, binary-search the broadcast SORTED model
-  * array, accumulate (n_tris, familiarity). Null when the text has < n
-  * codepoints (the exploded twin emitted no rows for such docs).
-  */
-case class LmFamiliarityExpr(first: Expression, second: Expression,
-    third: Expression, n: Int, m: Long)
-    extends TernaryExpression {
-  require(n >= 1 && n <= 64, s"graft_lm_familiarity n=$n out of range [1, 64]")
-  require(m >= 1, s"graft_lm_familiarity m=$m must be positive")
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def longArr(e: Expression) = e.dataType match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    }
-    if (first.dataType == StringType && longArr(second) && longArr(third))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects (string, array<bigint>, array<bigint>), got " +
-        s"(${first.dataType.simpleString}, ${second.dataType.simpleString}, " +
-        s"${third.dataType.simpleString})")
-  }
-  override def nullable: Boolean = true
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_tris", LongType, nullable = false),
-    StructField("familiarity", LongType, nullable = false)))
-  override def prettyName: String = "graft_lm_familiarity"
-  protected override def nullSafeEval(s: Any, bs: Any, cs: Any): Any =
-    TextHash.lmFamiliarity(
-      s.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n, m,
-      bs.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      cs.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (s, bs, cs) => s"""
-      ${ev.value} = graft.functions.TextHash.lmFamiliarity($s, $n, ${m}L, $bs, $cs);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): Expression =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
-/** Positional byte-k-gram rolling hashes (TextHash.byteGramChain) — the
-  * byte-level twin of graft_gram_chain; d29's exact Jaccard verify input.
-  */
-case class ByteGramChainExpr(child: Expression, k: Int)
-    extends UnaryExpression {
-  require(k >= 1 && k <= 64, s"graft_byte_grams k=$k out of range")
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a string argument, got ${child.dataType.simpleString}")
-  override def nullable: Boolean = true
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_byte_grams"
-  protected override def nullSafeEval(input: Any): Any =
-    TextHash.byteGramChain(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.TextHash.byteGramChain($c, $k);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Strided byte-sample thumbnail hex (TextHash.thumbHex) — m05's one-pass
-  * resize kernel; the HOF form it replaces re-hexed the whole text per
-  * sampled byte.
-  */
-case class ThumbHexExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (left.dataType != StringType || right.dataType != IntegerType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects (string, int), got " +
-          s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-    else if (right.foldable && {
-        val v = right.eval(); v != null && v.asInstanceOf[Int] < 1 })
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName byte budget must be >= 1")
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_thumb"
-  protected override def nullSafeEval(s: Any, k: Any): Any =
-    TextHash.thumbHex(
-      s.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      k.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (s, k) => s"graft.functions.TextHash.thumbHex($s, $k)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Fixed-width hex tile chunks (TextHash.hexTiles) — m07's explode kernel;
-  * the HOF form it replaces materialized the full hex string per row and
-  * sliced it with an interpreted lambda per tile.
-  */
-case class HexTilesExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (left.dataType != StringType || right.dataType != IntegerType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects (string, int), got " +
-          s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-    else if (right.foldable && {
-        val v = right.eval(); v != null && v.asInstanceOf[Int] < 1 })
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName tile byte width must be >= 1")
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_hex_tiles"
-  protected override def nullSafeEval(s: Any, w: Any): Any =
-    TextHash.hexTiles(
-      s.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      w.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (s, w) => s"graft.functions.TextHash.hexTiles($s, $w)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 /** Per-session registration of the engine's native functions. */
 object GraftFunctions {
+  import Kernel.{Const, In, Lit}
+
+  private def arr(t: DataType) = ArrayType(t, containsNull = false)
+  private def struct(fields: (String, DataType)*) = StructType(fields.map {
+    case (n, t) => StructField(n, t, nullable = false)
+  })
+  private def arrayOf(el: DataType) = In(s"array<${el.simpleString}>", {
+    case ArrayType(t, _) => t == el
+    case _ => false
+  })
+  private val str = In("string", _ == StringType)
+  private val longs = arrayOf(LongType)
+  private val strs = arrayOf(StringType)
+  private val doubles = arrayOf(DoubleType)
+  private val vec = In("array<float|double>", {
+    case ArrayType(FloatType | DoubleType, _) => true
+    case _ => false
+  })
+  /** A k-means codebook: (cluster, cvec) structs. */
+  private val cents = In("array<struct<int, array<double>>>", {
+    case ArrayType(st: StructType, _) => st.length == 2 &&
+      st(0).dataType == IntegerType && doubles.accepts(st(1).dataType)
+    case _ => false
+  })
+  /** The merged language-id artifact: one (w, packed SORTED, li parallel
+    * language index) struct per distinct gram byte width.
+    */
+  private val profiles = In("array<struct<int, array<bigint>, array<int>>>", {
+    case ArrayType(st: StructType, _) => st.length == 3 &&
+      st(0).dataType == IntegerType &&
+      longs.accepts(st(1).dataType) &&
+      arrayOf(IntegerType).accepts(st(2).dataType)
+    case _ => false
+  })
+  /** A per-row int width that must be >= 1 when foldable: the kernel's
+    * documented SQL equivalence divides by it, so w < 1 has no defined
+    * meaning — reject it at analysis rather than silently return one
+    * whole-text result. (Non-foldable widths are guarded in the kernel.)
+    */
+  private def width(what: String) = In("int", _ == IntegerType, e =>
+    if (e.foldable && { val v = e.eval(); v != null && v.asInstanceOf[Int] < 1 })
+      Some(s"$what must be >= 1")
+    else None)
+
+  /** Every scalar graft_* function. Result nulls beyond null-in/null-out
+    * are the kernel's answer for input it cannot score: too few tokens,
+    * codepoints or bytes for one gram or window, mismatched lengths, a
+    * zero norm or an empty codebook.
+    */
+  val kernels: Seq[Kernel] = Seq(
+    Kernel("graft_poly_hash", "TextHash.polyHash", Seq(str), LongType),
+    Kernel("graft_token_hashes", "TextHash.tokenHashes", Seq(str), arr(LongType)),
+    // null when the text has < 2 tokens (no bigram shingles)
+    Kernel("graft_minhash_sig", "TextHash.minHashSig", Seq(str), arr(LongType),
+      nullable = true),
+    // null when the text has < 5 tokens (no 5-grams)
+    Kernel("graft_gram5_distinct", "TextHash.gram5Distinct", Seq(str), arr(LongType),
+      nullable = true),
+    // positional word-n-gram chain (array index = 0-based token offset, the
+    // geometry d21's span verify consumes); `n` is the span threshold, a
+    // plan-time constant. Null when the text has < n tokens.
+    Kernel("graft_gram_chain", "TextHash.gramChain", Seq(str, Lit("n")), arr(LongType),
+      nullable = true,
+      check = { case Seq(n) => require(n >= 1, s"graft_gram_chain n=$n out of range") }),
+    // winnowing anchors: the distinct window-minimum (pos, gram) pairs over
+    // the word-n-gram chain — d23's w×-cheaper blocking key with the
+    // span ≥ n+w−1 completeness theorem. Null below n + w − 1 tokens.
+    Kernel("graft_winnow", "TextHash.winnow", Seq(str, Lit("n"), Lit("w")),
+      arr(struct("p" -> IntegerType, "g" -> LongType)), nullable = true,
+      check = { case Seq(n, w) =>
+        require(n >= 1 && w >= 1, s"graft_winnow n=$n w=$w out of range") }),
+    // distinct-hit count against a SORTED broadcast snapshot (s33's hot
+    // path): bit-equal to size(array_intersect(gs, snap)) under the
+    // sorted-distinct snapshot contract
+    Kernel("graft_sorted_hits", "TextHash.sortedHits", Seq(longs, longs), IntegerType,
+      nullable = true),
+    // the approximate counterpart over a broadcast BLOOM word array (d27/
+    // s35): `k` probes, no false negatives, measured false positives (d28)
+    Kernel("graft_bloom_hits", "TextHash.bloomHits", Seq(longs, longs, Lit("k")),
+      IntegerType, nullable = true, check = { case Seq(k) =>
+        require(k >= 1 && k <= 16, s"graft_bloom_hits k=$k out of range [1, 16]") }),
+    Kernel("graft_simhash", "TextHash.simHash", Seq(str), LongType),
+    Kernel("graft_rep_stats", "TextHash.repStats", Seq(str), struct(
+      "n_tokens" -> IntegerType, "n_uniq_tokens" -> IntegerType,
+      "top_tok_n" -> IntegerType, "top_bigram_n" -> IntegerType)),
+    Kernel("graft_passages", "TextHash.passages", Seq(str, width("passage width")),
+      arr(StringType)),
+    // null when the text has < 4 codepoints (no full quarters)
+    Kernel("graft_quarter_means", "TextHash.quarterMeans", Seq(str), arr(DoubleType),
+      nullable = true),
+    Kernel("graft_edge_ngrams", "TextHash.edgeNgramStats", Seq(str), struct(
+      "n_grams" -> IntegerType, "n_uniq_grams" -> IntegerType,
+      "first5_grams" -> StringType)),
+    // null on length mismatch (and, for cos, zero norm)
+    Kernel("graft_dot", "VecOps.dotF", Seq(vec, vec), DoubleType, nullable = true,
+      doubleCall = "VecOps.dotD"),
+    Kernel("graft_cos", "VecOps.cosF", Seq(vec, vec), DoubleType, nullable = true,
+      doubleCall = "VecOps.cosD"),
+    // squared L2, the x11 k-means assignment kernel: one compiled call per
+    // (row, centroid) instead of two interpreted aggregate(zip_with(...))
+    // folds — the same sequential fold, so bit-identical to the oracle twin
+    Kernel("graft_l2", "VecOps.d2F", Seq(vec, vec), DoubleType, nullable = true,
+      doubleCall = "VecOps.d2D"),
+    // one IVF-PQ asymmetric-distance term: encode r's subspace window
+    // against the codebook and score rqe's window against the chosen
+    // codeword in ONE kernel (VecOps.adcTermD has the value contract).
+    // off/len are plan-time constants like lsh_bucket's bits: the subspace
+    // layout is index geometry, not per-row data.
+    Kernel("graft_adc_term", "VecOps.adcTermD",
+      Seq(doubles, doubles, cents, Lit("off"), Lit("len")), DoubleType, nullable = true,
+      check = { case Seq(off, len) => require(off >= 0 && len >= 1,
+        s"graft_adc_term off=$off len=$len out of range") }),
+    // the k-means assignment argmin, the Lloyd hot path (VecOps.bestCellD;
+    // graft.ext.Similarity.bestCellExpr is the one shared SQL spelling)
+    Kernel("graft_best_cell", "VecOps.bestCellD", Seq(doubles, cents),
+      struct("dd" -> DoubleType, "c" -> IntegerType), nullable = true),
+    // encode-only subspace argmin (x18's flat-PQ code_s): the cluster id of
+    // the (dd, cluster)-argmin codeword for the [off, off+len) window
+    Kernel("graft_code", "VecOps.codeD", Seq(doubles, cents, Lit("off"), Lit("len")),
+      IntegerType, nullable = true, check = { case Seq(off, len) =>
+        require(off >= 0 && len >= 1, s"graft_code off=$off len=$len out of range") }),
+    // INT8 symmetric scalar quantization codes, the x09/x10 hot path as one
+    // compiled pass per vector instead of interpreted transform/array_max
+    // lambdas (measured ~6× on the sf1 embeddings). Null for a zero vector.
+    Kernel("graft_q127", "VecOps.q127F", Seq(vec), arr(LongType), nullable = true,
+      doubleCall = "VecOps.q127D"),
+    // exact int64 dot of two code arrays; null on length mismatch
+    Kernel("graft_doti", "VecOps.dotI", Seq(longs, longs), LongType, nullable = true),
+    // m09's difference hash over stride-sampled payload bytes; null when the
+    // payload is shorter than bits+1 bytes
+    Kernel("graft_dhash", "TextHash.dHash", Seq(str, Lit("bits")), LongType,
+      nullable = true, check = { case Seq(bits) =>
+        require(bits >= 1 && bits <= 62, s"graft_dhash bits=$bits out of range") }),
+    // d29/m10's 4×15-bit packed byte-k-gram min-hash; null below k bytes
+    Kernel("graft_byte_minhash", "TextHash.byteMinhash", Seq(str, Lit("k")), LongType,
+      nullable = true, check = { case Seq(k) =>
+        require(k >= 1 && k <= 64, s"graft_byte_minhash k=$k out of range") }),
+    // d29's untruncated signature: [0..3] = the m10 blocks BEFORE 15-bit
+    // truncation (block-key width becomes a join-time knob), [4..n) = the
+    // verify-sketch mixes. Null below k bytes.
+    Kernel("graft_byte_minhash_arr", "TextHash.byteMinhashArr",
+      Seq(str, Lit("k"), Lit("n")), arr(LongType), nullable = true,
+      check = { case Seq(k, n) =>
+        require(k >= 1 && k <= 64, s"graft_byte_minhash_arr k=$k out of range")
+        require(n >= 1 && n <= 20, s"graft_byte_minhash_arr n=$n out of range") }),
+    // byte-level twin of graft_gram_chain: d29's exact Jaccard verify input
+    Kernel("graft_byte_grams", "TextHash.byteGramChain", Seq(str, Lit("k")),
+      arr(LongType), nullable = true, check = { case Seq(k) =>
+        require(k >= 1 && k <= 64, s"graft_byte_grams k=$k out of range") }),
+    // t21's profile hit count: n-byte windows equal to any profile gram
+    Kernel("graft_gram_hits", "TextHash.gramHits", Seq(str, strs), IntegerType),
+    // gram → big-endian packed long: the merged language-id artifact's
+    // plan-time pre-pack
+    Kernel("graft_pack_gram", "TextHash.packGram", Seq(str), LongType),
+    // all-languages scorer: one rolling byte scan per DISTINCT gram width,
+    // flat in language count (see the kernel's scaladoc for the scale law)
+    Kernel("graft_gram_hits_all", "TextHash.gramHitsAll",
+      Seq(str, profiles, Lit("nlangs")), arr(IntegerType), check = { case Seq(nl) =>
+        require(nl >= 1 && nl <= 4096,
+          s"graft_gram_hits_all nlangs=$nl out of range [1, 4096]") }),
+    // t18's char-n-gram model buckets; `m` is Long-ranged in the Scala API
+    // (TextOps.trigramFamiliarity), hence longLit. Null below n codepoints.
+    Kernel("graft_gram_buckets", "TextHash.gramBuckets",
+      Seq(str, Lit("n"), Lit("m", long = true)), arr(LongType), nullable = true,
+      check = { case Seq(n, m) =>
+        require(n >= 1 && n <= 64, s"graft_gram_buckets n=$n out of range [1, 64]")
+        require(m >= 1, s"graft_gram_buckets m=$m must be positive") }),
+    // whole-document trigram-LM scoring against the broadcast SORTED model
+    // (bs buckets, cs counts). Null below n codepoints: the exploded twin
+    // emitted no rows for such docs.
+    Kernel("graft_lm_familiarity", "TextHash.lmFamiliarity",
+      Seq(str, Lit("n"), Lit("m", long = true), longs, longs),
+      struct("n_tris" -> LongType, "familiarity" -> LongType), nullable = true,
+      check = { case Seq(n, m) =>
+        require(n >= 1 && n <= 64, s"graft_lm_familiarity n=$n out of range [1, 64]")
+        require(m >= 1, s"graft_lm_familiarity m=$m must be positive") }),
+    // m05's one-pass strided-sample thumbnail; the HOF form it replaces
+    // re-hexed the whole text per sampled byte
+    Kernel("graft_thumb", "TextHash.thumbHex", Seq(str, width("byte budget")),
+      StringType),
+    // m07's fixed-width hex tiles; the HOF form materialized the full hex
+    // string per row and sliced it with an interpreted lambda per tile
+    Kernel("graft_hex_tiles", "TextHash.hexTiles", Seq(str, width("tile byte width")),
+      arr(StringType)),
+    // t09's blocklist scrub + per-term counts in one byte scan; field names
+    // derive from TextHash.blockTerms so kernel and query can't drift
+    Kernel("graft_block_scrub", "TextHash.blockScrub", Seq(str), struct(
+      TextHash.blockTerms.map(t =>
+        ("n_" + t.toLowerCase.replaceAll("[^a-z0-9]+", "_")) -> IntegerType) ++
+        Seq("n_hits" -> IntegerType, "scrub" -> StringType): _*)),
+    // t03's token stats: regexp_extract_all('[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 ]')
+    // counts + the whitespace-split size in one byte scan
+    Kernel("graft_bpeish_stats", "TextHash.bpeishStats", Seq(str), struct(
+      "n_bpeish" -> IntegerType, "n_uniq_bpeish" -> IntegerType,
+      "n_ws_tokens" -> IntegerType)),
+    // t14's passage scrub against a broadcast SORTED lexicon
+    Kernel("graft_scrub_passages", "TextHash.scrubPassages", Seq(str, Lit("w"), strs),
+      struct("clean_text" -> StringType, "n_removed" -> LongType),
+      check = { case Seq(w) => require(w >= 1, s"graft_scrub_passages w=$w must be >= 1") }),
+    // t15's df score over the row's DISTINCT tokens against the broadcast
+    // model — parallel SORTED ts (tokens) / ds (doc freqs); misses
+    // contribute nothing (the inner-join contract)
+    Kernel("graft_tok_df", "TextHash.tokDf", Seq(str, strs, longs),
+      struct("n_toks" -> LongType, "sum_df" -> LongType)),
+    // t17's OOV counters over every token occurrence against the broadcast
+    // SORTED top-K vocabulary
+    Kernel("graft_oov_stats", "TextHash.oovStats", Seq(str, strs),
+      struct("n_tokens" -> LongType, "n_oov" -> LongType)),
+    // t07/d12's normalization tail over ALREADY lowercased input: one byte
+    // pass replacing two regexp_replace passes
+    Kernel("graft_norm_text", "TextHash.normText", Seq(str), StringType),
+    // bit-identical to array_distinct(split(text, ' ')) in one fused pass
+    Kernel("graft_distinct_tokens", "TextHash.distinctTokens", Seq(str), arr(StringType)),
+    // one BPE merge round; a/b usually come from the broadcast 1-row winner,
+    // so they are columns, not literals
+    Kernel("graft_bpe_merge", "TextHash.bpeMerge", Seq(strs, str, str), arr(StringType)),
+    // t01's per-language marker scores in one byte scan; field names derive
+    // from TextHash.langMarkers
+    Kernel("graft_lang_scores", "TextHash.langScores", Seq(str),
+      struct(TextHash.langMarkers.map { case (l, _) => s"s_$l" -> LongType }: _*)),
+    // bit-identical to array_distinct(graft_passages(text, w)) in one pass
+    Kernel("graft_passages_distinct", "TextHash.passagesDistinct", Seq(str, Lit("w")),
+      arr(StringType), check = { case Seq(w) =>
+        require(w >= 1, s"graft_passages_distinct w=$w must be >= 1") }),
+    // t02's quality counters in one byte scan
+    Kernel("graft_quality_stats", "TextHash.qualityStats", Seq(str), struct(
+      "n_space" -> IntegerType, "n_punct" -> IntegerType, "n_stop" -> IntegerType)),
+    // `bits` is a plan-time constant, not a child expression: plane count
+    // shapes the physical candidate volume, and a per-row-varying width has
+    // no meaning for a blocking key. Higher bits refine lower
+    // (VecOps.lshBucket doc), which lets callers raise it with corpus size.
+    // 0 planes = every vector in one cell (quadratic blocking); > 30 planes
+    // overflow the Int bucket (1 << 32 wraps to bit 0 and silently breaks
+    // the higher-bits-refine-lower law).
+    Kernel("graft_lsh_bucket", "VecOps.lshBucket",
+      Seq(vec, Lit("bits", default = Some(8))), IntegerType,
+      doubleCall = "VecOps.lshBucketD", check = { case Seq(bits) =>
+        require(bits >= 1 && bits <= 30,
+          s"graft_lsh_bucket bits=$bits out of range [1, 30]") }),
+    // KMV set-union estimate over two serialized sketch columns: sketch
+    // algebra without the raw data
+    Kernel("graft_kmv_union_est", "KmvBuffer.unionEstimate",
+      Seq(In("binary", _ == BinaryType), In("binary", _ == BinaryType), Const(64)),
+      DoubleType))
+
+
   /** Plan-time int-literal extraction for trailing geometry args (subspace
     * offsets/widths, band counts). These functions are registered
     * session-wide where ad-hoc SQL can reach them, and the bare
@@ -1469,13 +541,6 @@ object GraftFunctions {
     }
   }
 
-  /** Arity gate for the registration lambdas: every builder below indexes
-    * `cs(i)` positionally, so ad-hoc SQL calling with too few args hit an
-    * opaque IndexOutOfBoundsException from inside function resolution
-    * (round-14 advice) — reject with the same named AnalysisException
-    * intLit raises. `maxN` covers the optional-trailing-arg forms
-    * (graft_lsh_bucket's bits defaulting).
-    */
   /** Long-geometry variant of intLit: accepts a foldable INT or BIGINT
     * literal. graft_gram_buckets / graft_lm_familiarity take a bucket
     * count that is Long-ranged in the Scala API (TextOps.trigramFamiliarity
@@ -1499,6 +564,13 @@ object GraftFunctions {
     }
   }
 
+  /** Arity gate for the registration lambdas: every builder below indexes
+    * `cs(i)` positionally, so ad-hoc SQL calling with too few args hit an
+    * opaque IndexOutOfBoundsException from inside function resolution
+    * (round-14 advice) — reject with the same named AnalysisException
+    * intLit raises. `maxN` covers the optional-trailing-arg forms
+    * (graft_lsh_bucket's bits defaulting).
+    */
   private def arity(fn: String, n: Int, maxN: Int = -1)(
       b: Seq[Expression] => Expression): Seq[Expression] => Expression = {
     val hi = if (maxN < 0) n else maxN
@@ -1511,94 +583,35 @@ object GraftFunctions {
           s", got ${cs.length}")))
   }
 
-  val fns: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "graft_poly_hash"    -> arity("graft_poly_hash", 1)(cs => PolyHashExpr(cs.head)),
-    "graft_token_hashes" -> arity("graft_token_hashes", 1)(cs => TokenHashesExpr(cs.head)),
-    "graft_minhash_sig"  -> arity("graft_minhash_sig", 1)(cs => MinHashSigExpr(cs.head)),
-    "graft_gram5_distinct" -> arity("graft_gram5_distinct", 1)(cs => Gram5DistinctExpr(cs.head)),
-    "graft_gram_chain"   -> arity("graft_gram_chain", 2)(cs => GramChainExpr(cs(0),
-      intLit("graft_gram_chain", "n", cs(1)))),
-    "graft_sorted_hits"  -> arity("graft_sorted_hits", 2)(cs => SortedHitsExpr(cs(0), cs(1))),
-    "graft_bloom_hits"   -> arity("graft_bloom_hits", 3)(cs => BloomHitsExpr(cs(0), cs(1),
-      intLit("graft_bloom_hits", "k", cs(2)))),
-    "graft_winnow"       -> arity("graft_winnow", 3)(cs => WinnowExpr(cs(0),
-      intLit("graft_winnow", "n", cs(1)),
-      intLit("graft_winnow", "w", cs(2)))),
-    "graft_simhash"      -> arity("graft_simhash", 1)(cs => SimHashExpr(cs.head)),
-    "graft_rep_stats"    -> arity("graft_rep_stats", 1)(cs => RepStatsExpr(cs.head)),
-    "graft_passages"     -> arity("graft_passages", 2)(cs => PassagesExpr(cs(0), cs(1))),
-    "graft_quarter_means" -> arity("graft_quarter_means", 1)(cs => QuarterMeansExpr(cs.head)),
-    "graft_edge_ngrams"  -> arity("graft_edge_ngrams", 1)(cs => EdgeNgramsExpr(cs.head)),
-    "graft_dot"          -> arity("graft_dot", 2)(cs => DotFExpr(cs(0), cs(1))),
-    "graft_cos"          -> arity("graft_cos", 2)(cs => CosFExpr(cs(0), cs(1))),
-    "graft_l2"           -> arity("graft_l2", 2)(cs => D2Expr(cs(0), cs(1))),
-    // trailing off/len must be int literals (plan-time subspace layout) —
-    // validated by intLit, which raises a named AnalysisException instead
-    // of the opaque NPE/CCE a column reference or Long literal used to hit
-    "graft_adc_term"     -> arity("graft_adc_term", 5)(cs => AdcTermExpr(cs(0), cs(1), cs(2),
-      intLit("graft_adc_term", "off", cs(3)),
-      intLit("graft_adc_term", "len", cs(4)))),
-    "graft_best_cell"    -> arity("graft_best_cell", 2)(cs => BestCellExpr(cs(0), cs(1))),
-    "graft_code"         -> arity("graft_code", 4)(cs => CodeExpr(cs(0), cs(1),
-      intLit("graft_code", "off", cs(2)),
-      intLit("graft_code", "len", cs(3)))),
-    "graft_q127"         -> arity("graft_q127", 1)(cs => Q127Expr(cs.head)),
-    "graft_doti"         -> arity("graft_doti", 2)(cs => DotIExpr(cs(0), cs(1))),
-    "graft_dhash"        -> arity("graft_dhash", 2)(cs => DHashExpr(cs(0),
-      intLit("graft_dhash", "bits", cs(1)))),
-    "graft_byte_minhash" -> arity("graft_byte_minhash", 2)(cs => ByteMinhashExpr(cs(0),
-      intLit("graft_byte_minhash", "k", cs(1)))),
-    "graft_byte_minhash_arr" -> arity("graft_byte_minhash_arr", 3)(cs =>
-      ByteMinhashArrExpr(cs(0),
-        intLit("graft_byte_minhash_arr", "k", cs(1)),
-        intLit("graft_byte_minhash_arr", "n", cs(2)))),
-    "graft_byte_grams"   -> arity("graft_byte_grams", 2)(cs => ByteGramChainExpr(cs(0),
-      intLit("graft_byte_grams", "k", cs(1)))),
-    "graft_gram_hits"    -> arity("graft_gram_hits", 2)(cs => GramHitsExpr(cs(0), cs(1))),
-    "graft_pack_gram"    -> arity("graft_pack_gram", 1)(cs => PackGramExpr(cs.head)),
-    "graft_gram_hits_all" -> arity("graft_gram_hits_all", 3)(cs =>
-      GramHitsAllExpr(cs(0), cs(1),
-        intLit("graft_gram_hits_all", "nlangs", cs(2)))),
-    "graft_gram_buckets" -> arity("graft_gram_buckets", 3)(cs =>
-      GramBucketsExpr(cs(0),
-        intLit("graft_gram_buckets", "n", cs(1)),
-        longLit("graft_gram_buckets", "m", cs(2)))),
-    "graft_lm_familiarity" -> arity("graft_lm_familiarity", 5)(cs =>
-      LmFamiliarityExpr(cs(0), cs(3), cs(4),
-        intLit("graft_lm_familiarity", "n", cs(1)),
-        longLit("graft_lm_familiarity", "m", cs(2)))),
-    "graft_thumb"        -> arity("graft_thumb", 2)(cs => ThumbHexExpr(cs(0), cs(1))),
-    "graft_hex_tiles"    -> arity("graft_hex_tiles", 2)(cs => HexTilesExpr(cs(0), cs(1))),
-    "graft_block_scrub"  -> arity("graft_block_scrub", 1)(cs => BlockScrubExpr(cs.head)),
-    "graft_bpeish_stats" -> arity("graft_bpeish_stats", 1)(cs =>
-      BpeishStatsExpr(cs.head)),
-    "graft_scrub_passages" -> arity("graft_scrub_passages", 3)(cs =>
-      ScrubPassagesExpr(cs(0),
-        intLit("graft_scrub_passages", "w", cs(1)), cs(2))),
-    "graft_tok_df"       -> arity("graft_tok_df", 3)(cs =>
-      TokDfExpr(cs(0), cs(1), cs(2))),
-    "graft_oov_stats"    -> arity("graft_oov_stats", 2)(cs =>
-      OovStatsExpr(cs(0), cs(1))),
-    "graft_norm_text"    -> arity("graft_norm_text", 1)(cs =>
-      NormTextExpr(cs.head)),
-    "graft_distinct_tokens" -> arity("graft_distinct_tokens", 1)(cs =>
-      DistinctTokensExpr(cs.head)),
-    "graft_bpe_merge"    -> arity("graft_bpe_merge", 3)(cs =>
-      BpeMergeExpr(cs(0), cs(1), cs(2))),
-    "graft_lang_scores"  -> arity("graft_lang_scores", 1)(cs =>
-      LangScoresExpr(cs.head)),
-    "graft_passages_distinct" -> arity("graft_passages_distinct", 2)(cs =>
-      PassagesDistinctExpr(cs(0),
-        intLit("graft_passages_distinct", "w", cs(1)))),
-    "graft_quality_stats" -> arity("graft_quality_stats", 1)(cs => QualityStatsExpr(cs.head)),
-    "graft_lsh_bucket"   -> arity("graft_lsh_bucket", 1, 2)(cs => LshBucketExpr(cs.head,
-      if (cs.length > 1) intLit("graft_lsh_bucket", "bits", cs(1)) else 8)),
+  /** A registry row's function builder: the SQL arguments become the
+    * kernel's children, plan-time literals validated (intLit/longLit, then
+    * the row's `check`) before the expression exists.
+    */
+  private def build(k: Kernel)(cs: Seq[Expression]): Expression = {
+    val given = cs.iterator
+    val children = k.args.map {
+      case _: In => given.next()
+      case Lit(_, _, Some(d)) if !given.hasNext => Literal(d)
+      case Lit(arg, false, _) => Literal(intLit(k.name, arg, given.next()))
+      case Lit(arg, true, _) => Literal(longLit(k.name, arg, given.next()))
+      case Const(v) => Literal(v)
+    }
+    k.check(k.args.zip(children).collect {
+      case (_: Lit, l: Literal) => l.value.asInstanceOf[Number].longValue
+    })
+    KernelExpr(k, children)
+  }
+
+  val fns: Seq[(String, Seq[Expression] => Expression)] = kernels.map { k =>
+    val n = k.args.count { case _: In | Lit(_, _, None) => true; case _ => false }
+    val optional = k.args.count { case Lit(_, _, Some(_)) => true; case _ => false }
+    k.name -> arity(k.name, n, n + optional)(build(k))
+  } ++ Seq(
     // mergeable KMV distinct sketch (analyzer wraps the raw AggregateFunction)
     "graft_kmv"          -> arity("graft_kmv", 1)(cs => KmvSketchAgg(cs.head, 64)),
     // mergeable k-means centroid accumulator; trailing k is an int literal
     "graft_centroids"    -> arity("graft_centroids", 3)(cs => CentroidSumAgg(cs(0), cs(1),
       intLit("graft_centroids", "k", cs(2)))),
-    "graft_kmv_union_est" -> arity("graft_kmv_union_est", 2)(cs => KmvUnionEstExpr(cs(0), cs(1), 64)),
     // generators (table functions): trailing args must be int literals
     "graft_token_windows" -> arity("graft_token_windows", 3)(cs => TokenWindowsExpr(cs(0),
       intLit("graft_token_windows", "width", cs(1)),

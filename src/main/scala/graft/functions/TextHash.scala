@@ -697,8 +697,8 @@ object TextHash {
     * the token array or re-evaluating the lambda body per element.
     */
   def passages(s: UTF8String, w: Int): ArrayData = {
-    // PassagesExpr rejects foldable w < 1 at analysis time; this guards the
-    // direct-call and non-foldable paths the analyzer can't see.
+    // graft_passages rejects foldable w < 1 at analysis time; this guards
+    // the direct-call and non-foldable paths the analyzer can't see.
     require(w >= 1, s"passage width must be >= 1, got $w")
     val bytes = s.getBytes
     val nb = bytes.length

@@ -27,6 +27,9 @@ object SparkSpec {
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
       .config("spark.ui.enabled", "false")
+      // a generated-code compile failure fails the spec that caused it,
+      // instead of being logged and run interpreted (as Spark's own suites)
+      .config("spark.sql.codegen.fallback", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
