@@ -253,24 +253,19 @@ object Bench {
     val calibIoStart = calibrateIo()
     val calibMemStart = calibrateMem()
     val loadStart = loadAvg()
-    sys.env.get("GRAFT_STATE_PARTS")
-      .foreach(v => spark.conf.set("graft.stream.stateParts", v))
-    sys.env.get("GRAFT_STREAM_PROVIDER")
-      .foreach(v => spark.conf.set("graft.stream.provider", v))
-    // Experimental-config knobs (round-20, ADVICE r19): a provider /
-    // stateParts / conf-injection A/B is a NON-COMPARABLE configuration —
-    // its full run must never clobber a canonical checkpoint (the exact
-    // corruption class the BENCH_SUBSET guard exists for; the RocksDB
-    // swap measured 5.4x slower, which would mass-trigger the >2x
-    // regression re-probe against the hdfs reference). Any of these set
-    // routes the detail artifact to BENCH_EXPERIMENT.json, and the values
-    // are stamped into prov ("exp_knobs") so committed-artifact matching
-    // can key on them. SPARK_GRAFT_CONF is applied by Verify, not Bench,
-    // but a bench run launched with it set is still flagged: the operator
-    // plainly intended a non-default configuration.
+    // Experimental-config knob (round-20, ADVICE r19): a conf-injection
+    // A/B is a NON-COMPARABLE configuration — its full run must never
+    // clobber a canonical checkpoint (the exact corruption class the
+    // BENCH_SUBSET guard exists for; the RocksDB swap measured 5.4x
+    // slower, which would mass-trigger the >2x regression re-probe
+    // against the hdfs reference). If set, the detail artifact goes to
+    // BENCH_EXPERIMENT.json, and the value is stamped into prov
+    // ("exp_knobs") so committed-artifact matching can key on it.
+    // SPARK_GRAFT_CONF is applied by Verify, not Bench, but a bench run
+    // launched with it set is still flagged: the operator plainly
+    // intended a non-default configuration.
     val expKnobs: Seq[(String, String)] =
-      Seq("GRAFT_STREAM_PROVIDER", "GRAFT_STATE_PARTS", "SPARK_GRAFT_CONF")
-        .flatMap(k => sys.env.get(k).map(k -> _))
+      sys.env.get("SPARK_GRAFT_CONF").map("SPARK_GRAFT_CONF" -> _).toSeq
     // Production-knob mode (round-17 verdict item 6): GRAFT_BENCH_AUTO=1
     // resolves the two remaining FIXED-default training knobs the way a
     // deployment would (`auto` — corpus-derived), so a scale checkpoint
@@ -278,8 +273,9 @@ object Bench {
     // runs, not a knob artifact (the r16 sf10 checkpoint carried d17/p08
     // at 375/364 s where the same tree measures 3.35/3.83 s at the
     // derived k). OFF by default: the driver's sf0.1 artifact keeps
-    // round-over-round knob continuity (bloomBits, minhashBlockBits and
-    // stateParts are already `auto` as their library defaults). Stamped
+    // round-over-round knob continuity (bloomBits and minhashBlockBits
+    // are already `auto` as their library defaults, and streaming state
+    // partitions are always derived from the inlet). Stamped
     // into the JSON ("auto_knobs") so a checkpoint is machine-readably
     // a production-path run.
     val autoKnobs = sys.env.get("GRAFT_BENCH_AUTO").contains("1")

@@ -2,11 +2,14 @@ package graft.queries
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, Trigger}
+import org.apache.spark.sql.types.StructType
 
+import graft.pipeline.CsvWire
 import graft.sources.Tables
+import graft.util.Scratch
 
 /** Structured Streaming semantics, batch-checkable (SURVEY.md §2.10).
   *
@@ -15,6 +18,16 @@ import graft.sources.Tables
   * append parquet sink (exactly-once for file sinks), Trigger.AvailableNow
   * draining the source — and returns the sunk rows as a DataFrame the DuckDB
   * oracle can hash-check.
+  *
+  * Runner contract: every catalog stream is started and drained by
+  * [[drain]], the one place a query gets its checkpoint, its trigger and
+  * its state-partition scope. A parquet table becomes a stream through
+  * [[stage]]; the parquet-append sink is [[drainToParquet]]; queries with
+  * another sink (foreachBatch, the graft-wire connector) hand [[drain]]
+  * their configured writer. State partitions are always
+  * [[autoStateParts]] of the inlet bytes. The state-store backend is
+  * Spark's own provider-class setting: the runner leaves it alone, and
+  * only [[withRocksDb]] scopes it, for the queries that need RocksDB.
   *
   * Watermark semantics under AvailableNow: after the data batch, Spark runs
   * a no-data micro-batch that advances the watermark to max(event time) -
@@ -31,48 +44,32 @@ object StreamingQ {
     * micro-batch. Size state partitioning to the state volume rather than
     * the CPU count — at real scale this knob grows with keys, not cores.
     *
-    * Round 17 (verdict item 4 — the resolveCells discipline applied to
-    * state partitions): the default is `auto`, derived at PLAN time from
-    * the inlet volume — parts = next power of two of inletBytes / 4 MiB,
-    * clamped to [4, 256]. Calibration points: sf0.1 events (2.0 MB) → 4
-    * (the former hand default — the close is unchanged by construction);
-    * sf10 events (88 MB) → 32, the knob point BASELINE.md measured 4.8×
-    * faster on the stream-stream joins (s25 632 → 133 s). A numeric
-    * `graft.stream.stateParts` still overrides (GRAFT_STATE_PARTS in
-    * Bench). Restored after the body (which must plan AND drain its query
-    * inside) so batch plans keep the session setting. Shared by
-    * runEventsStream and every hand-rolled streaming query below; inlet
-    * bytes come from [[inletBytes]] over the stream's source files —
-    * metadata only, no scan.
+    * The count is [[autoStateParts]] of the inlet volume, derived at PLAN
+    * time. Calibration points: sf0.1 events (2.0 MB) → 4 (the former hand
+    * default); sf10 events (88 MB) → 32, the point BASELINE.md measured
+    * 4.8× faster on the stream-stream joins (s25 632 → 133 s). Restored
+    * after the body (which must plan AND drain its query inside) so batch
+    * plans keep the session setting. Inlet bytes come from [[inletBytes]]
+    * over the stream's source files — metadata only, no scan.
     */
   def withStateParts[T](s: SparkSession, inlet: Long)(body: => T): T = {
     // No default for `inlet` (round-18, ADVICE low): with a silent 0L a
     // future streaming query that forgot to pass its inlet volume would
-    // get the 4-partition sf0.1 floor AT ANY SCALE with nothing but a
-    // stderr line to notice it by. Every caller derives its inlet from
-    // the source path (metadata only), so demanding it costs nothing.
+    // get the 4-partition sf0.1 floor AT ANY SCALE. Every caller derives
+    // its inlet from the source path (metadata only), so demanding it
+    // costs nothing.
     val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    val conf =
-      s.conf.getOption("graft.stream.stateParts").getOrElse("auto")
-    val stateParts =
-      if (conf == "auto") {
-        val v = autoStateParts(inlet)
-        System.err.println(
-          s"[graft] graft.stream.stateParts=auto derived $v from inlet " +
-            s"$inlet bytes")
-        v.toString
-      } else conf
-    s.conf.set("spark.sql.shuffle.partitions", stateParts)
+    s.conf.set("spark.sql.shuffle.partitions", autoStateParts(inlet).toString)
     try body
     finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
   }
 
-  /** `auto` state-partition derivation: one state store per ~4 MiB of
-    * inlet, rounded up to a power of two (partition counts that halve/
-    * double cleanly on replan), floored at 4 (the measured sf0.1 floor —
-    * fewer stores than that saves nothing at any scale) and capped at 256
+  /** State-partition derivation: one state store per ~4 MiB of inlet,
+    * rounded up to a power of two (partition counts that halve/double
+    * cleanly on replan), floored at 4 (the measured sf0.1 floor — fewer
+    * stores than that saves nothing at any scale) and capped at 256
     * (beyond which per-store fixed costs need a real cluster's
-    * parallelism to amortize; a numeric conf goes higher explicitly).
+    * parallelism to amortize).
     */
   private[graft] def autoStateParts(inletBytes: Long): Int = {
     val unit = 4L << 20
@@ -96,95 +93,67 @@ object StreamingQ {
     } else Files.size(p)
   }
 
-  /** Run a file-source stream over one on-disk parquet table through
-    * `xform` into a checkpointed parquet sink; return the sunk rows.
-    * `copies` symlinks the source parquet N times (duplicate delivery
-    * simulation for dedup ops); `normalize` adapts the raw on-disk schema
-    * (the events table's drifting timestamp forms).
+  /** A parquet table as a file-source inlet: `copies` symlinks to it in a
+    * fresh scratch dir (duplicate delivery for the dedup ops, one file per
+    * micro-batch for s11), streamed with the table's raw on-disk schema.
+    * `opts` are file-source read options (s11's maxFilesPerTrigger).
     */
-  /** Scope the state-store BACKEND for one streaming query, driven by
-    * `graft.stream.provider` (GRAFT_STREAM_PROVIDER in Bench):
-    * `hdfs` (default — Spark's HDFSBackedStateStoreProvider, all state
-    * on-heap, full-file delta per commit) or `rocksdb` (RocksDB provider
-    * + changelog checkpointing — native-memory state, append-only
-    * changelog per commit). The r18 verdict's remaining scale lever: the
-    * stream-stream join family's sf10 cost is the HDFS provider's
-    * serialize-per-commit constant (s07/s10/s24/s25 = 39% of the
-    * sf10-auto wall), and ChangelogSpec already pins provider-agnostic
-    * results; this knob lets the bench MEASURE the swap at scale instead
-    * of guessing. Restores prior conf values on exit, so queries that
-    * pin their own provider (withRocksDb for transformWithState) compose.
-    */
-  def withStreamProvider[T](s: SparkSession)(body: => T): T = {
-    val prov = s.conf.getOption("graft.stream.provider").getOrElse("hdfs")
-    // Unknown values must refuse, not silently measure the default: a
-    // typo'd GRAFT_STREAM_PROVIDER ("rocksDB", "rocks") would otherwise
-    // run hdfs while the operator believes they measured the swap — a
-    // misattribution on the very measurement this knob exists for
-    // (ADVICE r19).
-    require(prov == "hdfs" || prov == "rocksdb",
-      s"graft.stream.provider='$prov' (GRAFT_STREAM_PROVIDER in Bench) " +
-        "must be 'hdfs' or 'rocksdb'")
-    if (prov != "rocksdb") body
-    else {
-      val pk = "spark.sql.streaming.stateStore.providerClass"
-      val ck = "spark.sql.streaming.stateStore.rocksdb." +
-        "changelogCheckpointing.enabled"
-      val prevP = s.conf.getOption(pk)
-      val prevC = s.conf.getOption(ck)
-      s.conf.set(pk, "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-      s.conf.set(ck, "true")
-      try body
-      finally {
-        prevP.fold(s.conf.unset(pk))(s.conf.set(pk, _))
-        prevC.fold(s.conf.unset(ck))(s.conf.set(ck, _))
-      }
-    }
-  }
-
-  def runFileStream(s: SparkSession, path: String, copies: Int = 1,
-      normalize: DataFrame => DataFrame = identity)(
-      xform: DataFrame => DataFrame): DataFrame = {
-    val rawSchema = s.read.parquet(path).schema
-    val srcDir = Paths.get(graft.util.Scratch.dir("graft_stream_src"))
+  private def stage(s: SparkSession, path: String, copies: Int,
+      opts: (String, String)*): DataFrame = {
+    val dir = Paths.get(Scratch.dir("graft_stream_src"))
     // Absolutize the link target: a relative sfDir would otherwise resolve
     // against the scratch dir and produce broken links → an empty stream.
     val target = Paths.get(path).toAbsolutePath.normalize()
     (1 to copies).foreach { i =>
-      Files.createSymbolicLink(srcDir.resolve(s"src_$i.parquet"), target)
+      Files.createSymbolicLink(dir.resolve(s"src_$i.parquet"), target)
     }
-    val out  = graft.util.Scratch.dir("graft_stream_out")
-    val ckpt = graft.util.Scratch.dir("graft_stream_ckpt")
+    s.readStream.schema(s.read.parquet(path).schema).options(opts.toMap)
+      .parquet(dir.toString)
+  }
 
-    val q = withStreamProvider(s) { withStateParts(s, inletBytes(path) * copies) {
-      val src = normalize(
-        s.readStream.schema(rawSchema).parquet(srcDir.toString))
-      val xformed = xform(src)
-      // Dev-only plan evidence (round 20): the streaming transform's
-      // pre-execution plan — join strategy, watermark nodes, state
-      // operators — for the plans/ dumps the optimization rounds commit.
-      // Never set in Bench/Verify paths; the timed run is unaffected.
-      if (sys.env.contains("GRAFT_STREAM_EXPLAIN"))
-        println(xformed.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
-      val q0 = xformed.writeStream
-        .format("parquet")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
+  /** Start and drain one stream. `build` (the source, the transform, any
+    * batch work they do, and the configured sink writer) runs inside
+    * [[withStateParts]] for `inlet` bytes; the runner adds a scratch
+    * checkpoint and `Trigger.AvailableNow`, starts the query and waits for
+    * it, so the scope is restored only after every batch is planned and
+    * drained. Returns the terminated query: its `recentProgress` carries
+    * each trigger's phases and state metrics, `explain()` the plan.
+    */
+  private def drain(s: SparkSession, inlet: Long)(
+      build: => DataStreamWriter[Row]): StreamingQuery =
+    withStateParts(s, inlet) {
+      val q = build
+        .option("checkpointLocation", Scratch.dir("graft_stream_ckpt"))
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      q
+    }
+
+  /** [[drain]] into the checkpointed append parquet sink; returns the sunk
+    * rows.
+    */
+  private def drainToParquet(s: SparkSession, inlet: Long)(
+      build: => DataFrame): DataFrame = {
+    val out = Scratch.dir("graft_stream_out")
+    drain(s, inlet) {
+      build.writeStream.format("parquet").outputMode("append")
         .option("path", out)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q0.awaitTermination() // restore only after batches planned + drained
-      q0
-    } }
-    if (sys.env.contains("GRAFT_STREAM_DEBUG"))
-      q.recentProgress.foreach(p => println(
-        s"[stream] batch=${p.batchId} rows=${p.numInputRows} ${p.durationMs}" +
-          p.stateOperators.map(so =>
-            s" state(rows=${so.numRowsTotal}, ms=${so.allUpdatesTimeMs}/${so.allRemovalsTimeMs}/${so.commitTimeMs})").mkString))
+    }
     s.read.parquet(out)
   }
+
+  /** Run a file-source stream over one on-disk parquet table through
+    * `xform` into the parquet sink; return the sunk rows. `copies`
+    * symlinks the source parquet N times (duplicate delivery simulation
+    * for dedup ops); `normalize` adapts the raw on-disk schema (the events
+    * table's drifting timestamp forms).
+    */
+  def runFileStream(s: SparkSession, path: String, copies: Int = 1,
+      normalize: DataFrame => DataFrame = identity)(
+      xform: DataFrame => DataFrame): DataFrame =
+    drainToParquet(s, inletBytes(path) * copies) {
+      xform(normalize(stage(s, path, copies)))
+    }
 
   def runEventsStream(s: SparkSession, d: String, copies: Int = 1)(
       xform: DataFrame => DataFrame): DataFrame = {
@@ -194,8 +163,10 @@ object StreamingQ {
     // fixed-offset session timezone (under DST a matched pair spanning a
     // spring-forward transition can land 2 calendar dates apart and miss
     // both covering buckets). Every entry point pins UTC — refuse loudly
-    // if a future caller doesn't (round-20 advice).
-    require(s.conf.get("spark.sql.session.timeZone", "") == "UTC",
+    // if a future caller sets a DST zone (round-20 advice). Any fixed
+    // offset (`Etc/UTC`, `Z`, `+00:00`, `+05:30`) buckets exactly.
+    val zone = java.time.ZoneId.of(s.sessionState.conf.sessionLocalTimeZone)
+    require(zone.normalized().isInstanceOf[java.time.ZoneOffset],
       "runEventsStream requires spark.sql.session.timeZone=UTC: the " +
         "day-bucketed interval joins assume a fixed-offset calendar")
     runFileStream(s, s"$d/events.parquet", copies,
@@ -243,23 +214,21 @@ object StreamingQ {
   /** Q20: wire-format roundtrip pipeline (reference streaming-job shape —
     * source → CSV-wire parse → CASE enrichment → parquet sink,
     * convert-to-elasticsearch.py:105-134 / convert-to-minio.py:125-131).
+    * Through [[CsvWire]], so a null field rides as an empty one instead of
+    * shifting every later field.
     */
   def streamPipe(s: SparkSession, d: String): DataFrame =
     runEventsStream(s, d) { src =>
-      val wire = src.select(
-        concat_ws(",",
-          col("event_id"), col("event_type"), col("value").cast("string"),
-          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss")).as("value"))
-      val parts = split(col("value"), ",")
-      wire
-        .withColumn("event_id", parts.getItem(0).cast("long"))
-        .withColumn("event_type", parts.getItem(1))
-        .withColumn("value_d", parts.getItem(2).cast("double"))
-        .withColumn("ts_str", parts.getItem(3))
-        .drop("value")
+      val fields = src.select(col("event_id"), col("event_type"),
+        col("value").as("value_d"),
+        date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts_str"))
+      CsvWire.decode(CsvWire.encode(fields, pipeWire), pipeWire)
         .withColumn("if_move",
           when(col("value_d") > 10, "movement").otherwise("no_movement"))
     }
+
+  private val pipeWire = StructType.fromDDL(
+    "event_id long, event_type string, value_d double, ts_str string")
 
   /** Typed row for the stateful counter (event time as exact epoch micros —
     * millisecond java.sql.Timestamp ordering would break tie-breaking).
@@ -1026,10 +995,14 @@ object StreamingQ {
     * requirement and the honest 100 TB backend) around `body`.
     */
   def withRocksDb[T](s: SparkSession)(body: => T): T = {
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
+    val k = "spark.sql.streaming.stateStore.providerClass"
+    // a provider the session set itself comes back afterwards
+    val prev =
+      if (s.sessionState.conf.contains(k)) Some(s.conf.get(k)) else None
+    s.conf.set(k,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try body
-    finally s.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    finally prev.fold(s.conf.unset(k))(s.conf.set(k, _))
   }
 
   def transformWithStateRunningMax(s: SparkSession, d: String): DataFrame =
@@ -1150,23 +1123,16 @@ object StreamingQ {
     // admission stays spec-pinned in WireTopicSourceSpec ("one
     // micro-batch per file"); rows and oracle are unchanged.
     Q("s13_dsv2_stream_source",
-      (s, d) => withStateParts(s, inletBytes(s"$d/events.parquet")) {
+      (s, d) => drainToParquet(s, inletBytes(s"$d/events.parquet")) {
         val sel = Tables.events(s, d).select(col("event_id"), col("user_id"),
           col("event_type"), col("value"), unix_micros(col("ts")).as("tsu"))
-        val topic = graft.util.Scratch.dir("graft_s13_topic")
-        graft.pipeline.CsvWire.encode(sel, sel.schema)
+        val topic = Scratch.dir("graft_s13_topic")
+        CsvWire.encode(sel, sel.schema)
           .coalesce(4).write.mode("overwrite").text(topic)
-        val out  = graft.util.Scratch.dir("graft_s13_out")
-        val ckpt = graft.util.Scratch.dir("graft_s13_ckpt")
-        val q = s.readStream.format("graft-wire").schema(sel.schema)
+        s.readStream.format("graft-wire").schema(sel.schema)
           .load(topic)
           .filter(col("value") > 10.0)
           .select("event_id", "event_type", "value")
-          .writeStream.format("parquet").outputMode("append")
-          .option("checkpointLocation", ckpt).option("path", out)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.read.parquet(out)
       },
       Some("""SELECT event_id, event_type, value FROM events
               WHERE value > 10.0""")),
@@ -1180,24 +1146,16 @@ object StreamingQ {
     // multiple epochs at test scale via the spec; here one drain), land on
     // the wire, and are read back through the connector's batch scan.
     Q("s14_dsv2_stream_sink",
-      (s, d) => withStateParts(s, inletBytes(s"$d/events.parquet")) {
+      (s, d) => {
         val path = s"$d/events.parquet"
-        val rawSchema = s.read.parquet(path).schema
-        val srcDir = Paths.get(graft.util.Scratch.dir("graft_s14_src"))
-        Files.createSymbolicLink(srcDir.resolve("events.parquet"),
-          Paths.get(path).toAbsolutePath.normalize())
-        val topic = graft.util.Scratch.dir("graft_s14_topic")
-        val ckpt  = graft.util.Scratch.dir("graft_s14_ckpt")
-        val src = Tables.normalizeEvents(
-          s.readStream.schema(rawSchema).parquet(srcDir.toString))
-          .select(col("event_id"), col("user_id"), col("event_type"),
-            col("value"))
-        val q = src.writeStream.format("graft-wire")
-          .option("path", topic)
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.read.format("graft-wire").schema(src.schema).load(topic)
+        val cols = Seq("event_id", "user_id", "event_type", "value").map(col)
+        val topic = Scratch.dir("graft_s14_topic")
+        drain(s, inletBytes(path)) {
+          Tables.normalizeEvents(stage(s, path, 1)).select(cols: _*)
+            .writeStream.format("graft-wire").option("path", topic)
+        }
+        s.read.format("graft-wire")
+          .schema(Tables.events(s, d).select(cols: _*).schema).load(topic)
       },
       Some("SELECT event_id, user_id, event_type, value FROM events")),
 
@@ -1334,36 +1292,25 @@ object StreamingQ {
     // arithmetic, so the oracle's 2* is bit-exact). Completes the output-
     // mode family: append (s01…), complete (s09), update (here).
     Q("s11_stream_update",
-      (s, d) => withStateParts(s, 2 * inletBytes(s"$d/events.parquet")) {
+      (s, d) => {
         val path = s"$d/events.parquet"
-        val rawSchema = s.read.parquet(path).schema
-        val srcDir = Paths.get(graft.util.Scratch.dir("graft_s11_src"))
-        (1 to 2).foreach { i =>
-          Files.createSymbolicLink(srcDir.resolve(s"events_$i.parquet"),
-            Paths.get(path).toAbsolutePath.normalize())
+        val out = Scratch.dir("graft_s11_out")
+        drain(s, 2 * inletBytes(path)) {
+          Tables.normalizeEvents(stage(s, path, 2, "maxFilesPerTrigger" -> "1"))
+            .groupBy(col("event_type"))
+            .agg(count(lit(1)).as("n_events"),
+              sum(col("value").cast(org.apache.spark.sql.types.DecimalType(12, 2)))
+                .cast("double").as("sum_value"))
+            .writeStream
+            .outputMode("update")
+            .foreachBatch { (batch: DataFrame, batchId: Long) =>
+              // overwrite the batch's OWN directory: a replayed micro-batch
+              // (sink committed, checkpoint not) rewrites identical content
+              // instead of appending a duplicate — the (batchId, data)
+              // idempotence contract, same as s08's batch_id tagging
+              batch.write.mode("overwrite").parquet(s"$out/batch=$batchId")
+            }
         }
-        val out  = graft.util.Scratch.dir("graft_s11_out")
-        val ckpt = graft.util.Scratch.dir("graft_s11_ckpt")
-        val src = Tables.normalizeEvents(
-          s.readStream.schema(rawSchema)
-            .option("maxFilesPerTrigger", 1).parquet(srcDir.toString))
-        val q = src.groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n_events"),
-            sum(col("value").cast(org.apache.spark.sql.types.DecimalType(12, 2)))
-              .cast("double").as("sum_value"))
-          .writeStream
-          .outputMode("update")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            // overwrite the batch's OWN directory: a replayed micro-batch
-            // (sink committed, checkpoint not) rewrites identical content
-            // instead of appending a duplicate — the (batchId, data)
-            // idempotence contract, same as s08's batch_id tagging
-            batch.write.mode("overwrite").parquet(s"$out/batch=$batchId")
-          }
-          .start()
-        q.awaitTermination()
         s.read.parquet(out).drop("batch")
       },
       Some("""WITH g AS (SELECT event_type,
@@ -1381,27 +1328,19 @@ object StreamingQ {
     // Each batch lands as parquet tagged with its batchId; exactly-once
     // comes from the (batchId, data) pair being deterministic on replay.
     Q("s08_foreach_batch",
-      (s, d) => withStateParts(s, inletBytes(s"$d/events.parquet")) {
+      (s, d) => {
         val path = s"$d/events.parquet"
-        val rawSchema = s.read.parquet(path).schema
-        val srcDir = Paths.get(graft.util.Scratch.dir("graft_s08_src"))
-        Files.createSymbolicLink(srcDir.resolve("events.parquet"),
-          Paths.get(path).toAbsolutePath.normalize())
-        val out  = graft.util.Scratch.dir("graft_s08_out")
-        val ckpt = graft.util.Scratch.dir("graft_s08_ckpt")
-        val src = Tables.normalizeEvents(
-          s.readStream.schema(rawSchema).parquet(srcDir.toString))
-          .select("event_id", "event_type", "value")
-        val q = src.writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            batch.withColumn("batch_id", lit(batchId))
-              .write.mode("append").parquet(out)
-          }
-          .start()
-        q.awaitTermination()
+        val out = Scratch.dir("graft_s08_out")
+        drain(s, inletBytes(path)) {
+          Tables.normalizeEvents(stage(s, path, 1))
+            .select("event_id", "event_type", "value")
+            .writeStream
+            .outputMode("append")
+            .foreachBatch { (batch: DataFrame, batchId: Long) =>
+              batch.withColumn("batch_id", lit(batchId))
+                .write.mode("append").parquet(out)
+            }
+        }
         s.read.parquet(out)
       },
       Some("""SELECT event_id, event_type, value, CAST(0 AS BIGINT) AS batch_id
@@ -1416,42 +1355,39 @@ object StreamingQ {
     // so the main-side oracle is the complement filter; the DLQ side is
     // asserted by row count in the same run (n_dlq column).
     Q("s21_stream_dlq",
-      (s, d) => withStateParts(s, inletBytes(s"$d/events.parquet")) {
-        val wireDir = graft.util.Scratch.dir("graft_s21_wire")
-        Tables.events(s, d)
-          .select(concat_ws("|",
-            col("event_id"), col("user_id"), col("event_type"),
-            when(col("event_id") % 7 === 3, lit("xx"))
-              .otherwise(col("value").cast("string"))).as("value"))
-          .write.mode("overwrite").text(wireDir)
-        val main = graft.util.Scratch.dir("graft_s21_main")
-        val dlq  = graft.util.Scratch.dir("graft_s21_dlq")
-        val ckpt = graft.util.Scratch.dir("graft_s21_ckpt")
-        val parsed = s.readStream.text(wireDir)
-          .select(col("value").as("line"),
-            split(col("value"), "\\|").as("f"))
-          .select(col("line"),
-            col("f").getItem(0).cast("long").as("event_id"),
-            col("f").getItem(1).cast("long").as("user_id"),
-            col("f").getItem(2).as("event_type"),
-            expr("try_cast(f[3] AS DOUBLE)").as("value"))
-        val q = parsed.writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val b = batch.persist()
-            b.filter(col("value").isNotNull)
-              .select("event_id", "user_id", "event_type", "value")
-              .write.mode("append").parquet(main)
-            b.filter(col("value").isNull)
-              .select("line") // raw line, replayable after a parser fix
-              .write.mode("append").parquet(dlq)
-            b.unpersist()
-            ()
-          }
-          .start()
-        q.awaitTermination()
+      (s, d) => {
+        val main = Scratch.dir("graft_s21_main")
+        val dlq  = Scratch.dir("graft_s21_dlq")
+        drain(s, inletBytes(s"$d/events.parquet")) {
+          val wireDir = Scratch.dir("graft_s21_wire")
+          Tables.events(s, d)
+            .select(concat_ws("|",
+              col("event_id"), col("user_id"), col("event_type"),
+              when(col("event_id") % 7 === 3, lit("xx"))
+                .otherwise(col("value").cast("string"))).as("value"))
+            .write.mode("overwrite").text(wireDir)
+          s.readStream.text(wireDir)
+            .select(col("value").as("line"),
+              split(col("value"), "\\|").as("f"))
+            .select(col("line"),
+              col("f").getItem(0).cast("long").as("event_id"),
+              col("f").getItem(1).cast("long").as("user_id"),
+              col("f").getItem(2).as("event_type"),
+              expr("try_cast(f[3] AS DOUBLE)").as("value"))
+            .writeStream
+            .outputMode("append")
+            .foreachBatch { (batch: DataFrame, _: Long) =>
+              val b = batch.persist()
+              b.filter(col("value").isNotNull)
+                .select("event_id", "user_id", "event_type", "value")
+                .write.mode("append").parquet(main)
+              b.filter(col("value").isNull)
+                .select("line") // raw line, replayable after a parser fix
+                .write.mode("append").parquet(dlq)
+              b.unpersist()
+              ()
+            }
+        }
         s.read.parquet(main)
           .withColumn("n_dlq", lit(s.read.parquet(dlq).count()))
       },
@@ -1467,29 +1403,21 @@ object StreamingQ {
     // total aggregate, so the oracle has no emission boundary (unlike
     // s01/s02/s06's append-mode boundaries).
     Q("s09_stream_complete",
-      (s, d) => withStateParts(s, inletBytes(s"$d/events.parquet")) {
+      (s, d) => {
         val path = s"$d/events.parquet"
-        val rawSchema = s.read.parquet(path).schema
-        val srcDir = Paths.get(graft.util.Scratch.dir("graft_s09_src"))
-        Files.createSymbolicLink(srcDir.resolve("events.parquet"),
-          Paths.get(path).toAbsolutePath.normalize())
-        val out  = graft.util.Scratch.dir("graft_s09_out")
-        val ckpt = graft.util.Scratch.dir("graft_s09_ckpt")
-        val src = Tables.normalizeEvents(
-          s.readStream.schema(rawSchema).parquet(srcDir.toString))
-        val q = src.groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n_events"),
-            sum(col("value").cast(org.apache.spark.sql.types.DecimalType(12, 2)))
-              .cast("double").as("sum_value"))
-          .writeStream
-          .outputMode("complete")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            batch.write.mode("overwrite").parquet(out)
-          }
-          .start()
-        q.awaitTermination()
+        val out = Scratch.dir("graft_s09_out")
+        drain(s, inletBytes(path)) {
+          Tables.normalizeEvents(stage(s, path, 1))
+            .groupBy(col("event_type"))
+            .agg(count(lit(1)).as("n_events"),
+              sum(col("value").cast(org.apache.spark.sql.types.DecimalType(12, 2)))
+                .cast("double").as("sum_value"))
+            .writeStream
+            .outputMode("complete")
+            .foreachBatch { (batch: DataFrame, _: Long) =>
+              batch.write.mode("overwrite").parquet(out)
+            }
+        }
         s.read.parquet(out)
       },
       Some("""SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_events,
@@ -1663,10 +1591,8 @@ object StreamingQ {
     // DAY so the cap actually binds on the testdata (~14% of events are
     // rejected at sf0.01; an hourly window never fills at this density).
     Q("s22_stream_quota",
-      (s, d) => {
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try runEventsStream(s, d) { src =>
+      (s, d) => withRocksDb(s) {
+        runEventsStream(s, d) { src =>
           import s.implicits._
           src.select(col("event_id"), col("user_id"),
               unix_micros(col("ts")).as("tsu"))
@@ -1677,7 +1603,7 @@ object StreamingQ {
             .transformWithState(new QuotaProcessor,
               TimeMode.None(), OutputMode.Append())
             .toDF()
-        } finally s.conf.unset("spark.sql.streaming.stateStore.providerClass")
+        }
       },
       Some("""SELECT event_id, user_id, wstart_us, rn FROM (
                 SELECT event_id, user_id,
@@ -1694,10 +1620,8 @@ object StreamingQ {
     // (n < 4 ⇒ no flag) on both sides; COUNT over an empty frame is 0 in
     // DuckDB, matching n_prev = 0 for a user's first event.
     Q("s23_stream_zscore",
-      (s, d) => {
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try runEventsStream(s, d) { src =>
+      (s, d) => withRocksDb(s) {
+        runEventsStream(s, d) { src =>
           import s.implicits._
           src.select(col("event_id"), col("user_id"),
               unix_micros(col("ts")).as("tsu"),
@@ -1708,7 +1632,7 @@ object StreamingQ {
             .transformWithState(new RunningZProcessor,
               TimeMode.None(), OutputMode.Append())
             .toDF()
-        } finally s.conf.unset("spark.sql.streaming.stateStore.providerClass")
+        }
       },
       Some("""WITH b AS (SELECT event_id, user_id, ts,
                                 CAST(CAST(value AS DECIMAL(12,2)) * 100

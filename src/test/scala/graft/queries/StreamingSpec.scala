@@ -6,7 +6,8 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, TimeMode, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryListener,
+  StreamingQueryProgress, TimeMode, Trigger}
 
 import graft.SparkSpec
 
@@ -1032,8 +1033,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("state-partition auto-knob: parts derive from inlet bytes (pow2 of " +
-      "bytes/4MiB in [4,256]), a numeric conf overrides, and the derived " +
-      "value is what the streaming body plans with") {
+      "bytes/4MiB in [4,256]), and the derived value is what the " +
+      "streaming body plans with") {
     // the derivation law + its calibration points: sf0.1 events (2.0 MB)
     // -> 4 (the former hand default, so the close is unchanged); sf10
     // events (88 MB) -> 32 (the measured 4.8x knob point, BASELINE.md)
@@ -1045,19 +1046,12 @@ class StreamingSpec extends SparkSpec {
     assert(StreamingQ.autoStateParts(1L << 40) === 256) // cap
     // exact power-of-two boundary stays (no round-up past it)
     assert(StreamingQ.autoStateParts(64L << 20) === 16)
-    // the body plans with the derived value; a numeric conf wins
+    // the body plans with the derived value
     val s = spark
     val seen = StreamingQ.withStateParts(s, 88L << 20) {
       s.conf.get("spark.sql.shuffle.partitions")
     }
     assert(seen === "32")
-    try {
-      s.conf.set("graft.stream.stateParts", "7")
-      val forced = StreamingQ.withStateParts(s, 88L << 20) {
-        s.conf.get("spark.sql.shuffle.partitions")
-      }
-      assert(forced === "7")
-    } finally s.conf.unset("graft.stream.stateParts")
     // inletBytes: plain file and directory tree, metadata only
     val f = Files.createTempDirectory("graft_inlet")
     Files.write(f.resolve("a.bin"), new Array[Byte](1000))
@@ -1067,15 +1061,103 @@ class StreamingSpec extends SparkSpec {
     assert(StreamingQ.inletBytes(f.resolve("missing").toString) === 0L)
   }
 
-  test("withStreamProvider refuses unknown provider values loudly " +
-      "(ADVICE r19: a typo'd knob must not silently measure hdfs)") {
+  /** Two events (the on-disk column set), the second with a null `value`,
+    * as a single-file `events.parquet` like the generated tables.
+    */
+  private lazy val tinyEvents: String = {
+    val d = Files.createTempDirectory("graft_tiny_events")
+    val stage = Files.createTempDirectory("graft_tiny_stage").toString
+    spark.sql("""SELECT * FROM VALUES
+        (1L, TIMESTAMP '2024-01-01 00:10:00', 7L, 'click', 12.5D, '{}'),
+        (2L, TIMESTAMP '2024-01-01 01:20:30', 8L, 'view',
+         CAST(NULL AS DOUBLE), '{}')
+        AS t(event_id, ts, user_id, event_type, value, props)""")
+      .coalesce(1).write.mode("overwrite").parquet(stage)
+    val part = new File(stage).listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    Files.move(part.toPath, d.resolve("events.parquet"))
+    d.toString
+  }
+
+  test("q20 wire pipe: a null value decodes as null and leaves the later " +
+      "fields in place") {
+    val got = StreamingQ.streamPipe(spark, tinyEvents)
+      .select("event_id", "event_type", "value_d", "ts_str", "if_move")
+      .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+    assert(got === Seq(
+      Seq(1L, "click", 12.5, "2024-01-01 00:10:00", "movement"),
+      Seq(2L, "view", null, "2024-01-01 01:20:30", "no_movement")))
+  }
+
+  test("withRocksDb restores a provider the session set itself") {
     val s = spark
-    assert(StreamingQ.withStreamProvider(s)(41 + 1) === 42) // default hdfs
+    val k = "spark.sql.streaming.stateStore.providerClass"
+    val mine = "com.example.CustomStateStoreProvider"
+    s.conf.set(k, mine)
     try {
-      s.conf.set("graft.stream.provider", "rocksDB") // wrong case
+      val inside = StreamingQ.withRocksDb(s)(s.conf.get(k))
+      assert(inside.endsWith(".RocksDBStateStoreProvider"))
+      assert(s.conf.get(k) === mine)
+    } finally s.conf.unset(k)
+    // a session that set none is left with none set
+    StreamingQ.withRocksDb(s)(())
+    assert(!s.sessionState.conf.contains(k))
+  }
+
+  test("runEventsStream accepts any fixed-offset session zone and refuses " +
+      "a DST zone") {
+    val s = spark
+    val tz = "spark.sql.session.timeZone"
+    val prev = s.conf.get(tz)
+    try {
+      for (z <- Seq("Etc/UTC", "+00:00")) {
+        s.conf.set(tz, z)
+        val n = StreamingQ.runEventsStream(s, tinyEvents)(
+          _.select("event_id")).count()
+        assert(n === 2, z)
+      }
+      s.conf.set(tz, "America/New_York")
       val ex = intercept[IllegalArgumentException](
-        StreamingQ.withStreamProvider(s)(0))
-      assert(ex.getMessage.contains("GRAFT_STREAM_PROVIDER"))
-    } finally s.conf.unset("graft.stream.provider")
+        StreamingQ.runEventsStream(s, tinyEvents)(identity))
+      assert(ex.getMessage.contains(
+        "runEventsStream requires spark.sql.session.timeZone=UTC"))
+    } finally s.conf.set(tz, prev)
+  }
+
+  test("s06 plans every trigger's state stores at autoStateParts of its " +
+      "inlet, not at the session's shuffle partitions") {
+    val s = spark
+    val sf = "perfbench/data/sf0.01" // the repo's copy of the sf0.01 tables
+    val want =
+      StreamingQ.autoStateParts(StreamingQ.inletBytes(s"$sf/events.parquet"))
+    val progress = new java.util.concurrent.ConcurrentLinkedQueue[
+      StreamingQueryProgress]()
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new StreamingQueryListener {
+      import StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        progress.add(e.progress)
+      // posted after the query's last progress event
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        done.countDown()
+    }
+    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
+    // a session value the derived count cannot equal
+    s.conf.set("spark.sql.shuffle.partitions", (want + 3).toString)
+    s.streams.addListener(listener)
+    try {
+      assert(Catalog.byName("s06_stream_sliding").run(s, sf).count() > 0)
+      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      s.streams.removeListener(listener)
+      s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
+    val ps = progress.toArray(Array.empty[StreamingQueryProgress]).toSeq
+    assert(ps.nonEmpty)
+    ps.foreach { p =>
+      assert(p.stateOperators.nonEmpty, p.json)
+      assert(p.stateOperators.forall(_.numShufflePartitions == want), p.json)
+    }
   }
 }

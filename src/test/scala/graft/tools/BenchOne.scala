@@ -13,12 +13,9 @@ object BenchOne {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    sys.env.get("GRAFT_STATE_PARTS")
-      .foreach(v => spark.conf.set("graft.stream.stateParts", v))
-    sys.env.get("GRAFT_STATE_PROVIDER").foreach(v => spark.conf.set(
-      "spark.sql.streaming.stateStore.providerClass", v))
     // Arbitrary session confs, "k=v;k=v" (e.g. the dedup scale knobs:
-    // spark.graft.dedup.hyperplaneBits / maxBucketSize sweeps).
+    // spark.graft.dedup.hyperplaneBits / maxBucketSize sweeps, or
+    // spark.sql.streaming.stateStore.providerClass for a state-store A/B).
     sys.env.get("GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
       .foreach { kv =>
         val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v)
