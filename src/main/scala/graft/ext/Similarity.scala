@@ -26,19 +26,14 @@ import graft.sources.Tables
   */
 object Similarity {
 
-  /** Spark SQL: sequential-fold dot product of two float-array columns. */
-  def sparkDot(a: String, b: String): String =
-    s"aggregate(zip_with($a, $b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), " +
-      s"CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-
-  /** DuckDB: identical fold (same element order, same double arithmetic). */
+  /** DuckDB: sequential-fold dot product of two float-array columns (the
+    * element order and double arithmetic of the engine's `graft_dot`).
+    */
   def duckDot(a: String, b: String): String =
     s"list_reduce(list_prepend(CAST(0 AS DOUBLE), " +
       s"list_transform(range(1, len($a) + 1), " +
       s"i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE))), (acc, v) -> acc + v)"
 
-  def sparkCos(a: String, b: String): String =
-    s"(${sparkDot(a, b)}) / (sqrt(${sparkDot(a, a)}) * sqrt(${sparkDot(b, b)}))"
   def duckCos(a: String, b: String): String =
     s"(${duckDot(a, b)}) / (sqrt(${duckDot(a, a)}) * sqrt(${duckDot(b, b)}))"
 
@@ -63,10 +58,6 @@ object Similarity {
   val nPlanes = 8
   private def coefSql(iExpr: String, j: Int): String =
     s"((($iExpr * ${2 * j + 3} * 2654435761) / 65536) % 7) - 3"
-  def sparkPlaneDot(v: String, j: Int): String =
-    s"aggregate(sequence(1, size($v)), CAST(0 AS DOUBLE), " +
-      s"(acc, i) -> acc + CAST(element_at($v, i) AS DOUBLE) * " +
-      s"(${coefSql("CAST(i AS BIGINT)", j).replace(" / ", " DIV ")}))"
   def duckPlaneDot(v: String, j: Int): String =
     s"list_reduce(list_prepend(CAST(0 AS DOUBLE), " +
       s"list_transform(range(1, len($v) + 1), " +
@@ -78,10 +69,6 @@ object Similarity {
     * the conf-resolved width so a numeric hyperplaneBits knob keeps
     * engine and oracle in lockstep — the round-10 review gap).
     */
-  def sparkBucket(v: String, bits: Int = nPlanes): String =
-    (0 until bits).map { j =>
-      s"(CASE WHEN (${sparkPlaneDot(v, j)}) > 0 THEN ${1 << j} ELSE 0 END)"
-    }.mkString("CAST(", " + ", " AS INT)")
   def duckBucket(v: String, bits: Int = nPlanes): String =
     (0 until bits).map { j =>
       s"(CASE WHEN (${duckPlaneDot(v, j)}) > 0 THEN ${1 << j} ELSE 0 END)"
@@ -2353,41 +2340,6 @@ object Similarity {
       .join(broadcast(fexact), col("vec_id") === col("evid"), "left_outer")
       .select(col("vec_id"), col("label"), col("c1"), col("d2"),
         col("evid").isNotNull.as("in_filtered_exact_topk"))
-
-  /** The x28 inline-filtered serving arm under an ARBITRARY predicate —
-    * the entry point of the selectivity crossover measurement (BASELINE.md,
-    * round 14, "Filtered-ANN selectivity crossover", records the curve; the
-    * declared x28 keeps the fixed label contract so its oracle stays
-    * expressible).
-    */
-  private[graft] def ivfPqFilteredRerankPred(emb: DataFrame,
-      pred: org.apache.spark.sql.Column, nprobe: Int = 2,
-      shortK: Int = Serve.ShortK, kTop: Int = 10): DataFrame = {
-    val (scored, q, fexact) = ivfPqFilteredCore(emb, Serve.K1Default,
-      Serve.M, Serve.SubDim, Serve.Kcode, Serve.Iters, nprobe, pred,
-      kTop, Serve.Pp)
-    filteredRerankTail(scored, q, fexact, shortK, kTop)
-  }
-
-  /** The x27 pre-filter-exact arm under an arbitrary predicate (always
-    * correct; the sweep's other endpoint): pushed-down scan + one compiled
-    * L2 per survivor + TakeOrdered.
-    */
-  private[graft] def filteredExactPred(emb: DataFrame,
-      pred: org.apache.spark.sql.Column, kTop: Int = 10): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
-    val q = emb.orderBy("vec_id").limit(1)
-      .select(col("vec_id").as("q_id"),
-        expr("transform(embedding, ex -> CAST(ex AS DOUBLE))").as("qe"))
-    emb.filter(pred)
-      .select(col("vec_id"), col("label"),
-        expr("transform(embedding, ex -> CAST(ex AS DOUBLE))").as("e"))
-      .crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("d2", expr("graft_l2(e, qe)"))
-      .select("vec_id", "label", "d2")
-      .orderBy(col("d2"), col("vec_id")).limit(kTop)
-  }
 
   def ivfPqFilteredRerank(emb: DataFrame, k1Default: Int = Serve.K1Default,
       m: Int = Serve.M, subDim: Int = Serve.SubDim,

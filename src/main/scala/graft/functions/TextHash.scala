@@ -1921,8 +1921,8 @@ object VecOps {
 
   /** Coefficient of the deterministic hyperplane j at component i
     * (0-based): hash-mix ((i+1)·(2j+3)·2654435761) >> 16, mod 7, minus 3
-    * ∈ [-3, 3] — mirrors graft.ext.Similarity.sparkPlaneDot /
-    * duckPlaneDot exactly (integer division in all three engines).
+    * ∈ [-3, 3] — mirrors graft.ext.Similarity.duckPlaneDot exactly
+    * (integer division in both engines).
     *
     * The original family ((j·31 + i·17) % 7 − 3) had PERIOD 7 IN j
     * (j·31 ≡ 3j mod 7), so plane 7 duplicated plane 0 — the "8-bit"

@@ -29,12 +29,15 @@ object StreamJobs {
       .withColumn("if_movement",
         when(col("pir") > 0, "movement").otherwise("no_movement"))
 
-  /** File-source stand-in for the Kafka topic: tail a directory of text
-    * files, one wire line per row (single ordered partition per file —
-    * matches the reference's 1-partition topic, kafka/kafka_admin.py:27).
+  /** The Kafka topic as a directory: tail it through the `graft-wire`
+    * source ([[graft.sources.v2.WireTopicSource]]) with no read schema, so
+    * each line arrives whole in a `value` string column, as Kafka's `value`
+    * would. One ordered partition per file (the reference's 1-partition
+    * topic, kafka/kafka_admin.py:27); each trigger lists the topic once and
+    * logs its files in `<checkpoint>/sources/0`, Spark's file-source log.
     */
   def fileWireSource(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream.text(dir) // text source already yields a `value` column
+    spark.readStream.format("graft-wire").load(dir)
 
   /** MinIO-job sink: checkpointed append parquet (convert-to-minio.py:125-131). */
   def toParquet(enriched: DataFrame, outPath: String, checkpoint: String,

@@ -2,10 +2,14 @@ package graft.sources.v2
 
 import java.util.regex.Pattern
 
-import scala.collection.JavaConverters._
+import scala.collection.mutable
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
+import org.apache.hadoop.io.compress.CompressionCodecFactory
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
@@ -16,19 +20,30 @@ import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning,
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
+import org.apache.spark.sql.execution.streaming.runtime.FileStreamSourceLog
+import org.apache.spark.sql.execution.streaming.runtime.FileStreamSource.FileEntry
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
-/** DataSource V2 reader for a wire-format "topic" directory — the
+/** DataSource V2 connector for a wire-format "topic" directory — the
   * delimiter-joined CSV lines the replay generator emits
   * ([[graft.pipeline.Replay]]; wire layout per [[graft.pipeline.CsvWire]],
   * reference encode data_generator/dataframe_to_kafka.py:68-74 / decode
-  * convert-to-elasticsearch.py:105-114).
+  * convert-to-elasticsearch.py:105-114). It is the pipeline's one topic
+  * source: [[graft.pipeline.StreamJobs.fileWireSource]] reads through it.
   *
-  * This is the full custom-connector rung of the Catalyst surface: a
-  * `TableProvider` whose `ScanBuilder` implements BOTH V2 pushdown
+  * Two read layouts:
+  *
+  *   - with a read schema (`spark.read.format("graft-wire").schema(...)`),
+  *     each line is split on `sep` and cast to the declared wire layout;
+  *   - without one, each line is one row of a single `value` string column,
+  *     read whole (separators, quotes and empty lines included) — the shape
+  *     of Kafka's `value` and of Spark's text source.
+  *
+  * With a read schema the `ScanBuilder` implements BOTH V2 pushdown
   * interfaces, and honours them for real —
   *
   *   - `SupportsPushDownRequiredColumns`: only the pruned columns (plus any
@@ -46,21 +61,24 @@ import org.apache.spark.unsafe.types.UTF8String
   * epochs into files for exactly this reason). Listing is driver-side
   * metadata (one RPC per directory, as FileScan does); bytes are read on
   * executors through the Hadoop filesystem API, so the same code serves
-  * file://, hdfs:// and s3a:// URIs.
+  * file://, hdfs:// and s3a:// URIs. Every filesystem handle, driver or
+  * executor, comes from the session's Hadoop conf ([[WireTopic]]), so a
+  * scheme, credential or codec set on the SparkContext reaches the topic.
+  * Files with a compression suffix decode through Hadoop's codec factory,
+  * as the text source's do.
   *
-  * Options: `path` (directory), `sep` (default ","), and the user-supplied
-  * read schema (`spark.read.schema(...)`) defining the wire layout.
+  * Options: `path` (directory), `sep` (default ","), `maxFilesPerTrigger`
+  * (streaming) and `keyBy` (the keyed layout, [[WireTable]]).
   */
 class WireTopicSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-wire"
 
-  /** The wire format is schema-on-read: the layout must be supplied. */
+  /** The wire format is schema-on-read: a supplied schema is the layout. */
   override def supportsExternalMetadata(): Boolean = true
 
+  /** No read schema: the raw-lines layout. */
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    throw new IllegalArgumentException(
-      "graft-wire requires an explicit read schema (the wire layout): " +
-        "spark.read.format(\"graft-wire\").schema(...)")
+    WireTopicSource.Lines
 
   override def getTable(
       schema: StructType,
@@ -69,11 +87,38 @@ class WireTopicSource extends TableProvider with DataSourceRegister {
     new WireTable(schema, new CaseInsensitiveStringMap(properties))
 }
 
+object WireTopicSource {
+  /** The raw-lines layout. Its field is marked, so a declared one-column
+    * `value string` wire layout still reads as a wire layout.
+    */
+  val Lines: StructType = StructType(Seq(StructField("value", StringType,
+    nullable = true, new MetadataBuilder().putBoolean("graft.wire.lines", true).build())))
+}
+
+/** One topic as every part of the connector reaches it: its directory, its
+  * wire separator and the session's Hadoop conf. The conf is built once on
+  * the driver and broadcast once, so executors never build their own.
+  */
+final case class WireTopic(path: String, sep: String,
+    conf: Broadcast[SerializableConfiguration]) {
+  def dir: HPath = new HPath(path)
+  def hadoopConf: Configuration = conf.value.value
+  def fs: FileSystem = dir.getFileSystem(hadoopConf)
+}
+
+object WireTopic {
+  def apply(session: SparkSession, path: String, sep: String): WireTopic =
+    WireTopic(path, sep, session.sparkContext.broadcast(
+      new SerializableConfiguration(session.sessionState.newHadoopConf())))
+}
+
 final class WireTable(schema: StructType, options: CaseInsensitiveStringMap)
     extends Table with SupportsRead with SupportsWrite {
   private val path = Option(options.get("path")).getOrElse(
     throw new IllegalArgumentException("graft-wire: missing 'path' option"))
   private val sep = Option(options.get("sep")).getOrElse(",")
+  private lazy val topic = WireTopic(SparkSession.active, path, sep)
+  private val lines = schema == WireTopicSource.Lines
 
   override def name(): String = s"graft-wire:$path"
   override def schema(): StructType = schema
@@ -91,16 +136,17 @@ final class WireTable(schema: StructType, options: CaseInsensitiveStringMap)
   private val keyBy = Option(options.get("keyBy"))
 
   override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
-    new WireScanBuilder(schema, path, sep,
+    new WireScanBuilder(schema, topic, lines,
       Option(o.get("maxFilesPerTrigger")).map(_.toInt),
       Option(o.get("keyBy")).orElse(keyBy))
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new WireWriteBuilder(info.schema(), path, sep,
+    new WireWriteBuilder(info.schema(), topic,
       Option(info.options().get("keyBy")).orElse(keyBy))
 }
 
-final class WireScanBuilder(fullSchema: StructType, path: String, sep: String,
+final class WireScanBuilder(fullSchema: StructType, topic: WireTopic,
+    lines: Boolean,
     maxFilesPerTrigger: Option[Int] = None,
     keyBy: Option[String] = None)
     extends ScanBuilder
@@ -136,16 +182,16 @@ final class WireScanBuilder(fullSchema: StructType, path: String, sep: String,
   override def pushedFilters(): Array[Filter] = pushed
 
   override def build(): Scan =
-    new WireScan(fullSchema, required, pushed, path, sep, maxFilesPerTrigger,
-      limit, keyBy)
+    new WireScan(fullSchema, required, pushed, topic, lines,
+      maxFilesPerTrigger, limit, keyBy)
 }
 
 final class WireScan(
     fullSchema: StructType,
     required: StructType,
     pushed: Array[Filter],
-    path: String,
-    sep: String,
+    topic: WireTopic,
+    lines: Boolean,
     maxFilesPerTrigger: Option[Int] = None,
     limit: Option[Int] = None,
     keyBy: Option[String] = None)
@@ -154,10 +200,13 @@ final class WireScan(
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
-    s"GraftWireScan path=$path pushed=[${pushed.mkString(", ")}] " +
+    s"GraftWireScan path=${topic.path} pushed=[${pushed.mkString(", ")}] " +
       s"read=[${required.fieldNames.mkString(", ")}]" +
       limit.map(l => s" limit=$l").getOrElse("") +
       keyBy.map(k => s" keyBy=$k").getOrElse("")
+
+  private lazy val files: Array[String] =
+    WireTopicFiles.list(topic.fs, topic.dir).map(WireTopicFiles.url)
 
   /** Key-grouped layout: one partition per key VALUE (all of the key's
     * files), key recovered from the writer's `part-k<value>-…` names —
@@ -167,8 +216,7 @@ final class WireScan(
     * with NO exchange on either side.
     */
   private lazy val keyedPartitions: Array[InputPartition] =
-    WireTopicFiles.list(path)
-      .groupBy(WireTopicFiles.keyOf)
+    files.groupBy(WireTopicFiles.keyOf)
       .toArray.sortBy(_._1)
       .map { case (k, files) => WireKeyedPartition(files, k): InputPartition }
 
@@ -181,36 +229,33 @@ final class WireScan(
 
   override def planInputPartitions(): Array[InputPartition] =
     if (keyBy.isDefined) keyedPartitions
-    else WireTopicFiles.list(path)
-      .map(f => WireFilePartition(f): InputPartition)
+    else files.map(f => WireFilePartition(f): InputPartition)
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new WireReaderFactory(fullSchema.toDDL, required.fieldNames, pushed, sep,
-      limit)
+    new WireReaderFactory(fullSchema.toDDL, required.fieldNames, pushed, topic,
+      lines, limit)
 
   /** The same pruned+filtered scan as a streaming source (pushdown applies
     * to micro-batches identically — the builder ran before this call).
     */
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new WireMicroBatchStream(this, path, maxFilesPerTrigger)
+    new WireMicroBatchStream(this, topic, SparkSession.active,
+      checkpointLocation, maxFilesPerTrigger)
 }
 
-/** Topic-directory listing with the offset-stable order: (mtime, name) —
-  * the same deterministic order FileStreamSource uses. The topic contract
-  * is append-only files (the replay generator only ever ADDS epoch files,
-  * [[graft.pipeline.Replay]]), so a committed offset range always re-lists
-  * to the same file slice on replay/restart.
+/** Topic-directory listing in (mtime, name) order — the order
+  * FileStreamSource admits new files in. Staging (`_`) and hidden (`.`)
+  * files are skipped. Partitions name files by their URL-encoded path, the
+  * form the source log stores.
   */
 object WireTopicFiles {
-  def list(path: String): Array[String] = {
-    val dir = new HPath(path)
-    val fs = FileSystem.get(dir.toUri, new Configuration())
+  def list(fs: FileSystem, dir: HPath): Array[FileStatus] =
     fs.listStatus(dir)
       .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
         !st.getPath.getName.startsWith("."))
       .sortBy(st => (st.getModificationTime, st.getPath.getName))
-      .map(_.getPath.toString)
-  }
+
+  def url(st: FileStatus): String = SparkPath.fromFileStatus(st).urlEncoded
 
   private val keyPat = Pattern.compile("part-k(-?\\d+)-")
 
@@ -224,30 +269,63 @@ object WireTopicFiles {
   }
 }
 
-/** Offset = how many files of the stable listing have been consumed. */
-final case class WireOffset(filesSeen: Int) extends Offset {
-  override def json(): String = filesSeen.toString
+/** The stream's offset: the id of the last batch in its source log,
+  * serialized as Spark's file source serializes its own (`{"logOffset":n}`).
+  * Spark compares offsets by their JSON on every trigger, idle ones
+  * included, so it is built by hand rather than through json4s.
+  */
+final case class WireBatchOffset(batch: Long) extends Offset {
+  override def json(): String = s"""{"logOffset":$batch}"""
+}
+
+object WireBatchOffset {
+  private val Json = """\{"logOffset":(-?\d+)\}""".r
+
+  def parse(json: String): WireBatchOffset = json match {
+    case Json(n) => WireBatchOffset(n.toLong)
+    case other => throw new IllegalArgumentException(
+      s"graft-wire: not a source-log offset: $other")
+  }
 }
 
 /** Micro-batch form of the wire-topic scan: Kafka-shaped semantics over an
-  * append-only file topic — monotone offsets, admission control
-  * (`maxFilesPerTrigger` caps each batch like Kafka's maxOffsetsPerTrigger),
-  * checkpoint replay (a restarted query re-plans exactly the committed file
-  * slice), and AvailableNow draining against a start-time snapshot.
+  * append-only file topic, kept the way Spark's file source keeps them.
+  *
+  *   - The offset is the source's own batch id. [[latestOffset]] lists the
+  *     topic once, admits the files not yet logged in (mtime, name) order —
+  *     capped by `maxFilesPerTrigger` like Kafka's maxOffsetsPerTrigger, and
+  *     drawn from a start-time snapshot under AvailableNow — and logs them
+  *     as the next batch in `<checkpoint>/sources/<n>`, Spark's file-source
+  *     log format (one `path`/`timestamp`/`batchId` entry per file, with
+  *     `.compact` files). Until a first file is logged there is no offset,
+  *     so an empty topic runs no batch.
+  *   - [[planInputPartitions]] reads a batch's files from that log and never
+  *     lists, so a replayed batch re-plans exactly its files.
+  *   - A restart rebuilds the set of logged files from the log: a file that
+  *     lands late, whatever its mtime, is read once, and no logged file is
+  *     read again.
   */
 final class WireMicroBatchStream(
     scan: WireScan,
-    path: String,
+    topic: WireTopic,
+    session: SparkSession,
+    checkpoint: String,
     maxFilesPerTrigger: Option[Int])
     extends MicroBatchStream with SupportsTriggerAvailableNow {
 
-  private var availableNowCap: Option[Int] = None
+  private val fs = topic.fs
+  private val log =
+    new FileStreamSourceLog(FileStreamSourceLog.VERSION, session, checkpoint)
+  private var lastBatch: Long = log.getLatest().map(_._1).getOrElse(-1L)
+  private val logged: mutable.Set[String] =
+    mutable.HashSet.from(log.restore().iterator.map(_.path))
+  private var snapshot: Option[Array[FileStatus]] = None
 
-  override def initialOffset(): Offset = WireOffset(0)
-  override def deserializeOffset(json: String): Offset = WireOffset(json.toInt)
+  override def initialOffset(): Offset = WireBatchOffset(-1L)
+  override def deserializeOffset(json: String): Offset = WireBatchOffset.parse(json)
 
   override def prepareForTriggerAvailableNow(): Unit =
-    availableNowCap = Some(WireTopicFiles.list(path).length)
+    snapshot = Some(WireTopicFiles.list(fs, topic.dir))
 
   override def getDefaultReadLimit: ReadLimit =
     maxFilesPerTrigger.map(ReadLimit.maxFiles).getOrElse(ReadLimit.allAvailable)
@@ -257,20 +335,31 @@ final class WireMicroBatchStream(
       "admission-control latestOffset(start, limit) is used")
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val seen = start.asInstanceOf[WireOffset].filesSeen
-    val avail = availableNowCap.getOrElse(WireTopicFiles.list(path).length)
-    val cap = limit match {
-      case m: ReadMaxFiles => math.min(seen + m.maxFiles, avail)
-      case _               => avail
+    val fresh = snapshot.getOrElse(WireTopicFiles.list(fs, topic.dir)).iterator
+      .map(st => FileEntry(WireTopicFiles.url(st), st.getModificationTime,
+        lastBatch + 1))
+      .filterNot(e => logged(e.path))
+    val batch = (limit match {
+      case m: ReadMaxFiles => fresh.take(m.maxFiles)
+      case _               => fresh
+    }).toArray
+    if (batch.nonEmpty) {
+      if (!log.add(lastBatch + 1, batch)) throw new IllegalStateException(
+        s"graft-wire: batch ${lastBatch + 1} is already logged in $checkpoint")
+      lastBatch += 1
+      logged ++= batch.map(_.path)
     }
-    WireOffset(math.max(seen, cap))
+    if (lastBatch < 0) null else WireBatchOffset(lastBatch)
   }
 
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
-    WireTopicFiles.list(path)
-      .slice(start.asInstanceOf[WireOffset].filesSeen,
-        end.asInstanceOf[WireOffset].filesSeen)
-      .map(f => WireFilePartition(f): InputPartition)
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
+    val (from, to) = (batchOf(start) + 1, batchOf(end))
+    if (from > to) Array.empty
+    else log.get(Some(from), Some(to)).flatMap(_._2)
+      .map(e => WireFilePartition(e.path): InputPartition)
+  }
+
+  private def batchOf(o: Offset): Long = o.asInstanceOf[WireBatchOffset].batch
 
   override def createReaderFactory(): PartitionReaderFactory =
     scan.createReaderFactory()
@@ -310,18 +399,18 @@ final case class WireKeyedPartition(files: Array[String], key: Long)
   * files inside driver commit, after the new staging set is fully written —
   * the topic never observes a half-written state.
   */
-final class WireWriteBuilder(schema: StructType, path: String, sep: String,
+final class WireWriteBuilder(schema: StructType, topic: WireTopic,
     keyBy: Option[String] = None)
     extends WriteBuilder with SupportsTruncate {
   private var doTruncate = false
   override def truncate(): WriteBuilder = { doTruncate = true; this }
   override def build(): Write = new Write {
     override def toBatch: BatchWrite =
-      new WireBatchWrite(schema, path, sep, doTruncate, keyBy)
+      new WireBatchWrite(schema, topic, doTruncate, keyBy)
     override def toStreaming: StreamingWrite =
-      new WireStreamingWrite(schema, path, sep)
+      new WireStreamingWrite(schema, topic)
     override def description(): String =
-      s"GraftWireWrite path=$path truncate=$doTruncate" +
+      s"GraftWireWrite path=${topic.path} truncate=$doTruncate" +
         keyBy.map(k => s" keyBy=$k").getOrElse("")
   }
 }
@@ -333,34 +422,26 @@ final class WireWriteBuilder(schema: StructType, path: String, sep: String,
   * the rename replaces the same file instead of appending a duplicate —
   * the same (batchId, data) idempotence contract as the s08/s11 sinks.
   */
-final class WireStreamingWrite(schema: StructType, path: String, sep: String)
+final class WireStreamingWrite(schema: StructType, topic: WireTopic)
     extends StreamingWrite {
 
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    WireStreamingWriterFactory(schema.toDDL, path, sep)
+    WireStreamingWriterFactory(schema.toDDL, topic)
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val dir = new HPath(path)
-    val fs = FileSystem.get(dir.toUri, new Configuration())
+    val fs = topic.fs
     messages.foreach { case WireCommit(files) =>
       files.foreach { case (staged, finalName) =>
-        val target = new HPath(dir, finalName)
+        val target = new HPath(topic.dir, finalName)
         fs.delete(target, false) // replayed epoch: replace, don't duplicate
         fs.rename(new HPath(staged), target)
       }
     }
   }
 
-  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val dir = new HPath(path)
-    val fs = FileSystem.get(dir.toUri, new Configuration())
-    messages.foreach {
-      case WireCommit(files) =>
-        files.foreach { case (staged, _) => fs.delete(new HPath(staged), false) }
-      case _ => ()
-    }
-  }
+  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
+    WireCommit.discard(topic, messages)
 }
 
 /** Task commit report: each (staged, finalName) pair renames at driver
@@ -370,23 +451,35 @@ final class WireStreamingWrite(schema: StructType, path: String, sep: String)
 final case class WireCommit(files: Seq[(String, String)])
     extends WriterCommitMessage
 
-/** Ships only serializable primitives to executors (schema as DDL text). */
-final case class WireStreamingWriterFactory(ddl: String, path: String,
-    sep: String) extends StreamingDataWriterFactory {
+object WireCommit {
+  /** Driver abort: delete every reported staging file. */
+  def discard(topic: WireTopic, messages: Array[WriterCommitMessage]): Unit = {
+    val fs = topic.fs
+    messages.foreach {
+      case WireCommit(files) =>
+        files.foreach { case (staged, _) => fs.delete(new HPath(staged), false) }
+      case _ => ()
+    }
+  }
+}
+
+/** Ships the schema as DDL text and the topic with its broadcast conf. */
+final case class WireStreamingWriterFactory(ddl: String, topic: WireTopic)
+    extends StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
-    new WireFileWriter(StructType.fromDDL(ddl), path, sep,
+    new WireFileWriter(StructType.fromDDL(ddl), topic,
       f"_tmp_e$epochId%05d-p$partitionId%05d-$taskId.wire",
       f"part-e$epochId%05d-p$partitionId%05d.wire")
 }
 
 final class WireBatchWrite(
-    schema: StructType, path: String, sep: String, truncate: Boolean,
+    schema: StructType, topic: WireTopic, truncate: Boolean,
     keyBy: Option[String] = None)
     extends BatchWrite {
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new WireWriterFactory(schema.toDDL, path, sep,
+    new WireWriterFactory(schema.toDDL, topic,
       keyBy.map { k =>
         val idx = schema.fieldIndex(k)
         require(schema.fields(idx).dataType == LongType,
@@ -395,13 +488,14 @@ final class WireBatchWrite(
       })
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val dir = new HPath(path)
-    val fs = FileSystem.get(dir.toUri, new Configuration())
-    val previous = if (truncate) WireTopicFiles.list(path) else Array.empty[String]
-    val committed = scala.collection.mutable.Set.empty[String]
+    val fs = topic.fs
+    val previous =
+      if (truncate) WireTopicFiles.list(fs, topic.dir).map(_.getPath)
+      else Array.empty[HPath]
+    val committed = mutable.Set.empty[String]
     messages.foreach { case WireCommit(files) =>
       files.foreach { case (staged, finalName) =>
-        val target = new HPath(dir, finalName)
+        val target = new HPath(topic.dir, finalName)
         // rename() returns false (it does not throw) when the target name
         // already exists — a retried task, or keyed files landing in a
         // non-truncated topic. Mirror the streaming commit path: clear the
@@ -415,32 +509,24 @@ final class WireBatchWrite(
     }
     // Truncate semantics: drop pre-existing topic files, but never a name
     // this very commit just (re)wrote over.
-    previous.filterNot(f =>
-        committed.contains(fs.makeQualified(new HPath(f)).toString))
-      .foreach(f => fs.delete(new HPath(f), false))
+    previous.filterNot(f => committed.contains(fs.makeQualified(f).toString))
+      .foreach(f => fs.delete(f, false))
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val dir = new HPath(path)
-    val fs = FileSystem.get(dir.toUri, new Configuration())
-    messages.foreach {
-      case WireCommit(files) =>
-        files.foreach { case (staged, _) => fs.delete(new HPath(staged), false) }
-      case _ => ()
-    }
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    WireCommit.discard(topic, messages)
 }
 
-final class WireWriterFactory(ddl: String, path: String, sep: String,
+final class WireWriterFactory(ddl: String, topic: WireTopic,
     keyIdx: Option[Int] = None)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     keyIdx match {
       case Some(i) =>
-        new WireKeyedFileWriter(StructType.fromDDL(ddl), path, sep, i,
+        new WireKeyedFileWriter(StructType.fromDDL(ddl), topic, i,
           partitionId, taskId)
       case None =>
-        new WireFileWriter(StructType.fromDDL(ddl), path, sep,
+        new WireFileWriter(StructType.fromDDL(ddl), topic,
           f"_tmp_part-$partitionId%05d-$taskId.wire",
           f"part-$partitionId%05d-$taskId.wire")
     }
@@ -462,11 +548,10 @@ final class WireWriterFactory(ddl: String, path: String, sep: String,
   * property) with the fix in the message.
   */
 final class WireKeyedFileWriter(
-    schema: StructType, path: String, sep: String, keyIdx: Int,
+    schema: StructType, topic: WireTopic, keyIdx: Int,
     partitionId: Int, taskId: Long) extends DataWriter[InternalRow] {
 
-  private val fs = FileSystem.get(
-    new HPath(path).toUri, new Configuration())
+  private val fs = topic.fs
   private val open = scala.collection.mutable.LinkedHashMap
     .empty[Long, (HPath, String, java.io.BufferedWriter)]
   private val maxOpen =
@@ -479,7 +564,7 @@ final class WireKeyedFileWriter(
           "distinct key values; repartition the input by the keyBy column " +
           "so each task holds a bounded key slice (or raise " +
           "-Dgraft.wire.keyBy.maxOpenWriters)")
-      val staged = new HPath(path,
+      val staged = new HPath(topic.dir,
         f"_tmp_part-k$key-p$partitionId%05d-$taskId.wire")
       val fin = f"part-k$key-p$partitionId%05d-$taskId.wire"
       (staged, fin, new java.io.BufferedWriter(
@@ -490,7 +575,7 @@ final class WireKeyedFileWriter(
     if (row.isNullAt(keyIdx)) throw new IllegalArgumentException(
       "graft-wire keyBy: null partition key")
     writerFor(row.getLong(keyIdx))
-      .write(WireLineFormat.format(schema, sep, row))
+      .write(WireLineFormat.format(schema, topic.sep, row))
   }
 
   override def commit(): WriterCommitMessage = {
@@ -508,16 +593,16 @@ final class WireKeyedFileWriter(
 }
 
 final class WireFileWriter(
-    schema: StructType, path: String, sep: String,
+    schema: StructType, topic: WireTopic,
     stagedName: String, finalName: String) extends DataWriter[InternalRow] {
 
-  private val staged = new HPath(path, stagedName)
-  private val fs = FileSystem.get(staged.toUri, new Configuration())
+  private val staged = new HPath(topic.dir, stagedName)
+  private val fs = topic.fs
   private val out = new java.io.BufferedWriter(
     new java.io.OutputStreamWriter(fs.create(staged, true), "UTF-8"))
 
   override def write(row: InternalRow): Unit =
-    out.write(WireLineFormat.format(schema, sep, row))
+    out.write(WireLineFormat.format(schema, topic.sep, row))
 
   override def commit(): WriterCommitMessage = {
     out.close()
@@ -559,13 +644,14 @@ object WireLineFormat {
 }
 
 /** Serializable factory: schema rides as DDL text, filters as the
-  * serializable `sources.Filter` tree.
+  * serializable `sources.Filter` tree, the conf as the topic's broadcast.
   */
 final class WireReaderFactory(
     fullDdl: String,
     requiredNames: Array[String],
     pushed: Array[Filter],
-    sep: String,
+    topic: WireTopic,
+    lines: Boolean,
     limit: Option[Int] = None) extends PartitionReaderFactory {
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
@@ -574,16 +660,21 @@ final class WireReaderFactory(
       case WireKeyedPartition(fs, _) => fs
     }
     new WireFileReader(files,
-      StructType.fromDDL(fullDdl), requiredNames, pushed, sep, limit)
+      StructType.fromDDL(fullDdl), requiredNames, pushed, topic, lines, limit)
   }
 }
 
+/** Reads a partition's files line by line. In the raw-lines layout
+  * ([[WireTopicSource.Lines]]) the whole line is the one value; otherwise
+  * it is split on the topic's separator and parsed per the wire layout.
+  */
 final class WireFileReader(
     files: Array[String],
     fullSchema: StructType,
     requiredNames: Array[String],
     pushed: Array[Filter],
-    sep: String,
+    topic: WireTopic,
+    lines: Boolean,
     limit: Option[Int] = None) extends PartitionReader[InternalRow] {
 
   // Parse set = projected columns ∪ filter-referenced columns (a column used
@@ -597,17 +688,24 @@ final class WireFileReader(
   // compiled ONCE: String.split(Pattern.quote(sep)) would re-compile the
   // regex per LINE (the \Q..\E quoting also defeats split's single-char
   // fast path) — at wire-scan rates that was the scan's hot spot
-  private val sepPattern = Pattern.compile(Pattern.quote(sep))
+  private val sepPattern = Pattern.compile(Pattern.quote(topic.sep))
 
-  private val fs = {
-    val p = new HPath(files.head)
-    FileSystem.get(p.toUri, new Configuration())
-  }
+  private val fs = topic.fs
+  private val codecs = new CompressionCodecFactory(topic.hadoopConf)
   private var fileIdx = 0
   private var in = open(files(0))
 
-  private def open(f: String) = new java.io.BufferedReader(
-    new java.io.InputStreamReader(fs.open(new HPath(f)), "UTF-8"))
+  /** A file with a codec suffix (`.gz`, `.bz2`, …) decodes through its
+    * Hadoop codec, as in the text source; one whose codec cannot load
+    * fails here.
+    */
+  private def open(f: String) = {
+    val p = SparkPath.fromUrlString(f).toPath
+    val raw = fs.open(p)
+    val bytes = Option(codecs.getCodec(p))
+      .fold[java.io.InputStream](raw)(_.createInputStream(raw))
+    new java.io.BufferedReader(new java.io.InputStreamReader(bytes, "UTF-8"))
+  }
 
   /** Advance through the partition's file group (one file in the plain
     * layout; a key's whole group in the keyBy layout).
@@ -632,18 +730,7 @@ final class WireFileReader(
     if (limit.exists(emitted >= _)) return false
     var line = readLine()
     while (line != null) {
-      val parts = sepPattern.split(line, -1)
-      // typed values for the parse set only; "" decodes to null (CsvWire)
-      val vals = new Array[Any](fullSchema.length)
-      var j = 0
-      while (j < parseIdx.length) {
-        val i = parseIdx(j)
-        val raw = if (i < parts.length) parts(i) else ""
-        vals(i) =
-          if (raw.isEmpty) null
-          else WireFilterEval.parse(fullSchema.fields(i).dataType, raw)
-        j += 1
-      }
+      val vals = if (lines) Array[Any](line) else parse(line)
       if (pushed.forall(WireFilterEval.eval(_, fullSchema, vals))) {
         row = new GenericInternalRow(emitIdx.map { i =>
           vals(i) match {
@@ -657,6 +744,22 @@ final class WireFileReader(
       line = readLine()
     }
     false
+  }
+
+  /** Typed values for the parse set only; "" decodes to null (CsvWire). */
+  private def parse(line: String): Array[Any] = {
+    val parts = sepPattern.split(line, -1)
+    val vals = new Array[Any](fullSchema.length)
+    var j = 0
+    while (j < parseIdx.length) {
+      val i = parseIdx(j)
+      val raw = if (i < parts.length) parts(i) else ""
+      vals(i) =
+        if (raw.isEmpty) null
+        else WireFilterEval.parse(fullSchema.fields(i).dataType, raw)
+      j += 1
+    }
+    vals
   }
 
   override def get(): InternalRow = row

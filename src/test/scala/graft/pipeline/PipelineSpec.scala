@@ -298,6 +298,74 @@ class PipelineSpec extends SparkSpec {
     assert(spark.read.parquet(out).count() === 26) // 13 per epoch, no replays
   }
 
+  test("fileWireSource yields spark.read.text's value rows: raw lines, CRLF, gzip") {
+    // separators, quotes, blanks and an empty line pass through whole
+    val topic = Files.createTempDirectory("graft_topic_raw").toString
+    Files.write(new File(topic, "w1.txt").toPath,
+      "a,b,c\r\n\"q,1\",x\r\n\r\n  spaced ,\r\n,,\r\nlast".getBytes("UTF-8"))
+    val gz = new java.util.zip.GZIPOutputStream(
+      new java.io.FileOutputStream(new File(topic, "w2.txt.gz")))
+    try gz.write("zipped,1\r\n\"\"\r\n".getBytes("UTF-8")) finally gz.close()
+    val expected = spark.read.text(topic).collect().map(_.getString(0)).sorted.toSeq
+    assert(expected.contains("") && expected.contains("zipped,1"), expected)
+
+    val wire = StreamJobs.fileWireSource(spark, topic)
+    assert(wire.schema.map(f => f.name -> f.dataType) ===
+      Seq("value" -> org.apache.spark.sql.types.StringType))
+    val out  = Files.createTempDirectory("graft_sink_raw").toString
+    val ckpt = Files.createTempDirectory("graft_ckpt_raw").toString
+    val q = wire.writeStream.format("parquet").option("path", out)
+      .option("checkpointLocation", ckpt)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    assert(spark.read.parquet(out).collect().map(_.getString(0)).sorted.toSeq ===
+      expected)
+  }
+
+  test("fileWireSource on an empty topic commits no batch until a file lands") {
+    val topic = Files.createTempDirectory("graft_topic_empty").toString
+    val out  = Files.createTempDirectory("graft_sink_empty").toString
+    val ckpt = Files.createTempDirectory("graft_ckpt_empty").toString
+    def commits() = Option(new File(ckpt, "commits").list()).getOrElse(Array.empty[String])
+      .flatMap(n => scala.util.Try(n.toLong).toOption).sorted.toSeq
+    val q = StreamJobs.toParquet(
+      StreamJobs.parseEnrich(StreamJobs.fileWireSource(spark, topic)),
+      out, ckpt, org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
+    try {
+      q.processAllAvailable()
+      assert(commits() === Nil)
+      // written aside, then renamed in whole, as a producer would
+      val staged = Files.createTempDirectory("graft_topic_staged").toString
+      Replay.toTopic(RoomReader.pivotPlan(spark, roomsDir), OfficeSchema.office,
+        staged, rowsPerFile = 100)
+      new File(staged).listFiles().foreach(f => Files.move(f.toPath,
+        new File(topic, f.getName).toPath,
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE))
+      // a trigger already past its listing can end one processAllAvailable
+      // before the file is read
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (commits().isEmpty && System.nanoTime() < deadline) q.processAllAvailable()
+      assert(commits() === Seq(0L))
+    } finally q.stop()
+    assert(spark.read.parquet(out).count() === 13)
+  }
+
+  test("a checkpoint written by Spark's text source restarts on fileWireSource") {
+    // same source log (`sources/0`) and offset JSON: only new files are read
+    val etl = RoomReader.pivotPlan(spark, roomsDir)
+    val topic = Files.createTempDirectory("graft_topic_compat").toString
+    val out   = Files.createTempDirectory("graft_sink_compat").toString
+    val ckpt  = Files.createTempDirectory("graft_ckpt_compat").toString
+    Replay.toTopic(etl, OfficeSchema.office, topic, rowsPerFile = 100, epoch = 0)
+    StreamJobs.toParquet(StreamJobs.parseEnrich(spark.readStream.text(topic)),
+      out, ckpt).awaitTermination()
+    Replay.toTopic(etl, OfficeSchema.office, topic, rowsPerFile = 100, epoch = 1)
+    StreamJobs.toParquet(
+      StreamJobs.parseEnrich(StreamJobs.fileWireSource(spark, topic)), out, ckpt)
+      .awaitTermination()
+    assert(spark.read.parquet(out).count() === 26)
+  }
+
   test("p10: persisted index serves x25-identically with NO library cache") {
     val sf = "/root/testdata/sf0.001"
     // in-session reference answer (train + checkpointed artifacts)

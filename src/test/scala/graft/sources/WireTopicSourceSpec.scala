@@ -38,6 +38,8 @@ class WireTopicSourceSpec extends SparkSpec {
 
   private def read = s.read.format("graft-wire").schema(schema).load(topicDir)
 
+  private def wire(dir: String) = graft.sources.v2.WireTopic(s, dir, ",")
+
   private def plan(df: org.apache.spark.sql.DataFrame): SparkPlan =
     df.queryExecution.executedPlan
 
@@ -193,9 +195,9 @@ class WireTopicSourceSpec extends SparkSpec {
 
     // epoch replay: re-commit the same (epoch, partition) — the rename
     // must REPLACE the epoch's file, not duplicate it
-    val sw = new graft.sources.v2.WireStreamingWrite(schema, outTopic, ",")
+    val sw = new graft.sources.v2.WireStreamingWrite(schema, wire(outTopic))
     val w = graft.sources.v2.WireStreamingWriterFactory(schema.toDDL,
-      outTopic, ",").createWriter(0, 99L, 0L)
+      wire(outTopic)).createWriter(0, 99L, 0L)
     w.write(org.apache.spark.sql.catalyst.InternalRow(1L, 10.0,
       org.apache.spark.unsafe.types.UTF8String.fromString("a")))
     sw.commit(0L, Array(w.commit()))
@@ -335,6 +337,109 @@ class WireTopicSourceSpec extends SparkSpec {
     assert(rows === Seq((1L, 10.0), (2L, 20.0), (3L, 30.0)))
   }
 
+  test("streaming: a late file with an older mtime is read once, nothing re-read") {
+    // A producer that renames a file into the topic keeps the file's own
+    // (older) mtime, so it sorts before files already consumed.
+    val topic = Scratch.dir("graft_wire_late")
+    writeWireFile(topic, "f1.wire", 1700000060000L, Seq("1,10.0,a"))
+    writeWireFile(topic, "f2.wire", 1700000120000L, Seq("2,20.0,b"))
+    val out = Scratch.dir("graft_wire_late_out")
+    val ckpt = Scratch.dir("graft_wire_late_ckpt")
+    drainStream(topic, out, ckpt)
+    writeWireFile(topic, "f0.wire", 1700000000000L, Seq("3,30.0,c"))
+    drainStream(topic, out, ckpt)
+    val rows = s.read.parquet(out).collect()
+      .map(r => (r.getLong(0), r.getDouble(1))).sorted.toSeq
+    assert(rows === Seq((1L, 10.0), (2L, 20.0), (3L, 30.0)))
+  }
+
+  private def commitIds(ckpt: String): Seq[Long] =
+    Option(new java.io.File(ckpt, "commits").list()).getOrElse(Array.empty[String])
+      .flatMap(n => scala.util.Try(n.toLong).toOption).sorted.toSeq
+
+  /** Until a batch commits: a trigger already past its listing when a file
+    * lands can end `processAllAvailable` before the file is read. The last
+    * call waits out one more trigger, so the batch's progress is recorded.
+    */
+  private def awaitCommit(q: org.apache.spark.sql.streaming.StreamingQuery,
+      ckpt: String): Unit = {
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    while (commitIds(ckpt).isEmpty && System.nanoTime() < deadline)
+      q.processAllAvailable()
+    q.processAllAvailable()
+  }
+
+  test("streaming: an empty topic commits no batch until the first file lands") {
+    val topic = Scratch.dir("graft_wire_empty")
+    val out = Scratch.dir("graft_wire_empty_out")
+    val ckpt = Scratch.dir("graft_wire_empty_ckpt")
+    val q = s.readStream.format("graft-wire").schema(schema).load(topic)
+      .select("id", "qty")
+      .writeStream.format("parquet").outputMode("append")
+      .option("checkpointLocation", ckpt).option("path", out)
+      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
+      .start()
+    try {
+      q.processAllAvailable()
+      assert(commitIds(ckpt) === Nil)
+      val staged = Scratch.dir("graft_wire_empty_staged")
+      writeWireFile(staged, "f1.wire", 1700000000000L, Seq("1,10.0,a"))
+      java.nio.file.Files.move(java.nio.file.Paths.get(staged, "f1.wire"),
+        java.nio.file.Paths.get(topic, "f1.wire"),
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      awaitCommit(q, ckpt)
+      assert(commitIds(ckpt) === Seq(0L))
+      assert(q.recentProgress.filter(_.numInputRows > 0).map(_.batchId).toSeq ===
+        Seq(0L))
+    } finally q.stop()
+    assert(s.read.parquet(out).collect().map(_.getLong(0)).toSeq === Seq(1L))
+  }
+
+  test("streaming: the topic is listed once per AvailableNow drain, never to plan") {
+    val topic = Scratch.dir("graft_wire_listing")
+    Seq("f1", "f2", "f3").zipWithIndex.foreach { case (f, i) =>
+      writeWireFile(topic, s"$f.wire", 1700000000000L + i * 60000L,
+        Seq(s"${i + 1},${i + 1}0.0,x"))
+    }
+    WireTestFs.withScheme(s) {
+      val before = WireTestFs.listings.get()
+      val q = drainStream(WireTestFs.uri(topic),
+        Scratch.dir("graft_wire_listing_out"),
+        Scratch.dir("graft_wire_listing_ckpt"))
+      assert(q.recentProgress.count(_.numInputRows > 0) === 3)
+      assert(WireTestFs.listings.get() - before === 1)
+    }
+  }
+
+  test("every filesystem handle comes from the session's Hadoop conf") {
+    // `wiretest` is known only to the SparkContext's Hadoop conf: a handle
+    // built from a fresh Configuration fails with UnsupportedFileSystemException
+    WireTestFs.withScheme(s) {
+      val dir = WireTestFs.uri(Scratch.dir("graft_wire_scheme"))
+      Seq((1L, Some(1.0), "a"), (2L, None, "b")).toDF("id", "qty", "tag")
+        .write.format("graft-wire").mode("append").save(dir)
+      Seq((3L, Some(3.0), "c")).toDF("id", "qty", "tag").repartition(1)
+        .write.format("graft-wire").option("keyBy", "id").mode("append")
+        .save(dir)
+      val back = s.read.format("graft-wire").schema(schema).load(dir)
+      assert(back.collect().map(_.getLong(0)).toSet === Set(1L, 2L, 3L))
+
+      val out = Scratch.dir("graft_wire_scheme_out")
+      drainStream(dir, out, Scratch.dir("graft_wire_scheme_ckpt"), None)
+      assert(s.read.parquet(out).collect().map(_.getLong(0)).toSet ===
+        Set(1L, 3L))
+
+      val sinkTopic = WireTestFs.uri(Scratch.dir("graft_wire_scheme_sink"))
+      val q = s.readStream.format("graft-wire").schema(schema).load(dir)
+        .writeStream.format("graft-wire").option("path", sinkTopic)
+        .option("checkpointLocation", Scratch.dir("graft_wire_scheme_sink_ckpt"))
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      assert(s.read.format("graft-wire").schema(schema).load(sinkTopic)
+        .collect().map(_.getLong(0)).toSet === Set(1L, 2L, 3L))
+    }
+  }
+
   // ---- fault injection (two-phase commit under task failure) -------------
 
   test("batch write survives a task killed mid-write — real retry, no loss") {
@@ -375,7 +480,7 @@ class WireTopicSourceSpec extends SparkSpec {
     // partition's rows may become visible.
     val dir = Scratch.dir("graft_wire_chaos_spec")
     val factory = new graft.sources.v2.WireWriterFactory(
-      schema.toDDL, dir, ",", None)
+      schema.toDDL, wire(dir), None)
     def stage(taskId: Long) = {
       val w = factory.createWriter(0, taskId)
       w.write(org.apache.spark.sql.catalyst.InternalRow(7L, 7.5,
@@ -386,7 +491,7 @@ class WireTopicSourceSpec extends SparkSpec {
     val loser = stage(2L)
     val msg = winner.commit()
     loser.abort()
-    new graft.sources.v2.WireBatchWrite(schema, dir, ",", false, None)
+    new graft.sources.v2.WireBatchWrite(schema, wire(dir), false, None)
       .commit(Array(msg))
     val files = new java.io.File(dir).listFiles().map(_.getName)
     assert(files.count(_.startsWith("part-")) === 1, files.mkString(","))
@@ -403,12 +508,12 @@ class WireTopicSourceSpec extends SparkSpec {
     Seq((1L, Some(1.0), "a")).toDF("id", "qty", "tag")
       .write.format("graft-wire").mode("append").save(dir)
     val factory = new graft.sources.v2.WireWriterFactory(
-      schema.toDDL, dir, ",", None)
+      schema.toDDL, wire(dir), None)
     val w = factory.createWriter(3, 9L)
     w.write(org.apache.spark.sql.catalyst.InternalRow(666L, 6.0,
       org.apache.spark.unsafe.types.UTF8String.fromString("ghost")))
     val msg = w.commit()
-    new graft.sources.v2.WireBatchWrite(schema, dir, ",", false, None)
+    new graft.sources.v2.WireBatchWrite(schema, wire(dir), false, None)
       .abort(Array(msg))
     val files = new java.io.File(dir).listFiles().map(_.getName)
     assert(!files.exists(_.startsWith("_tmp_")), files.mkString(","))
@@ -423,11 +528,11 @@ class WireTopicSourceSpec extends SparkSpec {
     // converge to one copy per (epoch, partition) file — deterministic
     // names make the first run's file replaceable, never duplicable.
     val dir = Scratch.dir("graft_wire_chaos_epoch")
-    val sw = new graft.sources.v2.WireStreamingWrite(schema, dir, ",")
+    val sw = new graft.sources.v2.WireStreamingWrite(schema, wire(dir))
     def epochWrite(parts: Seq[(Int, Seq[Long])]): Unit = {
       val msgs = parts.map { case (pid, ids) =>
         val w = graft.sources.v2.WireStreamingWriterFactory(
-          schema.toDDL, dir, ",").createWriter(pid, 100L + pid, 5L)
+          schema.toDDL, wire(dir)).createWriter(pid, 100L + pid, 5L)
         ids.foreach(id => w.write(org.apache.spark.sql.catalyst.InternalRow(
           id, id * 1.0,
           org.apache.spark.unsafe.types.UTF8String.fromString("e"))))
@@ -442,5 +547,34 @@ class WireTopicSourceSpec extends SparkSpec {
     val back = s.read.format("graft-wire").schema(schema).load(dir)
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(back === Seq(1L, 2L, 3L))
+  }
+}
+
+/** The local filesystem under the `wiretest` scheme, which only
+  * [[WireTestFs.withScheme]] registers (on the SparkContext's Hadoop conf,
+  * uncached, so every handle resolves through a conf). Counts directory
+  * listings.
+  */
+class WireTestFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("wiretest:///")
+  override def getScheme: String = "wiretest"
+  override def listStatus(
+      p: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    WireTestFs.listings.incrementAndGet()
+    super.listStatus(p)
+  }
+}
+
+object WireTestFs {
+  val listings = new java.util.concurrent.atomic.AtomicInteger()
+
+  def uri(localDir: String): String = "wiretest://" + localDir
+
+  def withScheme[T](s: org.apache.spark.sql.SparkSession)(body: => T): T = {
+    val hc = s.sparkContext.hadoopConfiguration
+    hc.set("fs.wiretest.impl", classOf[WireTestFs].getName)
+    hc.setBoolean("fs.wiretest.impl.disable.cache", true)
+    try body
+    finally { hc.unset("fs.wiretest.impl"); hc.unset("fs.wiretest.impl.disable.cache") }
   }
 }
