@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions.call
 import graft.queries.Q
 import graft.sources.Tables
 
@@ -27,6 +28,13 @@ object PortableHash {
     s"CAST(list_reduce(list_prepend(CAST(0 AS BIGINT), " +
       s"list_transform(range(1, length($e) + 1), i -> ascii(substr($e, i, 1)))), " +
       s"(acc, c) -> (acc * 31 + c) % $P) AS BIGINT)"
+
+  /** The engine side of the `doc_id`-keyed sampling coins: the compiled
+    * poly fold over md5('<salt>|' || doc_id), MD5 for the avalanche a
+    * short salted string lacks. Distinct salts never reuse one coin.
+    */
+  def saltedDocHash(salt: String): Column = call("graft_poly_hash",
+    md5(concat(lit(s"$salt|"), col("doc_id").cast("string"))))
 
   /** Per-token hash array for `text` split on single spaces. */
   val sparkTokenHashes: String =
@@ -85,15 +93,13 @@ object Dedup {
     * HOFs; `graft_minhash_sig` returns null below 2 tokens, replacing the
     * `size(split(text,' ')) >= 2` predicate with the same row set.
     */
-  def minhash(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
+  def minhash(docs: DataFrame): DataFrame =
     docs
-      .withColumn("mhs", expr("graft_minhash_sig(text)"))
+      .withColumn("mhs", call("graft_minhash_sig", col("text")))
       .filter(col("mhs").isNotNull)
       .select(
         col("doc_id") +:
           (0 until k).map(j => col("mhs").getItem(j).as(s"mh$j")): _*)
-  }
 
   /** DuckDB subquery mirroring [[minhash]] (aliased `sig`). */
   def minhashSql: String = {
@@ -236,11 +242,9 @@ object Dedup {
     */
   val simhashBlocks = 4
   val simhashBlockBits = 15
-  def simhash(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
+  def simhash(docs: DataFrame): DataFrame =
     docs.filter(length(col("text")) > 0)
-      .select(col("doc_id"), expr("graft_simhash(text)").as("simhash"))
-  }
+      .select(col("doc_id"), call("graft_simhash", col("text")).as("simhash"))
 
   def simhashSql: String = {
     val terms = (0 until simhashBlocks).flatMap { k =>
@@ -268,9 +272,8 @@ object Dedup {
     // Round 21: fused distinct-token kernel (graft_distinct_tokens) — one
     // pass, bit-identical array (first-occurrence order) to
     // array_distinct(split(text, ' ')).
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val toks = graft.util.Caches.retain(docs.select(col("doc_id"),
-      expr("graft_distinct_tokens(text)").as("toks")))
+      call("graft_distinct_tokens", col("text")).as("toks")))
     // |A∪B| = |A|+|B|-|A∩B| over the already-distinct token sets, so the
     // union ARRAY (an ~|A|+|B| string allocation per candidate pair, the
     // most expensive per-pair op) is never built — only the intersect
@@ -503,15 +506,13 @@ object Dedup {
     * candidate rows the sketch admits).
     */
   def mediaMinhashPairs(corpus: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val corpusF = corpus.filter(octet_length(col("text")) >=
       graft.ext.Multimodal.mhashMinBytes)
     val w = resolveMinhashBits(corpusF)
     val sigs = graft.ext.Multimodal.mediaMinhashRaw(corpus)
     val grams = graft.util.Caches.retain(corpusF
-      .select(col("doc_id"), array_distinct(expr(
-        s"graft_byte_grams(text, ${graft.ext.Multimodal.mhashGramBytes})"))
-        .as("bg")))
+      .select(col("doc_id"), array_distinct(call("graft_byte_grams",
+        col("text"), lit(graft.ext.Multimodal.mhashGramBytes))).as("bg")))
     minhashBlockCandidates(sigs, w)
       .join(grams.select(col("doc_id").as("doc_a"), col("bg").as("ga"),
         size(col("bg")).as("na")), "doc_a")
@@ -797,14 +798,13 @@ object Dedup {
     * bucket) keeps the join linear-ish in cluster size, not O(n²).
     */
   def embedNearDup(embeddings: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val e = embeddings.filter(col("vec_id") % 4 === 0)
     val a = e.select(col("vec_id").as("vec_a"), col("label"),
       col("embedding").as("ea"))
     val b = e.select(col("vec_id").as("vec_b"), col("label").as("label_b"),
       col("embedding").as("eb"))
     a.join(b, col("label") === col("label_b") && col("vec_a") < col("vec_b"))
-      .withColumn("cos_sim", expr("graft_cos(ea, eb)"))
+      .withColumn("cos_sim", call("graft_cos", col("ea"), col("eb")))
       .filter(col("cos_sim") > 0.3)
       .select("vec_a", "vec_b", "cos_sim")
   }
@@ -843,7 +843,6 @@ object Dedup {
   val HyperplaneBitsKey = "spark.graft.dedup.hyperplaneBits"
 
   def embedNearDupLsh(embeddings: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     // resolveBits fails fast on a nonsense width instead of degrading
     // silently: bits <= 0 puts EVERY vector in cell 0 (the self-join
     // degenerates to the full n² cartesian this operator exists to avoid),
@@ -858,14 +857,14 @@ object Dedup {
     // aggregation when the cap is on), and the bucket projection is a
     // full-corpus hyperplane pass worth computing once.
     val e = applyBucketCap(graft.util.Caches.retain(embeddings
-      .withColumn("bucket", expr(s"graft_lsh_bucket(embedding, $bits)"))),
+      .withColumn("bucket", call("graft_lsh_bucket", col("embedding"), lit(bits)))),
       Seq("bucket"))
     val a = e.select(col("vec_id").as("vec_a"), col("bucket"),
       col("embedding").as("ea"))
     val b = e.select(col("vec_id").as("vec_b"), col("bucket").as("bucket_b"),
       col("embedding").as("eb")).hint("shuffle_hash")
     a.join(b, col("bucket") === col("bucket_b") && col("vec_a") < col("vec_b"))
-      .withColumn("cos_sim", expr("graft_cos(ea, eb)"))
+      .withColumn("cos_sim", call("graft_cos", col("ea"), col("eb")))
       .filter(col("cos_sim") > 0.3)
       .select("vec_a", "vec_b", "bucket", "cos_sim")
   }
@@ -1037,7 +1036,7 @@ object Dedup {
   }
 
   private def logDerived(key: String, n: Long, v: Int): Unit =
-    System.err.println(s"[graft] $key=auto derived $v from corpus count $n")
+    graft.util.Log.info(s"$key=auto derived $v from corpus count $n")
 
   /** k-means cell count for `df`: numeric conf wins, `auto` derives from a
     * corpus count, unset keeps the declared default (the oracle contract).
@@ -1114,7 +1113,7 @@ object Dedup {
     val cond = keyCols.map(c => col(c) === col(s"${c}_b"))
       .reduce(_ && _) && col("vec_a") < col("vec_b")
     val pruned = a.join(b, cond)
-      .withColumn("cos_sim", expr("graft_cos(ea, eb)"))
+      .withColumn("cos_sim", call("graft_cos", col("ea"), col("eb")))
       .filter(col("cos_sim") > tau)
       .groupBy(col("vec_b").as("vec_id")).agg(min("vec_a").as("dup_of"))
     rel.select(col("vec_id") +: keyCols.map(col): _*)
@@ -1208,7 +1207,6 @@ object Dedup {
     */
   private def evalAgainstTruth(embeddings: DataFrame, tau: Double)(
       prunedOf: DataFrame => DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val slice = graft.util.Caches.retain(embeddings
       .filter(col("vec_id") < 100).select("vec_id", "embedding"))
     val aug = slice.unionByName(slice.select(
@@ -1216,7 +1214,7 @@ object Dedup {
     val a = aug.toDF("va", "ea")
     val b = aug.toDF("vb", "eb")
     val truth = a.join(b, col("va") < col("vb"))
-      .filter(expr("graft_cos(ea, eb)") > tau)
+      .filter(call("graft_cos", col("ea"), col("eb")) > tau)
       .select(col("vb").as("vec_id")).distinct()
     val pruned = prunedOf(aug)
     val ct = truth.agg(count(lit(1)).as("n_truth"))
@@ -1367,11 +1365,10 @@ object Dedup {
   /** The snapshot's distinct SpanN-gram hash relation — the width
     * derivation's counting input and the artifact's build input.
     */
-  private def snapshotGrams(snapshotDocs: DataFrame, n: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(snapshotDocs.sparkSession)
+  private def snapshotGrams(snapshotDocs: DataFrame, n: Int): DataFrame =
     snapshotDocs
-      .select(explode(expr(s"graft_gram_chain(text, $n)")).as("g")).distinct()
-  }
+      .select(explode(call("graft_gram_chain", col("text"), lit(n))).as("g"))
+      .distinct()
 
   /** The resolved width for a snapshot (conf or `auto`-derived) — p12
     * resolves ONCE here and builds base AND delta at the same m, so the
@@ -1429,12 +1426,11 @@ object Dedup {
     */
   def bloomGateXform(bloomRow: DataFrame, n: Int = SpanN)(
       src: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(src.sparkSession)
     src.crossJoin(broadcast(bloomRow))
       .select(col("doc_id"),
         when(size(split(col("text"), " ")) >= n,
-          expr(s"graft_bloom_hits(graft_gram_chain(text, $n), bloom, " +
-            s"$BloomK)"))
+          call("graft_bloom_hits", call("graft_gram_chain", col("text"), lit(n)),
+            col("bloom"), lit(BloomK)))
           .otherwise(lit(0)).as("n_maybe_grams"))
       .withColumn("maybe_contaminated", col("n_maybe_grams") > 0)
   }
@@ -1599,10 +1595,9 @@ object Dedup {
     * to make that loss measurable (structurally 1.0/1.0 here).
     */
   def exactSubstringSpans(docs: DataFrame, n: Int = SpanN): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     import org.apache.spark.sql.expressions.Window
     val grams = docs.select(col("doc_id"),
-      posexplode(expr(s"graft_gram_chain(text, $n)")).as(Seq("pos", "g")))
+      posexplode(call("graft_gram_chain", col("text"), lit(n))).as(Seq("pos", "g")))
     val kept = applyBucketCap(grams, Seq("g"))
     val matched = kept
       .select(col("g"), col("doc_id").as("doc_a"), col("pos").as("pos_a"))
@@ -1689,14 +1684,13 @@ object Dedup {
   }
 
   def selfRepeatSpans(docs: DataFrame, n: Int = SpanN): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     import org.apache.spark.sql.expressions.Window
     // MaxBucketSizeKey caps the per-(doc, gram) site count: a degenerate
     // doc (one token repeated L times) otherwise yields L²/2 in-doc pairs
     // — the same quadratic guard every blocked operator here carries.
     val grams = applyBucketCap(
       docs.select(col("doc_id"),
-        posexplode(expr(s"graft_gram_chain(text, $n)")).as(Seq("pos", "g"))),
+        posexplode(call("graft_gram_chain", col("text"), lit(n))).as(Seq("pos", "g"))),
       Seq("doc_id", "g"))
     val matched = grams.select(col("doc_id"), col("pos").as("pos_a"),
         col("g"))
@@ -1765,11 +1759,10 @@ object Dedup {
     */
   def winnowedSpans(docs: DataFrame, n: Int = SpanN,
       w: Int = WinnowW): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     import org.apache.spark.sql.expressions.Window
     val anchors = applyBucketCap(
       docs.select(col("doc_id"),
-        explode(expr(s"graft_winnow(text, $n, $w)")).as("a"))
+        explode(call("graft_winnow", col("text"), lit(n), lit(w))).as("a"))
         .select(col("doc_id"), col("a.g").as("g")).distinct(),
       Seq("g"))
     val cand = anchors.select(col("g"), col("doc_id").as("doc_a"))
@@ -1785,7 +1778,7 @@ object Dedup {
       .unionByName(cand.select(col("doc_b").as("doc_id"))).distinct()
     val pg = docs.join(candDocs, Seq("doc_id"), "left_semi")
       .select(col("doc_id"),
-        posexplode(expr(s"graft_gram_chain(text, $n)")).as(Seq("pos", "g")))
+        posexplode(call("graft_gram_chain", col("text"), lit(n))).as(Seq("pos", "g")))
     val matched = cand
       .join(pg.select(col("doc_id").as("doc_a"), col("pos").as("pos_a"),
         col("g")), Seq("doc_a"))
@@ -1902,8 +1895,7 @@ object DedupQueries {
         // Round 21: the normalization tail is t07's compiled byte pass
         // (graft_norm_text over Spark's own lower() — see
         // TextOps.normalize) instead of two java.util.regex passes.
-        graft.functions.GraftFunctions.register(s)
-        val norm = expr("graft_norm_text(lower(text))")
+        val norm = call("graft_norm_text", lower(col("text")))
         Tables.documents(s, d)
           .select(col("doc_id"), md5(norm).as("canon_h"))
           .withColumn("survivor_id",
@@ -1932,14 +1924,13 @@ object DedupQueries {
     // aggregation.
     Q("d13_decontaminate",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val docs = Tables.documents(s, d)
         val evalGrams = docs.filter(col("doc_id") < 25)
-          .select(explode(expr("graft_gram5_distinct(text)")).as("gram_hash"))
+          .select(explode(call("graft_gram5_distinct", col("text"))).as("gram_hash"))
           .distinct()
         docs.filter(col("doc_id") >= 25)
           .select(col("doc_id"),
-            explode(expr("graft_gram5_distinct(text)")).as("gram_hash"))
+            explode(call("graft_gram5_distinct", col("text"))).as("gram_hash"))
           .join(broadcast(evalGrams), "gram_hash")
           .groupBy("doc_id")
           .agg(count(lit(1)).as("n_shared_grams"))
@@ -1982,10 +1973,9 @@ object DedupQueries {
     // two exchanges over (gram_hash, doc_id).
     Q("d08_boilerplate_ngrams",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val docs = Tables.documents(s, d)
         docs
-          .select(explode(expr("graft_gram5_distinct(text)")).as("gram_hash"))
+          .select(explode(call("graft_gram5_distinct", col("text"))).as("gram_hash"))
           .groupBy("gram_hash")
           .agg(count(lit(1)).as("n_docs"))
           .filter(col("n_docs") >= 3)
@@ -2037,12 +2027,11 @@ object DedupQueries {
     // container. Ratios are single IEEE divisions of exact set sizes.
     Q("d16_containment",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val docs = Tables.documents(s, d)
         // Round 21: same fused kernel as jaccardPairs — and the SAME plan
         // text, so the Caches.retain entry is shared with d05's.
         val toks = graft.util.Caches.retain(docs.select(col("doc_id"),
-          expr("graft_distinct_tokens(text)").as("toks")))
+          call("graft_distinct_tokens", col("text")).as("toks")))
         Dedup.lshPairs(docs)
           .join(toks.select(col("doc_id").as("doc_a"),
             col("toks").as("ta")), "doc_a")
@@ -2092,7 +2081,6 @@ object DedupQueries {
     // identically in both engines.
     Q("d14_lsh_eval",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         // Retained: the eval slice is ~100 rows, but every downstream arm
         // (exact truth set ×2, lshPairs' minhash, the intersect) otherwise
         // re-derives it with a FULL corpus scan — at the 100× checkpoint
@@ -2105,7 +2093,7 @@ object DedupQueries {
           slice.select((col("doc_id") + 10000).as("doc_id"), col("text")))
         val toks = aug
           .filter(size(split(col("text"), " ")) >= 2) // minhash's own gate
-          .select(col("doc_id"), expr("graft_token_hashes(text)").as("th"))
+          .select(col("doc_id"), call("graft_token_hashes", col("text")).as("th"))
           .select(col("doc_id"), expr(
             s"array_distinct(${PortableHash.sparkShingles("th")})").as("t"))
         val exact = toks.toDF("doc_a", "ta")
@@ -2232,7 +2220,6 @@ object DedupQueries {
     // gram pair) — the gate exists so that stays MEASURED, not assumed.
     Q("d22_substring_eval",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val slice = graft.util.Caches.retain(
           Tables.documents(s, d).filter(col("doc_id") < 25)
             .select("doc_id", "text"))
@@ -2338,7 +2325,6 @@ object DedupQueries {
     // payloads. Both are MEASURED here, not assumed.
     Q("d26_media_phash_eval",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val bMin = Multimodal.phashBits + 1
         val slice = graft.util.Caches.retain(
           Tables.documents(s, d)
@@ -2463,7 +2449,6 @@ object DedupQueries {
     // deletion) where the min-hash signature's recall is ~1.
     Q("d30_media_minhash_eval",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val bMin = Multimodal.mhashMinBytes + 1
         val slice = graft.util.Caches.retain(
           Tables.documents(s, d)

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions.call
 import graft.queries.Q
 import graft.sources.Tables
 
@@ -69,12 +70,11 @@ object Multimodal {
     */
   val thumbBytes = 16
   def resizeStub(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // graft_thumb computes stride = max(1, octets / thumbBytes) internally
     // with the same arithmetic as the reported stride column below; the
     // kernel replaced an interpreted HOF that re-hexed the whole text per
     // sampled byte (O(n·k) per row — 5.2× the oracle at sf1).
-    val thumb = expr(s"graft_thumb(text, $thumbBytes)")
+    val thumb = call("graft_thumb", col("text"), lit(thumbBytes))
     docs.filter(length(col("text")) > 0).select(
       col("doc_id"),
       octet_length(col("text")).as("orig_bytes"),
@@ -113,13 +113,11 @@ object Multimodal {
     * to exact-byte dedup, where decimation adds nothing).
     */
   val phashBits = 60
-  def mediaPhash(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
+  def mediaPhash(docs: DataFrame): DataFrame =
     docs.filter(octet_length(col("text")) >= phashBits + 1)
       .select(col("doc_id"),
         octet_length(col("text")).as("n_bytes"),
-        expr(s"graft_dhash(text, $phashBits)").as("phash"))
-  }
+        call("graft_dhash", col("text"), lit(phashBits)).as("phash"))
 
   def mediaPhashSql(src: String = "documents"): String = {
     val b = phashBits
@@ -202,20 +200,16 @@ object Multimodal {
     * array's first four values mod 2^15 reproduces it bit-for-bit
     * (TextHashSpec pins the equivalence).
     */
-  def mediaMinhashRaw(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
+  def mediaMinhashRaw(docs: DataFrame): DataFrame =
     docs.filter(octet_length(col("text")) >= mhashMinBytes)
       .select(col("doc_id"),
-        expr(s"graft_byte_minhash_arr(text, $mhashGramBytes, " +
-          s"${4 + mhashSketchHashes})").as("sig"))
-  }
-  def mediaMinhash(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
+        call("graft_byte_minhash_arr", col("text"), lit(mhashGramBytes),
+          lit(4 + mhashSketchHashes)).as("sig"))
+  def mediaMinhash(docs: DataFrame): DataFrame =
     docs.filter(octet_length(col("text")) >= mhashMinBytes)
       .select(col("doc_id"),
         octet_length(col("text")).as("n_bytes"),
-        expr(s"graft_byte_minhash(text, $mhashGramBytes)").as("mhash"))
-  }
+        call("graft_byte_minhash", col("text"), lit(mhashGramBytes)).as("mhash"))
 
   def mediaMinhashSql(src: String = "documents"): String = {
     val k = mhashGramBytes
@@ -283,9 +277,8 @@ object Multimodal {
     * the oracle at sf0.1, now at parity).
     */
   def featureStub(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val withQ = docs
-      .withColumn("qm", expr("graft_quarter_means(text)"))
+      .withColumn("qm", call("graft_quarter_means", col("text")))
       .filter(col("qm").isNotNull)
     val feats = (0 until 4).map(q => col("qm").getItem(q).as(s"feat_q$q"))
     withQ.select(col("doc_id") +: feats: _*)
@@ -403,16 +396,15 @@ object MultimodalQueries {
     // per row); the original transform(sequence(...))-over-full-hex HOF ran
     // as an interpreted lambda per tile and benched 2.0× the oracle.
     Q("m07_tile_chunks",
-      (s, d) => {
-        graft.functions.GraftFunctions.register(s)
+      (s, d) =>
         Tables.documents(s, d)
           .filter(length(col("text")) > 0)
-          .select(col("doc_id"), posexplode(expr("graft_hex_tiles(text, 32)"))
-            .as(Seq("tile_idx", "tile_hex")))
+          .select(col("doc_id"),
+            posexplode(call("graft_hex_tiles", col("text"), lit(32)))
+              .as(Seq("tile_idx", "tile_hex")))
           .select(col("doc_id"), col("tile_idx"),
             (length(col("tile_hex")) / 2).cast("int").as("tile_bytes"),
-            md5(col("tile_hex")).as("tile_md5"))
-      },
+            md5(col("tile_hex")).as("tile_md5")),
       Some("""SELECT doc_id,
                      CAST(u.s.i - 1 AS INT) AS tile_idx,
                      CAST(length(u.s.t) // 2 AS INT) AS tile_bytes,

@@ -1,8 +1,9 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions.call
 import graft.queries.Q
 import graft.sources.Tables
 
@@ -84,15 +85,13 @@ object Similarity {
     * form, one compiled call per row); broadcast query row +
     * `TakeOrderedAndProject` means no shuffle of the fact side.
     */
-  def knnBrute(emb: DataFrame, kTop: Int = 10): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
+  def knnBrute(emb: DataFrame, kTop: Int = 10): DataFrame =
     emb.crossJoin(broadcast(queryRow(emb)))
       .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos_sim", expr("graft_cos(embedding, qe)"))
+      .withColumn("cos_sim", call("graft_cos", col("embedding"), col("qe")))
       .select("vec_id", "label", "cos_sim")
       .orderBy(col("cos_sim").desc, col("vec_id"))
       .limit(kTop)
-  }
 
   def knnBruteSql(kTop: Int = 10, src: String = "embeddings"): String =
     s"""WITH q AS (SELECT vec_id AS q_id, embedding AS qe
@@ -103,14 +102,13 @@ object Similarity {
 
   /** LSH-pruned ANN: restrict the exact ranking to the query's bucket. */
   def knnLsh(emb: DataFrame, kTop: Int = 10): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
-    val bucketed = emb.withColumn("bucket", expr("graft_lsh_bucket(embedding)"))
+    val bucketed = emb.withColumn("bucket", call("graft_lsh_bucket", col("embedding")))
     val q = bucketed.orderBy("vec_id").limit(1)
       .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
         col("bucket").as("q_bucket"))
     bucketed.join(broadcast(q), col("bucket") === col("q_bucket"))
       .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos_sim", expr("graft_cos(embedding, qe)"))
+      .withColumn("cos_sim", call("graft_cos", col("embedding"), col("qe")))
       .select("vec_id", "label", "bucket", "cos_sim")
       .orderBy(col("cos_sim").desc, col("vec_id"))
       .limit(kTop)
@@ -143,7 +141,6 @@ object Similarity {
     * The 1e-6-scale quantization is immaterial for a coarse quantizer.
     */
   def knnIvf(emb: DataFrame, kTop: Int = 10): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val pe = emb.select(col("label"), col("vec_id"),
       posexplode(col("embedding")).as(Seq("pos", "val")))
     val cent = pe.groupBy("label", "pos")
@@ -164,14 +161,14 @@ object Similarity {
       col("vec_id").as("q_id"),
       expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("qe"))
     val probe = carr.crossJoin(broadcast(q))
-      .withColumn("cq", expr("graft_cos(cvec, qe)"))
+      .withColumn("cq", call("graft_cos", col("cvec"), col("qe")))
       .orderBy(col("cq").desc, col("label"))
       .limit(1)
       .select(col("label").as("best_label"), col("q_id"), col("qe"))
     emb.join(broadcast(probe), col("label") === col("best_label"))
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("cos_sim",
-        expr("graft_cos(transform(embedding, x -> CAST(x AS DOUBLE)), qe)"))
+        call("graft_cos", transform(col("embedding"), _.cast("double")), col("qe")))
       .select("vec_id", "label", "cos_sim")
       .orderBy(col("cos_sim").desc, col("vec_id"))
       .limit(kTop)
@@ -320,7 +317,6 @@ object Similarity {
 
   private[graft] def kmeansAssignMode(emb: DataFrame, k: Int, iters: Int,
       mode: SeedMode): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val e0 = emb.select(col("vec_id"),
       expr("transform(embedding, ex -> CAST(ex AS DOUBLE))").as("e"))
     // The non-modulo seeders issue extra corpus passes (farthest-point:
@@ -391,8 +387,6 @@ object Similarity {
 
   private[graft] def lloydOverMode(e0: DataFrame, k: Int, iters: Int,
       mode: SeedMode): DataFrame = {
-    graft.functions.GraftFunctions.register(e0.sparkSession)
-
     // (cluster, e) rows → a single broadcast row holding the sorted
     // array<struct<cluster,cvec>> centroid table, via the mergeable
     // graft_centroids accumulator (functions/CentroidSum.scala): one
@@ -401,19 +395,15 @@ object Similarity {
     // groupBy(cluster) → collect chain was three, with the same quantized
     // BIGINT sums (order-free, bit-identical to the SQL twin).
     def centroidRow(assigned: DataFrame): DataFrame =
-      assigned.agg(expr(s"graft_centroids(cluster, e, $k)").as("cents"))
+      assigned.agg(call("graft_centroids", col("cluster"), col("e"), lit(k)).as("cents"))
 
-    def assign(cents: DataFrame): DataFrame = {
-      // array_min over (dd, cluster) structs IS the argmin with the
-      // lowest-cluster tie-break (struct ordering is lexicographic); each
-      // distance is ONE compiled graft_l2 call — the interpreted
-      // aggregate()-fold argmin evaluated two interpreted SQL folds per candidate
-      // and measured ~4× slower on this path.
+    // graft_best_cell is the argmin with the lowest-cluster tie-break, one
+    // compiled pass per row (see bestCell)
+    def assign(cents: DataFrame): DataFrame =
       e0.crossJoin(broadcast(cents))
-        .withColumn("best", expr(bestCellExpr))
+        .withColumn("best", bestCell(col("e"), col("cents")))
         .select(col("vec_id"), col("e"),
           col("best.c").as("cluster"), col("best.dd").as("dd"))
-    }
 
     val a0 = mode match {
       case SeedMode.Modulo =>
@@ -436,7 +426,6 @@ object Similarity {
     */
   def kmeansTrainedCentroids(emb: DataFrame, kDefault: Int = 8,
       iters: Int = 2, pp: Boolean = false): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val k = graft.ext.Dedup.resolveCells(emb, kDefault)
     // `pp` must mirror the index build it serves (x28 trains pp-seeded;
     // a modulo-seeded artifact would assign different cells and the
@@ -450,20 +439,20 @@ object Similarity {
     // lifecycle shape).
     graft.util.Caches.retainCheckpointed(
       kmeansAssignSeeded(emb, k, iters - 1, pp)
-        .agg(expr(s"graft_centroids(cluster, e, $k)").as("cents")))
+        .agg(call("graft_centroids", col("cluster"), col("e"), lit(k)).as("cents")))
   }
 
-  /** The argmin-cell SQL expression [[kmeansAssignSeeded]]'s assign step
-    * and s30's streaming assignment share — ONE definition so the offline
+  /** The argmin-cell column [[kmeansAssignSeeded]]'s assign step and
+    * s30's streaming assignment share — ONE definition so the offline
     * and online cell of a vector can never drift.
     *
     * Round 13: compiled kernel (same HOF-to-Expression move as
-    * adcTermExpr — VecOps.bestCellD documents the bit-identity: d2D fold
+    * adcTerm — VecOps.bestCellD documents the bit-identity: d2D fold
     * per centroid, (dd, cluster)-lexicographic min). The Lloyd assignment
     * evaluated the lambda interpreted with one struct allocation per
     * centroid per row per round — at auto-k that is ~n²/256 allocations.
     */
-  val bestCellExpr: String = "graft_best_cell(e, cents)"
+  def bestCell(e: Column, cents: Column): Column = call("graft_best_cell", e, cents)
 
   /** Deterministic farthest-point seeding — the k-means++ shape with D²
     * SAMPLING replaced by argmax (the classic k-center greedy, a provable
@@ -484,7 +473,7 @@ object Similarity {
   private def farthestPointSeeds(e0: DataFrame, k: Int): DataFrame = {
     val c0 = e0.orderBy("vec_id").limit(1).select(col("e").as("c0"))
     val chosen = (1 until k).foldLeft(c0) { (prev, j) =>
-      val dists = (0 until j).map(i => expr(s"graft_l2(e, c$i)"))
+      val dists = (0 until j).map(i => call("graft_l2", col("e"), col(s"c$i")))
       val md = if (dists.size == 1) dists.head else least(dists: _*)
       e0.crossJoin(broadcast(prev))
         .withColumn("md", md)
@@ -649,7 +638,6 @@ object Similarity {
     */
   private[graft] def parallelSeedsWith(e0: DataFrame, k: Int,
       recursed: Boolean): DataFrame = {
-    graft.functions.GraftFunctions.register(e0.sparkSession)
     val ell = (ParSeed.OversampleX * k).toDouble
     // c0 = the lowest vec_id's vector — the same deterministic anchor
     // farthest-point uses (Bahmani picks it uniformly; any fixed choice
@@ -669,7 +657,7 @@ object Similarity {
       val centsArr = prev.agg(collect_list(struct(lit(0).as("cluster"),
         col("ce").as("cvec"))).as("cents"))
       val scored = e0.crossJoin(broadcast(centsArr))
-        .withColumn("dd", expr(s"$bestCellExpr.dd"))
+        .withColumn("dd", bestCell(col("e"), col("cents")).getField("dd"))
       val phi = scored.agg((sum(expr(
         "CAST(floor(dd * 67108864.0) AS BIGINT)")).cast("double")
         / 67108864.0).as("phi"))
@@ -696,7 +684,7 @@ object Similarity {
       "named_struct('cluster', rn, 'cvec', ce)))").as("cents"))
     // weight(c) = |{x : c = argmin_(dd, id) d²(x, C)}| — one corpus pass.
     val weights = e0.crossJoin(broadcast(rArr))
-      .select(expr(s"$bestCellExpr.c").as("rn"))
+      .select(bestCell(col("e"), col("cents")).getField("c").as("rn"))
       .groupBy("rn").agg(count(lit(1)).as("w"))
     // --- Bahmani step 3: re-cluster the candidate set down to k centers.
     // Two implementations of the recluster, routed on k (ONE rule, mirrored
@@ -884,7 +872,7 @@ object Similarity {
     def assignW(cents: DataFrame): DataFrame = swt
       .crossJoin(broadcast(cents))
       .select(col("rn"), col("ce"), col("w"),
-        expr("graft_best_cell(ce, cents).c").as("cl"))
+        bestCell(col("ce"), col("cents")).getField("c").as("cl"))
     // Round 0's "recompute" is the seed selection itself (each seed is its
     // own 1-candidate cluster mean = itself — but expressed as the literal
     // seed vectors, matching the local path's seed-then-assign order).
@@ -930,7 +918,7 @@ object Similarity {
         col("cluster").as("q_cell"))
     assigned.join(broadcast(q),
         col("cluster") === col("q_cell") && col("vec_id") =!= col("q_id"))
-      .withColumn("cos_sim", expr("graft_cos(e, qe)"))
+      .withColumn("cos_sim", call("graft_cos", col("e"), col("qe")))
       .select("vec_id", "cluster", "cos_sim")
       .orderBy(col("cos_sim").desc, col("vec_id"))
       .limit(kTop)
@@ -983,7 +971,6 @@ object Similarity {
   def knnIvfLearnedProbe(emb: DataFrame, kDefault: Int = 8, iters: Int = 2,
       nprobe: Int = 2, kTop: Int = 10, pp: Boolean = false,
       mode: Option[SeedMode] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val k = graft.ext.Dedup.resolveCells(emb, kDefault)
     // Same retained checkpoint as x12/d17 (memoized by canonicalized
     // plan): train once, serve at any nprobe.
@@ -992,20 +979,20 @@ object Similarity {
         mode.getOrElse(SeedMode.fromPp(pp, k)))
         .select(col("vec_id"), col("e"), col("cluster")))
     val crows = assigned
-      .agg(expr(s"graft_centroids(cluster, e, $k)").as("cents"))
+      .agg(call("graft_centroids", col("cluster"), col("e"), lit(k)).as("cents"))
       .select(explode(col("cents")).as("ct"))
       .select(col("ct.cluster").as("pcell"), col("ct.cvec").as("cvec"))
     val q = assigned.orderBy("vec_id").limit(1)
       .select(col("vec_id").as("q_id"), col("e").as("qe"))
     val probed = crows.crossJoin(broadcast(q))
-      .withColumn("dq", expr("graft_l2(cvec, qe)"))
+      .withColumn("dq", call("graft_l2", col("cvec"), col("qe")))
       .orderBy(col("dq"), col("pcell")).limit(nprobe)
       .select(col("pcell"), col("q_id"), col("qe"))
     // nprobe rows broadcast; each corpus row matches at most one (cells
     // are distinct), so the join fans nothing out.
     assigned.join(broadcast(probed),
         col("cluster") === col("pcell") && col("vec_id") =!= col("q_id"))
-      .withColumn("cos_sim", expr("graft_cos(e, qe)"))
+      .withColumn("cos_sim", call("graft_cos", col("e"), col("qe")))
       .select("vec_id", "cluster", "cos_sim")
       .orderBy(col("cos_sim").desc, col("vec_id"))
       .limit(kTop)
@@ -1054,12 +1041,12 @@ object Similarity {
     */
   def twoLevelCells(emb: DataFrame, k1Default: Int = 8, k2: Int = 8,
       iters: Int = 2): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val k1 = graft.ext.Dedup.resolveCells(emb, k1Default)
     val a1 = graft.util.Caches.retainCheckpointed(
       kmeansAssign(emb, k1, iters)
         .select(col("vec_id"), col("e"), col("cluster")))
-    val c1rows = a1.agg(expr(s"graft_centroids(cluster, e, $k1)").as("cents"))
+    val c1rows =
+      a1.agg(call("graft_centroids", col("cluster"), col("e"), lit(k1)).as("cents"))
       .select(explode(col("cents")).as("ct"))
       .select(col("ct.cluster").as("rc"), col("ct.cvec").as("cv1"))
     val resid = a1.join(broadcast(c1rows), col("cluster") === col("rc"))
@@ -1099,7 +1086,7 @@ object Similarity {
     cells.join(broadcast(q),
         col("c1") === col("qc1") && col("c2") === col("qc2") &&
           col("vec_id") =!= col("q_id"))
-      .withColumn("cos_sim", expr("graft_cos(e, qe)"))
+      .withColumn("cos_sim", call("graft_cos", col("e"), col("qe")))
       .select("vec_id", "c1", "c2", "cos_sim")
       .orderBy(col("cos_sim").desc, col("vec_id"))
       .limit(kTop)
@@ -1143,7 +1130,6 @@ object Similarity {
     */
   def knnIvfTwoLevelProbe(emb: DataFrame, k1Default: Int = 8, k2: Int = 8,
       iters: Int = 2, p1: Int = 2, p2: Int = 2, kTop: Int = 10): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val k1 = graft.ext.Dedup.resolveCells(emb, k1Default)
     val cells = twoLevelCells(emb, k1Default, k2, iters)
     val q = cells.orderBy("vec_id").limit(1)
@@ -1151,25 +1137,26 @@ object Similarity {
     // Level-1 serving centroids from the cached cells relation — the same
     // (c1, e) multiset the level-1 assignment holds, so this is the x14
     // serving artifact without re-reading the corpus.
-    val cv1 = cells.agg(expr(s"graft_centroids(c1, e, $k1)").as("cents"))
+    val cv1 =
+      cells.agg(call("graft_centroids", col("c1"), col("e"), lit(k1)).as("cents"))
       .select(explode(col("cents")).as("ct"))
       .select(col("ct.cluster").as("rc1"), col("ct.cvec").as("cv1"))
     // Level-2 (residual-space) serving centroids: residuals recomputed
     // against cv1 exactly as training did, then one mergeable pass.
     val cv2 = cells.join(broadcast(cv1), col("c1") === col("rc1"))
       .select(col("c2"), expr("zip_with(e, cv1, (x, y) -> x - y)").as("r"))
-      .agg(expr(s"graft_centroids(c2, r, $k2)").as("cents"))
+      .agg(call("graft_centroids", col("c2"), col("r"), lit(k2)).as("cents"))
       .select(explode(col("cents")).as("ct"))
       .select(col("ct.cluster").as("rc2"), col("ct.cvec").as("cv2"))
     val coarse = cv1.crossJoin(broadcast(q))
-      .withColumn("dq1", expr("graft_l2(cv1, qe)"))
+      .withColumn("dq1", call("graft_l2", col("cv1"), col("qe")))
       .orderBy(col("dq1"), col("rc1")).limit(p1)
       .select(col("rc1").as("pc1"),
         expr("zip_with(qe, cv1, (x, y) -> x - y)").as("rqe"))
     // p1 × k2 rows — broadcast-scale; the per-coarse-cell top-p2 window
     // runs over that tiny relation, never corpus data.
     val fineRanked = coarse.crossJoin(broadcast(cv2))
-      .withColumn("dq2", expr("graft_l2(rqe, cv2)"))
+      .withColumn("dq2", call("graft_l2", col("rqe"), col("cv2")))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("pc1").orderBy(col("dq2"), col("rc2"))
     val pairs = fineRanked
@@ -1180,7 +1167,7 @@ object Similarity {
         col("c1") === col("pc1") && col("c2") === col("pc2"))
       .crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos_sim", expr("graft_cos(e, qe)"))
+      .withColumn("cos_sim", call("graft_cos", col("e"), col("qe")))
       .select("vec_id", "c1", "c2", "cos_sim")
       .orderBy(col("cos_sim").desc, col("vec_id"))
       .limit(kTop)
@@ -1388,7 +1375,6 @@ object Similarity {
     */
   def pqKnn(emb: DataFrame, m: Int = 4, subDim: Int = 16, kcode: Int = 8,
       iters: Int = 2, kTop: Int = 10): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     // retainCheckpointed (see Caches): the codebook row is broadcast into
     // 5 downstream subplans (m LUTs + the encode projection), and each
     // broadcast-exchange job re-ran the m Lloyd chains over the cached
@@ -1402,11 +1388,13 @@ object Similarity {
       val off = s * subDim + 1
       lloydOver(e0.select(col("vec_id"),
           expr(s"slice(e, $off, $subDim)").as("e")), kcode, iters, pp = false)
-        .agg(expr(s"graft_centroids(cluster, e, $kcode)").as(s"cents$s"))
+        .agg(call("graft_centroids", col("cluster"), col("e"), lit(kcode))
+          .as(s"cents$s"))
     }.reduce(_.crossJoin(_)))
     // round 13: compiled encode kernel (VecOps.codeD) — same argmin/
     // tie-break as the slice+HOF form, zero per-codeword allocations
-    def code(s: Int) = s"graft_code(e, cents$s, ${s * subDim}, $subDim)"
+    def code(s: Int) =
+      call("graft_code", col("e"), col(s"cents$s"), lit(s * subDim), lit(subDim))
     // The m query-side LUTs are tiny DataFrames (kcode rows each) joined
     // back by codeword id: broadcast hash joins stay inside whole-stage
     // codegen, where the per-row filter()/element_at() lambda form was
@@ -1416,13 +1404,13 @@ object Similarity {
       cbAll.crossJoin(q)
         .select(explode(col(s"cents$s")).as("ct"), col("qe"))
         .select(col("ct.cluster").as(s"c$s"),
-          expr(s"graft_l2(slice(qe, $off, $subDim), ct.cvec)").as(s"dd$s"))
+          call("graft_l2", slice(col("qe"), off, subDim), col("ct.cvec")).as(s"dd$s"))
     }
     val withCodes = e0.crossJoin(broadcast(cbAll))
       .crossJoin(broadcast(q.select(col("q_id"))))
       .filter(col("vec_id") =!= col("q_id"))
       .select(Seq(col("vec_id")) ++
-        (0 until m).map(s => expr(code(s)).as(s"code_$s")): _*)
+        (0 until m).map(s => code(s).as(s"code_$s")): _*)
     val scored = luts.zipWithIndex.foldLeft(withCodes) {
       case (acc, (l, s)) =>
         acc.join(broadcast(l), col(s"code_$s") === col(s"c$s"))
@@ -1433,7 +1421,7 @@ object Similarity {
       .orderBy(col("adc"), col("vec_id")).limit(kTop)
     val exact = e0.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("d2", expr("graft_l2(e, qe)"))
+      .withColumn("d2", call("graft_l2", col("e"), col("qe")))
       .orderBy(col("d2"), col("vec_id")).limit(kTop)
       .select(col("vec_id").as("evid"))
     top.join(broadcast(exact), col("vec_id") === col("evid"), "left_outer")
@@ -1548,7 +1536,6 @@ object Similarity {
   private[graft] def ivfPqIndex(emb: DataFrame, k1Default: Int, m: Int,
       subDim: Int, kcode: Int, iters: Int, pp: Boolean)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val k1 = graft.ext.Dedup.resolveCells(emb, k1Default)
     // retainCheckpointed, not retain: the probe path fans this relation
     // into ~10 broadcast subplans per arm, and each broadcast-exchange job
@@ -1560,7 +1547,7 @@ object Similarity {
       kmeansAssignSeeded(emb, k1, iters, pp)
         .select(col("vec_id"), col("e"), col("cluster")))
     val cv1 = graft.util.Caches.retainCheckpointed(
-      a1.agg(expr(s"graft_centroids(cluster, e, $k1)").as("cents"))
+      a1.agg(call("graft_centroids", col("cluster"), col("e"), lit(k1)).as("cents"))
         .select(explode(col("cents")).as("ct"))
         .select(col("ct.cluster").as("rc1"), col("ct.cvec").as("cv1")))
     val resid = graft.util.Caches.retainCheckpointed(
@@ -1571,7 +1558,8 @@ object Similarity {
       val off = s * subDim + 1
       lloydOver(resid.select(col("vec_id"),
           expr(s"slice(r, $off, $subDim)").as("e")), kcode, iters, pp = false)
-        .agg(expr(s"graft_centroids(cluster, e, $kcode)").as(s"cents$s"))
+        .agg(call("graft_centroids", col("cluster"), col("e"), lit(kcode))
+          .as(s"cents$s"))
     }.reduce(_.crossJoin(_)))
     (a1, cv1, resid, cbAll)
   }
@@ -1589,10 +1577,9 @@ object Similarity {
     * same (dd, cluster) argmin tie-break — VecOps.adcTermD), pinned by the
     * unchanged oracle hashes across the whole IVF-PQ family.
     */
-  private[graft] def adcTermExpr(s: Int, subDim: Int): String = {
-    val off = s * subDim
-    s"graft_adc_term(r, rqe, cents$s, $off, $subDim)"
-  }
+  private[graft] def adcTerm(s: Int, subDim: Int): Column =
+    call("graft_adc_term", col("r"), col("rqe"), col(s"cents$s"), lit(s * subDim),
+      lit(subDim))
 
   /** s31's serving contract: ONE definition of the four constants the
     * engine query, the streaming shortlist processor, and the hand-written
@@ -1632,13 +1619,12 @@ object Similarity {
   private[graft] def ivfPqQueryProbes(a1: DataFrame, cv1: DataFrame,
       nQueries: Int = Serve.NQueries,
       nprobe: Int = Serve.NProbe): (DataFrame, DataFrame) = {
-    graft.functions.GraftFunctions.register(a1.sparkSession)
     val qset = a1.orderBy("vec_id").limit(nQueries)
       .select(col("vec_id").as("q_id"), col("e").as("qe"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("q_id").orderBy(col("dq"), col("rc1"))
     val probes = qset.crossJoin(broadcast(cv1))
-      .withColumn("dq", expr("graft_l2(cv1, qe)"))
+      .withColumn("dq", call("graft_l2", col("cv1"), col("qe")))
       .withColumn("rn", row_number().over(w)).filter(col("rn") <= nprobe)
       .select(col("q_id"), col("rc1").as("pcell"),
         expr("zip_with(qe, cv1, (x, y) -> x - y)").as("rqe"))
@@ -1662,11 +1648,10 @@ object Similarity {
       m: Int, subDim: Int, nprobe: Int, kTop: Int)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val (a1, cv1, resid, cbAll) = parts
-    graft.functions.GraftFunctions.register(a1.sparkSession)
     val q = a1.orderBy("vec_id").limit(1)
       .select(col("vec_id").as("q_id"), col("e").as("qe"))
     val probed = cv1.crossJoin(broadcast(q))
-      .withColumn("dq", expr("graft_l2(cv1, qe)"))
+      .withColumn("dq", call("graft_l2", col("cv1"), col("qe")))
       .orderBy(col("dq"), col("rc1")).limit(nprobe)
       .select(col("rc1").as("pcell"), col("cv1").as("pcv"), col("qe"))
     // Multi-probe must re-residualize the query per probed cell — the
@@ -1683,7 +1668,7 @@ object Similarity {
     // broadcast-exchange jobs per arm at a ~0.5 s/job driver floor. At
     // 100 TB with STORED codes (no `r` in hand) the LUT-join form is the
     // right scan — x18 keeps that shape on the declared surface.
-    val adc = (0 until m).map(s => expr(adcTermExpr(s, subDim))).reduce(_ + _)
+    val adc = (0 until m).map(s => adcTerm(s, subDim)).reduce(_ + _)
     val scored = resid
       .join(broadcast(rq), col("c1") === col("pcell"))
       .crossJoin(broadcast(q.select("q_id")))
@@ -1692,7 +1677,7 @@ object Similarity {
       .select(col("vec_id"), col("c1"), adc.as("adc"))
     val exact = a1.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("d2", expr("graft_l2(e, qe)"))
+      .withColumn("d2", call("graft_l2", col("e"), col("qe")))
       .orderBy(col("d2"), col("vec_id")).limit(kTop)
       .select(col("vec_id").as("evid"))
     (scored, a1, q, exact)
@@ -1741,7 +1726,7 @@ object Similarity {
     // the "resolve row-ids against the vector store" point-read stand-in.
     a1.join(broadcast(shortlist), "vec_id")
       .crossJoin(broadcast(q))
-      .withColumn("d2", expr("graft_l2(e, qe)"))
+      .withColumn("d2", call("graft_l2", col("e"), col("qe")))
       .select("vec_id", "c1", "d2")
       .orderBy(col("d2"), col("vec_id")).limit(kTop)
       .join(broadcast(exact), col("vec_id") === col("evid"), "left_outer")
@@ -1776,7 +1761,6 @@ object Similarity {
     * map-side pass over the delta, the index table gains a partition.
     */
   def ivfPqDeltaServe(emb: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val serve = Serve
     val base = emb.filter(pmod(col("vec_id"), lit(5)) =!= 0)
     val delta = emb.filter(pmod(col("vec_id"), lit(5)) === 0)
@@ -1788,7 +1772,7 @@ object Similarity {
       .select(col("vec_id"),
         expr("transform(embedding, ex -> CAST(ex AS DOUBLE))").as("e"))
       .crossJoin(broadcast(assignCents))
-      .withColumn("cluster", expr(s"$bestCellExpr.c"))
+      .withColumn("cluster", bestCell(col("e"), col("cents")).getField("c"))
       .select("vec_id", "e", "cluster")
     val deltaResid = deltaAssigned
       .join(broadcast(cv1), col("cluster") === col("rc1"))
@@ -2060,7 +2044,6 @@ object Similarity {
     // per-arm form re-ran the whole probe/encode/score pipeline three
     // times (and the oracle still does — its per-arm blocks were already
     // the honest cost accounting).
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val (a1, cv1, resid, cbAll) =
       ivfPqIndex(emb, Serve.K1Default, m, subDim, kcode, Serve.Iters, pp)
     val q = a1.orderBy("vec_id").limit(1)
@@ -2069,12 +2052,12 @@ object Similarity {
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("dq"), col("rc1"))
     val rq = cv1.crossJoin(broadcast(q))
-      .withColumn("dq", expr("graft_l2(cv1, qe)"))
+      .withColumn("dq", call("graft_l2", col("cv1"), col("qe")))
       .withColumn("prn", row_number().over(w))
       .filter(col("prn") <= npMax)
       .select(col("rc1").as("pcell"), col("prn"),
         expr("zip_with(qe, cv1, (x, y) -> x - y)").as("rqe"))
-    val adc = (0 until m).map(s => expr(adcTermExpr(s, subDim))).reduce(_ + _)
+    val adc = (0 until m).map(s => adcTerm(s, subDim)).reduce(_ + _)
     val scored = graft.util.Caches.retainCheckpointed(resid
       .join(broadcast(rq), col("c1") === col("pcell"))
       .crossJoin(broadcast(q.select("q_id")))
@@ -2083,7 +2066,7 @@ object Similarity {
       .select(col("vec_id"), col("prn"), adc.as("adc")))
     val exact = a1.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("d2", expr("graft_l2(e, qe)"))
+      .withColumn("d2", call("graft_l2", col("e"), col("qe")))
       .orderBy(col("d2"), col("vec_id")).limit(kTop)
       .select(col("vec_id").as("evid"))
     def arm(np: Int): DataFrame =
@@ -2204,13 +2187,12 @@ object Similarity {
     */
   def filteredKnn(emb: DataFrame, kDefault: Int = 8, iters: Int = 2,
       nprobe: Int = 2, target: Int = 3, kTop: Int = 10): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val q = emb.orderBy("vec_id").limit(1)
       .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
     val pre = emb.filter(col("label") === target)
       .crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos_sim", expr("graft_cos(embedding, qe)"))
+      .withColumn("cos_sim", call("graft_cos", col("embedding"), col("qe")))
       .select("vec_id", "label", "cos_sim")
       .orderBy(col("cos_sim").desc, col("vec_id")).limit(kTop)
     val post = knnIvfLearnedProbe(emb, kDefault, iters, nprobe, kTop)
@@ -2266,7 +2248,7 @@ object Similarity {
     * the batch cell — s30's pinned contract), pruned to the query's nprobe
     * probed cells by a broadcast join BEFORE any scoring, residualized
     * against the broadcast serving centroid, encode+ADC-scored inline
-    * ([[adcTermExpr]] — identical values to the stored-codes LUT join the
+    * ([[adcTerm]] — identical values to the stored-codes LUT join the
     * oracle runs), shortlisted by (adc, vec_id), and the ≤ shortK
     * survivors re-ranked exactly. With STORED label-bearing codes the same
     * plan is a codes-table scan with cell partition-pruning + the label
@@ -2284,7 +2266,6 @@ object Similarity {
       subDim: Int, kcode: Int, iters: Int, nprobe: Int,
       pred: org.apache.spark.sql.Column,
       kTop: Int, pp: Boolean): (DataFrame, DataFrame, DataFrame) = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val (a1, cv1, _, cbAll) =
       ivfPqIndex(emb, k1Default, m, subDim, kcode, iters, pp)
     val q = a1.orderBy("vec_id").limit(1)
@@ -2292,19 +2273,19 @@ object Similarity {
     // probed cells + per-cell serving centroid + query residual (x23's
     // probe, keeping pcv so survivors residualize against their own cell)
     val rq = cv1.crossJoin(broadcast(q))
-      .withColumn("dq", expr("graft_l2(cv1, qe)"))
+      .withColumn("dq", call("graft_l2", col("cv1"), col("qe")))
       .orderBy(col("dq"), col("rc1")).limit(nprobe)
       .select(col("rc1").as("pcell"), col("cv1").as("pcv"),
         expr("zip_with(qe, cv1, (x, y) -> x - y)").as("rqe"))
     val assignCents = kmeansTrainedCentroids(emb, k1Default, iters, pp)
-    val adc = (0 until m).map(s => expr(adcTermExpr(s, subDim))).reduce(_ + _)
+    val adc = (0 until m).map(s => adcTerm(s, subDim)).reduce(_ + _)
     // THE FILTERED SERVING SCAN: predicate at the source scan, cell prune
     // before scoring, everything else broadcast-sized.
     val scored = emb.filter(pred)
       .select(col("vec_id"), col("label"),
         expr("transform(embedding, ex -> CAST(ex AS DOUBLE))").as("e"))
       .crossJoin(broadcast(assignCents))
-      .withColumn("best", expr(bestCellExpr))
+      .withColumn("best", bestCell(col("e"), col("cents")))
       .select(col("vec_id"), col("label"), col("e"), col("best.c").as("c1"))
       .join(broadcast(rq), col("c1") === col("pcell"))
       .crossJoin(broadcast(q.select("q_id")))
@@ -2320,7 +2301,7 @@ object Similarity {
         expr("transform(embedding, ex -> CAST(ex AS DOUBLE))").as("e"))
       .crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("d2x", expr("graft_l2(e, qe)"))
+      .withColumn("d2x", call("graft_l2", col("e"), col("qe")))
       .orderBy(col("d2x"), col("vec_id")).limit(kTop)
       .select(col("vec_id").as("evid"))
     (scored, q, fexact)
@@ -2334,7 +2315,7 @@ object Similarity {
       fexact: DataFrame, shortK: Int, kTop: Int): DataFrame =
     scored.orderBy(col("adc"), col("vec_id")).limit(shortK)
       .crossJoin(broadcast(q))
-      .withColumn("d2", expr("graft_l2(e, qe)"))
+      .withColumn("d2", call("graft_l2", col("e"), col("qe")))
       .select("vec_id", "label", "c1", "d2")
       .orderBy(col("d2"), col("vec_id")).limit(kTop)
       .join(broadcast(fexact), col("vec_id") === col("evid"), "left_outer")
@@ -2543,7 +2524,6 @@ object Similarity {
   def ivfRecallSampled(emb: DataFrame, kTop: Int = 10, nq: Int = 8,
       mode: SeedMode = SeedMode.Parallel,
       nprobes: Seq[Int] = Seq(1, 2)): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val k = graft.ext.Dedup.resolveCells(emb, 8)
     val assigned = graft.util.Caches.retainCheckpointed(
       kmeansAssignMode(emb, k, 2, mode)
@@ -2559,7 +2539,7 @@ object Similarity {
         .select("q_id", "vec_id")
     val exact = topk(assigned.crossJoin(broadcast(qs))
       .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cs", expr("graft_cos(e, qe)"))
+      .withColumn("cs", call("graft_cos", col("e"), col("qe")))
       .select("q_id", "vec_id", "cs"))
     // probe ranking is UNIFORM across the nprobe axis (top-n serving
     // centroids by (d², cell) per query — cvF in the oracle), so probed
@@ -2567,11 +2547,11 @@ object Similarity {
     // construction. |Q|·k scored cell rows, ranked through the same
     // TopKPerKey operator the arms use — no window anywhere in the plan.
     val scoredCells = assigned
-      .agg(expr(s"graft_centroids(cluster, e, $k)").as("cents"))
+      .agg(call("graft_centroids", col("cluster"), col("e"), lit(k)).as("cents"))
       .select(explode(col("cents")).as("ct"))
       .select(col("ct.cluster").as("pcell"), col("ct.cvec").as("cvec"))
       .crossJoin(broadcast(qs))
-      .withColumn("dq", expr("graft_l2(cvec, qe)"))
+      .withColumn("dq", call("graft_l2", col("cvec"), col("qe")))
       .select("q_id", "pcell", "dq")
     def arm(np: Int): DataFrame = {
       val probe = graft.plans.TopKPerKey(scoredCells, keys = Seq("q_id"),
@@ -2580,7 +2560,7 @@ object Similarity {
         .join(qs, Seq("q_id")) // re-attach qe: tiny × tiny
       val approx = topk(assigned.join(broadcast(probe),
           col("cluster") === col("pcell") && col("vec_id") =!= col("q_id"))
-        .withColumn("cs", expr("graft_cos(e, qe)"))
+        .withColumn("cs", call("graft_cos", col("e"), col("qe")))
         .select("q_id", "vec_id", "cs"))
       val hits = exact.join(approx, Seq("q_id", "vec_id"), "left_semi")
         .groupBy("q_id").agg(count(lit(1)).as("n_overlap"))
@@ -2962,11 +2942,9 @@ object Similarity {
   /** Per-bucket occupancy histogram — the planning stat an ANN index needs
     * (bucket skew decides whether the prune is worth it).
     */
-  def bucketHistogram(emb: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
-    emb.withColumn("bucket", expr("graft_lsh_bucket(embedding)"))
+  def bucketHistogram(emb: DataFrame): DataFrame =
+    emb.withColumn("bucket", call("graft_lsh_bucket", col("embedding")))
       .groupBy("bucket").agg(count(lit(1)).as("n_vecs"))
-  }
 
   def bucketHistogramSql: String =
     s"""SELECT ${duckBucket("embedding")} AS bucket,
@@ -3082,13 +3060,12 @@ object SimilarityQueries {
     // scored cross product a window-rank plan would ship.
     Q("x07_knn_join",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val emb = Tables.embeddings(s, d)
         val q = emb.orderBy("vec_id").limit(8)
           .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
         val scored = emb.crossJoin(broadcast(q))
           .filter(col("vec_id") =!= col("q_id"))
-          .withColumn("cos_sim", expr("graft_cos(embedding, qe)"))
+          .withColumn("cos_sim", call("graft_cos", col("embedding"), col("qe")))
           .select("q_id", "vec_id", "label", "cos_sim")
         graft.plans.TopKPerKey(scored, keys = Seq("q_id"),
           orderBy = Seq(("cos_sim", false), ("vec_id", true)), k = 5)
@@ -3116,13 +3093,12 @@ object SimilarityQueries {
     // engines.
     Q("x08_maxsim",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val emb = Tables.embeddings(s, d)
         val qv = emb.filter(col("label") === 0).orderBy("vec_id").limit(4)
           .select(col("vec_id").as("q_vec"), col("embedding").as("qe"))
         emb.filter(col("label") =!= 0)
           .crossJoin(broadcast(qv))
-          .withColumn("cos_sim", expr("graft_cos(embedding, qe)"))
+          .withColumn("cos_sim", call("graft_cos", col("embedding"), col("qe")))
           .groupBy("label", "q_vec").agg(max("cos_sim").as("mx"))
           .groupBy("label")
           .agg((sum(floor(col("mx") * lit(4294967296L)).cast("long"))
@@ -3159,9 +3135,8 @@ object SimilarityQueries {
     // slower on the sf1 corpus).
     Q("x09_quantized_knn",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val coded = Tables.embeddings(s, d)
-          .withColumn("code", expr("graft_q127(embedding)"))
+          .withColumn("code", call("graft_q127", col("embedding")))
           .filter(col("code").isNotNull)
         val q = coded.orderBy("vec_id").limit(1)
           .select(col("vec_id").as("q_id"), col("code").as("qc"))
@@ -3169,7 +3144,7 @@ object SimilarityQueries {
           .select(col("vec_id").as("evid"))
         val top = coded.crossJoin(broadcast(q))
           .filter(col("vec_id") =!= col("q_id"))
-          .withColumn("qdot", expr("graft_doti(code, qc)"))
+          .withColumn("qdot", call("graft_doti", col("code"), col("qc")))
           .select("vec_id", "label", "qdot")
           .orderBy(col("qdot").desc, col("vec_id")).limit(10)
         top.join(broadcast(exact), col("vec_id") === col("evid"),
@@ -3213,19 +3188,18 @@ object SimilarityQueries {
     // column measures.
     Q("x10_two_stage_knn",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val coded = Tables.embeddings(s, d)
-          .withColumn("code", expr("graft_q127(embedding)"))
+          .withColumn("code", call("graft_q127", col("embedding")))
           .filter(col("code").isNotNull)
         val q = coded.orderBy("vec_id").limit(1)
           .select(col("vec_id").as("q_id"), col("code").as("qc"),
             col("embedding").as("qe"))
         val shortlist = coded.crossJoin(broadcast(q))
           .filter(col("vec_id") =!= col("q_id"))
-          .withColumn("qdot", expr("graft_doti(code, qc)"))
+          .withColumn("qdot", call("graft_doti", col("code"), col("qc")))
           .orderBy(col("qdot").desc, col("vec_id")).limit(50)
         shortlist
-          .withColumn("cos_sim", expr("graft_cos(embedding, qe)"))
+          .withColumn("cos_sim", call("graft_cos", col("embedding"), col("qe")))
           .select("vec_id", "label", "cos_sim")
           .orderBy(col("cos_sim").desc, col("vec_id")).limit(10)
       },

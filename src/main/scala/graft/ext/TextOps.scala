@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions.call
 import graft.queries.Q
 import graft.sources.Tables
 
@@ -227,7 +228,6 @@ object TextOps {
       s"keep entry '$k' must be a plain column identifier (it is spliced " +
         "into generated SQL verbatim)"))
     val s = docs.sparkSession
-    graft.functions.GraftFunctions.register(s)
     // Round 20 (verdict r19 item 2 — the language-id scale law): the
     // per-language profile rows merge into ONE broadcastable row of
     // per-WIDTH pre-packed gram tables — (w, packed sorted bigints,
@@ -245,7 +245,7 @@ object TextOps {
     val profRow = s.read.parquet(langProfileArtifact(s))
       .select(col("tie_rank"), explode(col("grams")).as("g"))
       .select(col("tie_rank"), octet_length(col("g")).as("w"),
-        expr("graft_pack_gram(g)").as("pg"))
+        call("graft_pack_gram", col("g")).as("pg"))
       .groupBy(col("w"))
       .agg(expr("array_sort(collect_list(struct(pg, tie_rank)))").as("pt"))
       .agg(collect_list(struct(col("w"),
@@ -254,7 +254,7 @@ object TextOps {
     val langs = LangProfiles.map(_._1)
     val scored = docs.crossJoin(broadcast(profRow))
       .withColumn("sc",
-        expr(s"graft_gram_hits_all(text, profs, ${langs.length})"))
+        call("graft_gram_hits_all", col("text"), col("profs"), lit(langs.length)))
       .select((col("doc_id") +: keep.map(col)) ++
         langs.zipWithIndex.map { case (lang, i) =>
           element_at(col("sc"), i + 1).as(s"s_$lang")
@@ -368,7 +368,7 @@ object TextOps {
     * factored out so the in-session trainer ([[bpeRounds]]) and the
     * frozen-artifact encoder ([[bpeEncodeFrom]], p14/s37) share one body.
     */
-  private def applyMerge(corpus: DataFrame, winner: DataFrame): DataFrame = {
+  private def applyMerge(corpus: DataFrame, winner: DataFrame): DataFrame =
     // Round 21 (guide §1.2 per-task work): the padded-replace chain
     // (array_join → ~1 KB string → replace scan → trim → re-split) ran
     // PER ROW PER ROUND across s37/p14/p15/t22/t23; graft_bpe_merge is
@@ -376,11 +376,9 @@ object TextOps {
     // (unmerged tokens pass through by reference). Equivalence to the
     // replace form is a TextHashSpec property test; empty winner tokens
     // refuse loudly (the padded pattern would degenerate).
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     corpus.crossJoin(broadcast(winner))
-      .withColumn("toks", expr("graft_bpe_merge(toks, a, b)"))
+      .withColumn("toks", call("graft_bpe_merge", col("toks"), col("a"), col("b")))
       .drop("a", "b", "n_pair", "round")
-  }
 
   /** Engine-side merge loop shared by t22/t23 (the exact twin of
     * [[bpeCtes]]): `corpus0` must carry a `toks` array column; extra
@@ -569,7 +567,7 @@ object TextOps {
           val total = docs
             .agg(sum(octet_length(col("text"))).cast("long")).head.getLong(0)
           val v = microsForBudget(budget, total)
-          System.err.println(s"[graft] $BpeSampleBytesKey=$b resolved to " +
+          graft.util.Log.info(s"$BpeSampleBytesKey=$b resolved to " +
             s"sampleMicros=$v from corpus text bytes $total")
           v
       }
@@ -581,8 +579,7 @@ object TextOps {
     */
   def bpeSampleCoin(micros: Long = BpeSampleMicros)
       : org.apache.spark.sql.Column =
-    pmod(expr("graft_poly_hash(md5(concat('bpesample|', " +
-      "CAST(doc_id AS STRING))))"), lit(1000000L)) < lit(micros)
+    pmod(PortableHash.saltedDocHash("bpesample"), lit(1000000L)) < lit(micros)
 
   def bpeSampleCoinSql(micros: Long = BpeSampleMicros): String =
     graft.ext.PortableHash.duckPoly(
@@ -623,10 +620,9 @@ object TextOps {
     // string per row — collapse into ONE compiled byte scan
     // (graft_lang_scores; counts are exact, so the always-integer double
     // division they replace is reproduced bit-for-bit).
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val langs = langMarkers.map(_._1)
     val scored = docs
-      .withColumn("_ls", expr("graft_lang_scores(text)"))
+      .withColumn("_ls", call("graft_lang_scores", col("text")))
       .select(col("*") +: langs.map(l =>
         col(s"_ls.s_$l").as(s"s_$l")): _*)
       .drop("_ls")
@@ -658,7 +654,6 @@ object TextOps {
     * portable whitespace-count form (split-free).
     */
   def quality(docs: DataFrame, keep: Seq[String] = Nil): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // graft_quality_stats counts spaces, punctuation, and stopword markers
     // (TextHash.qualityStops) in ONE byte scan — the 6 allocating string
     // passes it replaces (2 regex char-deletions + 4 replace-count folds)
@@ -669,7 +664,7 @@ object TextOps {
     val nPunct  = col("qs.n_punct")
     val nStop   = col("qs.n_stop")
     docs.select(col("doc_id") +: (keep.map(col) :+
-        col("text") :+ expr("graft_quality_stats(text)").as("qs")): _*)
+        col("text") :+ call("graft_quality_stats", col("text")).as("qs")): _*)
       .select(
         (col("doc_id") +: keep.map(col)) ++ Seq(
           nChars.as("n_chars_m"),
@@ -718,7 +713,7 @@ object TextOps {
     */
   val bpeishPattern = "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 ]"
 
-  def tokenCounts(docs: DataFrame): DataFrame = {
+  def tokenCounts(docs: DataFrame): DataFrame =
     // Round 21 (guide §1.2 per-task work — the t05 cost shape, 18.8 s at
     // sf10): ONE compiled byte scan (graft_bpeish_stats) replaces the
     // regexp_extract_all match array (Java String conversion + one
@@ -727,14 +722,12 @@ object TextOps {
     // semantics are the regex's exactly (greedy letter/digit runs, one
     // codepoint otherwise, spaces skipped); values pinned bit-identical
     // by the unchanged oracle hashes and TextHashSpec's property test.
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
-      .select(col("doc_id"), expr("graft_bpeish_stats(text)").as("b"))
+      .select(col("doc_id"), call("graft_bpeish_stats", col("text")).as("b"))
       .select(col("doc_id"),
         col("b.n_bpeish").as("n_bpeish"),
         col("b.n_uniq_bpeish").as("n_uniq_bpeish"),
         col("b.n_ws_tokens").as("n_ws_tokens"))
-  }
 
   val tokenCountsSql: String =
     s"""SELECT doc_id,
@@ -758,15 +751,13 @@ object TextOps {
     * per row (size / distinct-size / sorted-join) — 1.9× the oracle at
     * sf0.1, now at parity.
     */
-  def edgeNgrams(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
+  def edgeNgrams(docs: DataFrame): DataFrame =
     docs
-      .select(col("doc_id"), expr("graft_edge_ngrams(text)").as("g"))
+      .select(col("doc_id"), call("graft_edge_ngrams", col("text")).as("g"))
       .select(col("doc_id"),
         col("g.n_grams").as("n_grams"),
         col("g.n_uniq_grams").as("n_uniq_grams"),
         col("g.first5_grams").as("first5_grams"))
-  }
 
   val edgeNgramsSql: String =
     s"""SELECT doc_id,
@@ -789,10 +780,9 @@ object TextOps {
     * where the oracle's unnest + group-by form would shuffle one row per
     * TOKEN of the corpus.
     */
-  def repetition(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
+  def repetition(docs: DataFrame): DataFrame =
     docs
-      .select(col("doc_id"), expr("graft_rep_stats(text)").as("r"))
+      .select(col("doc_id"), call("graft_rep_stats", col("text")).as("r"))
       .select(col("doc_id"),
         col("r.n_tokens").as("n_tokens"),
         col("r.n_uniq_tokens").as("n_uniq_tokens"),
@@ -806,7 +796,6 @@ object TextOps {
       .withColumn("top_bigram_ratio",
         when(col("n_tokens") >= 2,
           col("top_bigram_n").cast("double") / (col("n_tokens") - 1)))
-  }
 
   val repetitionSql: String =
     """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t
@@ -853,8 +842,7 @@ object TextOps {
     // Spark's own lower() stays in front so Unicode case mapping is
     // bit-identical to the stock path; the tail patterns are pure ASCII.
     // Shared with d12_dedup_canonical (same normalization).
-    graft.functions.GraftFunctions.register(docs.sparkSession)
-    val norm = expr("graft_norm_text(lower(text))")
+    val norm = call("graft_norm_text", lower(col("text")))
     docs
       .select(col("doc_id"), col("text"), norm.as("n"))
       .select(
@@ -878,10 +866,8 @@ object TextOps {
     * fp = fold(chars, acc -> (acc * 31 + codepoint) mod 1e9+7). Integer
     * arithmetic — exact in both engines. Per-row, no shuffle.
     */
-  def fingerprint(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
-    docs.select(col("doc_id"), expr("graft_poly_hash(text)").as("fp"))
-  }
+  def fingerprint(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), call("graft_poly_hash", col("text")).as("fp"))
 
   /** t09: blocklist scrub — lexicon-based redaction, the shape of a PII /
     * contamination scrub pass in a training-data pipeline (mask every
@@ -901,20 +887,18 @@ object TextOps {
   private def slug(t: String) = t.toLowerCase.replaceAll("[^a-z0-9]+", "_")
   private val blockPat = s"\\b(${blocklist.map(quoted).mkString("|")})\\b"
 
-  def blocklistScrub(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
+  def blocklistScrub(docs: DataFrame): DataFrame =
     // ONE byte scan (graft_block_scrub) produces every column: per-term
     // counts, total hits, and the masked text — the regex form was N+1
     // java.util.regex passes over each document (5.3× the oracle at sf1).
     // The oracle keeps the per-term regexp_extract_all/regexp_replace form;
     // the hash gate pins the equivalence (\b semantics included).
-    docs.select(col("doc_id"), expr("graft_block_scrub(text)").as("bs"))
+    docs.select(col("doc_id"), call("graft_block_scrub", col("text")).as("bs"))
       .select(
         (col("doc_id") +: blocklist.map(t => col(s"bs.n_${slug(t)}"))) ++ Seq(
           col("bs.n_hits").as("n_hits"),
           md5(col("bs.scrub")).as("scrub_h"),
           length(col("bs.scrub")).as("n_scrub_chars")): _*)
-  }
 
   val blocklistScrubSql: String = {
     val perTerm = blocklist.map { t =>
@@ -953,7 +937,6 @@ object TextOps {
     * scores each doc by the corpus frequency of its own trigram buckets.
     */
   def trigramFamiliarity(docs: DataFrame, buckets: Long): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // Round 20 (guide §2.3/§4 — shuffle/probe fewer bytes, codegen the hot
     // path): the gram feed is one compiled graft_gram_buckets pass per row
     // (bucket longs, bit-identical to pmod(graft_poly_hash(gram), m)) —
@@ -961,7 +944,7 @@ object TextOps {
     def tris(df: DataFrame) = df
       .filter(length(col("text")) >= 3)
       .select(col("doc_id"),
-        explode(expr(s"graft_gram_buckets(text, 3, $buckets)")).as("b"))
+        explode(call("graft_gram_buckets", col("text"), lit(3), lit(buckets))).as("b"))
     val model = tris(docs).groupBy("b").agg(count(lit(1)).as("c"))
     if (buckets <= lmBroadcastMaxBuckets) {
       // Broadcastable model (t18's path): merge it into ONE row of sorted
@@ -979,7 +962,8 @@ object TextOps {
       docs.filter(length(col("text")) >= 3)
         .crossJoin(broadcast(modelRow))
         .select(col("doc_id"),
-          expr(s"graft_lm_familiarity(text, 3, $buckets, bs, cs)").as("f"))
+          call("graft_lm_familiarity", col("text"), lit(3), lit(buckets),
+            col("bs"), col("cs")).as("f"))
         // Preserve the inner-join contract exactly (round-20 advice): the
         // old explode→join form DROPPED a doc none of whose grams hit the
         // model. With deterministic input that never happens (the model is
@@ -1041,12 +1025,11 @@ object TextQueries {
     // in as a broadcast scalar.
     Q("t08_doc_freq",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val docs = Tables.documents(s, d)
         val n = docs.agg(count(lit(1)).as("n_docs"))
         // Round 21: fused distinct-token kernel (one pass, no split array
         // + per-row distinct set) — bit-identical element set and order.
-        docs.select(explode(expr("graft_distinct_tokens(text)")).as("tok"))
+        docs.select(explode(call("graft_distinct_tokens", col("text"))).as("tok"))
           .groupBy("tok").agg(count(lit(1)).as("df"))
           .crossJoin(broadcast(n))
           .filter(col("df") * 4 >= col("n_docs"))
@@ -1124,11 +1107,10 @@ object TextQueries {
     // GenerateExec one at a time, never materializing the per-doc window
     // array the equivalent explode(transform(sequence(...))) would build.
     Q("t11_token_windows",
-      (s, d) => {
-        graft.functions.GraftFunctions.register(s)
+      (s, d) =>
         Tables.documents(s, d)
-          .select(col("doc_id"), expr("graft_token_windows(text, 8, 4)"))
-      },
+          .select(col("doc_id"),
+            call("graft_token_windows", col("text"), lit(8), lit(4))),
       Some("""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks
                          FROM documents),
                    st AS (SELECT doc_id, toks,
@@ -1230,16 +1212,16 @@ object TextQueries {
         // the per-doc rebuild exchange was the bulk. Segment order, empty
         // segments and the concat_ws(" ") join are byte-identical (the
         // kernel rebuilds from the same byte slices); oracle unchanged.
-        graft.functions.GraftFunctions.register(s)
         val docs = Tables.documents(s, d)
         val bp = docs
-          .select(explode(expr("graft_passages_distinct(text, 4)")).as("seg"))
+          .select(
+            explode(call("graft_passages_distinct", col("text"), lit(4))).as("seg"))
           .groupBy("seg").agg(count(lit(1)).as("n_docs"))
           .filter(col("n_docs") >= 3)
           .agg(expr("sort_array(collect_list(seg))").as("bps"))
         docs.crossJoin(broadcast(bp))
           .select(col("doc_id"),
-            expr("graft_scrub_passages(text, 4, bps)").as("r"))
+            call("graft_scrub_passages", col("text"), lit(4), col("bps")).as("r"))
           .select(col("doc_id"),
             col("r.clean_text").as("clean_text"),
             col("r.n_removed").as("n_removed"))
@@ -1288,17 +1270,17 @@ object TextQueries {
         // join; the n_toks > 0 filter preserves that contract exactly
         // (never fires on deterministic input — the model is built FROM
         // this corpus).
-        graft.functions.GraftFunctions.register(s)
         val docs = Tables.documents(s, d)
         val tokd = docs
           .select(col("doc_id"),
-            explode(expr("graft_distinct_tokens(text)")).as("tok"))
+            explode(call("graft_distinct_tokens", col("text"))).as("tok"))
         val model = tokd.groupBy("tok").agg(count(lit(1)).as("df"))
           .agg(expr("array_sort(collect_list(struct(tok, df)))").as("t"))
           .select(expr("transform(t, x -> x.tok)").as("ts"),
             expr("transform(t, x -> x.df)").as("ds"))
         docs.crossJoin(broadcast(model))
-          .select(col("doc_id"), expr("graft_tok_df(text, ts, ds)").as("f"))
+          .select(col("doc_id"),
+            call("graft_tok_df", col("text"), col("ts"), col("ds")).as("f"))
           .filter(col("f.n_toks") > 0)
           .select(col("doc_id"), col("f.n_toks").as("n_toks"),
             (col("f.sum_df").cast("double") / col("f.n_toks"))
@@ -1378,7 +1360,6 @@ object TextQueries {
         // (graft_oov_stats), replacing the corpus-scale explode + left
         // join + groupBy(doc_id). The left-join semantics (every doc
         // emits; a vocab miss counts into n_oov) are the kernel's exactly.
-        graft.functions.GraftFunctions.register(s)
         val docs = Tables.documents(s, d)
         val occ = docs
           .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
@@ -1386,7 +1367,7 @@ object TextQueries {
           .orderBy(col("n").desc, col("tok")).limit(20)
           .agg(expr("sort_array(collect_list(tok))").as("vs"))
         docs.crossJoin(broadcast(vocab))
-          .select(col("doc_id"), expr("graft_oov_stats(text, vs)").as("o"))
+          .select(col("doc_id"), call("graft_oov_stats", col("text"), col("vs")).as("o"))
           .select(col("doc_id"),
             col("o.n_tokens").as("n_tokens"), col("o.n_oov").as("n_oov"),
             (col("o.n_oov").cast("double") / col("o.n_tokens"))
@@ -1456,7 +1437,6 @@ object TextQueries {
     // shuffled.
     Q("t19_mixture_sample",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val docs = Tables.documents(s, d)
         val wCase = "CASE WHEN CAST(substring(source, 4) AS INT) < 5 THEN 4 " +
           "WHEN CAST(substring(source, 4) AS INT) < 10 THEN 2 ELSE 1 END"
@@ -1471,7 +1451,7 @@ object TextQueries {
               expr("10000 * (chars_all * w DIV (2 * w_all)) DIV chars_s")))
           .select("source", "rate_bp")
         Tables.spread(docs).join(broadcast(rates), "source")
-          .filter(pmod(expr("graft_poly_hash(concat('mix|', text))"),
+          .filter(pmod(call("graft_poly_hash", concat(lit("mix|"), col("text"))),
             lit(10000L)) < col("rate_bp"))
           .select("doc_id", "source", "n_chars", "rate_bp")
       },

@@ -2,7 +2,7 @@ package graft.functions
 
 import java.lang.reflect.{InvocationTargetException, Method}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, GraftPlanBridge, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -13,6 +13,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.{
   Expression, ExpressionInfo, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
 import org.apache.spark.sql.types._
 
 /** Native Catalyst expressions for the engine's text-hash / vector kernels.
@@ -31,8 +32,11 @@ import org.apache.spark.sql.types._
   * [[GraftFunctions.kernels]] (KernelContractSpec then asks for its
   * contract row). No expression class is needed.
   *
-  * Registered per-session by [[GraftFunctions.register]]; use via
-  * `expr("graft_minhash_sig(text)")` or `call_function`.
+  * Library code calls a kernel through [[GraftFunctions.call]], e.g.
+  * `call("graft_minhash_sig", col("text"))`, which builds the expression
+  * directly and leaves the session's function registry alone. SQL-text
+  * users install [[GraftExtensions]] or call [[GraftFunctions.register]]
+  * once per session.
   */
 
 /** One registry row: the SQL surface of a static kernel.
@@ -269,7 +273,9 @@ case class CharGramsExpr(child: Expression, n: Int)
     copy(child = newChild)
 }
 
-/** Per-session registration of the engine's native functions. */
+/** The engine's native functions: [[GraftFunctions.call]] for library
+  * code, [[GraftFunctions.register]] for SQL text.
+  */
 object GraftFunctions {
   import Kernel.{Const, In, Lit}
 
@@ -384,7 +390,7 @@ object GraftFunctions {
       check = { case Seq(off, len) => require(off >= 0 && len >= 1,
         s"graft_adc_term off=$off len=$len out of range") }),
     // the k-means assignment argmin, the Lloyd hot path (VecOps.bestCellD;
-    // graft.ext.Similarity.bestCellExpr is the one shared SQL spelling)
+    // graft.ext.Similarity.bestCell is the one shared call)
     Kernel("graft_best_cell", "VecOps.bestCellD", Seq(doubles, cents),
       struct("dd" -> DoubleType, "c" -> IntegerType), nullable = true),
     // encode-only subspace argmin (x18's flat-PQ code_s): the cluster id of
@@ -527,12 +533,9 @@ object GraftFunctions {
     * the constraint instead.
     */
   private def intLit(fn: String, arg: String, e: Expression): Int = {
-    def fail(got: String): Nothing =
-      throw new org.apache.spark.sql.AnalysisException(
-        "_LEGACY_ERROR_TEMP_3102", // bare `<msg>` template
-        Map("msg" ->
-          (s"$fn: argument <$arg> must be a foldable INT literal " +
-            s"(plan-time geometry, not per-row data); got $got")))
+    def fail(got: String): Nothing = analysisError(
+      s"$fn: argument <$arg> must be a foldable INT literal " +
+        s"(plan-time geometry, not per-row data); got $got")
     if (!e.foldable) fail(s"non-foldable expression ${e.sql}")
     else if (e.dataType != IntegerType) fail(s"type ${e.dataType.simpleString}")
     else e.eval(null) match {
@@ -548,12 +551,9 @@ object GraftFunctions {
     * range to Int (round-20 advice) — restore the full Long range here.
     */
   private def longLit(fn: String, arg: String, e: Expression): Long = {
-    def fail(got: String): Nothing =
-      throw new org.apache.spark.sql.AnalysisException(
-        "_LEGACY_ERROR_TEMP_3102",
-        Map("msg" ->
-          (s"$fn: argument <$arg> must be a foldable INT or BIGINT literal " +
-            s"(plan-time geometry, not per-row data); got $got")))
+    def fail(got: String): Nothing = analysisError(
+      s"$fn: argument <$arg> must be a foldable INT or BIGINT literal " +
+        s"(plan-time geometry, not per-row data); got $got")
     if (!e.foldable) fail(s"non-foldable expression ${e.sql}")
     else if (e.dataType != IntegerType && e.dataType != LongType)
       fail(s"type ${e.dataType.simpleString}")
@@ -576,12 +576,14 @@ object GraftFunctions {
     val hi = if (maxN < 0) n else maxN
     cs =>
       if (cs.length >= n && cs.length <= hi) b(cs)
-      else throw new org.apache.spark.sql.AnalysisException(
-        "_LEGACY_ERROR_TEMP_3102",
-        Map("msg" -> (s"$fn expects " +
-          (if (hi == n) s"$n argument(s)" else s"$n to $hi arguments") +
-          s", got ${cs.length}")))
+      else analysisError(s"$fn expects " +
+        (if (hi == n) s"$n argument(s)" else s"$n to $hi arguments") +
+        s", got ${cs.length}")
   }
+
+  private def analysisError(msg: String): Nothing =
+    throw new org.apache.spark.sql.AnalysisException(
+      "_LEGACY_ERROR_TEMP_3102", Map("msg" -> msg)) // bare `<msg>` template
 
   /** A registry row's function builder: the SQL arguments become the
     * kernel's children, plan-time literals validated (intLit/longLit, then
@@ -620,7 +622,26 @@ object GraftFunctions {
       intLit("graft_char_grams", "n", cs(1))))
   )
 
-  /** Idempotent: safe to call at the head of every query builder. */
+  private lazy val builders = fns.toMap
+
+  /** The kernel `name` applied to `args`, built by the same builder SQL
+    * resolves through the registry (arity gate, plan-time literal checks),
+    * so the plan and values match the SQL spelling, and the session's
+    * function registry is never touched. Plan-time geometry is passed as
+    * `lit(n)`. An aggregate is wrapped as the analyzer wraps it for SQL.
+    */
+  def call(name: String, args: Column*): Column = {
+    val builder = builders.getOrElse(name,
+      analysisError(s"$name is not a graft function"))
+    GraftPlanBridge.column(builder(args.map(GraftPlanBridge.expression)) match {
+      case agg: AggregateFunction => agg.toAggregateExpression()
+      case e => e
+    })
+  }
+
+  /** SQL-text surface: every graft_* function in this session's registry.
+    * Idempotent; library code needs neither this nor [[GraftExtensions]].
+    */
   def register(spark: SparkSession): Unit = fns.foreach { case (name, builder) =>
     spark.sessionState.functionRegistry.registerFunction(
       FunctionIdentifier(name),

@@ -1728,7 +1728,7 @@ object VecOps {
   }
 
   /** One IVF-PQ asymmetric-distance TERM (the per-subspace encode + score
-    * of [[graft.ext.Similarity.adcTermExpr]]) as a single compiled loop:
+    * of [[graft.ext.Similarity.adcTerm]]) as a single compiled loop:
     * over the `cents` codebook (array<struct<cluster int, cvec
     * array<double>>>), find the codeword minimizing the squared L2 to
     * `r[off, off+len)` — ties to the LOWEST cluster id, exactly the
@@ -1746,8 +1746,8 @@ object VecOps {
     * construction, so strict-null is the honest contract).
     */
   /** The k-means assignment argmin (the SQL
-    * `array_min(transform(cents, ct -> struct(dd, c)))` of
-    * [[graft.ext.Similarity.bestCellExpr]]) as one compiled loop:
+    * `array_min(transform(cents, ct -> struct(dd, c)))` that
+    * [[graft.ext.Similarity.bestCell]] replaced) as one compiled loop:
     * over `cents` (array<struct<cluster int, cvec array<double>>>), the
     * (squared-L2, cluster)-lexicographic minimum — same [[d2D]] fold per
     * candidate, ties to the lowest cluster id. Returns (dd, c) as an

@@ -62,7 +62,6 @@ object Main {
       //     load + the x25 rerank serve, printed
       case "index-train" :: emb :: idx :: Nil =>
         import graft.ext.Similarity
-        graft.functions.GraftFunctions.register(spark)
         val serve = Similarity.Serve
         val (a1, cv1, resid, cbAll) = Similarity.ivfPqIndex(
           spark.read.parquet(emb), serve.K1Default, serve.M, serve.SubDim,
@@ -77,7 +76,6 @@ object Main {
       case "index-serve" :: idx :: Nil =>
         import graft.ext.Similarity
         val fresh = spark.newSession()
-        graft.functions.GraftFunctions.register(fresh)
         def ld(n: String) = fresh.read.parquet(s"$idx/$n")
         Similarity.ivfPqServeRerank(
           (ld("a1"), ld("cv1"), ld("resid"), ld("codebooks")))

@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.ext.PortableHash.saltedDocHash
+import graft.functions.GraftFunctions.call
 import graft.queries.Q
 import graft.sources.Tables
 
@@ -134,13 +136,12 @@ object PipelineQueries {
     // materializes an intermediate dataset.
     Q("p03_training_pipeline",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         import org.apache.spark.sql.expressions.Window
         val deduped = Tables.documents(s, d)
           .withColumn("keep_id",
             min("doc_id").over(Window.partitionBy(md5(col("text")))))
           .filter(col("doc_id") === col("keep_id"))
-          .filter(pmod(expr("graft_poly_hash(text)"), lit(10)) < 5)
+          .filter(pmod(call("graft_poly_hash", col("text")), lit(10)) < 5)
         graft.ext.TextOps.quality(deduped, Seq("source"))
           .filter(col("quality_score") > 1.1)
           .groupBy("source")
@@ -265,7 +266,6 @@ object PipelineQueries {
     Q("p07_training_shuffle",
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        graft.functions.GraftFunctions.register(s)
         val shardChars = 64000000L
         val w = Window.partitionBy("shard").orderBy(col("ho"), col("doc_id"))
         val docs = Tables.documents(s, d)
@@ -274,11 +274,8 @@ object PipelineQueries {
           .as("n_shards"))
         docs.crossJoin(broadcast(nsh))
           .select(col("doc_id"),
-            pmod(expr(
-              "graft_poly_hash(md5(concat('shard|', CAST(doc_id AS STRING))))"),
-              col("n_shards")).as("shard"),
-            expr("graft_poly_hash(md5(concat('ord|', CAST(doc_id AS STRING))))")
-              .as("ho"))
+            pmod(saltedDocHash("shard"), col("n_shards")).as("shard"),
+            saltedDocHash("ord").as("ho"))
           .withColumn("pos", row_number().over(w).cast("long"))
           .select("doc_id", "shard", "pos")
       },
@@ -314,7 +311,6 @@ object PipelineQueries {
     // probe itself.
     Q("p08_semantic_lifecycle",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val emb = Tables.embeddings(s, d)
         val admitted = graft.ext.Dedup.semanticDedup(emb)
           .filter(col("is_pruned") === 0).select("vec_id")
@@ -328,7 +324,7 @@ object PipelineQueries {
             col("cluster").as("q_cell"))
         kept.join(broadcast(q),
             col("cluster") === col("q_cell") && col("vec_id") =!= col("q_id"))
-          .withColumn("cos_sim", expr("graft_cos(e, qe)"))
+          .withColumn("cos_sim", call("graft_cos", col("e"), col("qe")))
           .select("vec_id", "cluster", "cos_sim")
           .orderBy(col("cos_sim").desc, col("vec_id"))
           .limit(10)
@@ -375,7 +371,6 @@ object PipelineQueries {
     // fixed-order IEEE expression mirrored verbatim in the oracle.
     Q("p09_temperature_mix",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val docs = Tables.documents(s, d)
         val stats = docs.groupBy("source")
           .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("mass"))
@@ -402,9 +397,7 @@ object PipelineQueries {
           // (measured; the KmvBuffer scaladoc documents the same
           // range-compression bias). MD5 provides the avalanche; the
           // fold condenses it portably — the q59 discipline.
-          .filter(pmod(expr(
-            "graft_poly_hash(md5(concat('mix|', CAST(doc_id AS STRING))))"),
-            lit(1000000L)) <
+          .filter(pmod(saltedDocHash("mix"), lit(1000000L)) <
             expr("CAST(floor(rate * 1000000.0) AS BIGINT)"))
           .groupBy("source")
           .agg(count(lit(1)).as("n_admitted"),
@@ -464,7 +457,6 @@ object PipelineQueries {
     // the server is a reader.
     Q("p10_index_lifecycle",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         import graft.ext.Similarity
         val dir = graft.util.Scratch.materialized(s"p10_index_$d") { root =>
           val (a1, cv1, resid, cbAll) = Similarity.ivfPqIndex(
@@ -478,7 +470,6 @@ object PipelineQueries {
           cbAll.write.parquet(s"$root/codebooks")
         }
         val fresh = s.newSession()
-        graft.functions.GraftFunctions.register(fresh)
         def ld(n: String) = fresh.read.parquet(s"$dir/$n")
         Similarity.ivfPqServeRerank(
           (ld("a1"), ld("cv1"), ld("resid"), ld("codebooks")))
@@ -555,7 +546,6 @@ object PipelineQueries {
     // reduce is partitioning-independent.
     Q("p13_langid_mix",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val plants = s.createDataFrame(graft.ext.TextOps.LangPlants)
           .toDF("doc_id", "text")
         val aug = Tables.documents(s, d).select("doc_id", "text")
@@ -583,9 +573,7 @@ object PipelineQueries {
               " / CAST(mass AS DOUBLE)) END"))
         val admitted = labeled
           .join(broadcast(rates.select(col("lang"), col("rate"))), "lang")
-          .filter(pmod(expr(
-            "graft_poly_hash(md5(concat('lmix|', CAST(doc_id AS STRING))))"),
-            lit(1000000L)) <
+          .filter(pmod(saltedDocHash("lmix"), lit(1000000L)) <
             expr("CAST(floor(rate * 1000000.0) AS BIGINT)"))
           .groupBy("lang")
           .agg(count(lit(1)).as("n_admitted"),
@@ -693,7 +681,6 @@ object PipelineQueries {
     // loudly instead of annihilating the corpus).
     Q("p15_tokenizer_sampled",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val k = graft.ext.TextOps.BpeRounds
         // Byte-budget sizing (round 19): micros resolves from the conf
         // precedence (sampleMicros > sampleBytes > legacy 50%), and the
@@ -711,7 +698,6 @@ object PipelineQueries {
               k).write.parquet(s"$root/merges")
         }
         val fresh = s.newSession()
-        graft.functions.GraftFunctions.register(fresh)
         val merges = fresh.read.parquet(s"$dir/merges")
         val corpus0 = Tables.documents(fresh, d)
           .select(col("doc_id"), split(col("text"), " ").as("toks"))

@@ -5,6 +5,7 @@ import graft.util.Scratch
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.functions.GraftFunctions.call
 import graft.operators.AsOfJoin
 import graft.sources.Tables
 
@@ -459,12 +460,10 @@ object Extended {
     // runs, engines and partitionings — `sample()`'s RNG is none of those.
     // Per-row, shuffle-free, and the predicate rides next to the scan.
     Q("q68_deterministic_sample",
-      (s, d) => {
-        graft.functions.GraftFunctions.register(s)
+      (s, d) =>
         Tables.documents(s, d)
-          .filter(pmod(expr("graft_poly_hash(text)"), lit(20)) === 0)
-          .select(col("doc_id"), length(col("text")).as("n_chars"))
-      },
+          .filter(pmod(call("graft_poly_hash", col("text")), lit(20)) === 0)
+          .select(col("doc_id"), length(col("text")).as("n_chars")),
       Some(s"""SELECT doc_id, CAST(length(text) AS INT) AS n_chars
                FROM documents
                WHERE ${graft.ext.PortableHash.duckPoly("text")} % 20 = 0""")),
@@ -477,11 +476,10 @@ object Extended {
     // per (source) group, never the sampled corpus itself.
     Q("q72_stratified_sample",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val pct = when(col("source") === "src0", 50)
           .when(col("source") === "src1", 25).otherwise(10)
         Tables.documents(s, d)
-          .filter(pmod(expr("graft_poly_hash(text)"), lit(100)) < pct)
+          .filter(pmod(call("graft_poly_hash", col("text")), lit(100)) < pct)
           .groupBy("source")
           .agg(count(lit(1)).as("n_sampled"))
       },
@@ -562,17 +560,17 @@ object Extended {
     // set is a pure function of the input set.
     Q("q73_kmv_set_algebra",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val ev = Tables.events(s, d)
         val a = ev.filter(col("event_type") === "click")
-          .agg(expr("graft_kmv(CAST(event_id AS STRING))").as("ka"))
+          .agg(call("graft_kmv", col("event_id").cast("string")).as("ka"))
         val b = ev.filter(col("value") > 90)
-          .agg(expr("graft_kmv(CAST(event_id AS STRING))").as("kb"))
+          .agg(call("graft_kmv", col("event_id").cast("string")).as("kb"))
         a.crossJoin(b)
           .select(
             col("ka.est_distinct").as("est_a"),
             col("kb.est_distinct").as("est_b"),
-            expr("graft_kmv_union_est(ka.sketch, kb.sketch)").as("est_union"))
+            call("graft_kmv_union_est", col("ka.sketch"), col("kb.sketch"))
+              .as("est_union"))
           .withColumn("est_intersection",
             col("est_a") + col("est_b") - col("est_union"))
       },
@@ -1027,17 +1025,15 @@ object Extended {
     // the input SET, so estimate, kth-min AND the sketch bytes themselves
     // hash-compare against DuckDB.
     Q("q59_kmv_sketch",
-      (s, d) => {
-        graft.functions.GraftFunctions.register(s)
+      (s, d) =>
         Tables.events(s, d)
           .groupBy(col("event_type"))
-          .agg(expr("graft_kmv(CAST(user_id AS STRING))").as("kmv"))
+          .agg(call("graft_kmv", col("user_id").cast("string")).as("kmv"))
           .select(col("event_type"),
             col("kmv.n_kept").as("n_kept"),
             col("kmv.kth_min").as("kth_min"),
             col("kmv.est_distinct").as("est_distinct"),
-            upper(hex(col("kmv.sketch"))).as("sketch_hex"))
-      },
+            upper(hex(col("kmv.sketch"))).as("sketch_hex")),
       Some(s"""WITH h AS (
                  SELECT event_type,
                         ${graft.ext.PortableHash.duckPoly("md5(CAST(user_id AS VARCHAR))")} AS hv
@@ -2154,7 +2150,6 @@ object Extended {
     // runs at scale.
     Q("q108_profile_sketch",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val li = Tables.lineitem(s, d)
           .withColumn("l_shipday", to_date(col("l_shipdate")))
         li.agg(
@@ -2162,19 +2157,19 @@ object Extended {
             count(col("l_orderkey")).as("c1"),
             min(col("l_orderkey")).cast("string").as("mn1"),
             max(col("l_orderkey")).cast("string").as("mx1"),
-            expr("graft_kmv(CAST(l_orderkey AS STRING))").as("k1"),
+            call("graft_kmv", col("l_orderkey").cast("string")).as("k1"),
             count(col("l_returnflag")).as("c2"),
             min(col("l_returnflag")).as("mn2"),
             max(col("l_returnflag")).as("mx2"),
-            expr("graft_kmv(l_returnflag)").as("k2"),
+            call("graft_kmv", col("l_returnflag")).as("k2"),
             count(col("l_linestatus")).as("c3"),
             min(col("l_linestatus")).as("mn3"),
             max(col("l_linestatus")).as("mx3"),
-            expr("graft_kmv(l_linestatus)").as("k3"),
+            call("graft_kmv", col("l_linestatus")).as("k3"),
             count(col("l_shipday")).as("c4"),
             min(col("l_shipday")).cast("string").as("mn4"),
             max(col("l_shipday")).cast("string").as("mx4"),
-            expr("graft_kmv(CAST(l_shipday AS STRING))").as("k4"))
+            call("graft_kmv", col("l_shipday").cast("string")).as("k4"))
           .select(expr("""stack(4,
               'l_orderkey',   c1, k1.est_distinct, mn1, mx1,
               'l_returnflag', c2, k2.est_distinct, mn2, mx2,

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, Trigger}
 import org.apache.spark.sql.types.StructType
 
+import graft.functions.GraftFunctions.call
 import graft.pipeline.CsvWire
 import graft.sources.Tables
 import graft.util.Scratch
@@ -182,10 +183,9 @@ object StreamingQ {
     * trained centroids) — broadcast into every micro-batch.
     */
   def substringSnapshot(snapshotDocs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(snapshotDocs.sparkSession)
     val n = graft.ext.Dedup.SpanN
     graft.util.Caches.retainCheckpointed(snapshotDocs
-      .select(explode(expr(s"graft_gram_chain(text, $n)")).as("g"))
+      .select(explode(call("graft_gram_chain", col("text"), lit(n))).as("g"))
       .agg(expr("array_sort(array_distinct(collect_list(g)))").as("sg")))
   }
 
@@ -206,7 +206,8 @@ object StreamingQ {
     src.crossJoin(broadcast(snap))
       .select(col("doc_id"),
         when(size(split(col("text"), " ")) >= n,
-          expr(s"graft_sorted_hits(graft_gram_chain(text, $n), sg)"))
+          call("graft_sorted_hits", call("graft_gram_chain", col("text"), lit(n)),
+            col("sg")))
           .otherwise(lit(0)).as("n_hit_grams"))
       .withColumn("contaminated", col("n_hit_grams") > 0)
   }
@@ -760,10 +761,9 @@ object StreamingQ {
   def knnAdmitXform(s: SparkSession, queries: DataFrame)(
       src: DataFrame): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     src.crossJoin(broadcast(queries))
       .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos_sim", expr("graft_cos(embedding, qe)"))
+      .withColumn("cos_sim", call("graft_cos", col("embedding"), col("qe")))
       .select(col("q_id"), col("vec_id"), col("label"), col("cos_sim"))
       .as[KnnCand]
       .groupByKey(_.q_id)
@@ -866,11 +866,10 @@ object StreamingQ {
   def semanticDedupXform(s: SparkSession, cents: DataFrame,
       tau: Double = 0.3)(src: DataFrame): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     src.select(col("vec_id"),
         expr("transform(embedding, ex -> CAST(ex AS DOUBLE))").as("e"))
       .crossJoin(broadcast(cents))
-      .withColumn("best", expr(graft.ext.Similarity.bestCellExpr))
+      .withColumn("best", graft.ext.Similarity.bestCell(col("e"), col("cents")))
       .select(col("best.c").as("cluster"), col("vec_id"), col("e"))
       .as[CellVec]
       .groupByKey(_.cluster)
@@ -930,7 +929,7 @@ object StreamingQ {
     * arrivals outside every query's nprobe cells are dropped before any
     * scoring, s29's score-everything shape with the index's prune in
     * front), ADC-score with the shared [[graft.ext.Similarity
-    * .adcTermExpr]] term, and keep a per-query running shortlist
+    * .adcTerm]] term, and keep a per-query running shortlist
     * ([[AdcShortlistProcessor]]). At 100 TB this is continuous index
     * ingestion with bounded serving state: per-batch cost ∝ the probed
     * fraction of the batch, state O(|queries|·shortK), sink ∝ admissions.
@@ -942,9 +941,8 @@ object StreamingQ {
       floorParts: Int = 1)(
       src: DataFrame): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val adc = (0 until m)
-      .map(s2 => expr(graft.ext.Similarity.adcTermExpr(s2, subDim)))
+      .map(s2 => graft.ext.Similarity.adcTerm(s2, subDim))
       .reduce(_ + _)
     // The streaming twin of the batch assignment floor (round 18): each
     // arrival pays an O(k·dim) compiled argmin, and a micro-batch's
@@ -963,7 +961,7 @@ object StreamingQ {
     arrivals.select(col("vec_id"),
         expr("transform(embedding, ex -> CAST(ex AS DOUBLE))").as("e"))
       .crossJoin(broadcast(assignCents))
-      .withColumn("best", expr(graft.ext.Similarity.bestCellExpr))
+      .withColumn("best", graft.ext.Similarity.bestCell(col("e"), col("cents")))
       .select(col("vec_id"), col("e"), col("best.c").as("c1"))
       .join(broadcast(cv1), col("c1") === col("rc1"))
       .select(col("vec_id"), col("c1"),
@@ -1447,11 +1445,10 @@ object StreamingQ {
     // follows the s01 watermark boundary (windows ending <= max(ts)).
     Q("s15_stream_kmv",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         runEventsStream(s, d) { src =>
           src.withWatermark("ts", "0 seconds")
             .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-            .agg(expr("graft_kmv(CAST(user_id AS STRING))").as("kmv"))
+            .agg(call("graft_kmv", col("user_id").cast("string")).as("kmv"))
             .select(col("window.start").as("ws"), col("event_type"),
               col("kmv.n_kept").as("n_kept"),
               col("kmv.est_distinct").as("est_distinct"))
@@ -1786,7 +1783,6 @@ object StreamingQ {
     // oracle is x07's SQL verbatim.
     Q("s29_stream_knn",
       (s, d) => withRocksDb(s) {
-        graft.functions.GraftFunctions.register(s)
         val q = Tables.embeddings(s, d).orderBy("vec_id").limit(8)
           .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
         val admitted = runFileStream(s, s"$d/embeddings.parquet")(
@@ -1846,7 +1842,6 @@ object StreamingQ {
     Q("s31_stream_ivfpq_serve",
       (s, d) => withRocksDb(s) {
         import org.apache.spark.sql.expressions.Window
-        graft.functions.GraftFunctions.register(s)
         val serve = graft.ext.Similarity.Serve
         val emb = Tables.embeddings(s, d)
         val (a1, cv1, _, cbAll) = graft.ext.Similarity.ivfPqIndex(
@@ -1865,14 +1860,14 @@ object StreamingQ {
           .filter(col("rn") <= serve.ShortK).select("q_id", "vec_id", "c1")
         val top = a1.join(broadcast(short), "vec_id")
           .join(broadcast(qset), "q_id")
-          .withColumn("d2", expr("graft_l2(e, qe)"))
+          .withColumn("d2", call("graft_l2", col("e"), col("qe")))
           .withColumn("rn", row_number().over(
             Window.partitionBy("q_id").orderBy(col("d2"), col("vec_id"))))
           .filter(col("rn") <= serve.TopK)
           .select("q_id", "vec_id", "c1", "d2")
         val exact = a1.crossJoin(broadcast(qset))
           .filter(col("vec_id") =!= col("q_id"))
-          .withColumn("d2x", expr("graft_l2(e, qe)"))
+          .withColumn("d2x", call("graft_l2", col("e"), col("qe")))
           .withColumn("rn", row_number().over(
             Window.partitionBy("q_id").orderBy(col("d2x"), col("vec_id"))))
           .filter(col("rn") <= serve.TopK)
@@ -1960,7 +1955,6 @@ object StreamingQ {
     Q("s32_stream_ivfpq_filtered",
       (s, d) => withRocksDb(s) {
         import org.apache.spark.sql.expressions.Window
-        graft.functions.GraftFunctions.register(s)
         val serve = graft.ext.Similarity.Serve
         val target = 3
         val emb = Tables.embeddings(s, d)
@@ -1981,7 +1975,7 @@ object StreamingQ {
           .filter(col("rn") <= serve.ShortK).select("q_id", "vec_id", "c1")
         val top = a1.join(broadcast(short), "vec_id")
           .join(broadcast(qset), "q_id")
-          .withColumn("d2", expr("graft_l2(e, qe)"))
+          .withColumn("d2", call("graft_l2", col("e"), col("qe")))
           .withColumn("rn", row_number().over(
             Window.partitionBy("q_id").orderBy(col("d2"), col("vec_id"))))
           .filter(col("rn") <= serve.TopK)
@@ -1993,7 +1987,7 @@ object StreamingQ {
             expr("transform(embedding, ex -> CAST(ex AS DOUBLE))").as("fe"))
           .crossJoin(broadcast(qset))
           .filter(col("evid") =!= col("q_id"))
-          .withColumn("d2x", expr("graft_l2(fe, qe)"))
+          .withColumn("d2x", call("graft_l2", col("fe"), col("qe")))
           .withColumn("rn", row_number().over(
             Window.partitionBy("q_id").orderBy(col("d2x"), col("evid"))))
           .filter(col("rn") <= serve.TopK)
@@ -2200,14 +2194,12 @@ object StreamingQ {
     // gram table, every streaming gate is a reader.
     Q("s34_substring_gate_artifact",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val dir = graft.util.Scratch.materialized(s"s34_grams_$d") { root =>
           substringSnapshot(
             Tables.documents(s, d).filter(col("doc_id") < 100))
             .write.parquet(s"$root/grams")
         }
         val fresh = s.newSession()
-        graft.functions.GraftFunctions.register(fresh)
         val snap = fresh.read.parquet(s"$dir/grams")
         runDocsStream(fresh, d)(src =>
           substringGateXform(snap)(src.filter(col("doc_id") >= 100)))
@@ -2224,7 +2216,6 @@ object StreamingQ {
     // exact false positives.
     Q("s35_stream_bloom_gate",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         // the Scratch key carries the resolved width knob: a conf-sweeping
         // spec/tool changing bloomBits in one JVM must not be served a
         // stale artifact built at the old m (round-15 advice)
@@ -2237,7 +2228,6 @@ object StreamingQ {
             .write.parquet(s"$root/bloom")
         }
         val fresh = s.newSession()
-        graft.functions.GraftFunctions.register(fresh)
         val bloom = fresh.read.parquet(s"$dir/bloom")
         runDocsStream(fresh, d)(src =>
           graft.ext.Dedup.bloomGateXform(bloom)(

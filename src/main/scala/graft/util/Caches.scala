@@ -131,11 +131,6 @@ object Caches {
     * text share it only through this method — callers that rely on
     * cross-query CacheManager dedup should keep using retain.
     */
-  // GRAFT_CACHE_DEBUG=1: log each memo lookup (hit/miss + plan-key hash +
-  // head of the canonical plan) to stderr — the attribution tool for "why
-  // did this training chain re-run?" (round-18: the sf10-auto x-family).
-  private val debug = sys.env.get("GRAFT_CACHE_DEBUG").contains("1")
-
   /** The memo key: canonicalized analyzed plan, with every embedded
     * checkpoint's PHYSICAL metadata erased first.
     *
@@ -187,22 +182,21 @@ object Caches {
       }
     } catch {
       case e @ (_: LinkageError | _: MatchError | _: ClassCastException) =>
-        if (debug) System.err.println(
-          s"[graft-cache] memo-key normalization unavailable " +
-            s"(${e.getClass.getSimpleName}) — falling back to raw plan " +
-            "(cache misses, never wrong values)")
+        Log.debug(s"memo-key normalization unavailable " +
+          s"(${e.getClass.getSimpleName}) — falling back to raw plan " +
+          "(cache misses, never wrong values)")
         df.queryExecution.analyzed
     }
 
   def retainCheckpointed(df: DataFrame): DataFrame = {
     val key = memoKey(df)
-    if (debug) {
-      val hit = synchronized(checkpointed.contains(key))
-      System.err.println(s"[graft-cache] ${if (hit) "HIT " else "MISS"} " +
-        s"key=${Integer.toHexString(key._2.hashCode)} " +
-        key._2.nodeName + " " +
-        key._2.toString.linesIterator.take(1).mkString.take(120))
-    }
+    // each memo lookup (hit/miss + plan-key hash + head of the canonical
+    // plan) at DEBUG — the attribution tool for "why did this training
+    // chain re-run?" (round-18: the sf10-auto x-family)
+    Log.debug(s"memo ${if (synchronized(checkpointed.contains(key))) "HIT " else "MISS"} " +
+      s"key=${Integer.toHexString(key._2.hashCode)} " +
+      key._2.nodeName + " " +
+      key._2.toString.linesIterator.take(1).mkString.take(120))
     // A memoized frame from a STOPPED session would fail at action time
     // ("SparkContext has been shut down") — unlike retain, which always
     // returned the caller's live df. EVICT dead-session entries at lookup

@@ -32,6 +32,9 @@ object SparkSpec {
       .config("spark.sql.codegen.fallback", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    // specs that write graft_* calls as SQL text take the SQL-user path:
+    // one registration for the shared session (library code never needs it)
+    graft.functions.GraftFunctions.register(s)
     s
   }
 }

@@ -605,4 +605,31 @@ class ExtSpec extends SparkSpec {
     } finally spark.conf.unset(Dedup.MinhashMinBlocksKey)
     assert(Dedup.mediaMinhashPairsSql("aug").contains("n_match_blocks >= 2"))
   }
+
+  test("an auto-derived knob is logged once through the graft logger") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("capture", null, null, true,
+        Array.empty[org.apache.logging.log4j.core.config.Property]) {
+      override def append(e: LogEvent): Unit =
+        lines.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val logger = LogManager.getLogger("graft").asInstanceOf[Logger]
+    val level = logger.getLevel
+    logger.addAppender(capture)
+    logger.setLevel(Level.INFO)
+    try {
+      spark.conf.set(Dedup.KmeansCellsKey, "auto")
+      val k = Dedup.resolveCells(spark.range(1000).toDF("vec_id"), 8)
+      assert(lines.toArray.toSeq ===
+        Seq(s"${Dedup.KmeansCellsKey}=auto derived $k from corpus count 1000"))
+    } finally {
+      spark.conf.unset(Dedup.KmeansCellsKey)
+      logger.removeAppender(capture)
+      logger.setLevel(level)
+    }
+  }
 }

@@ -420,7 +420,7 @@ class KmeansSpec extends SparkSpec {
     val all1 = emb.select(col("vec_id"),
         expr("transform(embedding, ex -> CAST(ex AS DOUBLE))").as("e"))
       .crossJoin(broadcast(cents))
-      .withColumn("cluster", expr(s"${Similarity.bestCellExpr}.c"))
+      .withColumn("cluster", Similarity.bestCell(col("e"), col("cents")).getField("c"))
       .select("vec_id", "e", "cluster")
     val allResid = all1.join(broadcast(cv1), col("cluster") === col("rc1"))
       .select(col("vec_id"), col("cluster").as("c1"),
