@@ -10,6 +10,43 @@ object Verify {
     // the driver always runs the full surface with 2 args).
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
+    val spark = session(sfDir)
+    new java.io.File(outDir).mkdirs()
+    SparkEntry.queries
+      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .foreach { case (name, fn) =>
+      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name")
+      catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      }
+    }
+    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
+    // — a tab or CR in builder-authored SQL would otherwise make the
+    // driver's json.load fail and silently zero the round's correctness.
+    def q(s: String): String = "\"" + s.flatMap {
+      case '"'  => "\\\""
+      case '\\' => "\\\\"
+      case '\n' => "\\n"
+      case '\r' => "\\r"
+      case '\t' => "\\t"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+    val json = SparkEntry.oracleSql
+      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    graft.util.Caches.releaseAll() // owner-side release of library persists
+    spark.stop()
+  }
+
+  /** The gate's session for the tables under `sfDir`: master and shuffle
+    * width from the environment, UTC and nanos-tolerant reads, the
+    * `SPARK_GRAFT_CONF` injection, and the `auto` knobs resolved against
+    * this corpus. The dev timing harness builds its session here too, so
+    * its numbers run under the gate's settings.
+    */
+  def session(sfDir: String): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SPARK_GRAFT_MASTER overrides the master (e.g. "local-cluster[2,8,4096]"
     // for real executor JVMs — the closure-serialization / broadcast /
@@ -122,32 +159,6 @@ object Verify {
         case _ => ()
       }
     }
-    new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    graft.util.Caches.releaseAll() // owner-side release of library persists
-    spark.stop()
+    spark
   }
 }

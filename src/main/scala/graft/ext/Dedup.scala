@@ -134,8 +134,8 @@ object Dedup {
     * accumulating copies, and d05 reuses d03's signatures for free. The
     * lifetime is OWNED via [[graft.util.Caches.retain]]: a long-lived
     * session evicts every library cache (this one and jaccardPairs'
-    * corpus-sized token cache) with `Caches.releaseAll()` — Bench/Verify
-    * call it at shutdown.
+    * corpus-sized token cache) with `Caches.releaseAll()` — Verify and
+    * BenchSuite call it at shutdown.
     */
   /** Signature rows exploded to (doc_id, band, h1, h2) — the ONE place the
     * LSH banding layout is encoded (d03/d05/d09/d10 pair generation, d11's

@@ -116,6 +116,14 @@ object TextHash {
     */
   val edgeMax = 5
 
+  /** Offset of the codepoint after the one starting at `i`, clamped at
+    * `len`: a lead byte whose continuation bytes are cut off by the end of
+    * the string ends there, so the truncated tail counts as one codepoint
+    * (Spark decodes it to one U+FFFD).
+    */
+  private def nextCodepoint(bytes: Array[Byte], i: Int, len: Int): Int =
+    math.min(len, i + UTF8String.numBytesForFirstByte(bytes(i)))
+
   /** Edge-ngram stats in ONE pass: token prefixes of length 1..edgeMax
     * (split on single spaces, empty tokens skipped, prefixes by codepoint),
     * returning (total grams, distinct grams, first 5 distinct grams in
@@ -150,7 +158,7 @@ object TextHash {
         var j = i
         while (j < len && bytes(j) != ' ') {
           if (cp < edgeMax) cp += 1
-          j += UTF8String.numBytesForFirstByte(bytes(j))
+          j = nextCodepoint(bytes, j, len)
         }
         total += cp
         i = j
@@ -215,13 +223,11 @@ object TextHash {
         var cp = 0
         var j = i
         while (j < len && bytes(j) != ' ' && cp < edgeMax) {
-          j += UTF8String.numBytesForFirstByte(bytes(j))
+          j = nextCodepoint(bytes, j, len)
           cp += 1
           offer(i, j - i)
         }
-        while (j < len && bytes(j) != ' ') {
-          j += UTF8String.numBytesForFirstByte(bytes(j))
-        }
+        while (j < len && bytes(j) != ' ') j = nextCodepoint(bytes, j, len)
         i = j
       }
     }
@@ -794,7 +800,7 @@ object TextHash {
         inRun = false
         if (isLetter(b)) { while (i < n && isLetter(bytes(i))) i += 1 }
         else if (isDigit(b)) { while (i < n && isDigit(bytes(i))) i += 1 }
-        else i += UTF8String.numBytesForFirstByte(b)
+        else i = nextCodepoint(bytes, i, n)
         total += 1
       }
     }
@@ -834,7 +840,7 @@ object TextHash {
         val start = i
         if (isLetter(b)) { while (i < n && isLetter(bytes(i))) i += 1 }
         else if (isDigit(b)) { while (i < n && isDigit(bytes(i))) i += 1 }
-        else i += UTF8String.numBytesForFirstByte(b)
+        else i = nextCodepoint(bytes, i, n)
         offer(start, i - start)
       }
     }

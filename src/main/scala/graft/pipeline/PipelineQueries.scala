@@ -447,8 +447,8 @@ object PipelineQueries {
     // x23-family IVF-PQ index at the declared Serve config and writes all
     // four artifact relations — cell assignments + full-precision vectors
     // (a1), serving centroids (cv1), residuals (resid), PQ codebooks — as
-    // parquet, once per JVM (Scratch.materialized; Bench prewarms it like
-    // every fixture build). The serve phase runs in a FRESH SparkSession
+    // parquet, once per JVM (Scratch.materialized, like every fixture
+    // build). The serve phase runs in a FRESH SparkSession
     // over parquet scans of those files: its plan lineage contains no
     // cache, checkpoint, or training stage by construction, so
     // hash-equality with x25 (same oracle) proves the persisted artifacts
@@ -630,8 +630,8 @@ object PipelineQueries {
     // serve treatment applied to the last trained artifact that lacked it
     // (round-16 verdict item 2): t22's k-round merge table is what a
     // tokenizer trainer SHIPS, and until now every encode re-trained it.
-    // Train once per JVM (Scratch.materialized, Bench prewarms like every
-    // fixture), write the (round, tok_a, tok_b, n_pair) relation to
+    // Train once per JVM (Scratch.materialized, like every fixture),
+    // write the (round, tok_a, tok_b, n_pair) relation to
     // parquet, then ENCODE the corpus in a FRESH SparkSession whose plan
     // contains a parquet scan of that table and k broadcast 1-row joins —
     // no pair counting, no aggregation, no training lineage by

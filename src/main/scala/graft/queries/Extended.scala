@@ -2239,7 +2239,7 @@ object Extended {
     // broadcast dim into a dynamicpruning subquery inside the fact scan's
     // PartitionFilters and unselected partitions are never read
     // (plan-pinned). The fixture is a one-time materialized partitioned
-    // copy (Bench prewarms it); the oracle is the plain join — pruning is
+    // copy (Scratch.materialized); the oracle is the plain join — pruning is
     // physical, never semantic.
     Q("q109_dynamic_pruning",
       (s, d) => {

@@ -27,8 +27,8 @@ final class Q(
     * seed chains are O(k) CTEs / O(k²) characters at a numeric
     * kmeansCells knob (measured: catalogue construction at
     * kmeansCells=4096 OOMed an 8 GiB driver building ~1 GB of greedy-arm
-    * SQL that BenchOne would never read). Engine-only paths (Bench,
-    * Probe, plan dumps) touch `run` only; the string materializes solely
+    * SQL that a timing run would never read). Engine-only paths (BenchSuite,
+    * plan dumps) touch `run` only; the string materializes solely
     * where the gate actually consumes it (Verify's oracleSql dump, spec
     * reads).
     */

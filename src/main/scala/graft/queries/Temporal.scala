@@ -9,7 +9,7 @@ import graft.sources.Tables
   *
   * Mirrors the reference's timestamp pipeline — `from_unixtime` + cast +
   * `date_format('yyyy-MM-dd HH:mm:ss')` (utils/spark_transforming.py:148-149)
-  * — with the session timezone pinned to UTC (build.sbt / Verify / Bench), so
+  * — with the session timezone pinned to UTC (build.sbt / Verify.session), so
   * wall-clock math matches the naive-timestamp DuckDB oracle exactly.
   * The tumbling-window query is the batch-checkable form of the engine's
   * streaming `window()` aggregation (SURVEY.md §2.10).

@@ -19,8 +19,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * `retain` is therefore the ONLY way library code persists: it registers
   * the frame here, and [[releaseAll]] is the owner's hook — called by
-  * Bench/Verify after their run, and by any embedding application when a
-  * corpus goes out of scope. Unpersist is non-blocking (Spark drops blocks
+  * Verify and BenchSuite after their run, and by any embedding application
+  * when a corpus goes out of scope. Unpersist is non-blocking (Spark drops blocks
   * asynchronously) and idempotent, so releasing twice or releasing frames
   * whose plan was cache-deduped is safe.
   */

@@ -4,12 +4,12 @@ import java.nio.file.{Files, Path}
 
 /** Session-scoped scratch directories: like `Files.createTempDirectory` but
   * registered for recursive deletion at JVM exit, so repeated catalog runs
-  * (Verify + Bench + tests write dataset copies for the sink/roundtrip
+  * (Verify, BenchSuite and tests write dataset copies for the sink/roundtrip
   * queries) don't accumulate orphaned /tmp data across invocations.
   *
-  * Bench halts the JVM (`Runtime.halt`) to keep its final JSON line last on
-  * stdout, which skips shutdown hooks — so the deletion loop is also exposed
-  * as [[cleanup]] for explicit pre-halt invocation.
+  * A main that ends with `Runtime.halt` skips shutdown hooks — so the
+  * deletion loop is also exposed as [[cleanup]] for explicit pre-halt
+  * invocation.
   */
 object Scratch {
   private val created = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
@@ -19,7 +19,7 @@ object Scratch {
   Runtime.getRuntime.addShutdownHook(new Thread(() => cleanup()))
 
   /** Recursively delete every scratch dir created so far. Idempotent; safe
-    * to call both explicitly (Bench, before halt) and from the hook.
+    * to call both explicitly (before a halt) and from the hook.
     */
   def cleanup(): Unit = {
     var root = created.poll()
@@ -33,17 +33,12 @@ object Scratch {
     cached.clear()
   }
 
-  /** Optional scratch ROOT override. Default (None) = the JVM tmpdir
-    * (/tmp — a real disk on the bench host). Bench points this at a
-    * tmpfs (/dev/shm) when available: every streaming query's sink
-    * parquet, checkpoint log, and state-store files live under scratch,
-    * and their fsync-heavy writes were the least-mechanical part of the
-    * measured streaming floor (round-15 verdict item 3 — the s-suite
-    * moved 29% across hosts at matched CPU calib purely with disk state).
-    * Correctness paths (Verify, specs) keep the disk default — the
-    * override changes WHERE the bytes go, never what is computed.
-    * Settable via the GRAFT_SCRATCH_DIR env too (both Bench and Verify
-    * honor it at JVM start).
+  /** Optional scratch ROOT override. Default (None) = the JVM tmpdir.
+    * Every streaming query's sink parquet, checkpoint log, and state-store
+    * files live under scratch, so a harness can keep them beside its own
+    * run data (perfbench points it at its work dir). The override changes
+    * WHERE the bytes go, never what is computed. Settable via the
+    * GRAFT_SCRATCH_DIR env too (honored at JVM start).
     */
   @volatile private var rootOverride: Option[Path] = sys.env
     .get("GRAFT_SCRATCH_DIR").map(p => java.nio.file.Paths.get(p))
@@ -56,10 +51,6 @@ object Scratch {
       rootOverride = Some(p); true
     } else false
   }
-
-  def currentRoot: String =
-    rootOverride.map(_.toString)
-      .getOrElse(System.getProperty("java.io.tmpdir"))
 
   def dir(prefix: String): String = {
     val p = rootOverride match {
@@ -85,8 +76,8 @@ object Scratch {
     })
 
   /** Number of distinct fixtures materialized so far in this JVM (spec
-    * hook for Bench's fixture prewarm — lets a test observe whether a
-    * query's plan CONSTRUCTION triggered a build).
+    * hook — lets a test observe whether a query's plan CONSTRUCTION
+    * triggered a build).
     */
   def materializedCount: Int = cached.size
 }

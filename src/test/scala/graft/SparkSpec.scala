@@ -5,7 +5,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all specs — UTC-pinned and nanos-tolerant like
-  * the Verify/Bench mains, so tests see the same semantics the driver does.
+  * Verify.session, so tests see the same semantics the gate does.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session

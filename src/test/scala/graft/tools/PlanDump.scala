@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Dev harness (like Probe/Probe2): dumps `.explain("formatted")` for the
+/** Dev harness (like BenchSuite): dumps `.explain("formatted")` for the
   * headline batch queries into PLANS.md — the reviewable evidence that the
   * 100 TB plan properties (pushdown reaching the scan, dimension joins
   * broadcasting, single-shuffle as-of, Expand-free distinct counting,

@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Time each DuckDB oracle the same way Bench times the engine: min of 2
+"""Time each DuckDB oracle the way BenchSuite times the engine: min of 2
 fully-materializing runs (fetchall) on a warm connection.
 
 Usage: python3 tools/time_oracles.py <sfDir> <verifyOutDir> [skip1,skip2,...]
@@ -23,12 +23,10 @@ def load_avg():
 
 
 def calib():
-    """Single-thread CPU probe, Bench's discipline (min of 2 after one
-    untimed warm-up): an anchor is only valid on an idle box, and this
-    plus load_avg makes the artifact carry its own validity evidence
-    (round-20, verdict r19 item 4) instead of relying on operator memory.
-    Not unit-comparable with Bench's JVM xorshift probe — compare
-    calib values within/between ORACLE_TIMES artifacts only."""
+    """Single-thread CPU probe (min of 2 after one untimed warm-up): an
+    anchor is only valid on an idle box, and this plus load_avg makes the
+    output carry its own validity evidence instead of relying on operator
+    memory. Compare calib values between runs of this script only."""
     def once():
         x, t0 = 0x9E3779B97F4A7C15, time.time()
         for _ in range(2_000_000):
@@ -68,7 +66,7 @@ prov["load_avg_end"] = load_avg()
 prov["calib_sec_end"] = calib()
 prov["calib_ratio"] = round(
     prov["calib_sec_end"] / max(prov["calib_sec_start"], 1e-9), 3)
-# same gates as Bench: contended = started loaded or got >25% slower;
+# contended = started loaded or got >25% slower;
 # drifted = the box ran detectably off its start speed either direction
 prov["contended"] = (prov["load_avg_start"] > 2.0
                      or prov["calib_ratio"] > 1.25)
