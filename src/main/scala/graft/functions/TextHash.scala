@@ -47,13 +47,7 @@ object TextHash {
     * `split(s, ' ')` and DuckDB `string_split`). Empty token hashes to 0 in
     * both engines.
     */
-  def tokenHashes(s: UTF8String): ArrayData = {
-    val toks = s.toString.split(" ", -1)
-    val out = new Array[Long](toks.length)
-    var i = 0
-    while (i < toks.length) { out(i) = polyHashStr(toks(i)); i += 1 }
-    new GenericArrayData(out)
-  }
+  def tokenHashes(s: UTF8String): ArrayData = new GenericArrayData(tokenHashesRaw(s))
 
   private def tokenHashesRaw(s: UTF8String): Array[Long] = {
     val toks = s.toString.split(" ", -1)
@@ -95,19 +89,12 @@ object TextHash {
     * Null when the text has < 4 codepoints (qlen = 0).
     */
   def quarterMeans(s: UTF8String): ArrayData = {
-    val str = s.toString
-    val total = str.codePointCount(0, str.length)
-    val qlen = total / 4
+    val cps = codePointsOf(s)
+    val qlen = cps.length / 4
     if (qlen < 1) return null
     val sums = new Array[Long](4)
-    var i = 0    // char index
-    var cp = 0   // codepoint index
-    while (cp < 4 * qlen) {
-      val c = str.codePointAt(i)
-      sums(cp / qlen) += c
-      i += Character.charCount(c)
-      cp += 1
-    }
+    var i = 0
+    while (i < 4 * qlen) { sums(i / qlen) += cps(i); i += 1 }
     new GenericArrayData(sums.map(_.toDouble / qlen))
   }
 
@@ -116,13 +103,91 @@ object TextHash {
     */
   val edgeMax = 5
 
-  /** Offset of the codepoint after the one starting at `i`, clamped at
-    * `len`: a lead byte whose continuation bytes are cut off by the end of
-    * the string ends there, so the truncated tail counts as one codepoint
-    * (Spark decodes it to one U+FFFD).
+  /** Offset of the codepoint after the one starting at `i`, stepping as the
+    * JDK decoder behind `UTF8String.toString` does. A well-formed sequence
+    * is one step. An ill-formed one steps over its maximal subpart, the
+    * bytes the decoder replaces with one U+FFFD: a lead byte plus the
+    * continuation bytes it still accepts, never past `len`. An encoded
+    * surrogate (ED A0..BF xx) is one 3-byte step, as the decoder reads it.
     */
-  private def nextCodepoint(bytes: Array[Byte], i: Int, len: Int): Int =
-    math.min(len, i + UTF8String.numBytesForFirstByte(bytes(i)))
+  private def nextCodepoint(bytes: Array[Byte], i: Int, len: Int): Int = {
+    val b = bytes(i) & 0xff
+    val need = if (b < 0xc2) 0 else if (b < 0xe0) 1 else if (b < 0xf0) 2
+      else if (b < 0xf5) 3 else 0
+    val last = math.min(len - 1, i + need)
+    // the second byte's range rules out the overlong and > U+10FFFF forms
+    val lo = if (b == 0xe0) 0xa0 else if (b == 0xf0) 0x90 else 0x80
+    val hi = if (b == 0xf4) 0x8f else 0xbf
+    var j = i + 1
+    while (j <= last && {
+        val c = bytes(j) & 0xff
+        if (j == i + 1) c >= lo && c <= hi else (c & 0xc0) == 0x80
+      }) j += 1
+    j
+  }
+
+  /** Open-addressed set of byte slices of one array, the distinct-count
+    * table of every slice kernel. A slice is an (offset, length) pair into
+    * `bytes`, found by a 64-bit byte hash with a true byte compare on a
+    * hash hit (exact, collision-safe), so adding one allocates nothing.
+    * Linear probing over a power-of-two table sized for `expected`
+    * distinct slices, doubled past load 0.5; `used` marks the filled
+    * slots, so an empty slice is a member like any other.
+    */
+  private final class SliceSet(bytes: Array[Byte], expected: Int) {
+    private[this] var mask = {
+      var cap = 8
+      while (cap < expected * 2) cap <<= 1
+      cap - 1
+    }
+    private[this] var hs = new Array[Long](mask + 1)
+    private[this] var offs = new Array[Int](mask + 1)
+    private[this] var lens = new Array[Int](mask + 1)
+    private[this] var used = new Array[Boolean](mask + 1)
+    private[this] var n = 0
+
+    /** The number of distinct slices added. */
+    def size: Int = n
+
+    /** Adds bytes [off, off + len); true when the slice was new. */
+    def add(off: Int, len: Int): Boolean = {
+      if ((n + 1) * 2 > mask + 1) grow()
+      var h = 1125899906842597L
+      var k = off
+      while (k < off + len) { h = h * 31 + (bytes(k) & 0xff); k += 1 }
+      val slot = probe(h, off, len)
+      if (used(slot)) false
+      else { put(slot, h, off, len); n += 1; true }
+    }
+
+    /** The slot that holds the slice, or the free slot it would take. */
+    private def probe(h: Long, off: Int, len: Int): Int = {
+      var slot = (h ^ (h >>> 32)).toInt & mask
+      while (used(slot) && !(hs(slot) == h && lens(slot) == len &&
+          java.util.Arrays.equals(bytes, offs(slot), offs(slot) + len, bytes, off, off + len)))
+        slot = (slot + 1) & mask
+      slot
+    }
+
+    private def put(slot: Int, h: Long, off: Int, len: Int): Unit = {
+      used(slot) = true; hs(slot) = h; offs(slot) = off; lens(slot) = len
+    }
+
+    private def grow(): Unit = {
+      val oldHs = hs; val oldOffs = offs; val oldLens = lens; val oldUsed = used
+      mask = mask * 2 + 1
+      hs = new Array[Long](mask + 1)
+      offs = new Array[Int](mask + 1)
+      lens = new Array[Int](mask + 1)
+      used = new Array[Boolean](mask + 1)
+      var j = 0
+      while (j < oldUsed.length) {
+        if (oldUsed(j))
+          put(probe(oldHs(j), oldOffs(j), oldLens(j)), oldHs(j), oldOffs(j), oldLens(j))
+        j += 1
+      }
+    }
+  }
 
   /** Edge-ngram stats in ONE pass: token prefixes of length 1..edgeMax
     * (split on single spaces, empty tokens skipped, prefixes by codepoint),
@@ -130,26 +195,27 @@ object TextHash {
     * UTF8-binary sort order joined with ','). Replaces a triple-evaluated
     * interpreted flatten/transform gram array.
     *
-    * Round 20 (guide §1.2 per-task work — t05 was the largest non-join
-    * sf10 entry at 48.9 s): the former form allocated a String + a
-    * StringBuilder copy + a UTF8String PER GRAM into a TreeSet (an
-    * O(log n) full string compare per insert). This form never leaves the
-    * UTF-8 byte array: a gram is an (offset, length) slice of the input,
-    * dedup is an open-addressed hash table over the slices (64-bit byte
-    * hash, true byte-compare on hash hit — exact, collision-safe), and
-    * the first-5 sample is a bounded insertion into a 5-slot array using
-    * the same unsigned-byte-then-length comparison as UTF8String.compareTo
-    * — byte-wise order, identical to the TreeSet form, Spark `array_sort`
-    * and DuckDB's default binary collation (t05 oracle hash unchanged).
-    * Zero allocation per gram; the only per-row allocations are the three
-    * table arrays and the output string.
+    * The kernel never leaves the UTF-8 byte array: a gram is an (offset,
+    * length) slice of the input, deduped in a [[SliceSet]], and the first-5
+    * sample is a bounded insertion into a 5-slot array using the same
+    * unsigned-byte-then-length comparison as UTF8String.compareTo —
+    * byte-wise order, identical to a TreeSet of the grams, Spark
+    * `array_sort` and DuckDB's default binary collation. Zero allocation
+    * per gram; the only per-row allocations are the table and the output
+    * string.
     */
   def edgeNgramStats(s: UTF8String): org.apache.spark.sql.catalyst.InternalRow = {
     val bytes = s.getBytes
     val len = bytes.length
-    // pass 1: total gram count = Σ_token min(edgeMax, codepoints(token))
-    // (cheap leading-byte scan; upper-bounds the dedup table size)
+    val seen = new SliceSet(bytes, len / 2 + 2)
     var total = 0
+    // bounded first-5 sample of the distinct grams, byte-ascending
+    val f5o = new Array[Int](5)
+    val f5l = new Array[Int](5)
+    var f5n = 0
+    // UTF8String.compareTo semantics: unsigned byte-wise, then length
+    def before(o1: Int, l1: Int, o2: Int, l2: Int): Boolean =
+      java.util.Arrays.compareUnsigned(bytes, o1, o1 + l1, bytes, o2, o2 + l2) < 0
     var i = 0
     while (i < len) {
       if (bytes(i) == ' ') i += 1
@@ -157,77 +223,21 @@ object TextHash {
         var cp = 0
         var j = i
         while (j < len && bytes(j) != ' ') {
-          if (cp < edgeMax) cp += 1
           j = nextCodepoint(bytes, j, len)
-        }
-        total += cp
-        i = j
-      }
-    }
-    // open-addressed slice table (pow2, load <= 0.5; lens==0 marks empty —
-    // grams are never empty)
-    var cap = 8
-    while (cap < total * 2) cap <<= 1
-    val hs = new Array[Long](cap)
-    val offs = new Array[Int](cap)
-    val lns = new Array[Int](cap)
-    var nDistinct = 0
-    // bounded first-5 sample of the distinct grams, byte-ascending
-    val f5o = new Array[Int](5)
-    val f5l = new Array[Int](5)
-    var f5n = 0
-    // UTF8String.compareTo semantics: unsigned byte-wise, then length
-    def cmpSlice(o1: Int, l1: Int, o2: Int, l2: Int): Int = {
-      val m = math.min(l1, l2)
-      var k = 0
-      while (k < m) {
-        val d = (bytes(o1 + k) & 0xff) - (bytes(o2 + k) & 0xff)
-        if (d != 0) return d
-        k += 1
-      }
-      l1 - l2
-    }
-    def offer(off: Int, l: Int): Unit = {
-      var h = 1125899906842597L
-      var k = off
-      val end = off + l
-      while (k < end) { h = h * 31 + (bytes(k) & 0xff); k += 1 }
-      var slot = ((h ^ (h >>> 32)) & (cap - 1)).toInt
-      var isNew = false
-      var done = false
-      while (!done) {
-        if (lns(slot) == 0) {
-          hs(slot) = h; offs(slot) = off; lns(slot) = l
-          isNew = true; done = true
-        } else if (hs(slot) == h && lns(slot) == l &&
-            cmpSlice(offs(slot), l, off, l) == 0) {
-          done = true
-        } else slot = (slot + 1) & (cap - 1)
-      }
-      if (isNew) {
-        nDistinct += 1
-        if (f5n < 5 || cmpSlice(off, l, f5o(f5n - 1), f5l(f5n - 1)) < 0) {
-          var p = if (f5n < 5) f5n else 4
-          while (p > 0 && cmpSlice(off, l, f5o(p - 1), f5l(p - 1)) < 0) {
-            f5o(p) = f5o(p - 1); f5l(p) = f5l(p - 1); p -= 1
+          if (cp < edgeMax) {
+            cp += 1
+            total += 1
+            val l = j - i
+            if (seen.add(i, l) && (f5n < 5 || before(i, l, f5o(4), f5l(4)))) {
+              var p = if (f5n < 5) f5n else 4
+              while (p > 0 && before(i, l, f5o(p - 1), f5l(p - 1))) {
+                f5o(p) = f5o(p - 1); f5l(p) = f5l(p - 1); p -= 1
+              }
+              f5o(p) = i; f5l(p) = l
+              if (f5n < 5) f5n += 1
+            }
           }
-          f5o(p) = off; f5l(p) = l
-          if (f5n < 5) f5n += 1
         }
-      }
-    }
-    i = 0
-    while (i < len) {
-      if (bytes(i) == ' ') i += 1
-      else {
-        var cp = 0
-        var j = i
-        while (j < len && bytes(j) != ' ' && cp < edgeMax) {
-          j = nextCodepoint(bytes, j, len)
-          cp += 1
-          offer(i, j - i)
-        }
-        while (j < len && bytes(j) != ' ') j = nextCodepoint(bytes, j, len)
         i = j
       }
     }
@@ -244,7 +254,39 @@ object TextHash {
       q += 1
     }
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](total, nDistinct, UTF8String.fromBytes(out)))
+      Array[Any](total, seen.size, UTF8String.fromBytes(out)))
+  }
+
+  /** 31^(k-1) mod P — the leading-term weight a rolling gram hash
+    * subtracts: g' = (g − x₀·31^(k−1))·31 + x_k mod P is the same value
+    * chain as re-folding every window, in O(1) per position. Every
+    * intermediate fits a long: values < P < 2^30, products < 2^60.
+    */
+  private def pow31(k: Int): Long = {
+    var p = 1L
+    var j = 1
+    while (j < k) { p = p * 31 % P; j += 1 }
+    p
+  }
+
+  /** The word-n-gram chain over token hashes `th` (needs at least n of
+    * them): element i = fold(th[i..i+n-1], (acc,h) -> (acc*31 + h) mod P),
+    * rolled with [[pow31]] (token hashes are < P).
+    */
+  private def wordChain(th: Array[Long], n: Int): Array[Long] = {
+    val out = new Array[Long](th.length - n + 1)
+    val lead = pow31(n)
+    var acc = 0L
+    var j = 0
+    while (j < n) { acc = (acc * 31 + th(j)) % P; j += 1 }
+    out(0) = acc
+    var i = 1
+    while (i < out.length) {
+      acc = ((acc - th(i - 1) * lead % P + P) * 31 + th(i + n - 1)) % P
+      out(i) = acc
+      i += 1
+    }
+    out
   }
 
   /** DISTINCT word-5-gram poly-chain hashes in one pass (d08 hot path):
@@ -259,19 +301,10 @@ object TextHash {
   def gram5Distinct(s: UTF8String): ArrayData = {
     val th = tokenHashesRaw(s)
     if (th.length < 5) return null
+    val gs = wordChain(th, 5)
     val set = new java.util.LinkedHashSet[java.lang.Long]()
-    // rolling 5-term chain (round 21) — same recurrence as gramChain
-    val lead = pow31(5)
-    var acc = 0L
-    var j = 0
-    while (j < 5) { acc = (acc * 31 + th(j)) % P; j += 1 }
     var i = 0
-    while (i <= th.length - 5) {
-      if (i > 0)
-        acc = ((acc - th(i - 1) * lead % P + P) * 31 + th(i + 4)) % P
-      set.add(acc)
-      i += 1
-    }
+    while (i < gs.length) { set.add(gs(i)); i += 1 }
     val out = new Array[Long](set.size)
     val it = set.iterator()
     var k = 0
@@ -289,23 +322,7 @@ object TextHash {
     */
   def gramChain(s: UTF8String, n: Int): ArrayData = {
     val th = tokenHashesRaw(s)
-    if (th.length < n) return null
-    val out = new Array[Long](th.length - n + 1)
-    // rolling fold (round 21, same recurrence as the byte-gram kernels):
-    // token hashes are < P, so acc' = (acc − th₀·31^(n−1))·31 + th_n mod P
-    // is the same chain with O(1) per position instead of O(n)
-    val lead = pow31(n)
-    var acc = 0L
-    var j = 0
-    while (j < n) { acc = (acc * 31 + th(j)) % P; j += 1 }
-    var i = 0
-    while (i <= th.length - n) {
-      if (i > 0)
-        acc = ((acc - th(i - 1) * lead % P + P) * 31 + th(i + n - 1)) % P
-      out(i) = acc
-      i += 1
-    }
-    new GenericArrayData(out)
+    if (th.length < n) null else new GenericArrayData(wordChain(th, n))
   }
 
   /** Codepoints of `s`, decoded once — shared by the char-n-gram kernels
@@ -326,28 +343,35 @@ object TextHash {
     out
   }
 
-  /** Char-n-gram model buckets in one pass (t18 model-build hot path):
-    * element i = pmod(polyHash(substring(s, i+1, n)), m) — bit-identical
-    * to the exploded `pmod(graft_poly_hash(g), m)` over
-    * [[CharGramsExpr]]'s grams it replaces (acc stays in [0, P), so % m is
-    * pmod), without allocating a UTF8String per position. Null when the
-    * text has < n codepoints (no n-grams — the generator twin emitted no
-    * rows there).
+  /** Char-n-gram buckets of `s`, or null below n codepoints: element i =
+    * polyHash(codepoints [i, i+n)) % m (acc stays in [0, P), so % m is
+    * pmod).
     */
-  def gramBuckets(s: UTF8String, n: Int, m: Long): ArrayData = {
+  private def charBuckets(s: UTF8String, n: Int, m: Long): Array[Long] = {
     val cps = codePointsOf(s)
     if (cps.length < n) return null
     val out = new Array[Long](cps.length - n + 1)
     var i = 0
-    val last = cps.length - n
-    while (i <= last) {
+    while (i < out.length) {
       var acc = 0L
       var j = 0
       while (j < n) { acc = (acc * 31 + cps(i + j)) % P; j += 1 }
       out(i) = acc % m
       i += 1
     }
-    new GenericArrayData(out)
+    out
+  }
+
+  /** Char-n-gram model buckets in one pass (t18 model-build hot path):
+    * element i = pmod(polyHash(substring(s, i+1, n)), m) — bit-identical
+    * to the exploded `pmod(graft_poly_hash(g), m)` over
+    * [[CharGramsExpr]]'s grams it replaces, without allocating a
+    * UTF8String per position. Null when the text has < n codepoints (no
+    * n-grams — the generator twin emitted no rows there).
+    */
+  def gramBuckets(s: UTF8String, n: Int, m: Long): ArrayData = {
+    val out = charBuckets(s, n, m)
+    if (out == null) null else new GenericArrayData(out)
   }
 
   /** Whole-document trigram-LM scoring in one pass (t18 probe hot path):
@@ -364,30 +388,14 @@ object TextHash {
     */
   def lmFamiliarity(s: UTF8String, n: Int, m: Long, bs: ArrayData,
       cs: ArrayData): org.apache.spark.sql.catalyst.InternalRow = {
-    val cps = codePointsOf(s)
-    if (cps.length < n) return null
-    val sz = bs.numElements()
+    val buckets = charBuckets(s, n, m)
+    if (buckets == null) return null
     var nt = 0L
     var fam = 0L
     var i = 0
-    val last = cps.length - n
-    while (i <= last) {
-      var acc = 0L
-      var j = 0
-      while (j < n) { acc = (acc * 31 + cps(i + j)) % P; j += 1 }
-      val b = acc % m
-      var lo = 0
-      var hi = sz - 1
-      while (lo <= hi) {
-        val mid = (lo + hi) >>> 1
-        val v = bs.getLong(mid)
-        if (v == b) {
-          nt += 1
-          fam += cs.getLong(mid)
-          lo = hi + 1 // found; exit
-        } else if (v < b) lo = mid + 1
-        else hi = mid - 1
-      }
+    while (i < buckets.length) {
+      val idx = sortedIndex(bs, buckets(i))
+      if (idx >= 0) { nt += 1; fam += cs.getLong(idx) }
       i += 1
     }
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
@@ -410,23 +418,15 @@ object TextHash {
   def winnow(s: UTF8String, n: Int, w: Int): ArrayData = {
     val th = tokenHashesRaw(s)
     if (th.length < n + w - 1) return null
-    val nG = th.length - n + 1
-    val gs = new Array[Long](nG)
-    var i = 0
-    while (i <= th.length - n) {
-      var acc = th(i)
-      var j = 1
-      while (j < n) { acc = (acc * 31 + th(i + j)) % P; j += 1 }
-      gs(i) = acc
-      i += 1
-    }
+    val gs = wordChain(th, n)
+    val nG = gs.length
     // monotonic deque of gram indices: values strictly increasing front to
     // back; equal values keep the EARLIER index (push pops only strictly
     // larger backs), so the front is the (value, pos)-lexicographic min.
     val dq = new Array[Int](nG)
     var head = 0; var tail = 0 // [head, tail)
     val selPos = new java.util.LinkedHashSet[Integer]()
-    i = 0
+    var i = 0
     while (i < nG) {
       while (tail > head && gs(dq(tail - 1)) > gs(i)) tail -= 1
       dq(tail) = i; tail += 1
@@ -449,14 +449,39 @@ object TextHash {
     new GenericArrayData(rows)
   }
 
-  /** Count of DISTINCT values of `gs` present in the SORTED array `snap` —
-    * bit-equal to `size(array_intersect(gs, snap))` when snap is sorted
-    * and distinct (s33's snapshot artifact contract), but O(|gs|·log|snap|)
-    * per row instead of array_intersect's per-ROW O(|snap|) hash-set
-    * rebuild: the snapshot is the big side and arrives as the same
-    * broadcast value on every row, so rebuilding its set per arrival
-    * dominated the sf1 wall (16.2 s → the streaming floor).
+  /** The distinct values of `gs`, ascending (a sorted copy; `gs` is left
+    * as it is).
     */
+  private def sortedDistinct(gs: ArrayData): Array[Long] = {
+    val arr = new Array[Long](gs.numElements())
+    var i = 0
+    while (i < arr.length) { arr(i) = gs.getLong(i); i += 1 }
+    java.util.Arrays.sort(arr)
+    var d = 0
+    i = 0
+    while (i < arr.length) {
+      if (d == 0 || arr(i) != arr(d - 1)) { arr(d) = arr(i); d += 1 }
+      i += 1
+    }
+    if (d == arr.length) arr else java.util.Arrays.copyOf(arr, d)
+  }
+
+  /** Binary search of `v` in the ascending long array `arr`: an index
+    * holding `v`, or -1.
+    */
+  private def sortedIndex(arr: ArrayData, v: Long): Int = {
+    var lo = 0
+    var hi = arr.numElements() - 1
+    while (lo <= hi) {
+      val mid = (lo + hi) >>> 1
+      val x = arr.getLong(mid)
+      if (x == v) return mid
+      else if (x < v) lo = mid + 1
+      else hi = mid - 1
+    }
+    -1
+  }
+
   /** d27/s35's Bloom probe kernel: the count of DISTINCT gram hashes in
     * `gs` whose every probe bit is set in the `bloom` word array (m =
     * 64·|bloom| bits, k probes). Probe i of gram g is the
@@ -471,75 +496,49 @@ object TextHash {
     * negatives by construction; false positives are what d28 measures.
     */
   def bloomHits(gs: ArrayData, bloom: ArrayData, k: Int): Int = {
-    val n = gs.numElements()
     val w = bloom.numElements()
-    if (n == 0 || w == 0) return 0
+    if (w == 0) return 0
     val m = w.toLong * 64L
-    val arr = new Array[Long](n)
-    var i = 0
-    while (i < n) { arr(i) = gs.getLong(i); i += 1 }
-    java.util.Arrays.sort(arr)
+    val vs = sortedDistinct(gs)
     var hits = 0
-    var prev = 0L
-    var first = true
-    i = 0
-    while (i < n) {
-      val v = arr(i)
-      if (first || v != prev) {
-        // floorMod: canonical gram hashes are non-negative (graft_gram_chain
-        // mods by P), but graft_bloom_hits is session-registered and
-        // reachable from ad-hoc SQL with arbitrary array<bigint> input — a
-        // negative v under `%` would drive the probe position negative and
-        // index out of the word array (round-15 advice). floorMod is a
-        // no-op on the canonical inputs, so the SQL twins are unchanged.
-        val g = java.lang.Math.floorMod(v, P)
-        val h1 = g * 2654435761L % P
-        val h2 = g * 1099087573L % P | 1L
-        var all = true
-        var j = 0
-        while (all && j < k) {
-          val p = (h1 + j * h2) % P % m
-          all = (bloom.getLong((p >>> 6).toInt) >>> (p & 63L).toInt & 1L) == 1L
-          j += 1
-        }
-        if (all) hits += 1
-        prev = v; first = false
+    var i = 0
+    while (i < vs.length) {
+      // floorMod: canonical gram hashes are non-negative (graft_gram_chain
+      // mods by P), but graft_bloom_hits is reachable from ad-hoc SQL with
+      // arbitrary array<bigint> input — a negative value under `%` would
+      // drive the probe position negative and index out of the word
+      // array. floorMod is a no-op on the canonical inputs, so the SQL
+      // twins are unchanged.
+      val g = java.lang.Math.floorMod(vs(i), P)
+      val h1 = g * 2654435761L % P
+      val h2 = g * 1099087573L % P | 1L
+      var all = true
+      var j = 0
+      while (all && j < k) {
+        val p = (h1 + j * h2) % P % m
+        all = (bloom.getLong((p >>> 6).toInt) >>> (p & 63L).toInt & 1L) == 1L
+        j += 1
       }
+      if (all) hits += 1
       i += 1
     }
     hits
   }
 
+  /** Count of DISTINCT values of `gs` present in the SORTED array `snap` —
+    * bit-equal to `size(array_intersect(gs, snap))` when snap is sorted
+    * and distinct (s33's snapshot artifact contract), but O(|gs|·log|snap|)
+    * per row instead of array_intersect's per-ROW O(|snap|) hash-set
+    * rebuild: the snapshot is the big side and arrives as the same
+    * broadcast value on every row, so rebuilding its set per arrival
+    * dominated the sf1 wall (16.2 s → the streaming floor).
+    */
   def sortedHits(gs: ArrayData, snap: ArrayData): Int = {
-    val n = gs.numElements()
-    val m = snap.numElements()
-    if (n == 0 || m == 0) return 0
-    val arr = new Array[Long](n)
-    var i = 0
-    while (i < n) { arr(i) = gs.getLong(i); i += 1 }
-    java.util.Arrays.sort(arr)
+    if (snap.numElements() == 0) return 0
+    val vs = sortedDistinct(gs)
     var hits = 0
-    var prev = 0L
-    var first = true
-    i = 0
-    while (i < n) {
-      val v = arr(i)
-      if (first || v != prev) { // distinct gs values only
-        // binary search over the sorted snapshot
-        var lo = 0; var hi = m - 1
-        var found = false
-        while (lo <= hi && !found) {
-          val mid = (lo + hi) >>> 1
-          val sv = snap.getLong(mid)
-          if (sv == v) found = true
-          else if (sv < v) lo = mid + 1
-          else hi = mid - 1
-        }
-        if (found) hits += 1
-        prev = v; first = false
-      }
-      i += 1
-    }
+    var i = 0
+    while (i < vs.length) { if (sortedIndex(snap, vs(i)) >= 0) hits += 1; i += 1 }
     hits
   }
 
@@ -676,27 +675,48 @@ object TextHash {
     }
     var nStop = 0
     var k = 0
-    while (k < qualityStopBytes.length) {
-      val p = qualityStopBytes(k)
-      val pl = p.length
-      var j = 0
-      while (j + pl <= n) {
-        var m = 0
-        while (m < pl && b(j + m) == p(m)) m += 1
-        if (m == pl) { nStop += 1; j += pl } else j += 1
-      }
-      k += 1
-    }
+    while (k < qualityStopBytes.length) { nStop += countMatches(b, qualityStopBytes(k)); k += 1 }
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
       Array[Any](nSpace, nPunct, nStop))
+  }
+
+  /** Non-overlapping occurrences of `p` in `b`, left to right, advancing
+    * by the pattern length on a match — `replace`'s rule.
+    */
+  private def countMatches(b: Array[Byte], p: Array[Byte]): Int = {
+    val pl = p.length
+    var count = 0
+    var j = 0
+    while (j + pl <= b.length) {
+      var m = 0
+      while (m < pl && b(j + m) == p(m)) m += 1
+      if (m == pl) { count += 1; j += pl } else j += 1
+    }
+    count
+  }
+
+  /** End (exclusive) of the `w`-token passage that starts at byte `from`:
+    * the offset of the w-th space at or after `from`, else the end of the
+    * bytes. Tokens are single-space splits, so a passage is the byte
+    * slice between every w-th space (0x20 never occurs inside a
+    * multi-byte UTF-8 sequence), and w = 1 walks the tokens, empty ones
+    * included. Callers step to `end + 1` while the start is <= the length.
+    */
+  private def passageEnd(bytes: Array[Byte], from: Int, w: Int): Int = {
+    var spaces = 0
+    var i = from
+    while (i < bytes.length) {
+      if (bytes(i) == ' ') { spaces += 1; if (spaces == w) return i }
+      i += 1
+    }
+    bytes.length
   }
 
   /** Aligned `w`-token passages in ONE byte scan (t14 hot path). Because
     * tokens are defined by single-space splits, joining `w` consecutive
     * tokens with single spaces reproduces the original SUBSTRING between
     * those token boundaries — so a passage is just the byte slice between
-    * every w-th space (0x20 never occurs inside a multi-byte UTF-8
-    * sequence). Value-identical to
+    * every w-th space ([[passageEnd]]). Value-identical to
     * `transform(sequence(1, ceil(ntoks/w)), i ->
     *    array_join(slice(split(text,' '), (i-1)*w+1, w), ' '))`
     * including empty-token and trailing-space edges, without materializing
@@ -707,25 +727,13 @@ object TextHash {
     // the direct-call and non-foldable paths the analyzer can't see.
     require(w >= 1, s"passage width must be >= 1, got $w")
     val bytes = s.getBytes
-    val nb = bytes.length
-    val out = new java.util.ArrayList[AnyRef](nb / (4 * math.max(w, 1)) + 1)
+    val out = new java.util.ArrayList[AnyRef](bytes.length / 4 / w + 1)
     var start = 0
-    var spaces = 0
-    var i = 0
-    while (i < nb) {
-      if (bytes(i) == 0x20) {
-        spaces += 1
-        if (spaces == w) {
-          out.add(UTF8String.fromBytes(
-            java.util.Arrays.copyOfRange(bytes, start, i)))
-          start = i + 1
-          spaces = 0
-        }
-      }
-      i += 1
+    while (start <= bytes.length) {
+      val end = passageEnd(bytes, start, w)
+      out.add(UTF8String.fromBytes(java.util.Arrays.copyOfRange(bytes, start, end)))
+      start = end + 1
     }
-    out.add(UTF8String.fromBytes(
-      java.util.Arrays.copyOfRange(bytes, start, nb)))
     new GenericArrayData(out.toArray)
   }
 
@@ -733,7 +741,7 @@ object TextHash {
     * UTF8String.compareTo semantics (unsigned bytes, then length), i.e.
     * Spark's UTF8_BINARY string order and therefore the order `sort_array`
     * / `array_sort(collect_list(...))` put broadcast model arrays in. The
-    * r21 broadcast-model kernels binary-search with this so a token/segment
+    * broadcast-model kernels binary-search with this so a token/segment
     * slice never materializes a UTF8String per probe.
     */
   private def cmpSliceVsU8(bytes: Array[Byte], off: Int, len: Int,
@@ -774,11 +782,11 @@ object TextHash {
     * space, at which the scan just advances) plus
     * `size(split(text, ' +'))` (space-run count + 1 — Java split keeps
     * leading/trailing empties at limit -1). Distinct matches are counted
-    * with the edgeNgramStats slice table (zero allocation per token);
-    * n_uniq is exact (byte-compare on hash hit). The regex form converted
-    * the row to a Java String and allocated every match into an array,
-    * then array_distinct rebuilt a hash set of UTF8Strings per row —
-    * measured 18.8 s at sf10 for t03, the t05 cost shape.
+    * in a [[SliceSet]] (zero allocation per token); n_uniq is exact
+    * (byte-compare on hash hit). The regex form converted the row to a
+    * Java String and allocated every match into an array, then
+    * array_distinct rebuilt a hash set of UTF8Strings per row — measured
+    * 18.8 s at sf10 for t03, the t05 cost shape.
     */
   def bpeishStats(s: UTF8String): org.apache.spark.sql.catalyst.InternalRow = {
     val bytes = s.getBytes
@@ -786,66 +794,26 @@ object TextHash {
     def isLetter(b: Byte): Boolean =
       (b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z')
     def isDigit(b: Byte): Boolean = b >= '0' && b <= '9'
-    // pass 0: space-run count (n_ws_tokens) + match count (sizes the table)
+    val seen = new SliceSet(bytes, n / 4 + 2)
     var wsRuns = 0
-    var inRun = false
     var total = 0
     var i = 0
     while (i < n) {
       val b = bytes(i)
       if (b == ' ') {
-        if (!inRun) { wsRuns += 1; inRun = true }
+        if (i == 0 || bytes(i - 1) != ' ') wsRuns += 1
         i += 1
       } else {
-        inRun = false
-        if (isLetter(b)) { while (i < n && isLetter(bytes(i))) i += 1 }
-        else if (isDigit(b)) { while (i < n && isDigit(bytes(i))) i += 1 }
-        else i = nextCodepoint(bytes, i, n)
-        total += 1
-      }
-    }
-    // open-addressed slice table (edgeNgramStats' discipline): 64-bit byte
-    // hash, true byte-compare on hit — exact distinct count
-    var cap = 8
-    while (cap < total * 2) cap <<= 1
-    val hs = new Array[Long](cap)
-    val offs = new Array[Int](cap)
-    val lns = new Array[Int](cap)
-    var nDistinct = 0
-    def offer(off: Int, l: Int): Unit = {
-      var h = 1125899906842597L
-      var k = off
-      val end = off + l
-      while (k < end) { h = h * 31 + (bytes(k) & 0xff); k += 1 }
-      var slot = ((h ^ (h >>> 32)) & (cap - 1)).toInt
-      var done = false
-      while (!done) {
-        if (lns(slot) == 0) {
-          hs(slot) = h; offs(slot) = off; lns(slot) = l
-          nDistinct += 1; done = true
-        } else if (hs(slot) == h && lns(slot) == l && {
-            var m = 0
-            val o2 = offs(slot)
-            while (m < l && bytes(o2 + m) == bytes(off + m)) m += 1
-            m == l
-          }) done = true
-        else slot = (slot + 1) & (cap - 1)
-      }
-    }
-    i = 0
-    while (i < n) {
-      val b = bytes(i)
-      if (b == ' ') i += 1
-      else {
         val start = i
         if (isLetter(b)) { while (i < n && isLetter(bytes(i))) i += 1 }
         else if (isDigit(b)) { while (i < n && isDigit(bytes(i))) i += 1 }
         else i = nextCodepoint(bytes, i, n)
-        offer(start, i - start)
+        total += 1
+        seen.add(start, i - start)
       }
     }
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](total, nDistinct, wsRuns + 1))
+      Array[Any](total, seen.size, wsRuns + 1))
   }
 
   /** t14's scrub against a broadcast boilerplate lexicon in ONE pass:
@@ -863,31 +831,22 @@ object TextHash {
       org.apache.spark.sql.catalyst.InternalRow = {
     require(w >= 1, s"passage width must be >= 1, got $w")
     val bytes = s.getBytes
-    val nb = bytes.length
-    val out = new Array[Byte](nb)
+    val out = new Array[Byte](bytes.length)
     var outW = 0
     var removed = 0L
     var kept = 0
     var start = 0
-    var spaces = 0
-    def handle(endExcl: Int): Unit = {
-      if (searchSorted(bp, bytes, start, endExcl - start) >= 0) removed += 1
+    while (start <= bytes.length) {
+      val end = passageEnd(bytes, start, w)
+      if (searchSorted(bp, bytes, start, end - start) >= 0) removed += 1
       else {
         if (kept > 0) { out(outW) = ' '; outW += 1 }
-        System.arraycopy(bytes, start, out, outW, endExcl - start)
-        outW += endExcl - start
+        System.arraycopy(bytes, start, out, outW, end - start)
+        outW += end - start
         kept += 1
       }
+      start = end + 1
     }
-    var i = 0
-    while (i < nb) {
-      if (bytes(i) == 0x20) {
-        spaces += 1
-        if (spaces == w) { handle(i); start = i + 1; spaces = 0 }
-      }
-      i += 1
-    }
-    handle(nb)
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
       Array[Any](UTF8String.fromBytes(java.util.Arrays.copyOf(out, outW)),
         removed))
@@ -906,48 +865,18 @@ object TextHash {
   def tokDf(s: UTF8String, ts: ArrayData, ds: ArrayData):
       org.apache.spark.sql.catalyst.InternalRow = {
     val bytes = s.getBytes
-    val n = bytes.length
-    // distinct token slices via the open-addressed table
-    var nTok = 1
-    var i = 0
-    while (i < n) { if (bytes(i) == ' ') nTok += 1; i += 1 }
-    var cap = 8
-    while (cap < nTok * 2) cap <<= 1
-    val hs = new Array[Long](cap)
-    val offs = new Array[Int](cap)
-    val lns = new Array[Int](cap)
-    val used = new Array[Boolean](cap)
+    val seen = new SliceSet(bytes, bytes.length / 4 + 2)
     var nToks = 0L
     var sumDf = 0L
-    def offer(off: Int, l: Int): Unit = {
-      var h = 1125899906842597L
-      var k = off
-      val end = off + l
-      while (k < end) { h = h * 31 + (bytes(k) & 0xff); k += 1 }
-      var slot = ((h ^ (h >>> 32)) & (cap - 1)).toInt
-      var done = false
-      while (!done) {
-        if (!used(slot)) {
-          used(slot) = true; hs(slot) = h; offs(slot) = off; lns(slot) = l
-          done = true
-          val idx = searchSorted(ts, bytes, off, l)
-          if (idx >= 0) { nToks += 1L; sumDf += ds.getLong(idx) }
-        } else if (hs(slot) == h && lns(slot) == l && {
-            var m = 0
-            val o2 = offs(slot)
-            while (m < l && bytes(o2 + m) == bytes(off + m)) m += 1
-            m == l
-          }) done = true
-        else slot = (slot + 1) & (cap - 1)
+    var start = 0
+    while (start <= bytes.length) {
+      val end = passageEnd(bytes, start, 1)
+      if (seen.add(start, end - start)) {
+        val idx = searchSorted(ts, bytes, start, end - start)
+        if (idx >= 0) { nToks += 1L; sumDf += ds.getLong(idx) }
       }
+      start = end + 1
     }
-    var tokStart = 0
-    i = 0
-    while (i < n) {
-      if (bytes(i) == ' ') { offer(tokStart, i - tokStart); tokStart = i + 1 }
-      i += 1
-    }
-    offer(tokStart, n - tokStart)
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
       Array[Any](nToks, sumDf))
   }
@@ -962,20 +891,15 @@ object TextHash {
   def oovStats(s: UTF8String, vocab: ArrayData):
       org.apache.spark.sql.catalyst.InternalRow = {
     val bytes = s.getBytes
-    val n = bytes.length
     var nTokens = 0L
     var nOov = 0L
-    def handle(off: Int, l: Int): Unit = {
+    var start = 0
+    while (start <= bytes.length) {
+      val end = passageEnd(bytes, start, 1)
       nTokens += 1L
-      if (searchSorted(vocab, bytes, off, l) < 0) nOov += 1L
+      if (searchSorted(vocab, bytes, start, end - start) < 0) nOov += 1L
+      start = end + 1
     }
-    var tokStart = 0
-    var i = 0
-    while (i < n) {
-      if (bytes(i) == ' ') { handle(tokStart, i - tokStart); tokStart = i + 1 }
-      i += 1
-    }
-    handle(tokStart, n - tokStart)
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
       Array[Any](nTokens, nOov))
   }
@@ -983,129 +907,32 @@ object TextHash {
   /** DISTINCT single-space-split tokens in ONE pass, FIRST-OCCURRENCE
     * order — bit-identical to `array_distinct(split(text, ' '))` (empty
     * tokens from leading/trailing/consecutive spaces are elements too).
-    * Fuses the split's full token array + array_distinct's per-row
-    * UTF8String hash set into the slice-table scan (zero allocation per
-    * duplicate token; one UTF8String per DISTINCT token). Feeds the
-    * t08/t15 models and the d05/d16 cached token sets.
+    * A token is a 1-token passage, so this is [[passagesDistinct]] at
+    * w = 1. Feeds the t08/t15 models and the d05/d16 cached token sets.
     */
-  def distinctTokens(s: UTF8String): ArrayData = {
-    val bytes = s.getBytes
-    val n = bytes.length
-    var nTok = 1
-    var i = 0
-    while (i < n) { if (bytes(i) == ' ') nTok += 1; i += 1 }
-    var cap = 8
-    while (cap < nTok * 2) cap <<= 1
-    val hs = new Array[Long](cap)
-    val offs = new Array[Int](cap)
-    val lns = new Array[Int](cap)
-    val used = new Array[Boolean](cap)
-    val out = new java.util.ArrayList[AnyRef](nTok)
-    def offer(off: Int, l: Int): Unit = {
-      var h = 1125899906842597L
-      var k = off
-      val end = off + l
-      while (k < end) { h = h * 31 + (bytes(k) & 0xff); k += 1 }
-      var slot = ((h ^ (h >>> 32)) & (cap - 1)).toInt
-      var done = false
-      while (!done) {
-        if (!used(slot)) {
-          used(slot) = true; hs(slot) = h; offs(slot) = off; lns(slot) = l
-          out.add(UTF8String.fromBytes(
-            java.util.Arrays.copyOfRange(bytes, off, off + l)))
-          done = true
-        } else if (hs(slot) == h && lns(slot) == l && {
-            var m = 0
-            val o2 = offs(slot)
-            while (m < l && bytes(o2 + m) == bytes(off + m)) m += 1
-            m == l
-          }) done = true
-        else slot = (slot + 1) & (cap - 1)
-      }
-    }
-    var tokStart = 0
-    i = 0
-    while (i < n) {
-      if (bytes(i) == ' ') { offer(tokStart, i - tokStart); tokStart = i + 1 }
-      i += 1
-    }
-    offer(tokStart, n - tokStart)
-    new GenericArrayData(out.toArray)
-  }
+  def distinctTokens(s: UTF8String): ArrayData = passagesDistinct(s, 1)
 
   /** DISTINCT aligned `w`-token passages in ONE pass, FIRST-OCCURRENCE
     * order — bit-identical to `array_distinct(graft_passages(text, w))`.
-    * Same fusion as [[distinctTokens]]; feeds the t14 lexicon build,
-    * whose explode previously materialized every passage TWICE (the
-    * passages array, then array_distinct's rebuilt set).
+    * Fuses the passage walk and array_distinct's per-row UTF8String hash
+    * set into one [[SliceSet]] scan: zero allocation per duplicate
+    * passage, one UTF8String per DISTINCT one. Feeds the t14 lexicon
+    * build, whose explode previously materialized every passage TWICE
+    * (the passages array, then array_distinct's rebuilt set).
     */
   def passagesDistinct(s: UTF8String, w: Int): ArrayData = {
     require(w >= 1, s"passage width must be >= 1, got $w")
     val bytes = s.getBytes
-    val nb = bytes.length
-    val approx = nb / (4 * math.max(w, 1)) + 2
-    var cap = 8
-    while (cap < approx * 2) cap <<= 1
-    var hs = new Array[Long](cap)
-    var offs = new Array[Int](cap)
-    var lns = new Array[Int](cap)
-    var used = new Array[Boolean](cap)
-    var nSeen = 0
+    val approx = bytes.length / 4 / w + 2
+    val seen = new SliceSet(bytes, approx)
     val out = new java.util.ArrayList[AnyRef](approx)
-    def grow(): Unit = {
-      val oldCap = cap
-      cap <<= 1
-      val nhs = new Array[Long](cap)
-      val noffs = new Array[Int](cap)
-      val nlns = new Array[Int](cap)
-      val nused = new Array[Boolean](cap)
-      var j = 0
-      while (j < oldCap) {
-        if (used(j)) {
-          var slot = ((hs(j) ^ (hs(j) >>> 32)) & (cap - 1)).toInt
-          while (nused(slot)) slot = (slot + 1) & (cap - 1)
-          nused(slot) = true; nhs(slot) = hs(j)
-          noffs(slot) = offs(j); nlns(slot) = lns(j)
-        }
-        j += 1
-      }
-      hs = nhs; offs = noffs; lns = nlns; used = nused
-    }
-    def offer(off: Int, l: Int): Unit = {
-      if ((nSeen + 1) * 2 > cap) grow()
-      var h = 1125899906842597L
-      var k = off
-      val end = off + l
-      while (k < end) { h = h * 31 + (bytes(k) & 0xff); k += 1 }
-      var slot = ((h ^ (h >>> 32)) & (cap - 1)).toInt
-      var done = false
-      while (!done) {
-        if (!used(slot)) {
-          used(slot) = true; hs(slot) = h; offs(slot) = off; lns(slot) = l
-          nSeen += 1
-          out.add(UTF8String.fromBytes(
-            java.util.Arrays.copyOfRange(bytes, off, off + l)))
-          done = true
-        } else if (hs(slot) == h && lns(slot) == l && {
-            var m = 0
-            val o2 = offs(slot)
-            while (m < l && bytes(o2 + m) == bytes(off + m)) m += 1
-            m == l
-          }) done = true
-        else slot = (slot + 1) & (cap - 1)
-      }
-    }
     var start = 0
-    var spaces = 0
-    var i = 0
-    while (i < nb) {
-      if (bytes(i) == 0x20) {
-        spaces += 1
-        if (spaces == w) { offer(start, i - start); start = i + 1; spaces = 0 }
-      }
-      i += 1
+    while (start <= bytes.length) {
+      val end = passageEnd(bytes, start, w)
+      if (seen.add(start, end - start))
+        out.add(UTF8String.fromBytes(java.util.Arrays.copyOfRange(bytes, start, end)))
+      start = end + 1
     }
-    offer(start, nb - start)
     new GenericArrayData(out.toArray)
   }
 
@@ -1133,24 +960,13 @@ object TextHash {
     */
   def langScores(s: UTF8String): org.apache.spark.sql.catalyst.InternalRow = {
     val b = s.getBytes
-    val n = b.length
     val out = new Array[Any](langMarkerBytes.length)
     var lg = 0
     while (lg < langMarkerBytes.length) {
       val pats = langMarkerBytes(lg)
       var total = 0L
       var k = 0
-      while (k < pats.length) {
-        val p = pats(k)
-        val pl = p.length
-        var j = 0
-        while (j + pl <= n) {
-          var m = 0
-          while (m < pl && b(j + m) == p(m)) m += 1
-          if (m == pl) { total += 1; j += pl } else j += 1
-        }
-        k += 1
-      }
+      while (k < pats.length) { total += countMatches(b, pats(k)); k += 1 }
       out(lg) = total
       lg += 1
     }
@@ -1280,6 +1096,30 @@ object TextHash {
   val MinhashMixes: Array[Long] =
     Array(2654435761L, 1099087573L, 2246822519L, 3266489917L)
 
+  /** The byte k-gram chain of `s`, or null below k bytes: element i =
+    * fold(bytes[i, i+k), (acc, b) -> (acc*31 + b) mod P) over unsigned
+    * bytes, rolled with [[pow31]].
+    */
+  private def byteChain(s: UTF8String, k: Int): Array[Long] = {
+    require(k >= 1 && k <= 64, s"byte gram width $k out of range [1, 64]")
+    val bytes = s.getBytes
+    if (bytes.length < k) return null
+    val out = new Array[Long](bytes.length - k + 1)
+    val lead = pow31(k)
+    var g = 0L
+    var j = 0
+    while (j < k) { g = (g * 31 + (bytes(j) & 0xff)) % P; j += 1 }
+    out(0) = g
+    var i = 1
+    while (i < out.length) {
+      g = ((g - (bytes(i - 1) & 0xff) * lead % P + P) * 31 +
+        (bytes(i + k - 1) & 0xff)) % P
+      out(i) = g
+      i += 1
+    }
+    out
+  }
+
   /** d29/m10's ALIGNMENT-TOLERANT media signature: 4 independent
     * min-hashes over the payload's byte k-gram rolling hashes, each
     * truncated to 15 bits and packed into one 60-bit long — the d15/d25
@@ -1290,55 +1130,17 @@ object TextHash {
     * perturbs at most 2k−1 of the ~n byte k-grams: the gram SET's Jaccard
     * stays ≥ (G−k)/(G+k−1), each block's min-hash survives with that
     * probability, and two surviving blocks put the pair inside pigeonhole
-    * completeness. Block j = (min over grams g of g·C_j mod P) mod 2^15.
-    * Null when the payload has fewer than k bytes. Byte-addressed
-    * deterministic integer arithmetic; the DuckDB twin computes the same
-    * chain via ascii(substr(...)) (byte = codepoint on the ASCII
-    * testdata, the m03/m04 contract).
+    * completeness. Block j = (min over grams g of g·C_j mod P) mod 2^15,
+    * i.e. [[byteMinhashArr]]`(s, k, 4)` packed. Null when the payload has
+    * fewer than k bytes. Byte-addressed deterministic integer arithmetic;
+    * the DuckDB twin computes the same chain via ascii(substr(...)) (byte
+    * = codepoint on the ASCII testdata, the m03/m04 contract).
     */
-  /** 31^(k-1) mod P — the leading-term weight the rolling byte-gram hash
-    * subtracts (round 21: the per-position O(k) gram re-fold in the three
-    * byte-gram kernels below is O(1) rolling — g' = (g − b₀·31^(k−1))·31 +
-    * b_k mod P, exactly the same value chain; all intermediates fit a
-    * long: values < P < 2^30, products < 2^60).
-    */
-  private def pow31(k: Int): Long = {
-    var p = 1L
-    var j = 1
-    while (j < k) { p = p * 31 % P; j += 1 }
-    p
-  }
-
   def byteMinhash(s: UTF8String, k: Int): java.lang.Long = {
-    require(k >= 1 && k <= 64, s"byte gram width $k out of range [1, 64]")
-    val bytes = s.getBytes
-    val n = bytes.length
-    if (n < k) return null
-    var m0 = Long.MaxValue; var m1 = Long.MaxValue
-    var m2 = Long.MaxValue; var m3 = Long.MaxValue
-    val lead = pow31(k)
-    // first gram folds in full; every later position rolls in O(1)
-    var g = 0L
-    var j = 0
-    while (j < k) { g = (g * 31 + (bytes(j) & 0xff)) % P; j += 1 }
-    var i = 0
-    while (i + k <= n) {
-      if (i > 0)
-        g = ((g - (bytes(i - 1) & 0xff) * lead % P + P) * 31 +
-          (bytes(i + k - 1) & 0xff)) % P
-      val v0 = g * 2654435761L % P
-      val v1 = g * 1099087573L % P
-      val v2 = g * 2246822519L % P
-      val v3 = g * 3266489917L % P
-      if (v0 < m0) m0 = v0
-      if (v1 < m1) m1 = v1
-      if (v2 < m2) m2 = v2
-      if (v3 < m3) m3 = v3
-      i += 1
-    }
-    java.lang.Long.valueOf(
-      (m0 % 32768L) | ((m1 % 32768L) << 15) |
-        ((m2 % 32768L) << 30) | ((m3 % 32768L) << 45))
+    val m = byteMins(byteChain(s, k), 4)
+    if (m == null) null
+    else java.lang.Long.valueOf((m(0) % 32768L) | ((m(1) % 32768L) << 15) |
+      ((m(2) % 32768L) << 30) | ((m(3) % 32768L) << 45))
   }
 
   /** 16 further multiplicative mixes for d29's declared SKETCH pre-gate:
@@ -1348,6 +1150,11 @@ object TextHash {
     */
   val VerifyMixes: Array[Long] =
     Array.tabulate(16)(j => (2654435761L * (2 * j + 3)) % 4294967296L | 1L)
+
+  /** Every byte-minhash mix in index order: [[MinhashMixes]], then
+    * [[VerifyMixes]].
+    */
+  private val AllMixes: Array[Long] = MinhashMixes ++ VerifyMixes
 
   /** d29's UNTRUNCATED signature: the first `n` byte-k-gram min-hashes as
     * raw values mod P — indexes 0–3 are exactly [[byteMinhash]]'s four
@@ -1361,45 +1168,38 @@ object TextHash {
     * regardless of n. Null when the payload has fewer than k bytes.
     */
   def byteMinhashArr(s: UTF8String, k: Int, n: Int): ArrayData = {
-    require(k >= 1 && k <= 64, s"byte gram width $k out of range [1, 64]")
-    require(n >= 1 && n <= MinhashMixes.length + VerifyMixes.length,
-      s"minhash count $n out of range [1, 20]")
-    val bytes = s.getBytes
-    val len = bytes.length
-    if (len < k) return null
-    val mixes = new Array[Long](n)
-    var b = 0
-    while (b < n) {
-      mixes(b) = if (b < MinhashMixes.length) MinhashMixes(b)
-        else VerifyMixes(b - MinhashMixes.length)
-      b += 1
-    }
-    val mins = Array.fill(n)(Long.MaxValue)
-    val lead = pow31(k)
-    var g = 0L
-    var j = 0
-    while (j < k) { g = (g * 31 + (bytes(j) & 0xff)) % P; j += 1 }
+    val gs = byteChain(s, k)
+    require(n >= 1 && n <= AllMixes.length, s"minhash count $n out of range [1, 20]")
+    val m = byteMins(gs, n)
+    if (m == null) null else ArrayData.toArrayData(m)
+  }
+
+  /** For each of the first `n` mixes C, the minimum over grams g of
+    * g·C mod P; null when `gs` is.
+    */
+  private def byteMins(gs: Array[Long], n: Int): Array[Long] = {
+    if (gs == null) return null
+    val mins = new Array[Long](n)
+    java.util.Arrays.fill(mins, Long.MaxValue)
     var i = 0
-    while (i + k <= len) {
-      if (i > 0)
-        g = ((g - (bytes(i - 1) & 0xff) * lead % P + P) * 31 +
-          (bytes(i + k - 1) & 0xff)) % P
-      b = 0
+    while (i < gs.length) {
+      var b = 0
       while (b < n) {
-        val v = g * mixes(b) % P
+        val v = gs(i) * AllMixes(b) % P
         if (v < mins(b)) mins(b) = v
         b += 1
       }
       i += 1
     }
-    ArrayData.toArrayData(mins)
+    mins
   }
 
   /** t21's profile-scoring kernel: the count of n-gram POSITIONS of `s`
     * whose n-byte window equals any member of `grams` (a small literal
     * profile set — all members must share one byte width n ≤ 8). One
-    * rolling byte scan per row: the window packs into a long, membership
-    * is a binary search over the packed profile — where the HOF twin
+    * rolling byte scan per row: the window packs into a long
+    * ([[packGram]]), membership is a binary search over the packed
+    * profile — where the HOF twin
     * (`list_filter(range(...), i -> list_contains(profile, substr(...)))`)
     * allocates a substring and linear-scans the profile per position,
     * interpreted. Byte-addressed (byte = codepoint on the ASCII testdata,
@@ -1409,20 +1209,16 @@ object TextHash {
   def gramHits(s: UTF8String, grams: ArrayData): Int = {
     val m = grams.numElements()
     if (m == 0) return 0
-    val first = grams.getUTF8String(0).getBytes
-    val n = first.length
+    val n = grams.getUTF8String(0).numBytes()
     require(n >= 1 && n <= 8,
       s"profile gram width $n out of range [1, 8]")
     val packed = new Array[Long](m)
     var i = 0
     while (i < m) {
-      val gb = grams.getUTF8String(i).getBytes
-      require(gb.length == n,
-        s"profile grams must share one byte width ($n): got ${gb.length}")
-      var v = 0L
-      var j = 0
-      while (j < n) { v = (v << 8) | (gb(j) & 0xff); j += 1 }
-      packed(i) = v
+      val g = grams.getUTF8String(i)
+      require(g.numBytes() == n,
+        s"profile grams must share one byte width ($n): got ${g.numBytes()}")
+      packed(i) = packGram(g)
       i += 1
     }
     java.util.Arrays.sort(packed)
@@ -1498,15 +1294,7 @@ object TextHash {
         while (i < n - 1) { w = (w << 8) | (bytes(i) & 0xff); i += 1 }
         while (i < len) {
           w = ((w << 8) | (bytes(i) & 0xff)) & mask
-          var lo = 0; var hi = m - 1
-          var hit = -1
-          while (lo <= hi && hit < 0) {
-            val mid = (lo + hi) >>> 1
-            val pv = packed.getLong(mid)
-            if (pv == w) hit = mid
-            else if (pv < w) lo = mid + 1
-            else hi = mid - 1
-          }
+          val hit = sortedIndex(packed, w)
           if (hit >= 0) {
             // walk the equal run: a gram shared by several languages
             // scores each of them (the per-language kernel's semantics)
@@ -1531,24 +1319,8 @@ object TextHash {
     * shingle set). Null when the payload has fewer than k bytes.
     */
   def byteGramChain(s: UTF8String, k: Int): ArrayData = {
-    require(k >= 1 && k <= 64, s"byte gram width $k out of range [1, 64]")
-    val bytes = s.getBytes
-    val n = bytes.length
-    if (n < k) return null
-    val out = new Array[Long](n - k + 1)
-    val lead = pow31(k)
-    var g = 0L
-    var j = 0
-    while (j < k) { g = (g * 31 + (bytes(j) & 0xff)) % P; j += 1 }
-    var i = 0
-    while (i + k <= n) {
-      if (i > 0)
-        g = ((g - (bytes(i - 1) & 0xff) * lead % P + P) * 31 +
-          (bytes(i + k - 1) & 0xff)) % P
-      out(i) = g
-      i += 1
-    }
-    new GenericArrayData(out)
+    val gs = byteChain(s, k)
+    if (gs == null) null else new GenericArrayData(gs)
   }
 
   /** Strided byte-sample "thumbnail" hex (m05's resize stub): uppercase hex
@@ -1733,24 +1505,6 @@ object VecOps {
     acc
   }
 
-  /** One IVF-PQ asymmetric-distance TERM (the per-subspace encode + score
-    * of [[graft.ext.Similarity.adcTerm]]) as a single compiled loop:
-    * over the `cents` codebook (array<struct<cluster int, cvec
-    * array<double>>>), find the codeword minimizing the squared L2 to
-    * `r[off, off+len)` — ties to the LOWEST cluster id, exactly the
-    * lexicographic (dd, cluster) struct-min the SQL `array_min(transform(
-    * ...))` form computes — then return the squared L2 from
-    * `rqe[off, off+len)` to that codeword. Every distance is the same
-    * sequential left-fold as [[d2D]] over the offset window, so the value
-    * is bit-identical to the slice+HOF form it replaces; what it removes
-    * is the per-row interpreted lambda + one named_struct allocation PER
-    * CODEWORD per subspace (at kcode=64 that was 256 allocations per
-    * scored candidate — the ADC scan's hot path, x23/x25/x28/s31/s32 and
-    * every recall curve). Null when either window exceeds its array or
-    * any codeword width differs from `len` (the HOF form degrades
-    * entry-by-entry on malformed codebooks; a codebook is fixed-width by
-    * construction, so strict-null is the honest contract).
-    */
   /** The k-means assignment argmin (the SQL
     * `array_min(transform(cents, ct -> struct(dd, c)))` that
     * [[graft.ext.Similarity.bestCell]] replaced) as one compiled loop:
@@ -1829,6 +1583,24 @@ object VecOps {
     bestC
   }
 
+  /** One IVF-PQ asymmetric-distance TERM (the per-subspace encode + score
+    * of [[graft.ext.Similarity.adcTerm]]) as a single compiled loop:
+    * over the `cents` codebook (array<struct<cluster int, cvec
+    * array<double>>>), find the codeword minimizing the squared L2 to
+    * `r[off, off+len)` — ties to the LOWEST cluster id, exactly the
+    * lexicographic (dd, cluster) struct-min the SQL `array_min(transform(
+    * ...))` form computes — then return the squared L2 from
+    * `rqe[off, off+len)` to that codeword. Every distance is the same
+    * sequential left-fold as [[d2D]] over the offset window, so the value
+    * is bit-identical to the slice+HOF form it replaces; what it removes
+    * is the per-row interpreted lambda + one named_struct allocation PER
+    * CODEWORD per subspace (at kcode=64 that was 256 allocations per
+    * scored candidate — the ADC scan's hot path, x23/x25/x28/s31/s32 and
+    * every recall curve). Null when either window exceeds its array or
+    * any codeword width differs from `len` (the HOF form degrades
+    * entry-by-entry on malformed codebooks; a codebook is fixed-width by
+    * construction, so strict-null is the honest contract).
+    */
   def adcTermD(r: ArrayData, rqe: ArrayData, cents: ArrayData,
       off: Int, len: Int): java.lang.Double = {
     if (r.numElements() < off + len || rqe.numElements() < off + len)

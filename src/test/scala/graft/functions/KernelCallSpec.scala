@@ -107,4 +107,16 @@ class KernelCallSpec extends graft.SparkSpec {
     }
     if (offenders.nonEmpty) fail(offenders.distinct.mkString("\n"))
   }
+
+  test("TextHash holds one byte-slice hash table") {
+    // The slice-table policy (hash seed, probe, empty-slot marker, growth)
+    // lives in one class; a second seed or linear-probe step means a
+    // kernel grew its own copy again.
+    val text = java.nio.file.Files.readString(
+      java.nio.file.Paths.get("src/main/scala/graft/functions/TextHash.scala"))
+    val seeds = "1125899906842597L".r.findAllMatchIn(text).size
+    val probes = raw"\(\s*slot\s*\+\s*1\s*\)".r.findAllMatchIn(text).size
+    assert(seeds === 1, "copies of the slice-hash seed")
+    assert(probes === 1, "copies of the linear-probe step")
+  }
 }

@@ -31,6 +31,38 @@ class TextHashSpec extends AnyFunSuite {
   private val truncatedTail =
     UTF8String.fromBytes(Array[Byte]('a', ' ', 0xE2.toByte))
 
+  /** A 3-byte lead byte (0xE2) followed by ASCII inside the string: Spark
+    * decodes `E2 61 62 20 63` to "�ab c", so the lead byte is one
+    * codepoint and swallows nothing after it.
+    */
+  private val invalidLead =
+    UTF8String.fromBytes(Array(0xE2, 0x61, 0x62, 0x20, 0x63).map(_.toByte))
+
+  private def hex(s: UTF8String): String =
+    s.getBytes.map(b => f"${b & 0xff}%02X").mkString(" ")
+
+  /** `count` seeded byte strings built from ASCII words, spaces,
+    * well-formed multi-byte sequences and ill-formed ones: invalid lead
+    * bytes mid-string, stray continuation bytes, overlong forms, an
+    * encoded surrogate, out-of-range leads and truncated sequences.
+    */
+  private def malformedInputs(seed: Long, count: Int): Seq[UTF8String] = {
+    val pieces: IndexedSeq[Seq[Int]] = IndexedSeq(
+      Seq('a'), Seq('Z'), Seq('7'), Seq('x', 'y'), Seq(' '), Seq(' '), Seq(','),
+      Seq(0xC3, 0xA9), Seq(0xE4, 0xB8, 0xAD), Seq(0xF0, 0x9F, 0x98, 0x80),
+      Seq(0x80), Seq(0xBF),
+      Seq(0xC0, 0x80), Seq(0xC1, 0xBF), Seq(0xE0, 0x80, 0x80), Seq(0xE0, 0x9F),
+      Seq(0xF0, 0x80, 0x80, 0x80), Seq(0xF0, 0x8F),
+      Seq(0xED, 0xA0, 0x80), Seq(0xF4, 0x90, 0x80, 0x80),
+      Seq(0xC3), Seq(0xE2), Seq(0xE2, 0x82), Seq(0xF0, 0x9F), Seq(0xF0, 0x9F, 0x98),
+      Seq(0xF5), Seq(0xF8), Seq(0xFF))
+    val rnd = new scala.util.Random(seed)
+    Seq.fill(count) {
+      val parts = Seq.fill(rnd.nextInt(14))(pieces(rnd.nextInt(pieces.length)))
+      UTF8String.fromBytes(parts.flatten.map(_.toByte).toArray)
+    }
+  }
+
   test("polyHash matches the reference fold") {
     for (s <- Seq("", "a", "hello", "hello world", "trés café", "中文字符",
                   "a b  c", " x ")) {
@@ -64,6 +96,83 @@ class TextHashSpec extends AnyFunSuite {
     // < 5 tokens → null (no 5-grams)
     assert(TextHash.gram5Distinct(u("a b c d")) === null)
     assert(TextHash.gram5Distinct(u("")) === null)
+  }
+
+  /** The naive word-n-gram chain: each position re-folds its n token hashes. */
+  private def refChain(s: String, n: Int): Seq[Long] = {
+    val th = s.split(" ", -1).map(refPoly)
+    (0 to th.length - n).map(i =>
+      th.slice(i, i + n).foldLeft(0L)((acc, h) => (acc * 31 + h) % P))
+  }
+
+  /** Word strings over a small alphabet with space bias, so repeated,
+    * empty and multi-byte tokens all occur.
+    */
+  private val wordTexts = {
+    import org.scalacheck.Gen
+    Gen.listOf(Gen.oneOf("a", "b", "ab", "é", " ", " ")).map(_.mkString)
+  }
+
+  test("gramChain equals the naive per-position fold") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    for (s <- Seq("a b c d e", "x x x x x x", "a b  c d e f", "one", "", "中文 字符 ok");
+         n <- 1 to 6) {
+      val want = refChain(s, n)
+      val got = Option(TextHash.gramChain(u(s), n)).map(_.toLongArray().toSeq)
+      assert(got === (if (want.isEmpty) None else Some(want)), s"'$s' n=$n")
+    }
+    val r = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(500),
+      Prop.forAll(wordTexts, Gen.choose(1, 6)) { (s, n) =>
+        val want = refChain(s, n)
+        Option(TextHash.gramChain(u(s), n)).map(_.toLongArray().toSeq) ==
+          (if (want.isEmpty) None else Some(want))
+      })
+    assert(r.passed, r.status.toString)
+  }
+
+  test("winnow equals the naive per-window minimum, ties to the earliest position") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    def ref(s: String, n: Int, w: Int): Option[Seq[(Int, Long)]] = {
+      val gs = refChain(s, n)
+      if (gs.length < w) None
+      else Some((0 to gs.length - w).map { start =>
+        (start until start + w).minBy(i => (gs(i), i))
+      }.distinct.map(p => (p, gs(p))))
+    }
+    def got(s: String, n: Int, w: Int): Option[Seq[(Int, Long)]] =
+      Option(TextHash.winnow(u(s), n, w)).map { a =>
+        (0 until a.numElements()).map { i =>
+          val r = a.getStruct(i, 2)
+          (r.getInt(0), r.getLong(1))
+        }
+      }
+    for (s <- Seq("a a a a a a", "a b a b a b a", "e d c b a", "a b c d e f g",
+                  "one two", "");
+         n <- 1 to 3; w <- 1 to 4)
+      assert(got(s, n, w) === ref(s, n, w), s"'$s' n=$n w=$w")
+    val r = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(500),
+      Prop.forAll(wordTexts, Gen.choose(1, 4), Gen.choose(1, 5)) { (s, n, w) =>
+        got(s, n, w) == ref(s, n, w)
+      })
+    assert(r.passed, r.status.toString)
+  }
+
+  test("sortedHits counts the distinct gs values that appear in the sorted snap") {
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    def hits(gs: Seq[Long], snap: Seq[Long]): Int =
+      TextHash.sortedHits(ArrayData.toArrayData(gs.toArray),
+        ArrayData.toArrayData(snap.distinct.sorted.toArray))
+    def ref(gs: Seq[Long], snap: Seq[Long]): Int = gs.distinct.count(snap.toSet)
+    assert(hits(Seq(3L, 1L, 3L, 7L), Seq(1L, 3L, 5L)) === 2)
+    assert(hits(Nil, Seq(1L)) === 0 && hits(Seq(1L), Nil) === 0)
+    val small = Gen.listOf(Gen.chooseNum(-20L, 20L))
+    val r = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(500),
+      Prop.forAll(small, small) { (gs, snap) => hits(gs, snap) == ref(gs, snap) })
+    assert(r.passed, r.status.toString)
   }
 
   test("minHashSig is null below 2 tokens, 8 longs otherwise") {
@@ -667,7 +776,7 @@ class TextHashSpec extends AnyFunSuite {
       "zz zy zx zw zv zu zt zs zr zq zp zo zn zm zl zk zj zi zh zg",
       "same same same different diff",
       "longtokenwithmanychars anotherlongtoken")
-    for (s <- texts.map(u) :+ truncatedTail) {
+    for (s <- texts.map(u) :+ truncatedTail :+ invalidLead) {
       val t = s.toString
       val r = TextHash.edgeNgramStats(s)
       val (total, uniq, first5) = refEdgeNgrams(t)
@@ -761,7 +870,7 @@ class TextHashSpec extends AnyFunSuite {
   test("bpeishStats (round 21) equals the regexp_extract_all + " +
       "array_distinct + split(' +') form") {
     val pat = java.util.regex.Pattern.compile("[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 ]")
-    for (s <- r21Texts.map(u) :+ truncatedTail) {
+    for (s <- r21Texts.map(u) :+ truncatedTail :+ invalidLead) {
       val t = s.toString
       val m = pat.matcher(t)
       val toks = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -770,6 +879,25 @@ class TextHashSpec extends AnyFunSuite {
       assert(r.getInt(0) === toks.size, s"n_bpeish for '$t'")
       assert(r.getInt(1) === toks.distinct.size, s"n_uniq_bpeish for '$t'")
       assert(r.getInt(2) === t.split(" +", -1).length, s"n_ws_tokens for '$t'")
+    }
+  }
+
+  test("edgeNgramStats and bpeishStats count fields equal the decoded-string " +
+      "reference on seeded malformed UTF-8") {
+    // Each ill-formed sequence is one codepoint, as Spark's decode to one
+    // U+FFFD makes it. Distinct counts are left out: U+FFFD merges
+    // different invalid byte sequences, the kernels' byte compare does not.
+    val pat = java.util.regex.Pattern.compile("[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 ]")
+    for (s <- malformedInputs(seed = 20261019L, count = 10000)) {
+      val t = s.toString
+      val m = pat.matcher(t)
+      var matches = 0
+      while (m.find()) matches += 1
+      val b = TextHash.bpeishStats(s)
+      assert(b.getInt(0) === matches, s"n_bpeish for bytes ${hex(s)}")
+      assert(b.getInt(2) === t.split(" +", -1).length, s"n_ws_tokens for bytes ${hex(s)}")
+      assert(TextHash.edgeNgramStats(s).getInt(0) === refEdgeNgrams(t)._1,
+        s"n_grams for bytes ${hex(s)}")
     }
   }
 
