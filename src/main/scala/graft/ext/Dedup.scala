@@ -37,8 +37,6 @@ object PortableHash {
     md5(concat(lit(s"$salt|"), col("doc_id").cast("string"))))
 
   /** Per-token hash array for `text` split on single spaces. */
-  val sparkTokenHashes: String =
-    s"transform(split(text, ' '), t -> ${sparkPoly("t")})"
   val duckTokenHashes: String =
     s"list_transform(string_split(text, ' '), t -> ${duckPoly("t")})"
 
@@ -1317,7 +1315,6 @@ object Dedup {
     */
   val BloomM = 524288
   val BloomK = 7
-  val BloomWords: Int = BloomM / 64
   val BloomBitsKey = "spark.graft.dedup.bloomBits"
 
   /** The knob's DEFAULT is `auto` (round-16, the resolveCells precedent
@@ -1831,6 +1828,114 @@ object Dedup {
 }
 
 object DedupQueries {
+  /** The planted-pair gate (the d14 protocol, d22/d26/d30): exact counts of
+    * the truth set, the candidate set and their intersection, and
+    * precision and recall as single IEEE divisions, null over an empty
+    * denominator — guarded identically in both engines.
+    */
+  private def prGate(truth: DataFrame, cand: DataFrame): DataFrame = {
+    val ce = truth.agg(count(lit(1)).as("n_exact"))
+    val cc = cand.agg(count(lit(1)).as("n_cand"))
+    val ch = cand.intersect(truth).agg(count(lit(1)).as("n_hit"))
+    ce.crossJoin(cc).crossJoin(ch).select(
+      col("n_exact"), col("n_cand"), col("n_hit"),
+      when(col("n_cand") > 0,
+        col("n_hit").cast("double") / col("n_cand")).as("precision"),
+      when(col("n_exact") > 0,
+        col("n_hit").cast("double") / col("n_exact")).as("recall"))
+  }
+
+  /** The pairs of the `cand` CTE that are in the `truth` CTE. */
+  private def hitJoin(cand: String): String =
+    s"""FROM $cand c
+        JOIN truth t ON c.doc_a = t.doc_a
+                    AND c.doc_b = t.doc_b"""
+
+  /** The oracle twin of [[prGate]], over the `truth` and `cand` CTEs. */
+  private val prGateSql: String = {
+    val hit = hitJoin("cand")
+    s"""SELECT (SELECT CAST(count(*) AS BIGINT) FROM truth) AS n_exact,
+               (SELECT CAST(count(*) AS BIGINT) FROM cand) AS n_cand,
+               (SELECT CAST(count(*) AS BIGINT) $hit) AS n_hit,
+               CASE WHEN (SELECT count(*) FROM cand) > 0
+                    THEN CAST((SELECT count(*) $hit) AS DOUBLE)
+                         / (SELECT count(*) FROM cand) END AS precision,
+               CASE WHEN (SELECT count(*) FROM truth) > 0
+                    THEN CAST((SELECT count(*) $hit) AS DOUBLE)
+                         / (SELECT count(*) FROM truth) END AS recall"""
+  }
+
+  /** d26/d30's planted media set: the doc_id < 100 slice of `docs` with at
+    * least `minBytes` bytes, and one copy of each at doc_id + `off` whose
+    * middle character is replaced by `mark` (deleted when None). Returns
+    * slice ∪ copies and the truth pairs (slice doc, copy) at Levenshtein
+    * distance <= 1, by string comparison (the d22 discipline): no hashing,
+    * so a collision forging a candidate reads as precision < 1.
+    */
+  private def plantedMedia(docs: DataFrame, minBytes: Int, off: Int,
+      mark: Option[String]): (DataFrame, DataFrame) = {
+    val slice = graft.util.Caches.retain(
+      docs.filter(col("doc_id") < 100 && octet_length(col("text")) >= minBytes)
+        .select("doc_id", "text"))
+    val copies = slice.select((col("doc_id") + off).as("doc_id"),
+      concat(Seq(expr("substring(text, 1, length(text) DIV 2)")) ++
+        mark.map(lit(_)) :+
+        expr("substring(text, length(text) DIV 2 + 2)"): _*).as("text"))
+    // |len(a)-len(b)| <= 1 is NECESSARY for distance <= 1: the cheap
+    // length gate prunes the O(slice²) pair space before the O(len²) DP
+    // runs (unbounded, d26's truth pass cost 9 s of the 9.05 s bench wall;
+    // gated it is sub-second) — the truth set is unchanged.
+    val truth = slice.select(col("doc_id").as("doc_a"), col("text").as("ta"))
+      .crossJoin(broadcast(copies.select(col("doc_id").as("doc_b"),
+        col("text").as("tb"))))
+      .filter(abs(length(col("ta")) - length(col("tb"))) <= 1 &&
+        levenshtein(col("ta"), col("tb")) <= 1)
+      .select("doc_a", "doc_b")
+    (slice.unionByName(copies), truth)
+  }
+
+  /** The pairs that cross from the slice (doc_id < `off`) to a copy. */
+  private def crossing(pairs: DataFrame, off: Int): DataFrame =
+    pairs.filter(col("doc_a") < off && col("doc_b") >= off)
+      .select("doc_a", "doc_b")
+
+  /** d25's dHash pairs over `aug`. */
+  private def phashPairs(aug: DataFrame): DataFrame =
+    Dedup.hammingBlockPairs(Multimodal.mediaPhash(aug)
+      .select(col("doc_id"), col("phash").as("sig")))
+
+  /** The oracle twin of [[plantedMedia]]: the `slice`, `copies` and `aug`
+    * CTEs.
+    */
+  private def plantedMediaCtes(minBytes: Int, off: Int,
+      mark: Option[String]): String =
+    s"""slice AS MATERIALIZED (
+          SELECT doc_id, text FROM documents
+          WHERE doc_id < 100
+            AND octet_length(encode(text)) >= $minBytes),
+        copies AS MATERIALIZED (
+          SELECT doc_id + $off AS doc_id,
+                 substr(text, 1, length(text) // 2) ||
+                 ${mark.fold("")(m => s"'$m' ||")}
+                 substr(text, length(text) // 2 + 2) AS text
+          FROM slice),
+        aug AS (SELECT * FROM slice
+                UNION ALL SELECT * FROM copies)"""
+
+  /** [[plantedMedia]]'s truth pairs over the `slice` and `copies` CTEs. */
+  private val mediaTruthCte =
+    """truth AS (SELECT s.doc_id AS doc_a, c.doc_id AS doc_b
+                 FROM slice s, copies c
+                 WHERE abs(length(s.text) - length(c.text)) <= 1
+                   AND levenshtein(s.text, c.text) <= 1)"""
+
+  /** [[crossing]] of [[phashPairs]], over the `ph` CTE. */
+  private def phashCrossingSql(off: Int): String =
+    s"""SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+        FROM ph a JOIN ph b ON a.doc_id < b.doc_id
+        WHERE bit_count(xor(a.phash, b.phash)) <= 2
+          AND a.doc_id < $off AND b.doc_id >= $off"""
+
   // `def`, not `val`: the d17 oracle string resolves the kmeansCells conf
   // knob at GENERATION time (Dedup.confInt), so the catalogue must rebuild
   // per access — freezing it at object init would re-open the engine-reads-
@@ -2101,16 +2206,7 @@ object DedupQueries {
           .filter(size(array_intersect(col("ta"), col("tb"))).cast("double")
             / size(array_union(col("ta"), col("tb"))) >= 0.5)
           .select("doc_a", "doc_b")
-        val cand = Dedup.lshPairs(aug)
-        val ce = exact.agg(count(lit(1)).as("n_exact"))
-        val cc = cand.agg(count(lit(1)).as("n_cand"))
-        val ch = cand.intersect(exact).agg(count(lit(1)).as("n_hit"))
-        ce.crossJoin(cc).crossJoin(ch).select(
-          col("n_exact"), col("n_cand"), col("n_hit"),
-          when(col("n_cand") > 0,
-            col("n_hit").cast("double") / col("n_cand")).as("precision"),
-          when(col("n_exact") > 0,
-            col("n_hit").cast("double") / col("n_exact")).as("recall"))
+        prGate(exact, Dedup.lshPairs(aug))
       },
       Some {
         // planted copies have IDENTICAL text, hence identical signatures
@@ -2234,16 +2330,7 @@ object DedupQueries {
           .join(sg.toDF("doc_b", "sb"), col("doc_a") < col("doc_b"))
           .filter(arrays_overlap(col("sa"), col("sb")))
           .select("doc_a", "doc_b")
-        val cand = Dedup.exactSubstringSpans(aug).select("doc_a", "doc_b")
-        val ce = truth.agg(count(lit(1)).as("n_exact"))
-        val cc = cand.agg(count(lit(1)).as("n_cand"))
-        val ch = cand.intersect(truth).agg(count(lit(1)).as("n_hit"))
-        ce.crossJoin(cc).crossJoin(ch).select(
-          col("n_exact"), col("n_cand"), col("n_hit"),
-          when(col("n_cand") > 0,
-            col("n_hit").cast("double") / col("n_cand")).as("precision"),
-          when(col("n_exact") > 0,
-            col("n_hit").cast("double") / col("n_exact")).as("recall"))
+        prGate(truth, Dedup.exactSubstringSpans(aug).select("doc_a", "doc_b"))
       },
       Some {
         val n = Dedup.SpanN
@@ -2264,23 +2351,7 @@ object DedupQueries {
                  ${Dedup.exactSubstringCtes("aug")},
                  cand AS (SELECT doc_a, doc_b FROM runs21
                           GROUP BY doc_a, doc_b)
-            SELECT (SELECT CAST(count(*) AS BIGINT) FROM truth) AS n_exact,
-                   (SELECT CAST(count(*) AS BIGINT) FROM cand) AS n_cand,
-                   (SELECT CAST(count(*) AS BIGINT) FROM cand c
-                    JOIN truth t ON c.doc_a = t.doc_a
-                                AND c.doc_b = t.doc_b) AS n_hit,
-                   CASE WHEN (SELECT count(*) FROM cand) > 0
-                        THEN CAST((SELECT count(*) FROM cand c
-                                   JOIN truth t ON c.doc_a = t.doc_a
-                                               AND c.doc_b = t.doc_b)
-                                  AS DOUBLE)
-                             / (SELECT count(*) FROM cand) END AS precision,
-                   CASE WHEN (SELECT count(*) FROM truth) > 0
-                        THEN CAST((SELECT count(*) FROM cand c
-                                   JOIN truth t ON c.doc_a = t.doc_a
-                                               AND c.doc_b = t.doc_b)
-                                  AS DOUBLE)
-                             / (SELECT count(*) FROM truth) END AS recall"""
+            $prGateSql"""
       }),
 
     // d25: MEDIA near-dup pairing — m09's perceptual dHash fed through
@@ -2325,85 +2396,16 @@ object DedupQueries {
     // payloads. Both are MEASURED here, not assumed.
     Q("d26_media_phash_eval",
       (s, d) => {
-        val bMin = Multimodal.phashBits + 1
-        val slice = graft.util.Caches.retain(
-          Tables.documents(s, d)
-            .filter(col("doc_id") < 100 &&
-              octet_length(col("text")) >= bMin)
-            .select("doc_id", "text"))
-        val copies = slice.select((col("doc_id") + 20000).as("doc_id"),
-          concat(
-            expr("substring(text, 1, length(text) DIV 2)"), lit("~"),
-            expr("substring(text, length(text) DIV 2 + 2)")).as("text"))
-        val aug = slice.unionByName(copies)
-        // truth by string comparison (the d22 discipline): no hashing, so
-        // a collision forging a candidate reads as precision < 1
-        // |len(a)-len(b)| <= 1 is NECESSARY for distance <= 1: the cheap
-        // length gate prunes the O(slice²) pair space before the O(len²)
-        // DP runs (unbounded, the truth pass cost 9 s of the 9.05 s bench
-        // wall; gated it is sub-second) — the truth set is unchanged.
-        val truth = slice.select(col("doc_id").as("doc_a"),
-            col("text").as("ta"))
-          .crossJoin(broadcast(copies.select(col("doc_id").as("doc_b"),
-            col("text").as("tb"))))
-          .filter(abs(length(col("ta")) - length(col("tb"))) <= 1 &&
-            levenshtein(col("ta"), col("tb")) <= 1)
-          .select("doc_a", "doc_b")
-        val cand = Dedup.hammingBlockPairs(
-            Multimodal.mediaPhash(aug)
-              .select(col("doc_id"), col("phash").as("sig")))
-          .filter(col("doc_a") < 20000 && col("doc_b") >= 20000)
-          .select("doc_a", "doc_b")
-        val ce = truth.agg(count(lit(1)).as("n_exact"))
-        val cc = cand.agg(count(lit(1)).as("n_cand"))
-        val ch = cand.intersect(truth).agg(count(lit(1)).as("n_hit"))
-        ce.crossJoin(cc).crossJoin(ch).select(
-          col("n_exact"), col("n_cand"), col("n_hit"),
-          when(col("n_cand") > 0,
-            col("n_hit").cast("double") / col("n_cand")).as("precision"),
-          when(col("n_exact") > 0,
-            col("n_hit").cast("double") / col("n_exact")).as("recall"))
+        val (aug, truth) = plantedMedia(Tables.documents(s, d),
+          Multimodal.phashBits + 1, 20000, Some("~"))
+        prGate(truth, crossing(phashPairs(aug), 20000))
       },
-      Some {
-        val bMin = Multimodal.phashBits + 1
-        s"""WITH slice AS MATERIALIZED (
-                   SELECT doc_id, text FROM documents
-                   WHERE doc_id < 100
-                     AND octet_length(encode(text)) >= $bMin),
-                 copies AS MATERIALIZED (
-                   SELECT doc_id + 20000 AS doc_id,
-                          substr(text, 1, length(text) // 2) || '~' ||
-                          substr(text, length(text) // 2 + 2) AS text
-                   FROM slice),
-                 aug AS (SELECT * FROM slice
-                         UNION ALL SELECT * FROM copies),
-                 ph AS MATERIALIZED (${Multimodal.mediaPhashSql("aug")}),
-                 truth AS (SELECT s.doc_id AS doc_a, c.doc_id AS doc_b
-                           FROM slice s, copies c
-                           WHERE abs(length(s.text) - length(c.text)) <= 1
-                             AND levenshtein(s.text, c.text) <= 1),
-                 cand AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-                          FROM ph a JOIN ph b ON a.doc_id < b.doc_id
-                          WHERE bit_count(xor(a.phash, b.phash)) <= 2
-                            AND a.doc_id < 20000 AND b.doc_id >= 20000)
-            SELECT (SELECT CAST(count(*) AS BIGINT) FROM truth) AS n_exact,
-                   (SELECT CAST(count(*) AS BIGINT) FROM cand) AS n_cand,
-                   (SELECT CAST(count(*) AS BIGINT) FROM cand c
-                    JOIN truth t ON c.doc_a = t.doc_a
-                                AND c.doc_b = t.doc_b) AS n_hit,
-                   CASE WHEN (SELECT count(*) FROM cand) > 0
-                        THEN CAST((SELECT count(*) FROM cand c
-                                   JOIN truth t ON c.doc_a = t.doc_a
-                                               AND c.doc_b = t.doc_b)
-                                  AS DOUBLE)
-                             / (SELECT count(*) FROM cand) END AS precision,
-                   CASE WHEN (SELECT count(*) FROM truth) > 0
-                        THEN CAST((SELECT count(*) FROM cand c
-                                   JOIN truth t ON c.doc_a = t.doc_a
-                                               AND c.doc_b = t.doc_b)
-                                  AS DOUBLE)
-                             / (SELECT count(*) FROM truth) END AS recall"""
-      }),
+      Some(s"""WITH ${plantedMediaCtes(Multimodal.phashBits + 1, 20000,
+                                       Some("~"))},
+                    ph AS MATERIALIZED (${Multimodal.mediaPhashSql("aug")}),
+                    $mediaTruthCte,
+                    cand AS (${phashCrossingSql(20000)})
+               $prGateSql""")),
 
     // d29: ALIGNMENT-TOLERANT media near-dup pairing (round-16; round-17
     // closes its `weak` scale law): the byte-16-gram min-hash signature
@@ -2449,99 +2451,28 @@ object DedupQueries {
     // deletion) where the min-hash signature's recall is ~1.
     Q("d30_media_minhash_eval",
       (s, d) => {
-        val bMin = Multimodal.mhashMinBytes + 1
-        val slice = graft.util.Caches.retain(
-          Tables.documents(s, d)
-            .filter(col("doc_id") < 100 &&
-              octet_length(col("text")) >= bMin)
-            .select("doc_id", "text"))
-        val copies = slice.select((col("doc_id") + 50000).as("doc_id"),
-          concat(
-            expr("substring(text, 1, length(text) DIV 2)"),
-            expr("substring(text, length(text) DIV 2 + 2)")).as("text"))
-        val aug = slice.unionByName(copies)
-        // truth by string comparison (the d22/d26 discipline): the cheap
-        // |len| gate prunes the pair space before the O(len²) DP runs
-        val truth = slice.select(col("doc_id").as("doc_a"),
-            col("text").as("ta"))
-          .crossJoin(broadcast(copies.select(col("doc_id").as("doc_b"),
-            col("text").as("tb"))))
-          .filter(abs(length(col("ta")) - length(col("tb"))) <= 1 &&
-            levenshtein(col("ta"), col("tb")) <= 1)
-          .select("doc_a", "doc_b")
-        val cand = Dedup.mediaMinhashPairs(aug)
-          .filter(col("doc_a") < 50000 && col("doc_b") >= 50000)
-          .select("doc_a", "doc_b")
-        val dcand = Dedup.hammingBlockPairs(
-            Multimodal.mediaPhash(aug)
-              .select(col("doc_id"), col("phash").as("sig")))
-          .filter(col("doc_a") < 50000 && col("doc_b") >= 50000)
-          .select("doc_a", "doc_b")
-        val ce = truth.agg(count(lit(1)).as("n_exact"))
-        val cc = cand.agg(count(lit(1)).as("n_cand"))
-        val ch = cand.intersect(truth).agg(count(lit(1)).as("n_hit"))
-        val dh = dcand.intersect(truth).agg(count(lit(1)).as("n_dhash_hit"))
-        ce.crossJoin(cc).crossJoin(ch).crossJoin(dh).select(
-          col("n_exact"), col("n_cand"), col("n_hit"),
-          when(col("n_cand") > 0,
-            col("n_hit").cast("double") / col("n_cand")).as("precision"),
-          when(col("n_exact") > 0,
-            col("n_hit").cast("double") / col("n_exact")).as("recall"),
-          col("n_dhash_hit"),
-          when(col("n_exact") > 0,
-            col("n_dhash_hit").cast("double") / col("n_exact"))
-            .as("dhash_recall"))
+        val (aug, truth) = plantedMedia(Tables.documents(s, d),
+          Multimodal.mhashMinBytes + 1, 50000, None)
+        val dcand = crossing(phashPairs(aug), 50000)
+        prGate(truth, crossing(Dedup.mediaMinhashPairs(aug), 50000))
+          .crossJoin(
+            dcand.intersect(truth).agg(count(lit(1)).as("n_dhash_hit")))
+          .withColumn("dhash_recall", when(col("n_exact") > 0,
+            col("n_dhash_hit").cast("double") / col("n_exact")))
       },
       Some {
-        val bMin = Multimodal.mhashMinBytes + 1
-        s"""WITH slice AS MATERIALIZED (
-                   SELECT doc_id, text FROM documents
-                   WHERE doc_id < 100
-                     AND octet_length(encode(text)) >= $bMin),
-                 copies AS MATERIALIZED (
-                   SELECT doc_id + 50000 AS doc_id,
-                          substr(text, 1, length(text) // 2) ||
-                          substr(text, length(text) // 2 + 2) AS text
-                   FROM slice),
-                 aug AS (SELECT * FROM slice
-                         UNION ALL SELECT * FROM copies),
+        val dhit = hitJoin("dcand")
+        s"""WITH ${plantedMediaCtes(Multimodal.mhashMinBytes + 1, 50000, None)},
                  ${Dedup.mediaMinhashPairsSql("aug")},
                  ph AS MATERIALIZED (${Multimodal.mediaPhashSql("aug")}),
-                 truth AS (SELECT s.doc_id AS doc_a, c.doc_id AS doc_b
-                           FROM slice s, copies c
-                           WHERE abs(length(s.text) - length(c.text)) <= 1
-                             AND levenshtein(s.text, c.text) <= 1),
+                 $mediaTruthCte,
                  cand AS (SELECT doc_a, doc_b FROM mp
                           WHERE doc_a < 50000 AND doc_b >= 50000),
-                 dcand AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-                           FROM ph a JOIN ph b ON a.doc_id < b.doc_id
-                           WHERE bit_count(xor(a.phash, b.phash)) <= 2
-                             AND a.doc_id < 50000 AND b.doc_id >= 50000)
-            SELECT (SELECT CAST(count(*) AS BIGINT) FROM truth) AS n_exact,
-                   (SELECT CAST(count(*) AS BIGINT) FROM cand) AS n_cand,
-                   (SELECT CAST(count(*) AS BIGINT) FROM cand c
-                    JOIN truth t ON c.doc_a = t.doc_a
-                                AND c.doc_b = t.doc_b) AS n_hit,
-                   CASE WHEN (SELECT count(*) FROM cand) > 0
-                        THEN CAST((SELECT count(*) FROM cand c
-                                   JOIN truth t ON c.doc_a = t.doc_a
-                                               AND c.doc_b = t.doc_b)
-                                  AS DOUBLE)
-                             / (SELECT count(*) FROM cand) END AS precision,
+                 dcand AS (${phashCrossingSql(50000)})
+            $prGateSql,
+                   (SELECT CAST(count(*) AS BIGINT) $dhit) AS n_dhash_hit,
                    CASE WHEN (SELECT count(*) FROM truth) > 0
-                        THEN CAST((SELECT count(*) FROM cand c
-                                   JOIN truth t ON c.doc_a = t.doc_a
-                                               AND c.doc_b = t.doc_b)
-                                  AS DOUBLE)
-                             / (SELECT count(*) FROM truth) END AS recall,
-                   (SELECT CAST(count(*) AS BIGINT) FROM dcand c
-                    JOIN truth t ON c.doc_a = t.doc_a
-                                AND c.doc_b = t.doc_b) AS n_dhash_hit,
-                   CASE WHEN (SELECT count(*) FROM truth) > 0
-                        THEN CAST((SELECT count(*) FROM dcand c
-                                   JOIN truth t ON c.doc_a = t.doc_a
-                                               AND c.doc_b = t.doc_b)
-                                  AS DOUBLE)
+                        THEN CAST((SELECT count(*) $dhit) AS DOUBLE)
                              / (SELECT count(*) FROM truth) END
                      AS dhash_recall"""
       }),

@@ -1276,10 +1276,8 @@ object Similarity {
     * The planted id hashes vec_id (Knuth multiplicative, >>16) so it is
     * DELIBERATELY uncorrelated with the `vec_id % k` Lloyd seed — a seed
     * that equals the planted clustering would trivialize training.
-    */
-  val ClusteredPlanted = 8
-
-  /** vec_id enters every hash below masked to 2^24: unmasked, the
+    *
+    * vec_id enters every hash below masked to 2^24: unmasked, the
     * `vec_id * 2654435761` coefficient overflows BIGINT at vec_id ≳ 3.5e9
     * (non-ANSI Spark wraps silently while DuckDB raises — the engines'
     * bit-identity contract would break exactly at extreme corpus scale;
@@ -1585,7 +1583,7 @@ object Similarity {
     * engine query, the streaming shortlist processor, and the hand-written
     * oracle SQL all embed (round-12 advice: they were hard-coded
     * independently in four places — ivfPqQueryProbes defaults, the
-    * AdcShortlistProcessor shortK, the engine's post-drain rank windows,
+    * TopKAdmitProcessor shortK, the engine's post-drain rank windows,
     * and the oracle's LIMIT/rn literals — so changing any one silently
     * desynchronized the engine from its correctness gate).
     */

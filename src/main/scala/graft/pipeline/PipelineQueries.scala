@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -44,6 +45,93 @@ object PipelineQueries {
         w.println(s"${base + i * 60},${(10 + r) * 10 + i + si}.5")
       w.close()
     }
+  }
+
+  /** p09/p13's temperature mix of `rows` grouped by `key`: per-group
+    * n_docs and mass (Σ `mass`), an admission rate ∝ √mass toward 50% of
+    * the total mass (capped at 1), admission by the deterministic md5-poly
+    * coin on `salt|doc_id`, and the per-group mixing report.
+    * `holdStats` and `holdAdmitted` wrap the two small intermediate frames
+    * (p13 retains its stats and broadcasts its admission counts).
+    *
+    * Determinism: masses are exact BIGINTs; the α-weight normalizer
+    * Σ√mass is an order-sensitive double sum, so it rides the
+    * quantized-BIGINT discipline (floor(√mass·2^20) summed exactly); every
+    * remaining op is a fixed-order IEEE expression mirrored verbatim in
+    * [[temperatureMixSql]].
+    */
+  private def temperatureMix(rows: DataFrame, key: String, mass: String,
+      salt: String, holdStats: DataFrame => DataFrame = identity,
+      holdAdmitted: DataFrame => DataFrame = identity): DataFrame = {
+    val stats = holdStats(rows.groupBy(key)
+      .agg(count(lit(1)).as("n_docs"), sum(mass).as("mass")))
+    val total = stats.agg(
+      (sum(expr(
+        "CAST(floor(sqrt(CAST(mass AS DOUBLE)) * 1048576.0) AS BIGINT)"))
+        .cast("double") / 1048576.0).as("z"),
+      sum("mass").as("tot"))
+    // mass = 0 (a group of all-empty docs) makes the rate 0/0 = NaN, and
+    // Spark's non-ANSI CAST(floor(NaN*1e6) AS BIGINT) yields 0 while the
+    // DuckDB twin's identical CAST raises — a degenerate corpus would
+    // diverge the engines instead of agreeing. A massless group gets rate
+    // 0 explicitly (nothing to admit), on BOTH sides.
+    val rates = stats.crossJoin(broadcast(total))
+      .withColumn("rate", expr(
+        "CASE WHEN mass = 0 THEN 0.0 ELSE least(1.0, " +
+          "0.5 * CAST(tot AS DOUBLE) * (sqrt(CAST(mass AS DOUBLE)) / z)" +
+          " / CAST(mass AS DOUBLE)) END"))
+    val admitted = rows
+      .join(broadcast(rates.select(col(key), col("rate"))), key)
+      // poly-of-MD5, not the raw poly fold: a short 'mix|123' string
+      // never wraps mod P, so its low bits are STRUCTURED and the
+      // realized admission ran 16-100% against a 48% request
+      // (measured; the KmvBuffer scaladoc documents the same
+      // range-compression bias). MD5 provides the avalanche; the
+      // fold condenses it portably — the q59 discipline.
+      .filter(pmod(saltedDocHash(salt), lit(1000000L)) <
+        expr("CAST(floor(rate * 1000000.0) AS BIGINT)"))
+      .groupBy(key)
+      .agg(count(lit(1)).as("n_admitted"), sum(mass).as("admitted_mass"))
+    rates.select(key, "n_docs", "mass", "rate")
+      .join(holdAdmitted(admitted), Seq(key), "left_outer")
+      .select(col(key), col("n_docs"), col("mass"), col("rate"),
+        coalesce(col("n_admitted"), lit(0L)).as("n_admitted"),
+        coalesce(col("admitted_mass"), lit(0L)).as("admitted_mass"))
+  }
+
+  /** The oracle twin of [[temperatureMix]], over the relation `rel`
+    * (aliased `alias` in the admission join).
+    */
+  private def temperatureMixSql(rel: String, alias: String, key: String,
+      mass: String, salt: String): String = {
+    val hash = graft.ext.PortableHash.duckPoly(
+      s"md5('$salt|' || CAST(doc_id AS VARCHAR))")
+    s"""stats AS (SELECT $key, CAST(count(*) AS BIGINT) AS n_docs,
+                         CAST(sum($mass) AS BIGINT) AS mass
+                  FROM $rel GROUP BY $key),
+        total AS (SELECT CAST(SUM(CAST(floor(sqrt(CAST(mass AS DOUBLE))
+                            * 1048576.0) AS BIGINT)) AS DOUBLE)
+                           / 1048576.0 AS z,
+                         CAST(sum(mass) AS BIGINT) AS tot
+                  FROM stats),
+        rates AS (SELECT $key, n_docs, mass,
+                         CASE WHEN mass = 0 THEN 0.0
+                              ELSE least(1.0, 0.5 * CAST(tot AS DOUBLE)
+                                * (sqrt(CAST(mass AS DOUBLE)) / z)
+                                / CAST(mass AS DOUBLE)) END AS rate
+                  FROM stats, total),
+        adm AS (SELECT $alias.$key,
+                       CAST(count(*) AS BIGINT) AS n_admitted,
+                       CAST(sum($alias.$mass) AS BIGINT) AS admitted_mass
+                FROM $rel $alias JOIN rates r ON $alias.$key = r.$key
+                WHERE $hash % 1000000
+                      < CAST(floor(r.rate * 1000000.0) AS BIGINT)
+                GROUP BY $alias.$key)
+   SELECT r.$key, r.n_docs, r.mass, r.rate,
+          coalesce(a.n_admitted, CAST(0 AS BIGINT)) AS n_admitted,
+          coalesce(a.admitted_mass, CAST(0 AS BIGINT))
+            AS admitted_mass
+   FROM rates r LEFT JOIN adm a ON r.$key = a.$key"""
   }
 
   // `def`: p08's oracle resolves the kmeansCells conf at generation time
@@ -364,81 +452,12 @@ object PipelineQueries {
     // Scale: one stats pass (map-side combined groupBy over ~|sources|
     // rows), a broadcast of the tiny rates table, one admission pass with
     // a map-side-combined report — two corpus scans total, no shuffle
-    // beyond the per-source aggregates. Determinism: masses are exact
-    // BIGINTs; the α-weight normalizer Σ√mass is an order-sensitive
-    // double sum, so it rides the quantized-BIGINT discipline
-    // (floor(√mass·2^20) summed exactly); every remaining op is a
-    // fixed-order IEEE expression mirrored verbatim in the oracle.
+    // beyond the per-source aggregates (see temperatureMix).
     Q("p09_temperature_mix",
-      (s, d) => {
-        val docs = Tables.documents(s, d)
-        val stats = docs.groupBy("source")
-          .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("mass"))
-        val total = stats.agg(
-          (sum(expr(
-            "CAST(floor(sqrt(CAST(mass AS DOUBLE)) * 1048576.0) AS BIGINT)"))
-            .cast("double") / 1048576.0).as("z"),
-          sum("mass").as("tot"))
-        // mass = 0 (a source of all-empty docs) makes the rate 0/0 = NaN,
-        // and Spark's non-ANSI CAST(floor(NaN*1e6) AS BIGINT) yields 0
-        // while the DuckDB twin's identical CAST raises — a degenerate
-        // corpus would diverge the engines instead of agreeing. A massless
-        // source gets rate 0 explicitly (nothing to admit), on BOTH sides.
-        val rates = stats.crossJoin(broadcast(total))
-          .withColumn("rate", expr(
-            "CASE WHEN mass = 0 THEN 0.0 ELSE least(1.0, " +
-              "0.5 * CAST(tot AS DOUBLE) * (sqrt(CAST(mass AS DOUBLE)) / z)" +
-              " / CAST(mass AS DOUBLE)) END"))
-        val admitted = docs
-          .join(broadcast(rates.select(col("source"), col("rate"))), "source")
-          // poly-of-MD5, not the raw poly fold: a short 'mix|123' string
-          // never wraps mod P, so its low bits are STRUCTURED and the
-          // realized admission ran 16-100% against a 48% request
-          // (measured; the KmvBuffer scaladoc documents the same
-          // range-compression bias). MD5 provides the avalanche; the
-          // fold condenses it portably — the q59 discipline.
-          .filter(pmod(saltedDocHash("mix"), lit(1000000L)) <
-            expr("CAST(floor(rate * 1000000.0) AS BIGINT)"))
-          .groupBy("source")
-          .agg(count(lit(1)).as("n_admitted"),
-            sum("n_chars").as("admitted_mass"))
-        rates.select("source", "n_docs", "mass", "rate")
-          .join(admitted, Seq("source"), "left_outer")
-          .select(col("source"), col("n_docs"), col("mass"), col("rate"),
-            coalesce(col("n_admitted"), lit(0L)).as("n_admitted"),
-            coalesce(col("admitted_mass"), lit(0L)).as("admitted_mass"))
-      },
-      Some {
-        val hash = graft.ext.PortableHash.duckPoly(
-          "md5('mix|' || CAST(doc_id AS VARCHAR))")
-        s"""WITH stats AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-                                  CAST(sum(n_chars) AS BIGINT) AS mass
-                           FROM documents GROUP BY source),
-                 total AS (SELECT CAST(SUM(CAST(floor(sqrt(CAST(mass AS DOUBLE))
-                                     * 1048576.0) AS BIGINT)) AS DOUBLE)
-                                    / 1048576.0 AS z,
-                                  CAST(sum(mass) AS BIGINT) AS tot
-                           FROM stats),
-                 rates AS (SELECT source, n_docs, mass,
-                                  CASE WHEN mass = 0 THEN 0.0
-                                       ELSE least(1.0, 0.5 * CAST(tot AS DOUBLE)
-                                         * (sqrt(CAST(mass AS DOUBLE)) / z)
-                                         / CAST(mass AS DOUBLE)) END AS rate
-                           FROM stats, total),
-                 adm AS (SELECT d.source,
-                                CAST(count(*) AS BIGINT) AS n_admitted,
-                                CAST(sum(d.n_chars) AS BIGINT)
-                                  AS admitted_mass
-                         FROM documents d JOIN rates r ON d.source = r.source
-                         WHERE $hash % 1000000
-                               < CAST(floor(r.rate * 1000000.0) AS BIGINT)
-                         GROUP BY d.source)
-            SELECT r.source, r.n_docs, r.mass, r.rate,
-                   coalesce(a.n_admitted, CAST(0 AS BIGINT)) AS n_admitted,
-                   coalesce(a.admitted_mass, CAST(0 AS BIGINT))
-                     AS admitted_mass
-            FROM rates r LEFT JOIN adm a ON r.source = a.source"""
-      }),
+      (s, d) => temperatureMix(Tables.documents(s, d), "source", "n_chars",
+        "mix"),
+      Some(s"""WITH ${temperatureMixSql("documents", "d", "source",
+        "n_chars", "mix")}""")),
 
     // p10: PERSISTED INDEX LIFECYCLE — train → write → load → serve as
     // SEPARABLE jobs (round-13 verdict item 2: the trained ANN artifacts
@@ -559,37 +578,13 @@ object PipelineQueries {
         // physical corpus scans relied on ReuseExchange (round-16 advice);
         // with it, "two corpus scans" is structural (PlanQualitySpec pins
         // the scan count).
-        val stats = graft.util.Caches.retain(labeled.groupBy("lang")
-          .agg(count(lit(1)).as("n_docs"), sum("nch").as("mass")))
-        val total = stats.agg(
-          (sum(expr(
-            "CAST(floor(sqrt(CAST(mass AS DOUBLE)) * 1048576.0) AS BIGINT)"))
-            .cast("double") / 1048576.0).as("z"),
-          sum("mass").as("tot"))
-        val rates = stats.crossJoin(broadcast(total))
-          .withColumn("rate", expr(
-            "CASE WHEN mass = 0 THEN 0.0 ELSE least(1.0, " +
-              "0.5 * CAST(tot AS DOUBLE) * (sqrt(CAST(mass AS DOUBLE)) / z)" +
-              " / CAST(mass AS DOUBLE)) END"))
-        val admitted = labeled
-          .join(broadcast(rates.select(col("lang"), col("rate"))), "lang")
-          .filter(pmod(saltedDocHash("lmix"), lit(1000000L)) <
-            expr("CAST(floor(rate * 1000000.0) AS BIGINT)"))
-          .groupBy("lang")
-          .agg(count(lit(1)).as("n_admitted"),
-            sum("nch").as("admitted_mass"))
-        rates.select("lang", "n_docs", "mass", "rate")
-          .join(broadcast(admitted), Seq("lang"), "left_outer")
-          .select(col("lang"), col("n_docs"), col("mass"), col("rate"),
-            coalesce(col("n_admitted"), lit(0L)).as("n_admitted"),
-            coalesce(col("admitted_mass"), lit(0L)).as("admitted_mass"))
+        temperatureMix(labeled, "lang", "nch", "lmix",
+          holdStats = graft.util.Caches.retain, holdAdmitted = broadcast(_))
       },
       Some {
         val plantVals = graft.ext.TextOps.LangPlants.map { case (id, t) =>
           s"(CAST($id AS BIGINT), '$t')"
         }.mkString(", ")
-        val hash = graft.ext.PortableHash.duckPoly(
-          "md5('lmix|' || CAST(doc_id AS VARCHAR))")
         s"""WITH aug AS (SELECT doc_id, text,
                                 CAST(length(text) AS BIGINT) AS nch
                          FROM (SELECT doc_id, text FROM documents
@@ -598,32 +593,7 @@ object PipelineQueries {
                                FROM (VALUES $plantVals) pl(doc_id, text))),
                  lab AS (${graft.ext.TextOps.langIdNgramSql("aug",
                             keep = Seq("nch"))}),
-                 stats AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-                                  CAST(sum(nch) AS BIGINT) AS mass
-                           FROM lab GROUP BY lang),
-                 total AS (SELECT CAST(SUM(CAST(floor(sqrt(CAST(mass AS DOUBLE))
-                                     * 1048576.0) AS BIGINT)) AS DOUBLE)
-                                    / 1048576.0 AS z,
-                                  CAST(sum(mass) AS BIGINT) AS tot
-                           FROM stats),
-                 rates AS (SELECT lang, n_docs, mass,
-                                  CASE WHEN mass = 0 THEN 0.0
-                                       ELSE least(1.0, 0.5 * CAST(tot AS DOUBLE)
-                                         * (sqrt(CAST(mass AS DOUBLE)) / z)
-                                         / CAST(mass AS DOUBLE)) END AS rate
-                           FROM stats, total),
-                 adm AS (SELECT l.lang,
-                                CAST(count(*) AS BIGINT) AS n_admitted,
-                                CAST(sum(l.nch) AS BIGINT) AS admitted_mass
-                         FROM lab l JOIN rates r ON l.lang = r.lang
-                         WHERE $hash % 1000000
-                               < CAST(floor(r.rate * 1000000.0) AS BIGINT)
-                         GROUP BY l.lang)
-            SELECT r.lang, r.n_docs, r.mass, r.rate,
-                   coalesce(a.n_admitted, CAST(0 AS BIGINT)) AS n_admitted,
-                   coalesce(a.admitted_mass, CAST(0 AS BIGINT))
-                     AS admitted_mass
-            FROM rates r LEFT JOIN adm a ON r.lang = a.lang"""
+                 ${temperatureMixSql("lab", "l", "lang", "nch", "lmix")}"""
       }),
 
     // p14: TOKENIZER ARTIFACT LIFECYCLE — the p10 persist→fresh-session→

@@ -700,17 +700,21 @@ object StreamingQ {
   /** Typed rows for the streaming kNN maintainer (s29). */
   final case class KnnCand(q_id: Long, vec_id: Long, label: Int,
       cos_sim: Double)
-  final case class TopKState(entries: Seq[KnnCand])
+  /** The running top-k of one query key, best first. */
+  final case class TopKState[T](entries: Seq[T])
 
-  /** s29's per-query state: the current top-k candidates, best-first by
-    * (cos desc, vec_id asc). A candidate is ADMITTED (emitted) iff the
-    * state holds fewer than k entries or it beats the current k-th; the
-    * sink therefore accumulates an admission LOG, and the final top-k is a
-    * batch rank over it after the drain. The final relation is provably
-    * independent of micro-batch slicing AND of in-batch processing order:
-    * a true top-k member beats every possible k-th at any arrival time
-    * (fewer than k corpus vectors beat it at all), so it is always
-    * admitted; spurious admissions are displaced by the post-drain rank.
+  /** Per-query top-k admission (s29's cosine top-k, s31's ADC shortlist).
+    * `rank` maps a candidate to its (score, vec_id) key, smaller first —
+    * (-cos, vec_id) for s29, (adc, vec_id) for s31 — a deterministic total
+    * order. A candidate is ADMITTED (emitted) iff the state holds fewer
+    * than k entries or it beats the current k-th; the sink therefore
+    * accumulates an admission LOG, and the final top-k is a batch rank
+    * over it after the drain. The final relation is provably independent
+    * of micro-batch slicing AND of in-batch processing order: a true
+    * top-k member beats every possible k-th at any arrival time (fewer
+    * than k corpus vectors beat it at all), so it is always admitted;
+    * spurious admissions are displaced by the post-drain rank. State is
+    * O(|queries|·k) forever.
     *
     * The input iterator is consumed STREAMING — because knnAdmitXform
     * fans every stream row out to all query keys, each key sees the whole
@@ -721,27 +725,29 @@ object StreamingQ {
     * threshold process) but the post-drain rank — the operator's declared
     * output — does not, which is what the oracle gate hashes.
     */
-  final class TopKAdmitProcessor(k: Int)
-      extends StatefulProcessor[Long, KnnCand, KnnCand] {
-    @transient private var st: org.apache.spark.sql.streaming.ValueState[TopKState] = _
+  final class TopKAdmitProcessor[T](k: Int, rank: T => (Double, Long))(
+      implicit stateEnc: org.apache.spark.sql.Encoder[TopKState[T]])
+      extends StatefulProcessor[Long, T, T] {
+    @transient private var st: org.apache.spark.sql.streaming.ValueState[TopKState[T]] = _
 
-    private def beats(a: KnnCand, b: KnnCand): Boolean =
-      a.cos_sim > b.cos_sim ||
-        (a.cos_sim == b.cos_sim && a.vec_id < b.vec_id)
+    private def beats(a: T, b: T): Boolean = {
+      val (sa, ia) = rank(a)
+      val (sb, ib) = rank(b)
+      sa < sb || (sa == sb && ia < ib)
+    }
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[TopKState]("topk",
-        org.apache.spark.sql.Encoders.product[TopKState], TTLConfig.NONE)
+      st = getHandle.getValueState[TopKState[T]]("topk", stateEnc,
+        TTLConfig.NONE)
 
-    override def handleInputRows(key: Long, rows: Iterator[KnnCand],
-        tv: TimerValues): Iterator[KnnCand] = {
-      var entries = if (st.exists()) st.get().entries else Seq.empty[KnnCand]
-      val admitted = scala.collection.mutable.ArrayBuffer[KnnCand]()
+    override def handleInputRows(key: Long, rows: Iterator[T],
+        tv: TimerValues): Iterator[T] = {
+      var entries = if (st.exists()) st.get().entries else Seq.empty[T]
+      val admitted = scala.collection.mutable.ArrayBuffer[T]()
       for (c <- rows) {
         if (entries.size < k || beats(c, entries.last)) {
           admitted += c
-          entries = (entries :+ c)
-            .sortBy(e => (-e.cos_sim, e.vec_id)).take(k)
+          entries = (entries :+ c).sortBy(rank).take(k)
         }
       }
       st.update(TopKState(entries))
@@ -767,7 +773,8 @@ object StreamingQ {
       .select(col("q_id"), col("vec_id"), col("label"), col("cos_sim"))
       .as[KnnCand]
       .groupByKey(_.q_id)
-      .transformWithState(new TopKAdmitProcessor(5),
+      .transformWithState(
+        new TopKAdmitProcessor[KnnCand](5, c => (-c.cos_sim, c.vec_id)),
         TimeMode.None(), OutputMode.Append())
       .toDF()
   }
@@ -880,43 +887,6 @@ object StreamingQ {
 
   /** Typed rows for the streaming IVF-PQ server (s31). */
   final case class AdcCand(q_id: Long, vec_id: Long, c1: Int, adc: Double)
-  final case class AdcTopKState(entries: Seq[AdcCand])
-
-  /** s31's per-query state: the running ADC-top-k shortlist (s29's
-    * admission-log discipline with the ordering flipped to ascending
-    * asymmetric distance). A candidate is admitted iff it beats the
-    * current k-th (strict (adc, vec_id) order — a deterministic total
-    * order, so the post-drain rank over the admission log equals the true
-    * top-k independent of micro-batch slicing and in-batch order: a true
-    * member beats every possible k-th at any arrival time). State is
-    * O(|queries|·k) forever.
-    */
-  final class AdcShortlistProcessor(k: Int)
-      extends StatefulProcessor[Long, AdcCand, AdcCand] {
-    @transient private var st: org.apache.spark.sql.streaming.ValueState[AdcTopKState] = _
-
-    private def beats(a: AdcCand, b: AdcCand): Boolean =
-      a.adc < b.adc || (a.adc == b.adc && a.vec_id < b.vec_id)
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[AdcTopKState]("adctopk",
-        org.apache.spark.sql.Encoders.product[AdcTopKState], TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[AdcCand],
-        tv: TimerValues): Iterator[AdcCand] = {
-      var entries = if (st.exists()) st.get().entries else Seq.empty[AdcCand]
-      val admitted = scala.collection.mutable.ArrayBuffer[AdcCand]()
-      for (c <- rows) {
-        if (entries.size < k || beats(c, entries.last)) {
-          admitted += c
-          entries = (entries :+ c)
-            .sortBy(e => (e.adc, e.vec_id)).take(k)
-        }
-      }
-      st.update(AdcTopKState(entries))
-      admitted.iterator
-    }
-  }
 
   /** s31: STREAMING IVF-PQ SERVING — the composed index's online form
     * (as s29 is x07's and s30 is d17's): arriving corpus vectors are
@@ -930,7 +900,7 @@ object StreamingQ {
     * scoring, s29's score-everything shape with the index's prune in
     * front), ADC-score with the shared [[graft.ext.Similarity
     * .adcTerm]] term, and keep a per-query running shortlist
-    * ([[AdcShortlistProcessor]]). At 100 TB this is continuous index
+    * ([[TopKAdmitProcessor]] in ADC order). At 100 TB this is continuous index
     * ingestion with bounded serving state: per-batch cost ∝ the probed
     * fraction of the batch, state O(|queries|·shortK), sink ∝ admissions.
     */
@@ -972,7 +942,8 @@ object StreamingQ {
       .select(col("q_id"), col("vec_id"), col("c1"), adc.as("adc"))
       .as[AdcCand]
       .groupByKey(_.q_id)
-      .transformWithState(new AdcShortlistProcessor(shortK),
+      .transformWithState(
+        new TopKAdmitProcessor[AdcCand](shortK, c => (c.adc, c.vec_id)),
         TimeMode.None(), OutputMode.Append())
       .toDF()
   }
@@ -1005,6 +976,164 @@ object StreamingQ {
 
   def transformWithStateRunningMax(s: SparkSession, d: String): DataFrame =
     withRocksDb(s) { runEventsStream(s, d)(twsRunningMaxXform(s)) }
+
+  /** s31/s32's serving body (see [[ivfPqServeXform]]): the offline-trained
+    * index and assignment artifacts, the arrivals (of `label` only, when
+    * set) into the per-query ADC shortlists, the exact re-rank of each
+    * drained shortlist, and `flag` marking the rows that are in the exact
+    * top-k of that same corpus.
+    */
+  private def ivfPqServeQuery(s: SparkSession, d: String,
+      label: Option[Int], flag: String): DataFrame = withRocksDb(s) {
+    import org.apache.spark.sql.expressions.Window
+    val serve = graft.ext.Similarity.Serve
+    val emb = Tables.embeddings(s, d)
+    val (a1, cv1, _, cbAll) = graft.ext.Similarity.ivfPqIndex(
+      emb, serve.K1Default, serve.M, serve.SubDim, serve.Kcode,
+      serve.Iters, pp = serve.Pp)
+    val assignCents = graft.ext.Similarity.kmeansTrainedCentroids(
+      emb, serve.K1Default, serve.Iters, pp = serve.Pp)
+    val (qset, probes) = graft.ext.Similarity.ivfPqQueryProbes(a1, cv1)
+    val k1 = graft.ext.Dedup.resolveCells(emb, serve.K1Default)
+    val keep = label.map(t => col("label") === t)
+    val admitted = runFileStream(s, s"$d/embeddings.parquet")(src =>
+      ivfPqServeXform(s, assignCents, cv1, cbAll, probes,
+        floorParts = streamAssignFloor(s,
+          inletBytes(s"$d/embeddings.parquet"), k1))(
+        keep.fold(src)(p => src.filter(p))))
+    val short = admitted.withColumn("rn", row_number().over(
+        Window.partitionBy("q_id").orderBy(col("adc"), col("vec_id"))))
+      .filter(col("rn") <= serve.ShortK).select("q_id", "vec_id", "c1")
+    val top = a1.join(broadcast(short), "vec_id")
+      .join(broadcast(qset), "q_id")
+      .withColumn("d2", call("graft_l2", col("e"), col("qe")))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy("q_id").orderBy(col("d2"), col("vec_id"))))
+      .filter(col("rn") <= serve.TopK)
+      .select("q_id", "vec_id", "c1", "d2")
+    // the exact corpus: a1 when every vector arrives, else the pre-filter
+    // exact arm (x28's always-correct one) on a fresh pushed-down scan —
+    // label never joins the corpus
+    val corpus = keep.fold(a1)(p => emb.filter(p).select(col("vec_id"),
+      expr("transform(embedding, ex -> CAST(ex AS DOUBLE))").as("e")))
+    val exact = corpus.crossJoin(broadcast(qset))
+      .filter(col("vec_id") =!= col("q_id"))
+      .withColumn("d2x", call("graft_l2", col("e"), col("qe")))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy("q_id").orderBy(col("d2x"), col("vec_id"))))
+      .filter(col("rn") <= serve.TopK)
+      .select(col("q_id").as("eq"), col("vec_id").as("evid"))
+    top.join(broadcast(exact),
+        col("q_id") === col("eq") && col("vec_id") === col("evid"),
+        "left_outer")
+      .select(col("q_id"), col("vec_id"), col("c1"), col("d2"),
+        col("evid").isNotNull.as(flag))
+  }
+
+  /** s32's served label. */
+  private val ServeLabel = 3
+
+  /** s31/s32's oracle CTEs through the shortlist: the IVF-PQ index chains,
+    * the query set and its probed cells, one lookup table per subspace,
+    * the ADC-scored candidates (of `label` only, when set) and each
+    * query's shortlist.
+    */
+  private def ivfPqServeCtes(label: Option[Int]): String = {
+    val serve = graft.ext.Similarity.Serve
+    val k1 = graft.ext.Dedup.confInt(graft.ext.Dedup.KmeansCellsKey,
+      serve.K1Default)
+    val (m, subDim) = (serve.M, serve.SubDim)
+    val d2 = graft.ext.Similarity.duckD2 _
+    val luts = (0 until m).map { sx =>
+      val off = sx * subDim
+      s"""lut$sx AS (SELECT p.q_id, p.pcell AS pc$sx,
+                           c.cluster AS cc$sx,
+                           ${d2(
+                             s"list_slice(p.rqe, ${off + 1}, ${off + subDim})",
+                             "c.cvec")} AS dd$sx
+                    FROM probes p, v${sx}cvF c)"""
+    }.mkString(",\n")
+    val lutJoin = (0 until m).map { sx =>
+      val qEq = if (sx == 0) "" else s"lut$sx.q_id = lut0.q_id AND "
+      s"JOIN lut$sx ON ${qEq}k.c1 = pc$sx AND k.code_$sx = cc$sx"
+    }.mkString(" ")
+    val adc = (0 until m).map(sx => s"dd$sx")
+      .reduce((a, b) => s"($a + $b)")
+    val (labelJoin, labelWhere) = label.fold(("", ""))(t =>
+      ("JOIN embeddings l ON k.vec_id = l.vec_id", s" AND l.label = $t"))
+    s"""WITH ${graft.ext.Similarity.ivfPqIndexCtes(
+           k1, m, subDim, serve.Kcode, serve.Iters, src = "embeddings",
+           seed = graft.ext.Similarity.seedCtesFromPp(serve.Pp, k1))},
+         qs AS MATERIALIZED (SELECT vec_id AS q_id, e AS qe
+               FROM a2 ORDER BY vec_id LIMIT ${serve.NQueries}),
+         probes AS MATERIALIZED (
+           SELECT q_id, pcell, rqe FROM (
+             SELECT q.q_id, c.cluster AS pcell,
+                    list_transform(range(1, len(q.qe) + 1),
+                                   i -> q.qe[i] - c.cvec[i]) AS rqe,
+                    ROW_NUMBER() OVER (PARTITION BY q.q_id
+                      ORDER BY ${d2("c.cvec", "q.qe")}, c.cluster) AS rn
+             FROM qs q, cvF c) WHERE rn <= ${serve.NProbe}),
+         $luts,
+         scored AS MATERIALIZED (
+           SELECT lut0.q_id, k.vec_id, k.c1, $adc AS adc
+           FROM pqcodes k $lutJoin
+                $labelJoin
+           WHERE k.vec_id <> lut0.q_id$labelWhere),
+         short AS (SELECT q_id, vec_id, c1 FROM (
+             SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
+               ORDER BY adc, vec_id) AS rn FROM scored)
+           WHERE rn <= ${serve.ShortK})"""
+  }
+
+  /** The stream-stream join family's (s07/s10/s24/s25) event-time cutoff. */
+  private val cutoff = "2024-01-16 00:00:00"
+
+  /** Day buckets for the interval joins (see s07): an event's own day, and
+    * its day with the day before (a purchase's possible signup days) or
+    * after (a signup's possible purchase days), one row per day.
+    */
+  private val oneDay = (ts: Column) => to_date(ts)
+  private val dayAndBefore = (ts: Column) =>
+    explode(array(to_date(ts), date_sub(to_date(ts), 1)))
+  private val dayAndAfter = (ts: Column) =>
+    explode(array(to_date(ts), date_add(to_date(ts), 1)))
+
+  /** One side of the family: `eventType` rows before the cutoff, as the
+    * `lead` columns, key `k` (user_id % 200), event time `t` (watermarked
+    * at 0 s) and day bucket `${k}b`.
+    */
+  private def joinSide(src: DataFrame, eventType: String, k: String,
+      t: String, bucket: Column => Column, lead: Seq[Column]): DataFrame =
+    src.filter(col("event_type") === eventType &&
+        col("ts") < to_timestamp(lit(cutoff)))
+      .select(lead ++ Seq((col("user_id") % 200).as(k), col("ts").as(t),
+        bucket(col("ts")).as(s"${k}b")): _*)
+      .withWatermark(t, "0 seconds")
+
+  /** Signups `how`-joined to purchases on key, day bucket and
+    * pts ∈ [sts, sts + 24h]; every side column carries the suffix `sfx`.
+    */
+  private def signupPurchaseJoin(src: DataFrame, how: String,
+      signupDay: Column => Column, purchaseDay: Column => Column,
+      sfx: String = "", lead: Seq[Column] = Nil): DataFrame = {
+    val (sk, sts, pk, pts) = (s"sk$sfx", s"sts$sfx", s"pk$sfx", s"pts$sfx")
+    joinSide(src, "signup", sk, sts, signupDay, lead)
+      .join(joinSide(src, "purchase", pk, pts, purchaseDay, Nil),
+        expr(s"$sk = $pk AND ${sk}b = ${pk}b AND " +
+          s"$pts >= $sts AND $pts <= $sts + interval 24 hours"), how)
+  }
+
+  /** s10/s25's oracle sides and their min-of-maxima watermark. */
+  private val signupPurchaseCtes =
+    s"""WITH s AS (SELECT user_id % 200 AS sk, ts AS sts FROM events
+                   WHERE event_type = 'signup'
+                     AND ts < TIMESTAMP '$cutoff'),
+             p AS (SELECT user_id % 200 AS pk, ts AS pts FROM events
+                   WHERE event_type = 'purchase'
+                     AND ts < TIMESTAMP '$cutoff'),
+             wm AS (SELECT least((SELECT max(sts) FROM s),
+                                 (SELECT max(pts) FROM p)) AS w)"""
 
   // `def`: s30's oracle resolves the kmeansCells conf at generation time.
   def queries: Seq[Q] = Seq(
@@ -1206,30 +1335,16 @@ object StreamingQ {
     // copies would each emit a null row — and keeps the plain form.
     Q("s07_stream_stream_join",
       (s, d) => runEventsStream(s, d) { src =>
-        val cutoff = "2024-01-16 00:00:00"
-        val signups = src.filter(col("event_type") === "signup" &&
-            col("ts") < to_timestamp(lit(cutoff)))
-          .select((col("user_id") % 200).as("sk"), col("ts").as("sts"),
-            to_date(col("ts")).as("sb"))
-          .withWatermark("sts", "0 seconds")
-        val purchases = src.filter(col("event_type") === "purchase" &&
-            col("ts") < to_timestamp(lit(cutoff)))
-          .select((col("user_id") % 200).as("pk"), col("ts").as("pts"),
-            explode(array(to_date(col("ts")),
-              date_sub(to_date(col("ts")), 1))).as("pb"))
-          .withWatermark("pts", "0 seconds")
-        signups.join(purchases,
-          expr("sk = pk AND sb = pb AND " +
-            "pts >= sts AND pts <= sts + interval 24 hours"))
+        signupPurchaseJoin(src, "inner", oneDay, dayAndBefore)
           .select("sk", "sts", "pts")
       },
-      Some("""SELECT s.user_id % 200 AS sk, s.ts AS sts, p.ts AS pts
+      Some(s"""SELECT s.user_id % 200 AS sk, s.ts AS sts, p.ts AS pts
               FROM events s JOIN events p
                 ON s.user_id % 200 = p.user_id % 200
                AND p.ts >= s.ts AND p.ts <= s.ts + INTERVAL 24 HOUR
               WHERE s.event_type = 'signup' AND p.event_type = 'purchase'
-                AND s.ts < TIMESTAMP '2024-01-16 00:00:00'
-                AND p.ts < TIMESTAMP '2024-01-16 00:00:00'""")),
+                AND s.ts < TIMESTAMP '$cutoff'
+                AND p.ts < TIMESTAMP '$cutoff'""")),
 
     // s10: stream-stream LEFT OUTER interval join — s07's inner join plus
     // the outer emission semantics: an unmatched signup is emitted with a
@@ -1245,32 +1360,10 @@ object StreamingQ {
     // candidate set shrinks.
     Q("s10_stream_outer_join",
       (s, d) => runEventsStream(s, d) { src =>
-        val cutoff = "2024-01-16 00:00:00"
-        val signups = src.filter(col("event_type") === "signup" &&
-            col("ts") < to_timestamp(lit(cutoff)))
-          .select((col("user_id") % 200).as("sk"), col("ts").as("sts"),
-            to_date(col("ts")).as("sb"))
-          .withWatermark("sts", "0 seconds")
-        val purchases = src.filter(col("event_type") === "purchase" &&
-            col("ts") < to_timestamp(lit(cutoff)))
-          .select((col("user_id") % 200).as("pk"), col("ts").as("pts"),
-            explode(array(to_date(col("ts")),
-              date_sub(to_date(col("ts")), 1))).as("pb"))
-          .withWatermark("pts", "0 seconds")
-        signups.join(purchases,
-          expr("sk = pk AND sb = pb AND " +
-            "pts >= sts AND pts <= sts + interval 24 hours"),
-          "left_outer")
+        signupPurchaseJoin(src, "left_outer", oneDay, dayAndBefore)
           .select("sk", "sts", "pts")
       },
-      Some("""WITH s AS (SELECT user_id % 200 AS sk, ts AS sts FROM events
-                         WHERE event_type = 'signup'
-                           AND ts < TIMESTAMP '2024-01-16 00:00:00'),
-                   p AS (SELECT user_id % 200 AS pk, ts AS pts FROM events
-                         WHERE event_type = 'purchase'
-                           AND ts < TIMESTAMP '2024-01-16 00:00:00'),
-                   wm AS (SELECT least((SELECT max(sts) FROM s),
-                                       (SELECT max(pts) FROM p)) AS w)
+      Some(s"""$signupPurchaseCtes
               SELECT sk, sts, pts
               FROM s JOIN p ON sk = pk AND pts >= sts
                            AND pts <= sts + INTERVAL 24 HOUR
@@ -1664,31 +1757,17 @@ object StreamingQ {
     // single bucket, and the bucket equality only prunes candidates.
     Q("s24_stream_semi_join",
       (s, d) => runEventsStream(s, d) { src =>
-        val cutoff = "2024-01-16 00:00:00"
-        val signups = src.filter(col("event_type") === "signup" &&
-            col("ts") < to_timestamp(lit(cutoff)))
-          .select(col("event_id"), (col("user_id") % 200).as("sk"),
-            col("ts").as("sts"), to_date(col("ts")).as("sb"))
-          .withWatermark("sts", "0 seconds")
-        val purchases = src.filter(col("event_type") === "purchase" &&
-            col("ts") < to_timestamp(lit(cutoff)))
-          .select((col("user_id") % 200).as("pk"), col("ts").as("pts"),
-            explode(array(to_date(col("ts")),
-              date_sub(to_date(col("ts")), 1))).as("pb"))
-          .withWatermark("pts", "0 seconds")
-        signups.join(purchases,
-          expr("sk = pk AND sb = pb AND " +
-            "pts >= sts AND pts <= sts + interval 24 hours"),
-          "left_semi")
+        signupPurchaseJoin(src, "left_semi", oneDay, dayAndBefore,
+          lead = Seq(col("event_id")))
           .select("event_id", "sk", "sts")
       },
-      Some("""SELECT event_id, user_id % 200 AS sk, ts AS sts
+      Some(s"""SELECT event_id, user_id % 200 AS sk, ts AS sts
               FROM events s
               WHERE event_type = 'signup'
-                AND ts < TIMESTAMP '2024-01-16 00:00:00'
+                AND ts < TIMESTAMP '$cutoff'
                 AND EXISTS (SELECT 1 FROM events p
                             WHERE p.event_type = 'purchase'
-                              AND p.ts < TIMESTAMP '2024-01-16 00:00:00'
+                              AND p.ts < TIMESTAMP '$cutoff'
                               AND p.user_id % 200 = s.user_id % 200
                               AND p.ts >= s.ts
                               AND p.ts <= s.ts + INTERVAL 24 HOUR)""")),
@@ -1840,87 +1919,11 @@ object StreamingQ {
     // same index chains + a multi-query probe block, batch-equivalent
     // because the drained stream IS the corpus.
     Q("s31_stream_ivfpq_serve",
-      (s, d) => withRocksDb(s) {
-        import org.apache.spark.sql.expressions.Window
-        val serve = graft.ext.Similarity.Serve
-        val emb = Tables.embeddings(s, d)
-        val (a1, cv1, _, cbAll) = graft.ext.Similarity.ivfPqIndex(
-          emb, serve.K1Default, serve.M, serve.SubDim, serve.Kcode,
-          serve.Iters, pp = serve.Pp)
-        val assignCents = graft.ext.Similarity.kmeansTrainedCentroids(
-          emb, serve.K1Default, serve.Iters, pp = serve.Pp)
-        val (qset, probes) = graft.ext.Similarity.ivfPqQueryProbes(a1, cv1)
-        val k1 = graft.ext.Dedup.resolveCells(emb, serve.K1Default)
-        val admitted = runFileStream(s, s"$d/embeddings.parquet")(
-          ivfPqServeXform(s, assignCents, cv1, cbAll, probes,
-            floorParts = streamAssignFloor(s,
-              inletBytes(s"$d/embeddings.parquet"), k1)))
-        val short = admitted.withColumn("rn", row_number().over(
-            Window.partitionBy("q_id").orderBy(col("adc"), col("vec_id"))))
-          .filter(col("rn") <= serve.ShortK).select("q_id", "vec_id", "c1")
-        val top = a1.join(broadcast(short), "vec_id")
-          .join(broadcast(qset), "q_id")
-          .withColumn("d2", call("graft_l2", col("e"), col("qe")))
-          .withColumn("rn", row_number().over(
-            Window.partitionBy("q_id").orderBy(col("d2"), col("vec_id"))))
-          .filter(col("rn") <= serve.TopK)
-          .select("q_id", "vec_id", "c1", "d2")
-        val exact = a1.crossJoin(broadcast(qset))
-          .filter(col("vec_id") =!= col("q_id"))
-          .withColumn("d2x", call("graft_l2", col("e"), col("qe")))
-          .withColumn("rn", row_number().over(
-            Window.partitionBy("q_id").orderBy(col("d2x"), col("vec_id"))))
-          .filter(col("rn") <= serve.TopK)
-          .select(col("q_id").as("eq"), col("vec_id").as("evid"))
-        top.join(broadcast(exact),
-            col("q_id") === col("eq") && col("vec_id") === col("evid"),
-            "left_outer")
-          .select(col("q_id"), col("vec_id"), col("c1"), col("d2"),
-            col("evid").isNotNull.as("in_exact_topk"))
-      },
+      (s, d) => ivfPqServeQuery(s, d, None, "in_exact_topk"),
       Some(graft.ext.Dedup.guardAuto(graft.ext.Dedup.KmeansCellsKey) {
         val serve = graft.ext.Similarity.Serve
-        val k1 = graft.ext.Dedup.confInt(graft.ext.Dedup.KmeansCellsKey,
-          serve.K1Default)
-        val (m, subDim) = (serve.M, serve.SubDim)
         val d2 = graft.ext.Similarity.duckD2 _
-        val luts = (0 until m).map { sx =>
-          val off = sx * subDim
-          s"""lut$sx AS (SELECT p.q_id, p.pcell AS pc$sx,
-                               c.cluster AS cc$sx,
-                               ${d2(
-                                 s"list_slice(p.rqe, ${off + 1}, ${off + subDim})",
-                                 "c.cvec")} AS dd$sx
-                        FROM probes p, v${sx}cvF c)"""
-        }.mkString(",\n")
-        val lutJoin = (0 until m).map { sx =>
-          val qEq = if (sx == 0) "" else s"lut$sx.q_id = lut0.q_id AND "
-          s"JOIN lut$sx ON ${qEq}k.c1 = pc$sx AND k.code_$sx = cc$sx"
-        }.mkString(" ")
-        val adc = (0 until m).map(sx => s"dd$sx")
-          .reduce((a, b) => s"($a + $b)")
-        s"""WITH ${graft.ext.Similarity.ivfPqIndexCtes(
-               k1, m, subDim, serve.Kcode, serve.Iters, src = "embeddings",
-               seed = graft.ext.Similarity.seedCtesFromPp(serve.Pp, k1))},
-             qs AS MATERIALIZED (SELECT vec_id AS q_id, e AS qe
-                   FROM a2 ORDER BY vec_id LIMIT ${serve.NQueries}),
-             probes AS MATERIALIZED (
-               SELECT q_id, pcell, rqe FROM (
-                 SELECT q.q_id, c.cluster AS pcell,
-                        list_transform(range(1, len(q.qe) + 1),
-                                       i -> q.qe[i] - c.cvec[i]) AS rqe,
-                        ROW_NUMBER() OVER (PARTITION BY q.q_id
-                          ORDER BY ${d2("c.cvec", "q.qe")}, c.cluster) AS rn
-                 FROM qs q, cvF c) WHERE rn <= ${serve.NProbe}),
-             $luts,
-             scored AS MATERIALIZED (
-               SELECT lut0.q_id, k.vec_id, k.c1, $adc AS adc
-               FROM pqcodes k $lutJoin
-               WHERE k.vec_id <> lut0.q_id),
-             short AS (SELECT q_id, vec_id, c1 FROM (
-                 SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
-                   ORDER BY adc, vec_id) AS rn FROM scored)
-               WHERE rn <= ${serve.ShortK}),
+        s"""${ivfPqServeCtes(None)},
              rr0 AS (SELECT s.q_id, s.vec_id, s.c1,
                             ${d2("z.e", "q.qe")} AS d2
                      FROM short s JOIN a2 z ON z.vec_id = s.vec_id
@@ -1953,96 +1956,12 @@ object StreamingQ {
     // PRE-FILTER exact top-k per query. Oracle = s31's index + probe
     // chains with the scored/exact blocks restricted to the predicate.
     Q("s32_stream_ivfpq_filtered",
-      (s, d) => withRocksDb(s) {
-        import org.apache.spark.sql.expressions.Window
-        val serve = graft.ext.Similarity.Serve
-        val target = 3
-        val emb = Tables.embeddings(s, d)
-        val (a1, cv1, _, cbAll) = graft.ext.Similarity.ivfPqIndex(
-          emb, serve.K1Default, serve.M, serve.SubDim, serve.Kcode,
-          serve.Iters, pp = serve.Pp)
-        val assignCents = graft.ext.Similarity.kmeansTrainedCentroids(
-          emb, serve.K1Default, serve.Iters, pp = serve.Pp)
-        val (qset, probes) = graft.ext.Similarity.ivfPqQueryProbes(a1, cv1)
-        val k1 = graft.ext.Dedup.resolveCells(emb, serve.K1Default)
-        val admitted = runFileStream(s, s"$d/embeddings.parquet")(src =>
-          ivfPqServeXform(s, assignCents, cv1, cbAll, probes,
-            floorParts = streamAssignFloor(s,
-              inletBytes(s"$d/embeddings.parquet"), k1))(
-            src.filter(col("label") === target)))
-        val short = admitted.withColumn("rn", row_number().over(
-            Window.partitionBy("q_id").orderBy(col("adc"), col("vec_id"))))
-          .filter(col("rn") <= serve.ShortK).select("q_id", "vec_id", "c1")
-        val top = a1.join(broadcast(short), "vec_id")
-          .join(broadcast(qset), "q_id")
-          .withColumn("d2", call("graft_l2", col("e"), col("qe")))
-          .withColumn("rn", row_number().over(
-            Window.partitionBy("q_id").orderBy(col("d2"), col("vec_id"))))
-          .filter(col("rn") <= serve.TopK)
-          .select("q_id", "vec_id", "c1", "d2")
-        // pre-filter exact per query (x28's always-correct arm) — fresh
-        // pushed-down scan, label never joins the corpus
-        val fexact = emb.filter(col("label") === target)
-          .select(col("vec_id").as("evid"),
-            expr("transform(embedding, ex -> CAST(ex AS DOUBLE))").as("fe"))
-          .crossJoin(broadcast(qset))
-          .filter(col("evid") =!= col("q_id"))
-          .withColumn("d2x", call("graft_l2", col("fe"), col("qe")))
-          .withColumn("rn", row_number().over(
-            Window.partitionBy("q_id").orderBy(col("d2x"), col("evid"))))
-          .filter(col("rn") <= serve.TopK)
-          .select(col("q_id").as("eq"), col("evid"))
-        top.join(broadcast(fexact),
-            col("q_id") === col("eq") && col("vec_id") === col("evid"),
-            "left_outer")
-          .select(col("q_id"), col("vec_id"), col("c1"), col("d2"),
-            col("evid").isNotNull.as("in_filtered_exact_topk"))
-      },
+      (s, d) => ivfPqServeQuery(s, d, Some(ServeLabel),
+        "in_filtered_exact_topk"),
       Some(graft.ext.Dedup.guardAuto(graft.ext.Dedup.KmeansCellsKey) {
         val serve = graft.ext.Similarity.Serve
-        val target = 3
-        val k1 = graft.ext.Dedup.confInt(graft.ext.Dedup.KmeansCellsKey,
-          serve.K1Default)
-        val (m, subDim) = (serve.M, serve.SubDim)
         val d2 = graft.ext.Similarity.duckD2 _
-        val luts = (0 until m).map { sx =>
-          val off = sx * subDim
-          s"""lut$sx AS (SELECT p.q_id, p.pcell AS pc$sx,
-                               c.cluster AS cc$sx,
-                               ${d2(
-                                 s"list_slice(p.rqe, ${off + 1}, ${off + subDim})",
-                                 "c.cvec")} AS dd$sx
-                        FROM probes p, v${sx}cvF c)"""
-        }.mkString(",\n")
-        val lutJoin = (0 until m).map { sx =>
-          val qEq = if (sx == 0) "" else s"lut$sx.q_id = lut0.q_id AND "
-          s"JOIN lut$sx ON ${qEq}k.c1 = pc$sx AND k.code_$sx = cc$sx"
-        }.mkString(" ")
-        val adc = (0 until m).map(sx => s"dd$sx")
-          .reduce((a, b) => s"($a + $b)")
-        s"""WITH ${graft.ext.Similarity.ivfPqIndexCtes(
-               k1, m, subDim, serve.Kcode, serve.Iters, src = "embeddings",
-               seed = graft.ext.Similarity.seedCtesFromPp(serve.Pp, k1))},
-             qs AS MATERIALIZED (SELECT vec_id AS q_id, e AS qe
-                   FROM a2 ORDER BY vec_id LIMIT ${serve.NQueries}),
-             probes AS MATERIALIZED (
-               SELECT q_id, pcell, rqe FROM (
-                 SELECT q.q_id, c.cluster AS pcell,
-                        list_transform(range(1, len(q.qe) + 1),
-                                       i -> q.qe[i] - c.cvec[i]) AS rqe,
-                        ROW_NUMBER() OVER (PARTITION BY q.q_id
-                          ORDER BY ${d2("c.cvec", "q.qe")}, c.cluster) AS rn
-                 FROM qs q, cvF c) WHERE rn <= ${serve.NProbe}),
-             $luts,
-             scored AS MATERIALIZED (
-               SELECT lut0.q_id, k.vec_id, k.c1, $adc AS adc
-               FROM pqcodes k $lutJoin
-                    JOIN embeddings l ON k.vec_id = l.vec_id
-               WHERE k.vec_id <> lut0.q_id AND l.label = $target),
-             short AS (SELECT q_id, vec_id, c1 FROM (
-                 SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
-                   ORDER BY adc, vec_id) AS rn FROM scored)
-               WHERE rn <= ${serve.ShortK}),
+        s"""${ivfPqServeCtes(Some(ServeLabel))},
              rr AS (SELECT q_id, vec_id, c1, d2 FROM (
                  SELECT s.q_id, s.vec_id, s.c1,
                         ${d2("z.e", "q.qe")} AS d2,
@@ -2056,7 +1975,7 @@ object StreamingQ {
                         ROW_NUMBER() OVER (PARTITION BY q.q_id
                           ORDER BY ${d2("z.e", "q.qe")}, z.vec_id) AS rn
                  FROM a2 z JOIN embeddings l ON z.vec_id = l.vec_id, qs q
-                 WHERE l.label = $target AND z.vec_id <> q.q_id)
+                 WHERE l.label = $ServeLabel AND z.vec_id <> q.q_id)
                WHERE rn <= ${serve.TopK})
         SELECT t.q_id, t.vec_id, t.c1, t.d2,
                EXISTS (SELECT 1 FROM fmex
@@ -2098,48 +2017,16 @@ object StreamingQ {
     // is unchanged.
     Q("s25_stream_full_outer_join",
       (s, d) => runEventsStream(s, d) { src =>
-        val cutoff = "2024-01-16 00:00:00"
-        def signups(k: String, t: String, b: Column => Column) =
-          src.filter(col("event_type") === "signup" &&
-              col("ts") < to_timestamp(lit(cutoff)))
-            .select((col("user_id") % 200).as(k), col("ts").as(t),
-              b(col("ts")).as(s"${k}b"))
-            .withWatermark(t, "0 seconds")
-        def purchases(k: String, t: String, b: Column => Column) =
-          src.filter(col("event_type") === "purchase" &&
-              col("ts") < to_timestamp(lit(cutoff)))
-            .select((col("user_id") % 200).as(k), col("ts").as(t),
-              b(col("ts")).as(s"${k}b"))
-            .withWatermark(t, "0 seconds")
-        val one = (ts: Column) => to_date(ts)
-        val two = (ts: Column) =>
-          explode(array(to_date(ts), date_sub(to_date(ts), 1)))
-        val twoUp = (ts: Column) =>
-          explode(array(to_date(ts), date_add(to_date(ts), 1)))
-        val left = signups("sk", "sts", one)
-          .join(purchases("pk", "pts", two),
-            expr("sk = pk AND skb = pkb AND " +
-              "pts >= sts AND pts <= sts + interval 24 hours"),
-            "left_outer")
+        val left = signupPurchaseJoin(src, "left_outer", oneDay, dayAndBefore)
           .select("sk", "sts", "pk", "pts")
-        val rightNulls = signups("sk2", "sts2", twoUp)
-          .join(purchases("pk2", "pts2", one),
-            expr("sk2 = pk2 AND sk2b = pk2b AND " +
-              "pts2 >= sts2 AND pts2 <= sts2 + interval 24 hours"),
-            "right_outer")
+        val rightNulls = signupPurchaseJoin(src, "right_outer", dayAndAfter,
+            oneDay, sfx = "2")
           .filter(col("sk2").isNull)
           .select(col("sk2").as("sk"), col("sts2").as("sts"),
             col("pk2").as("pk"), col("pts2").as("pts"))
         left.unionByName(rightNulls)
       },
-      Some("""WITH s AS (SELECT user_id % 200 AS sk, ts AS sts FROM events
-                         WHERE event_type = 'signup'
-                           AND ts < TIMESTAMP '2024-01-16 00:00:00'),
-                   p AS (SELECT user_id % 200 AS pk, ts AS pts FROM events
-                         WHERE event_type = 'purchase'
-                           AND ts < TIMESTAMP '2024-01-16 00:00:00'),
-                   wm AS (SELECT least((SELECT max(sts) FROM s),
-                                       (SELECT max(pts) FROM p)) AS w)
+      Some(s"""$signupPurchaseCtes
               SELECT sk, sts, pk, pts
               FROM s JOIN p ON sk = pk AND pts >= sts
                            AND pts <= sts + INTERVAL 24 HOUR

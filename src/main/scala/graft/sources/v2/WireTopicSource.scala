@@ -433,9 +433,7 @@ final class WireStreamingWrite(schema: StructType, topic: WireTopic)
     val fs = topic.fs
     messages.foreach { case WireCommit(files) =>
       files.foreach { case (staged, finalName) =>
-        val target = new HPath(topic.dir, finalName)
-        fs.delete(target, false) // replayed epoch: replace, don't duplicate
-        fs.rename(new HPath(staged), target)
+        WireCommit.publish(fs, staged, new HPath(topic.dir, finalName))
       }
     }
   }
@@ -452,6 +450,19 @@ final case class WireCommit(files: Seq[(String, String)])
     extends WriterCommitMessage
 
 object WireCommit {
+  /** Make one staged file visible under `target`. rename() returns false
+    * (it does not throw) when the target name already exists — a replayed
+    * epoch, a retried task, keyed files landing in a non-truncated topic —
+    * so the target is cleared first, and a rename that still fails is a
+    * lost-rows error.
+    */
+  def publish(fs: FileSystem, staged: String, target: HPath): Unit = {
+    fs.delete(target, false)
+    if (!fs.rename(new HPath(staged), target))
+      throw new java.io.IOException(
+        s"graft-wire commit: rename $staged -> $target failed")
+  }
+
   /** Driver abort: delete every reported staging file. */
   def discard(topic: WireTopic, messages: Array[WriterCommitMessage]): Unit = {
     val fs = topic.fs
@@ -496,14 +507,7 @@ final class WireBatchWrite(
     messages.foreach { case WireCommit(files) =>
       files.foreach { case (staged, finalName) =>
         val target = new HPath(topic.dir, finalName)
-        // rename() returns false (it does not throw) when the target name
-        // already exists — a retried task, or keyed files landing in a
-        // non-truncated topic. Mirror the streaming commit path: clear the
-        // target first, then treat a failed rename as a lost-rows error.
-        fs.delete(target, false)
-        if (!fs.rename(new HPath(staged), target))
-          throw new java.io.IOException(
-            s"graft-wire batch commit: rename $staged -> $target failed")
+        WireCommit.publish(fs, staged, target)
         committed += fs.makeQualified(target).toString
       }
     }
@@ -544,8 +548,7 @@ final class WireWriterFactory(ddl: String, topic: WireTopic,
   * commit. A caller that skips the documented repartition-by-key can
   * therefore route every key through every task; rather than exhaust file
   * descriptors at some load-dependent point, the writer fails fast past
-  * `graft.wire.keyBy.maxOpenWriters` (default 1024, settable via system
-  * property) with the fix in the message.
+  * 1024 open writers with the fix in the message.
   */
 final class WireKeyedFileWriter(
     schema: StructType, topic: WireTopic, keyIdx: Int,
@@ -554,16 +557,14 @@ final class WireKeyedFileWriter(
   private val fs = topic.fs
   private val open = scala.collection.mutable.LinkedHashMap
     .empty[Long, (HPath, String, java.io.BufferedWriter)]
-  private val maxOpen =
-    java.lang.Long.getLong("graft.wire.keyBy.maxOpenWriters", 1024L)
+  private val maxOpen = 1024
 
   private def writerFor(key: Long): java.io.BufferedWriter =
     open.getOrElseUpdate(key, {
       if (open.size >= maxOpen) throw new IllegalStateException(
         s"graft-wire keyBy: task $partitionId saw more than $maxOpen " +
           "distinct key values; repartition the input by the keyBy column " +
-          "so each task holds a bounded key slice (or raise " +
-          "-Dgraft.wire.keyBy.maxOpenWriters)")
+          "so each task holds a bounded key slice")
       val staged = new HPath(topic.dir,
         f"_tmp_part-k$key-p$partitionId%05d-$taskId.wire")
       val fin = f"part-k$key-p$partitionId%05d-$taskId.wire"
@@ -820,12 +821,19 @@ object WireFilterEval {
     }
   }
 
-  /** None when either side is null (three-valued logic → not-true). */
+  /** None when either side is null (three-valued logic → not-true).
+    * Longs compare as longs (a double merges longs past 2^53), strings in
+    * UTF8String byte order (Spark's order; UTF-16 order puts a
+    * supplementary character before U+FFFD).
+    */
   private def cmp(a: Any, b: Any): Option[Int] = (a, b) match {
     case (null, _) | (_, null) => None
+    case (x: java.lang.Long, y: java.lang.Long) =>
+      Some(java.lang.Long.compare(x, y))
     case (x: Number, y: Number) =>
       Some(java.lang.Double.compare(x.doubleValue(), y.doubleValue()))
-    case (x: String, y: String)   => Some(x.compareTo(y))
+    case (x: String, y: String) =>
+      Some(UTF8String.fromString(x).compareTo(UTF8String.fromString(y)))
     case (x: Boolean, y: Boolean) => Some(java.lang.Boolean.compare(x, y))
     case _ => None
   }

@@ -37,12 +37,9 @@ object Scratch {
     * Every streaming query's sink parquet, checkpoint log, and state-store
     * files live under scratch, so a harness can keep them beside its own
     * run data (perfbench points it at its work dir). The override changes
-    * WHERE the bytes go, never what is computed. Settable via the
-    * GRAFT_SCRATCH_DIR env too (honored at JVM start).
+    * WHERE the bytes go, never what is computed.
     */
-  @volatile private var rootOverride: Option[Path] = sys.env
-    .get("GRAFT_SCRATCH_DIR").map(p => java.nio.file.Paths.get(p))
-    .filter(Files.isDirectory(_))
+  @volatile private var rootOverride: Option[Path] = None
 
   /** Point scratch at `root` (must exist) — returns true on success. */
   def setRoot(root: String): Boolean = {

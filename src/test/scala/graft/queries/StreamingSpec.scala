@@ -1160,4 +1160,23 @@ class StreamingSpec extends SparkSpec {
       assert(p.stateOperators.forall(_.numShufflePartitions == want), p.json)
     }
   }
+
+  test("the stream-stream join family agrees across join types: s10's " +
+      "matched rows are s07's, s24's signups are s07's, s25's signup side " +
+      "is s10") {
+    val sf = "perfbench/data/sf0.01" // the repo's copy of the sf0.01 tables
+    def run(name: String) = Catalog.byName(name).run(spark, sf)
+    def rows(df: DataFrame, cols: String*): Seq[String] =
+      df.select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
+    val s07 = run("s07_stream_stream_join")
+    val s10 = run("s10_stream_outer_join")
+    assert(s07.count() > 0)
+    assert(rows(s10.filter(col("pts").isNotNull), "sk", "sts", "pts") ===
+      rows(s07, "sk", "sts", "pts"))
+    assert(rows(run("s24_stream_semi_join"), "sk", "sts").distinct ===
+      rows(s07, "sk", "sts").distinct)
+    assert(rows(run("s25_stream_full_outer_join")
+      .filter(col("sk").isNotNull), "sk", "sts", "pts") ===
+      rows(s10, "sk", "sts", "pts"))
+  }
 }

@@ -99,6 +99,27 @@ class WireTopicSourceSpec extends SparkSpec {
     assert(isNull.collect().map(_.getLong(0)).toSet === Set(3L))
   }
 
+  test("pushed filters compare longs as longs and strings in Spark's " +
+      "byte order") {
+    // 2^53 + 1 has no double of its own, so a double compare reads it as
+    // 2^53. U+1F600 is a surrogate pair in UTF-16, which sorts it below
+    // U+FFFD; Spark's UTF-8 byte order sorts it above.
+    val dir = Scratch.dir("graft_wire_cmp")
+    writeWireFile(dir, "f1.wire", 1700000000000L, Seq(
+      "9007199254740992,1.0,a", "9007199254740993,2.0,\uD83D\uDE00",
+      "7,3.0,\uFFFD"))
+    val t = s.read.format("graft-wire").schema(schema).load(dir)
+    val eq = t.filter(col("id") === 9007199254740993L).select("id")
+    val lt = t.filter(col("tag") < "\uFFFD").select("id")
+    for (q <- Seq(eq, lt)) assert(!plan(q).toString.contains("Filter ("),
+      plan(q).toString)
+    assert(plan(eq).toString.contains("EqualTo(id,9007199254740993)"),
+      plan(eq).toString)
+    assert(plan(lt).toString.contains("LessThan(tag,"), plan(lt).toString)
+    assert(eq.collect().map(_.getLong(0)).toSet === Set(9007199254740993L))
+    assert(lt.collect().map(_.getLong(0)).toSet === Set(9007199254740992L))
+  }
+
   test("one input partition per topic file") {
     assert(read.rdd.getNumPartitions === 2)
   }
@@ -522,6 +543,24 @@ class WireTopicSourceSpec extends SparkSpec {
     assert(ids === Set(1L))
   }
 
+  test("streaming commit throws when a rename fails, as batch commit does") {
+    // `norename` is the local filesystem with a rename() that returns false
+    // (the Hadoop contract for a failed rename: no exception). A commit that
+    // ignored the return would report success with the epoch's rows lost.
+    WireTestFs.withScheme(s, "norename", classOf[NoRenameFs]) {
+      val dir = "norename://" + Scratch.dir("graft_wire_norename")
+      val w = graft.sources.v2.WireStreamingWriterFactory(schema.toDDL,
+        wire(dir)).createWriter(0, 1L, 0L)
+      w.write(org.apache.spark.sql.catalyst.InternalRow(1L, 1.0,
+        org.apache.spark.unsafe.types.UTF8String.fromString("a")))
+      val msg = w.commit()
+      intercept[java.io.IOException] {
+        new graft.sources.v2.WireStreamingWrite(schema, wire(dir))
+          .commit(0L, Array(msg))
+      }
+    }
+  }
+
   test("replayed streaming epoch under repartitioning stays exactly-once") {
     // An epoch replay that arrives with MORE partitions than the committed
     // run (upstream repartitioned between failure and restart) must still
@@ -570,11 +609,21 @@ object WireTestFs {
 
   def uri(localDir: String): String = "wiretest://" + localDir
 
-  def withScheme[T](s: org.apache.spark.sql.SparkSession)(body: => T): T = {
+  def withScheme[T](s: org.apache.spark.sql.SparkSession,
+      scheme: String = "wiretest",
+      impl: Class[_ <: WireTestFs] = classOf[WireTestFs])(body: => T): T = {
     val hc = s.sparkContext.hadoopConfiguration
-    hc.set("fs.wiretest.impl", classOf[WireTestFs].getName)
-    hc.setBoolean("fs.wiretest.impl.disable.cache", true)
+    hc.set(s"fs.$scheme.impl", impl.getName)
+    hc.setBoolean(s"fs.$scheme.impl.disable.cache", true)
     try body
-    finally { hc.unset("fs.wiretest.impl"); hc.unset("fs.wiretest.impl.disable.cache") }
+    finally { hc.unset(s"fs.$scheme.impl"); hc.unset(s"fs.$scheme.impl.disable.cache") }
   }
+}
+
+/** [[WireTestFs]] under the `norename` scheme, whose rename always fails. */
+class NoRenameFs extends WireTestFs {
+  override def getUri: java.net.URI = java.net.URI.create("norename:///")
+  override def getScheme: String = "norename"
+  override def rename(src: org.apache.hadoop.fs.Path,
+      dst: org.apache.hadoop.fs.Path): Boolean = false
 }
